@@ -186,11 +186,6 @@ def polygon_area(wkt_or_rings) -> float:
     return total
 
 
-def line_length(coords: np.ndarray) -> float:
-    d = np.diff(coords, axis=0)
-    return float(np.sqrt((d ** 2).sum(axis=1)).sum())
-
-
 def geom_bounds(wkt: str) -> tuple[float, float, float, float]:
     gtype, parts = wkt_parse(wkt)
     if not parts:
@@ -752,59 +747,11 @@ def simplify_dp(coords: np.ndarray, tol: float) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Buffer — Minkowski sum with a discretized disc, GEOS-style round joins
-# (quad_segs=8).  Only the *rasterization* of the result must match the
-# reference (solaris/vector/mask.py:567-666 buffer_df_geoms), so the
-# indicator-function formulation is used downstream: a point is inside
-# buffer(P, r) iff dist(point, P) <= r (exact), which rasterizes without
-# constructing offset geometry at all.
+# Buffer — GEOS/JTS offset curves with round joins.  Only the rasterization
+# of the buffer must match the reference (solaris/vector/mask.py:567-666
+# buffer_df_geoms), so the raw offset curve is filled with nonzero winding
+# instead of being noded into a valid polygon.
 # ---------------------------------------------------------------------------
-
-def dist_point_to_segments(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Min distance from each point to any segment of `ring`. Vectorized."""
-    x1, y1 = ring[:-1, 0], ring[:-1, 1]
-    x2, y2 = ring[1:, 0], ring[1:, 1]
-    dx, dy = x2 - x1, y2 - y1
-    seg_len2 = dx * dx + dy * dy
-    seg_len2 = np.where(seg_len2 == 0.0, 1.0, seg_len2)
-    # (P, S) broadcasting
-    tx = (px[:, None] - x1[None, :]) * dx[None, :] + (py[:, None] - y1[None, :]) * dy[None, :]
-    t = np.clip(tx / seg_len2[None, :], 0.0, 1.0)
-    cx = x1[None, :] + t * dx[None, :]
-    cy = y1[None, :] + t * dy[None, :]
-    d2 = (px[:, None] - cx) ** 2 + (py[:, None] - cy) ** 2
-    return np.sqrt(d2.min(axis=1))
-
-
-def points_in_buffered_polygon(px: np.ndarray, py: np.ndarray,
-                               rings: list[np.ndarray], radius: float) -> np.ndarray:
-    """Indicator of buffer(polygon, radius) — exact Euclidean, not chord-
-    approximated; equals the r→∞ quad_segs limit of GEOS buffer and agrees
-    with GEOS at every pixel center not within the chord sagitta (~r·0.2% at
-    quad_segs=8) of the arc."""
-    if radius < 0:
-        inside = points_in_polygon(px, py, rings)
-        d = np.full(px.shape, np.inf)
-        for r in rings:
-            d = np.minimum(d, dist_point_to_segments(px, py, r))
-        return inside & (d >= -radius)
-    inside = points_in_polygon(px, py, rings)
-    todo = ~inside
-    if todo.any():
-        d = np.full(int(todo.sum()), np.inf)
-        for r in rings:
-            d = np.minimum(d, dist_point_to_segments(px[todo], py[todo], r))
-        near = d <= radius
-        inside = inside.copy()
-        inside[np.where(todo)[0][near]] = True
-    return inside
-
-
-def points_in_buffered_line(px: np.ndarray, py: np.ndarray,
-                            coords: np.ndarray, radius: float) -> np.ndarray:
-    d = dist_point_to_segments(px, py, coords)
-    return d <= radius
-
 
 def offset_curve(ring: np.ndarray, radius: float, quad_segs: int = 16) -> np.ndarray:
     """Raw GEOS/JTS-style offset curve of a ring, radius > 0, round joins.
@@ -816,7 +763,12 @@ def offset_curve(ring: np.ndarray, radius: float, quad_segs: int = 16) -> np.nda
     there — fill with NONZERO winding, which equals the topological union
     GEOS computes).  Matches shapely 1.7 .buffer(r, resolution=16) boundary
     lines exactly (same vertices ⇒ same scanline intersections ⇒ pixel-exact
-    rasterization parity incl. GDAL boundary tie rules)."""
+    rasterization parity incl. GDAL boundary tie rules).
+
+    Like OffsetCurveSetBuilder, repeated vertices are dropped first (a
+    zero-length edge has no offset direction), and a ring that collapses
+    to one distinct point buffers to the radius-`radius` circle of
+    OffsetSegmentGenerator.createCircle."""
     pts = ring[:-1] if np.array_equal(ring[0], ring[-1]) else ring
     n = len(pts)
     s = 1.0 if ring_signed_area(ring) > 0 else -1.0
@@ -831,6 +783,12 @@ def offset_curve(ring: np.ndarray, radius: float, quad_segs: int = 16) -> np.nda
     ny_ = np.concatenate((py_[1:], py_[:1]))
     dxs_a = nx_ - px_
     dys_a = ny_ - py_
+    moved = (dxs_a != 0.0) | (dys_a != 0.0)
+    if not moved.all():
+        if not moved.any():
+            return _point_curve(float(px_[0]), float(py_[0]), radius, quantum)
+        kept = pts[moved]
+        return offset_curve(np.vstack([kept, kept[:1]]), radius, quad_segs)
     lens_a = np.sqrt(dxs_a ** 2 + dys_a ** 2)
     xs = px_.tolist()
     ys = py_.tolist()
@@ -840,8 +798,6 @@ def offset_curve(ring: np.ndarray, radius: float, quad_segs: int = 16) -> np.nda
     out = []
     for i in range(n):
         j = (i - 1) % n
-        if lens[j] == 0 or lens[i] == 0:
-            continue
         # outward unit normals of incoming (j) and outgoing (i) edges
         if s > 0:
             n1 = (dys[j] / lens[j], -dxs[j] / lens[j])
@@ -877,6 +833,20 @@ def offset_curve(ring: np.ndarray, radius: float, quad_segs: int = 16) -> np.nda
     return np.asarray(out, dtype=np.float64)
 
 
+def _point_curve(x: float, y: float, radius: float,
+                 quantum: float) -> np.ndarray:
+    """OffsetSegmentGenerator.createCircle: the closed clockwise circle
+    starting at (x + radius, y), one vertex per fillet quantum."""
+    nsegs = int(2.0 * math.pi / quantum + 0.5)
+    inc = 2.0 * math.pi / nsegs
+    out = [(x + radius, y)]
+    for i in range(1, nsegs):
+        th = -i * inc
+        out.append((x + radius * math.cos(th), y + radius * math.sin(th)))
+    out.append(out[0])
+    return np.asarray(out, dtype=np.float64)
+
+
 def line_offset_curve(coords: np.ndarray, radius: float,
                       quad_segs: int = 16) -> np.ndarray:
     """GEOS-style buffer outline of an open LINESTRING with round caps:
@@ -894,82 +864,6 @@ def line_offset_curve(coords: np.ndarray, radius: float,
     # degenerate path yields s=-1 branch if area <= 0; both give the same
     # capsule under nonzero winding (sides swap, arcs sweep the other way).
     return offset_curve(doubled, radius, quad_segs)
-
-
-def points_in_geos_buffer(px: np.ndarray, py: np.ndarray,
-                          rings: list[np.ndarray], radius: float,
-                          quad_segs: int = 8) -> np.ndarray:
-    """Indicator of GEOS buffer(polygon, radius) with round joins.
-
-    GEOS/JTS (OffsetSegmentGenerator) approximates the circular fillet at
-    each convex vertex by chords between points spaced
-    delta = totalAngle / round(totalAngle / (pi/2/quad_segs)) apart, so the
-    buffer polygon lies slightly *inside* the true disc sum (sagitta
-    r·(1−cos(delta/2))).  This evaluates that chord polygon pointwise:
-    p is inside iff p is inside the polygon, within r of an edge with
-    perpendicular foot on the edge, or inside a vertex fillet chord fan.
-    Replicates shapely .buffer(r) (default quad_segs=8) as used at
-    solaris/vector/mask.py:567-666 well enough for pixel-center parity.
-    """
-    if radius <= 0:
-        return points_in_buffered_polygon(px, py, rings, radius)
-    quantum = math.pi / 2.0 / quad_segs
-    inside = points_in_polygon(px, py, rings)
-    for ring in rings:
-        pts = ring[:-1] if np.array_equal(ring[0], ring[-1]) else ring
-        n = len(pts)
-        if n < 3:
-            continue
-        s = 1.0 if ring_signed_area(ring) > 0 else -1.0
-        dxs = np.roll(pts[:, 0], -1) - pts[:, 0]
-        dys = np.roll(pts[:, 1], -1) - pts[:, 1]
-        # edge rectangles
-        for i in range(n):
-            dx, dy = dxs[i], dys[i]
-            L2 = dx * dx + dy * dy
-            if L2 == 0.0:
-                continue
-            rx = px - pts[i, 0]
-            ry = py - pts[i, 1]
-            t = (rx * dx + ry * dy) / L2
-            perp = np.abs(rx * dy - ry * dx) / math.sqrt(L2)
-            inside |= (t >= 0.0) & (t <= 1.0) & (perp <= radius)
-        # vertex fillets (convex turns only)
-        for i in range(n):
-            j = (i - 1) % n
-            d1x, d1y = dxs[j], dys[j]   # incoming direction
-            d2x, d2y = dxs[i], dys[i]   # outgoing direction
-            cross = d1x * d2y - d1y * d2x
-            if s * cross <= 0.0:        # reflex or straight: covered by edges
-                continue
-            # outward normal angles
-            if s > 0:
-                th1 = math.atan2(-d1x, d1y)
-                th2 = math.atan2(-d2x, d2y)
-            else:
-                th1 = math.atan2(d1x, -d1y)
-                th2 = math.atan2(d2x, -d2y)
-            total = s * (th2 - th1)
-            total = total % (2 * math.pi)
-            if total <= 0.0 or total >= math.pi:
-                continue
-            nsegs = int(total / quantum + 0.5)
-            delta = total / nsegs if nsegs >= 1 else total
-            rx = px - pts[i, 0]
-            ry = py - pts[i, 1]
-            d = np.sqrt(rx * rx + ry * ry)
-            cand = d <= radius
-            if not cand.any():
-                continue
-            phi = np.arctan2(ry[cand], rx[cand])
-            alpha = (s * (phi - th1)) % (2 * math.pi)
-            in_wedge = alpha <= total
-            k = np.clip(np.floor(alpha / delta), 0, max(nsegs - 1, 0))
-            rho = radius * math.cos(delta / 2.0) / np.cos(alpha - (k + 0.5) * delta)
-            ok = in_wedge & (d[cand] <= rho)
-            idx = np.where(cand)[0][ok]
-            inside[idx] = True
-    return inside
 
 
 # ---------------------------------------------------------------------------
@@ -1183,10 +1077,3 @@ def reproject_wkt(wkt: str, src_epsg: int, dst_epsg: int) -> str:
         new = [conv(r) for r in parts]
     return wkt_dump(gtype, new)
 
-
-def projection_unit(epsg: int) -> str:
-    """'metre' for UTM-class projected CRS, 'degree' for geographic —
-    solaris/utils/geo.py:326-388 (drives tile-ID rounding)."""
-    if epsg == 4326 or 4000 <= epsg < 5000:
-        return "degree"
-    return "metre"

@@ -157,16 +157,33 @@ def rasterize_count_groups(ring_groups: list[list[np.ndarray]],
     or nonzero-winding when ``winding``).
 
     Bit-equivalent to looping ``rasterize_rings(accumulate=True)`` per
-    group — the edges, scanline positions ``r + 0.5``, intersection xs,
-    within-row x-ordering, and the ``floor(x + 0.5)`` column ties are the
-    same expressions — but the per-group python/numpy fixed cost (~40 array
-    ops per call) is paid once for the whole batch: the group id simply
-    becomes the leading sort key, so pairing/winding runs restart per
-    (group, row) instead of per row of one polygon.  This is the mask
-    kernel's hot path (a SpaceNet-like image carries 100-250 footprints).
+    group: the edges, scanline positions ``r + 0.5`` and intersection xs
+    are the same expressions.  Only the crossings' order differs.  A pixel
+    decision depends on a crossing's rounded column ``col = floor(x + 0.5)``
+    alone: column c of one (group, row) is covered iff the running crossing
+    count (even-odd: odd) or winding sum (nonzero: != 0) over the crossings
+    with ``col <= c`` says so.  Crossings that tie on ``col`` put their
+    transitions into the same difference cell, where they cancel in any
+    order, so one stable argsort of the integer key
+    ``(group·h + row)·(w + 1) + clip(col, 0, w)`` orders them (crossings
+    arrive in per-edge runs, which timsort merges cheaply).  Both fill
+    rules then share one pass: a running sum per (group, row) segment, its
+    coverage indicator, and the indicator's ±1 changes added into a flat
+    int32 difference array of ``h·w + 1`` cells.  Every segment opens and
+    closes at indicator 0, so each row's changes sum to zero; a change
+    right of the frame (``col = w``) may land on the next row's first cell
+    and the flat cumsum still equals the row-wise one, giving the counts in
+    place.  The per-group fixed cost (~40 array ops per ``rasterize_rings``
+    call) is paid once for the whole batch — this is the mask kernel's hot
+    path (a SpaceNet-like image carries 100-250 footprints).
+
+    The key is below ``len(ring_groups)·h·(w + 1)``.  A frame whose int32
+    counts fit in memory has far fewer than 2^40 cells, which leaves room
+    for over 2^23 groups per call before int64 wraps, orders of magnitude
+    above any image's label count; past that bound the call raises rather
+    than wrap.
     """
     h, w = shape
-    counts = np.zeros((h, w), dtype=np.int32)
     ex1l, ey1l, ex2l, ey2l, egl = [], [], [], [], []
     for gi, rings in enumerate(ring_groups):
         for ring in rings:
@@ -175,6 +192,11 @@ def rasterize_count_groups(ring_groups: list[list[np.ndarray]],
             ex1l.append(ring[:-1, 0]); ey1l.append(ring[:-1, 1])
             ex2l.append(ring[1:, 0]); ey2l.append(ring[1:, 1])
             egl.append(np.full(len(ring) - 1, gi, dtype=np.int64))
+    if len(ring_groups) * h * (w + 1) >= 2 ** 63:
+        raise ValueError(f"{len(ring_groups)} groups on a {h}x{w} frame "
+                         "overflow the int64 crossing key")
+    diff = np.zeros(h * w + 1, dtype=np.int32)
+    counts = diff[:h * w].reshape(h, w)
     if not ex1l:
         return counts
     ex1 = np.concatenate(ex1l); ey1 = np.concatenate(ey1l)
@@ -203,55 +225,28 @@ def rasterize_count_groups(ring_groups: list[list[np.ndarray]],
     rows = r0[eidx] + offs
     dys = rows + 0.5
     xs = ex1f[eidx] + (dys - ey1f[eidx]) * slope[eidx]
-    grp = egrp[eidx]
 
-    # (group, row) replaces row as the segment key — everything after is
-    # the same pairing/winding logic rasterize_rings applies per call
-    order = np.lexsort((xs, rows, grp))
-    grp_s = grp[order]
-    rows_s = rows[order]
-    xs_s = xs[order]
-    newseg = np.empty(total, dtype=bool)
-    newseg[0] = True
-    newseg[1:] = (rows_s[1:] != rows_s[:-1]) | (grp_s[1:] != grp_s[:-1])
-    seg_start = np.where(newseg)[0]
-    seg_len = np.diff(np.append(seg_start, total))
-
-    if winding:
-        sgn = esign[eidx][order]
-        csum = np.cumsum(sgn)
-        base = np.repeat(np.where(newseg, csum - sgn, 0)[seg_start], seg_len)
-        run = csum - base
-        covered = (run != 0)
-        last_in_seg = np.empty(total, dtype=bool)
-        last_in_seg[:-1] = newseg[1:]
-        last_in_seg[-1] = True
-        take = covered & ~last_in_seg
-        starts = np.floor(xs_s[take] + 0.5).astype(np.int64)
-        ends = np.floor(xs_s[np.where(take)[0] + 1] + 0.5).astype(np.int64)
-        srows = rows_s[take]
-    else:
-        pos_in_seg = np.arange(total) - np.repeat(seg_start, seg_len)
-        even = (pos_in_seg % 2) == 0
-        starts = np.floor(xs_s[even] + 0.5).astype(np.int64)
-        ends = np.floor(xs_s[~even] + 0.5).astype(np.int64)
-        srows = rows_s[even]
-
-    keep = (ends > starts) & (starts < w) & (ends > 0)
-    if not keep.any():
-        return counts
-    starts = np.clip(starts[keep], 0, w)
-    ends = np.clip(ends[keep], 0, w)
-    srows = srows[keep]
-    # within one group, covered intervals of a row are disjoint half-open
-    # spans, so the +1/−1 difference array accumulates exactly +1 per
-    # covering group per pixel; one cumsum over the full frame replaces a
-    # bbox cumsum per polygon
-    diff = np.zeros(h * (w + 1), dtype=np.int32)
-    np.add.at(diff, srows * (w + 1) + starts, 1)
-    np.add.at(diff, srows * (w + 1) + ends, -1)
-    np.cumsum(diff.reshape(h, w + 1), axis=1, out=diff.reshape(h, w + 1))
-    counts += diff.reshape(h, w + 1)[:, :w]
+    # columns left of the frame act at column 0, right of it at column w
+    col = np.clip(np.floor(xs + 0.5), 0, w).astype(np.int64)
+    seg = egrp[eidx] * h + rows
+    order = np.argsort(seg * (w + 1) + col, kind="stable")
+    seg = seg[order]
+    step = esign[eidx][order] if winding else np.ones(total, dtype=np.int64)
+    first = np.flatnonzero(np.concatenate(([True], seg[1:] != seg[:-1])))
+    run = np.cumsum(step)
+    run -= np.repeat(run[first] - step[first], np.diff(np.append(first, total)))
+    inside = (run != 0) if winding else (run & 1).astype(bool)
+    # a segment closes at its last crossing (an open ring leaves a nonzero
+    # sum, as in rasterize_rings), so each row's changes sum to zero and
+    # the next segment's first change is measured against 0
+    inside[first[1:] - 1] = False
+    inside[-1] = False
+    trans = np.diff(inside.view(np.int8), prepend=np.int8(0))
+    nz = np.flatnonzero(trans)
+    cell = (rows * w + col)[order[nz]]
+    # int32 values keep np.add.at on its fast path (no casting loop)
+    np.add.at(diff, cell, trans[nz].astype(np.int32))
+    np.cumsum(diff, out=diff)
     return counts
 
 
@@ -276,10 +271,8 @@ def rasterize_shapes(shapes, shape: tuple[int, int],
 
 
 # ---------------------------------------------------------------------------
-# Buffered-polygon indicator rasterization (contact/road masks).
-# Rasterizing buffer(P, r) never materializes offset geometry: a pixel center
-# is inside the buffer iff dist(center, P) <= r (exact Euclidean disc — the
-# quad_segs→∞ limit of GEOS buffer; see geom.points_in_buffered_polygon).
+# Buffered-polygon rasterization (contact/road masks): the GEOS-style raw
+# offset curve (geom.offset_curve) filled with nonzero winding.
 # ---------------------------------------------------------------------------
 
 
@@ -304,67 +297,12 @@ def rasterize_geos_buffer(rings: list[np.ndarray], radius: float,
     return m > 0
 
 
-def rasterize_buffered(rings_or_line, radius: float, shape: tuple[int, int],
-                       is_line: bool = False, geos_chords: bool = True) -> np.ndarray:
-    """Boolean (H, W) indicator of buffer(geom, radius) at pixel centers.
-
-    Evaluates only pixels within the padded bbox for efficiency."""
-    h, w = shape
-    out = np.zeros((h, w), dtype=bool)
-    arrs = [rings_or_line] if is_line else rings_or_line
-    if not arrs:
-        return out
-    allc = np.vstack(arrs)
-    pad = abs(radius) + 1.0
-    c0 = max(int(np.floor(allc[:, 0].min() - pad)), 0)
-    c1 = min(int(np.ceil(allc[:, 0].max() + pad)), w - 1)
-    r0 = max(int(np.floor(allc[:, 1].min() - pad)), 0)
-    r1 = min(int(np.ceil(allc[:, 1].max() + pad)), h - 1)
-    if c1 < c0 or r1 < r0:
-        return out
-    cols = np.arange(c0, c1 + 1)
-    rows = np.arange(r0, r1 + 1)
-    cx, cy = np.meshgrid(cols + 0.5, rows + 0.5)
-    px, py = cx.ravel(), cy.ravel()
-    if is_line:
-        inside = G.points_in_buffered_line(px, py, rings_or_line, radius)
-    elif geos_chords:
-        inside = G.points_in_geos_buffer(px, py, rings_or_line, radius)
-    else:
-        inside = G.points_in_buffered_polygon(px, py, rings_or_line, radius)
-    out[r0 : r1 + 1, c0 : c1 + 1] = inside.reshape(len(rows), len(cols))
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Morphology — skimage erosion/dilation with square(n) strel
 # (solaris/vector/mask.py:300-310). skimage delegates to scipy.ndimage with
 # origin=0; for even n the window is asymmetric, and dilation mirrors the
 # footprint, so erosion and dilation offset in opposite directions.
 # ---------------------------------------------------------------------------
-
-
-def _sliding_minmax_1d(a: np.ndarray, lo: int, hi: int, axis: int, is_min: bool) -> np.ndarray:
-    """min/max over window [i+lo, i+hi] along axis, edge-padded like ndimage
-    (reflect? no — grey erosion pads with +inf/-inf outside, i.e. ignores)."""
-    n = a.shape[axis]
-    out = None
-    for off in range(lo, hi + 1):
-        shifted = np.full_like(a, 255 if is_min else 0)
-        src = [slice(None)] * a.ndim
-        dst = [slice(None)] * a.ndim
-        if off >= 0:
-            src[axis] = slice(off, n)
-            dst[axis] = slice(0, n - off)
-        else:
-            src[axis] = slice(0, n + off)
-            dst[axis] = slice(-off, n)
-        shifted[tuple(dst)] = a[tuple(src)]
-        if out is None:
-            out = shifted
-        else:
-            out = np.minimum(out, shifted) if is_min else np.maximum(out, shifted)
-    return out
 
 
 def erosion_square(a: np.ndarray, size: int) -> np.ndarray:

@@ -53,9 +53,10 @@ def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
     out = {}
     fp = None
     if set(channels) & {"footprint", "boundary", "contact"}:
-        # single batched scanline pass over ALL footprints (r6): identical
-        # pairing math per label (rasterize_count_groups), union == any
-        # coverage since every shape burns the same value
+        # one batched scanline pass over ALL footprints: rasterize_count_groups
+        # sorts every label's crossings by one integer (label, row, column)
+        # key and counts coverage per label; union == any coverage since
+        # every shape burns the same value
         cnt_fp = R.rasterize_count_groups(ring_sets, shape)
         fp = np.where(cnt_fp > 0, np.uint8(burn_value), np.uint8(0))
     if "footprint" in channels:
@@ -67,9 +68,10 @@ def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
             b = R.erosion_square(fp, boundary_width) ^ fp
         out["boundary"] = (b > 0).astype(np.uint8) * burn_value
     if "contact" in channels:
-        # one batched winding pass over every label's GEOS-parity offset
-        # curve: counts == the per-label accumulate loop this replaces
-        # (each covering label contributes exactly +1 per pixel)
+        # the same pass, nonzero winding, over every label's GEOS-parity
+        # offset curve (a collapsed label buffers to a disc): each covering
+        # label contributes exactly +1 per pixel, as in the per-label
+        # rasterize_geos_buffer loop
         curve_groups = [
             [G.offset_curve(r, contact_spacing / 2.0)
              for r in rings if len(r) >= 4]

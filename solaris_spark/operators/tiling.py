@@ -14,7 +14,8 @@ derived *inside* the UDF from the georegistration row (no grid shuffle, no
 driver materialization).  The only shuffles in the whole pipeline are the
 label⋈tile candidate equi-join (on (image_id, tx, ty) — prunable, salted for
 hot images via joins.py helpers) and whatever aggregation the caller adds.
-Pixels ride through Arrow batches capped small (session.py).
+Pixels ride through Arrow batches bounded at 64 MB and 10k records
+(session.py).
 """
 
 from __future__ import annotations

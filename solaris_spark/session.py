@@ -4,9 +4,12 @@ Design notes for the 100 TB deployment (vs the local[32] sandbox):
 
 - Arrow is mandatory: every geometry/raster kernel runs in pandas/Arrow UDFs
   (BASELINE.json input_hint: "no per-row Python").
-- ``spark.sql.execution.arrow.maxRecordsPerBatch`` is capped low because
-  ``images.bytes`` rows are MB-scale blobs — one Arrow batch must stay well
-  under executor memory (SURVEY.md §4 "Spill/memory").
+- Arrow batches are bounded by bytes: 64 MB
+  (``spark.sql.execution.arrow.maxBytesPerBatch``) because ``images.bytes``
+  rows are MB-scale blobs — one Arrow batch must stay well under executor
+  memory (SURVEY.md §4 "Spill/memory") — with a 10k-record cap
+  (``maxRecordsPerBatch``) so thin WKT/text rows still travel in few
+  batches.
 - AQE on for runtime re-planning + skew-join splitting (hot tile cells).
 - On a real cluster, add the Iceberg catalog config documented in
   sources/catalog.py; the sandbox has no Iceberg runtime jar, so tables are

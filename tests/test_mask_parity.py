@@ -1,0 +1,102 @@
+"""Fixture-free parity of the batched mask path.
+
+``masks.build_mask_arrays`` (one batched scanline pass per channel) must be
+byte-equal to the same masks built label by label from the single-polygon
+kernels — the recipe of ``tests/test_kernels_raster.py::contact_mask``,
+which checks those kernels against the reference goldens.  Labels come from
+``synth.synth_labels_for``, so these tests need no reference fixtures.
+"""
+
+import math
+
+import numpy as np
+import pytest
+
+from solaris_spark.functions import geom as G
+from solaris_spark.functions import raster as R
+from solaris_spark.operators import masks
+from solaris_spark.sources import synth
+
+CHANNELS = ["footprint", "boundary", "contact"]
+
+
+def oracle_masks(wkts, shape, boundary_type="inner", boundary_width=3,
+                 contact_spacing=10.0):
+    ring_sets = [G.polygon_rings(w) for w in wkts]
+    fp = R.rasterize_shapes([(rings, 255) for rings in ring_sets], shape)
+    morph = R.dilation_square if boundary_type == "outer" else R.erosion_square
+    b = ((morph(fp, boundary_width) ^ fp) > 0).astype(np.uint8) * 255
+    cnt = np.zeros(shape, dtype=np.int32)
+    for rings in ring_sets:
+        cnt += R.rasterize_geos_buffer(rings, contact_spacing / 2.0,
+                                       shape).astype(np.int32)
+    c = ((cnt >= 2) & (fp == 0)).astype(np.uint8) * 255
+    return np.stack([fp, b, c], axis=-1)
+
+
+def _dist_to_segment(p, a, b):
+    (px, py), (ax, ay), (bx, by) = p, a, b
+    t = ((px - ax) * (bx - ax) + (py - ay) * (by - ay)) / \
+        ((bx - ax) ** 2 + (by - ay) ** 2)
+    t = min(max(t, 0.0), 1.0)
+    return math.hypot(px - (ax + t * (bx - ax)), py - (ay + t * (by - ay)))
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_build_mask_arrays_matches_single_polygon_oracles(seed):
+    rng = np.random.default_rng(seed)
+    h, w = (int(v) for v in rng.integers(60, 240, size=2))
+    wkts = synth.synth_labels_for(seed, f"img_{seed:04d}", w, h, 20, 60)
+    boundary_type = "outer" if seed % 2 else "inner"
+    spacing = (10.0, 15.0)[seed % 3 == 0]
+    got = masks.build_mask_arrays(wkts, (h, w), CHANNELS,
+                                  boundary_type=boundary_type,
+                                  contact_spacing=spacing)
+    want = oracle_masks(wkts, (h, w), boundary_type=boundary_type,
+                        contact_spacing=spacing)
+    assert got.dtype == want.dtype and got.shape == want.shape
+    assert got.tobytes() == want.tobytes()
+
+
+class TestCollapsedLabel:
+    def test_point_ring_offset_curve_is_geos_circle(self):
+        """A ring whose vertices all coincide buffers like GEOS/JTS
+        createCircle: clockwise from (x + r, y), 4·quad_segs vertices."""
+        curve = G.offset_curve(np.full((4, 2), 5.0), 3.0)
+        assert curve.shape == (65, 2)
+        assert tuple(curve[0]) == (8.0, 5.0) and tuple(curve[-1]) == (8.0, 5.0)
+        assert np.allclose(np.hypot(curve[:, 0] - 5, curve[:, 1] - 5), 3.0)
+        assert curve[1, 1] < 5.0        # first step is clockwise (y down)
+
+    def test_two_point_ring_with_repeats_is_a_capsule(self):
+        """Repeated vertices are dropped first, as GEOS does, so a ring
+        that doubles back over two distinct points buffers to a capsule."""
+        ring = np.array([[5.0, 5.0], [5.0, 5.0], [9.0, 5.0], [9.0, 5.0],
+                         [5.0, 5.0]])
+        curve = G.offset_curve(ring, 2.0)
+        d = np.array([_dist_to_segment(p, (5.0, 5.0), (9.0, 5.0))
+                      for p in curve])
+        assert np.allclose(d, 2.0)
+        assert curve[:, 0].min() < 3.01 and curve[:, 0].max() > 10.99
+
+    def test_collapsed_label_next_to_real_one(self):
+        point = "POLYGON ((12 10, 12 10, 12 10, 12 10))"
+        box = "POLYGON ((15 4, 30 4, 30 16, 15 16, 15 4))"
+        shape, spacing = (24, 36), 10.0
+        out = masks.build_mask_arrays([point, box], shape, CHANNELS,
+                                      contact_spacing=spacing)
+        want = oracle_masks([point, box], shape, contact_spacing=spacing)
+        assert out.tobytes() == want.tobytes()
+        contact = out[..., 2] > 0
+        assert contact.any()
+        # contact = the collapsed label's disc ∩ the box's buffer, minus
+        # footprints; the disc's chords lie inside the true circle
+        disc = R.rasterize_geos_buffer(G.polygon_rings(point), spacing / 2,
+                                       shape)
+        box_buf = R.rasterize_geos_buffer(G.polygon_rings(box), spacing / 2,
+                                          shape)
+        assert np.array_equal(contact, disc & box_buf & (out[..., 0] == 0))
+        rows, cols = np.nonzero(contact)
+        assert (np.hypot(cols + 0.5 - 12, rows + 0.5 - 10)
+                <= spacing / 2).all()
+

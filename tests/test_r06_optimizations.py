@@ -3,7 +3,7 @@
 - rasterize_count_groups (one batched scanline pass over many polygons)
   must be bit-equivalent to the per-polygon rasterize_rings loop it
   replaced in build_mask_arrays — even-odd fills, holes, and winding
-  offset curves alike;
+  offset curves alike, on fixed and on seeded random shapes;
 - the custom worker daemon's setup_spark_files cache must re-invalidate
   import caches exactly when the Spark-files state changes;
 - the daemon's GC shim must do a full unfreeze-collect sweep on schedule;
@@ -67,6 +67,74 @@ class TestRasterizeCountGroups:
                   for rings in ring_sets]
         batched = R.rasterize_count_groups(curves, shape, winding=True)
         assert np.array_equal(loop, batched)
+
+    @pytest.mark.parametrize("seed", range(40))
+    def test_randomized_parity_with_per_polygon_oracles(self, seed):
+        """Seeded shapes against the per-polygon kernels, under both fill
+        rules and for GEOS-style buffers: off-frame and partly off-frame
+        shapes, vertices snapped to integers or half-integers (column ties,
+        horizontal edges), axis-aligned boxes, holes, overlapping groups,
+        and 1-row / 1-column frames."""
+        rng = np.random.default_rng(1000 + seed)
+        h, w = (int(v) for v in rng.integers(8, 90, size=2))
+        if seed % 8 == 0:
+            h = 1
+        elif seed % 8 == 1:
+            w = 1
+        groups = []
+        for _ in range(int(rng.integers(1, 25))):
+            cx = rng.uniform(-30, w + 30)
+            cy = rng.uniform(-30, h + 30)
+            rad = rng.uniform(0.4, 40)
+            if rng.random() < 0.2:  # axis-aligned box
+                x0, y0 = cx - rad, cy - rad / 2
+                ext = np.array([[x0, y0], [cx + rad, y0], [cx + rad, cy + rad],
+                                [x0, cy + rad], [x0, y0]])
+            else:
+                ext = _rand_poly(rng, cx, cy, rad, int(rng.integers(3, 9)))
+            rings = [ext]
+            if rng.random() < 0.3:
+                rings.append(_rand_poly(rng, cx, cy, rad / 3, 4)[::-1])
+            snap = rng.integers(0, 3)
+            if snap:  # 1: integer vertices, 2: half-integer vertices
+                rings = [np.round(r * snap) / snap for r in rings]
+            groups.append(rings)
+        shape = (h, w)
+        for winding in (False, True):
+            loop = np.zeros(shape, dtype=np.int32)
+            for rings in groups:
+                R.rasterize_rings(rings, shape, out=loop, value=1,
+                                  winding=winding, accumulate=True)
+            assert np.array_equal(
+                R.rasterize_count_groups(groups, shape, winding=winding),
+                loop), f"seed {seed} winding={winding}"
+        loop = np.zeros(shape, dtype=np.int32)
+        for rings in groups:
+            R.rasterize_geos_buffer(rings, 2.5, shape, out=loop,
+                                    accumulate=True)
+        curves = [[G.offset_curve(r, 2.5) for r in rings if len(r) >= 4]
+                  for rings in groups]
+        assert np.array_equal(
+            R.rasterize_count_groups(curves, shape, winding=True), loop)
+
+    def test_unclosed_rings_close_at_each_rows_last_crossing(self):
+        """An open ring leaves an odd winding sum on some rows; coverage
+        stops at the row's last crossing, as in rasterize_rings, instead
+        of running on into later rows or groups."""
+        shape = (30, 40)
+        box = np.array([[2.0, 2.0], [30.0, 2.0], [30.0, 20.0], [2.0, 20.0],
+                        [2.0, 2.0]])
+        hole = np.array([[8.0, 6.0], [8.0, 16.0], [24.0, 16.0], [24.0, 6.0],
+                         [8.0, 6.0]])
+        groups = [[np.array([[5.0, 3.0], [20.0, 8.0], [12.0, 25.0]])],
+                  [box, hole],
+                  [np.array([[25.0, 5.0], [38.0, 12.0], [27.0, 28.0]])]]
+        loop = np.zeros(shape, dtype=np.int32)
+        for rings in groups:
+            R.rasterize_rings(rings, shape, out=loop, value=1,
+                              winding=True, accumulate=True)
+        assert np.array_equal(
+            R.rasterize_count_groups(groups, shape, winding=True), loop)
 
     def test_empty_and_degenerate_groups(self):
         shape = (16, 16)
