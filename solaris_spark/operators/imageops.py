@@ -15,8 +15,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from ..functions import imops
-from .tiling import decode_image
+from ..functions import imops, pixfmt
 
 UINT8_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -36,16 +35,15 @@ def to_uint8(images: DataFrame, rescale: bool = False,
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                arr = decode_image(r.fmt, r.bytes, r.w, r.h)  # (C, Y, X)
+                arr = pixfmt.decode(r.fmt, r.bytes, r.w, r.h)  # (C, Y, X)
                 yxc = np.moveaxis(arr, 0, -1)
                 fmt = imops.infer_format(yxc)
                 u8 = imops.preprocess_im_arr(yxc, fmt, rescale=rescale,
                                              rescale_min=rescale_min,
                                              rescale_max=rescale_max)
-                out.append(dict(image_id=r.image_id,
-                                bytes=np.moveaxis(u8, -1, 0).tobytes(),
-                                w=r.w, h=r.h,
-                                fmt=f"raw-u8-c{u8.shape[-1]}"))
+                payload, fmt = pixfmt.encode(np.moveaxis(u8, -1, 0), "raw")
+                out.append(dict(image_id=r.image_id, bytes=payload,
+                                w=r.w, h=r.h, fmt=fmt))
             yield pd.DataFrame(out)
 
     return images.select("image_id", "bytes", "w", "h", "fmt") \
@@ -76,7 +74,6 @@ def stitch_tiles(tiles: DataFrame, out_dims: DataFrame,
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         r0 = pdf.iloc[0]
         H, W = int(r0["img_h"]), int(r0["img_w"])
-        dt = {"raw-u16-c1": np.uint16}.get(r0["fmt"], np.uint8)
         th, tw = int(r0["th"]), int(r0["tw"])
         max_ty = int(pdf["ty"].max())
         max_tx = int(pdf["tx"].max())
@@ -87,8 +84,7 @@ def stitch_tiles(tiles: DataFrame, out_dims: DataFrame,
         canvas_h, canvas_w = (max_ty + 1) * th, (max_tx + 1) * tw
         arrs, refs = [], []
         for _, r in pdf.iterrows():
-            a = np.frombuffer(r["pixels"], dtype=dt).reshape(
-                int(r["nchan"]), th, tw)
+            a = pixfmt.decode(r["fmt"], r["pixels"], tw, th)
             arrs.append(np.moveaxis(a, 0, -1))
             refs.append(((max_ty - int(r["ty"])) * th, int(r["tx"]) * tw))
         out = imops.stitch_images(np.stack(arrs), idx_refs=refs,
@@ -115,13 +111,10 @@ def stitch_inference_tiles(tiles: DataFrame, out_dims: DataFrame,
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         r0 = pdf.iloc[0]
         H, W = int(r0["img_h"]), int(r0["img_w"])
-        dt = {"raw-u16-c1": np.uint16, "raw-i16-c3": np.int16}.get(
-            r0["fmt"], np.uint8)
         th, tw = int(r0["th"]), int(r0["tw"])
         arrs, refs = [], []
         for _, r in pdf.iterrows():
-            a = np.frombuffer(r["pixels"], dtype=dt).reshape(
-                int(r["nchan"]), th, tw)
+            a = pixfmt.decode(r["fmt"], r["pixels"], tw, th)
             arrs.append(np.moveaxis(a, 0, -1))
             refs.append((int(r["row0"]), int(r["col0"])))
         out = imops.stitch_images(np.stack(arrs), idx_refs=refs,
@@ -166,7 +159,8 @@ def channel_fill_values(images: DataFrame) -> DataFrame:
                    fmt: pd.Series) -> pd.Series:
         out = []
         for i in range(len(b)):
-            arr = decode_image(fmt.iat[i], b.iat[i], int(w.iat[i]), int(h.iat[i]))
+            arr = pixfmt.decode(fmt.iat[i], b.iat[i], int(w.iat[i]),
+                                int(h.iat[i]))
             out.append([float(np.nanmean(c)) for c in arr.astype(np.float64)])
         return pd.Series(out)
 

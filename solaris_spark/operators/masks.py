@@ -22,6 +22,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import geom as G
+from ..functions import pixfmt
 from ..functions import raster as R
 
 MASK_SCHEMA = T.StructType([
@@ -244,14 +245,14 @@ def instance_masks(labels: DataFrame, images_geo: DataFrame,
     has_img = nodata_aware and images is not None
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .tiling import decode_image
         r0 = pdf.iloc[0]
         shape = (int(r0["h"]), int(r0["w"]))
         transform = (r0["a"], r0["b"], r0["c"], r0["d"], r0["e"], r0["f"])
         inv = G.affine_invert(transform) if do_transform else None
         bad = None
         if has_img and r0["nodata"] is not None and not pd.isna(r0["nodata"]):
-            arr = decode_image(r0["fmt"], r0["bytes"], int(r0["w"]), int(r0["h"]))
+            arr = pixfmt.decode(r0["fmt"], r0["bytes"], int(r0["w"]),
+                                int(r0["h"]))
             bad = (arr == r0["nodata"]).any(axis=0)
         rows = []
         for _, rr in pdf.iterrows():

@@ -2,12 +2,10 @@
 with decode / feature-extract / resize / frame-sample as mapInPandas
 operators.
 
-The Spark-side plumbing (schemas, batch shapes, partitioning) is real and
-tested; codecs: raw formats, PNG (functions/png.py) and baseline JPEG
-(functions/jpeg.py) decode natively in-sandbox; WebP / progressive JPEG /
-audio / video codecs raise NotImplementedError (or use the deterministic
-fake) until the corresponding library is present — exactly where
-`pillow`/`soundfile`/`av` would slot in on a real cluster.
+Images decode and re-encode through functions/pixfmt.py: raw formats, PNG
+and JPEG (baseline and progressive) are native codecs; other image formats
+(WebP) raise NotImplementedError.  Audio and video use deterministic fakes
+(int16 PCM, raw u8 frames) where a soundfile / av decode would slot in.
 """
 
 from __future__ import annotations
@@ -20,33 +18,11 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from .tiling import decode_image as _decode_raw_image
+from ..functions import pixfmt
 
 # ---------------------------------------------------------------------------
-# decoders — import-gated
+# audio / video decoders — deterministic fakes
 # ---------------------------------------------------------------------------
-
-
-def decode_image_any(fmt: str, buf: bytes, w: int, h: int) -> np.ndarray:
-    """(C, Y, X) pixels.  raw-* formats, PNG and JPEG (baseline AND
-    progressive) are native (pure-Python codecs, functions/png.py and
-    functions/jpeg.py); WebP needs a real codec stack."""
-    if fmt.startswith("raw-"):
-        return _decode_raw_image(fmt, buf, w, h)
-    if fmt == "png":
-        from ..functions.png import decode_png
-        return decode_png(bytes(buf))
-    if fmt in ("jpeg", "jpg"):
-        from ..functions.jpeg import decode_jpeg
-        return decode_jpeg(bytes(buf))
-    if fmt == "webp":
-        try:
-            from PIL import Image  # noqa: F401  (absent in sandbox)
-        except ImportError as e:
-            raise NotImplementedError(
-                f"codec for fmt={fmt} requires pillow; install it on the "
-                "cluster — the Spark plumbing is format-agnostic") from e
-    raise NotImplementedError(f"unknown image fmt: {fmt}")
 
 
 def decode_audio_fake(buf: bytes, sample_rate: int) -> np.ndarray:
@@ -64,8 +40,8 @@ def sample_video_frames_fake(buf: bytes, w: int, h: int, n_frames: int,
     for i in range(0, n_frames, sample_every):
         off = i * frame_sz
         if off + frame_sz <= len(buf):
-            frames.append(np.frombuffer(buf[off:off + frame_sz],
-                                        dtype=np.uint8).reshape(h, w))
+            frames.append(pixfmt.decode("raw-u8-c1", buf[off:off + frame_sz],
+                                        w, h)[0])
     return frames
 
 
@@ -84,14 +60,15 @@ FEATURE_SCHEMA = T.StructType([
 
 def image_features(images: DataFrame) -> DataFrame:
     """Decode → per-channel stats + gradient edge density + phash.
-    Batch shape: Arrow batches of ≤64 rows (session cap) of MB-scale blobs."""
+    Batch shape: MB-scale blobs in Arrow batches bounded at 64 MB and 10k
+    records (session.py)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.raster import phash64
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                arr = decode_image_any(r.fmt, r.bytes, int(r.w), int(r.h))
+                arr = pixfmt.decode(r.fmt, r.bytes, int(r.w), int(r.h))
                 f = arr.astype(np.float64)
                 gy = np.abs(np.diff(f, axis=1)).mean()
                 gx = np.abs(np.diff(f, axis=2)).mean()
@@ -124,7 +101,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                arr = decode_image_any(r.fmt, r.bytes, int(r.w), int(r.h))
+                arr = pixfmt.decode(r.fmt, r.bytes, int(r.w), int(r.h))
                 C, H, W = arr.shape
                 ys = np.minimum((np.arange(out_h + 1) * H / out_h).astype(int), H)
                 xs = np.minimum((np.arange(out_w + 1) * W / out_w).astype(int), W)
@@ -138,17 +115,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
                             x0, x1 = xs[j], max(xs[j + 1], xs[j] + 1)
                             s = cs[y1, x1] - cs[y0, x1] - cs[y1, x0] + cs[y0, x0]
                             res[c, i, j] = s / ((y1 - y0) * (x1 - x0))
-                if r.fmt == "png":
-                    from ..functions.png import encode_png
-                    payload, fmt = encode_png(res), "png"
-                elif r.fmt in ("jpeg", "jpg"):
-                    from ..functions.jpeg import encode_jpeg
-                    payload, fmt = encode_jpeg(res, quality=90), r.fmt
-                elif r.fmt.startswith("raw-"):
-                    payload = res.tobytes()
-                    fmt = r.fmt.rsplit("-", 1)[0] + f"-c{C}"
-                else:
-                    payload, fmt = res.tobytes(), r.fmt
+                payload, fmt = pixfmt.encode(res, r.fmt)
                 out.append(dict(image_id=r.image_id, bytes=payload,
                                 w=out_w, h=out_h, fmt=fmt))
             yield pd.DataFrame(out)
@@ -204,7 +171,7 @@ def crop_images(images: DataFrame, bounds, mode: str = "pixel") -> DataFrame:
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                arr = decode_image_any(r.fmt, r.bytes, int(r.w), int(r.h))
+                arr = pixfmt.decode(r.fmt, r.bytes, int(r.w), int(r.h))
                 C, H, W = arr.shape
                 if geo:
                     # gdal.Translate srcWin derivation: floor(+0.001 px)
@@ -224,18 +191,9 @@ def crop_images(images: DataFrame, bounds, mode: str = "pixel") -> DataFrame:
                 if x1c <= x0c or y1c <= y0c:
                     continue
                 win = np.ascontiguousarray(arr[:, y0c:y1c, x0c:x1c])
-                if r.fmt == "png":
-                    # keep the fmt tag honest: png in → png bytes out
-                    from ..functions.png import encode_png
-                    payload = encode_png(win)
-                elif r.fmt in ("jpeg", "jpg"):
-                    from ..functions.jpeg import encode_jpeg
-                    payload = encode_jpeg(win, quality=90)
-                else:
-                    payload = win.tobytes()
+                payload, fmt = pixfmt.encode(win, r.fmt)
                 rec = dict(image_id=r.image_id, bytes=payload,
-                           w=int(x1c - x0c), h=int(y1c - y0c),
-                           fmt=r.fmt)
+                           w=int(x1c - x0c), h=int(y1c - y0c), fmt=fmt)
                 if geo:
                     gt = [float(v) for v in r.transform]
                     rec["transform"] = [gt[0] + x0c * gt[1], gt[1], gt[2],

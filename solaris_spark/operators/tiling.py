@@ -29,21 +29,8 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import geom as G
+from ..functions import pixfmt
 from ..functions import raster as R
-
-_DTYPES = {"raw-u8-c3": (np.uint8, 3), "raw-u16-c1": (np.uint16, 1),
-           "raw-u8-c1": (np.uint8, 1), "raw-i16-c3": (np.int16, 3),
-           "raw-f32-c1": (np.float32, 1)}
-
-
-def decode_image(fmt: str, buf: bytes, w: int, h: int) -> np.ndarray:
-    """Decode the binary payload to (C, Y, X). Raw formats are supported in
-    this sandbox; PNG/JPEG would slot in here (import-gated) — the Spark-side
-    plumbing (schema, batching) is format-agnostic."""
-    if fmt in _DTYPES:
-        dt, c = _DTYPES[fmt]
-        return np.frombuffer(buf, dtype=dt).reshape(c, h, w)
-    raise NotImplementedError(f"decoder for fmt={fmt} not available in sandbox")
 
 
 TILE_SCHEMA = T.StructType([
@@ -107,30 +94,72 @@ def with_geo(images: DataFrame, geo: DataFrame) -> DataFrame:
     return images.join(geo, "image_id")
 
 
+def _grid_cells(tb: np.ndarray):
+    """(bounds, tx, ty) per grid cell; tx / ty are the rank of the cell's
+    xmin / ymax among the grid's distinct values, so grid-keyed operators
+    downstream (vector_tiles candidate join, stitch placement) see distinct
+    indices per tile."""
+    tx = np.unique(tb[:, 0], return_inverse=True)[1]
+    ty = np.unique(tb[:, 3], return_inverse=True)[1]
+    return zip(tb, tx.tolist(), ty.tolist())
+
+
+def _nodata(v) -> float:
+    """An image's nodata value; a null column means 0."""
+    return 0 if v is None or pd.isna(v) else v
+
+
 def tile_grid(images_geo: DataFrame, tile_size: tuple[int, int]) -> DataFrame:
     """Grid-only DataFrame (no pixels) — cheap planning/join input."""
-    ty_px, tx_px = tile_size
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 tb = _grid_for_image(row.a, row.e, row.c, row.f,
-                                     row.w, row.h, (ty_px, tx_px))
-                xm = np.sort(np.unique(tb[:, 0]))
-                ymx = np.sort(np.unique(tb[:, 3]))
-                xi = {v: i for i, v in enumerate(xm)}
-                yi = {v: i for i, v in enumerate(ymx)}
-                for t in tb:
+                                     row.w, row.h, tile_size)
+                for t, tx, ty in _grid_cells(tb):
                     out.append(dict(
                         tile_id=tile_name(row.image_id, t[0], t[3]),
-                        image_id=row.image_id,
-                        tx=xi[t[0]], ty=yi[t[3]],
+                        image_id=row.image_id, tx=tx, ty=ty,
                         xmin=t[0], ymin=t[1], xmax=t[2], ymax=t[3]))
             yield pd.DataFrame(out, columns=[f.name for f in GRID_SCHEMA.fields])
 
     return images_geo.select("image_id", "w", "h", "a", "e", "c", "f") \
         .mapInPandas(gen, schema=GRID_SCHEMA)
+
+
+def _emit_tiles(rows: DataFrame, tile_size: tuple[int, int],
+                nodata_threshold: float | None, cells,
+                res: tuple[float, float] | None = None) -> DataFrame:
+    """The emit path shared by the raster tilers.  ``cells(row, nodata)``
+    yields (tile_id, tx, ty, bounds, tile) for every grid cell of an input
+    row, tile being the (C, th, tw) pixels; this drops tiles whose
+    nodata fraction reaches ``nodata_threshold`` (raster_tile.py:189-204),
+    encodes the pixels as little-endian raw (pixfmt) and assembles
+    TILE_SCHEMA rows.  The tile pixel size (a, e) is the row's own unless
+    ``res`` fixes it."""
+    th, tw = tile_size
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for row in pdf.itertuples(index=False):
+                nod = _nodata(row.nodata)
+                a, e = res or (row.a, row.e)
+                for tile_id, tx, ty, t, tile in cells(row, nod):
+                    nf = R.nodata_fraction(tile, nod)
+                    if nodata_threshold is not None and nf >= nodata_threshold:
+                        continue
+                    pixels, fmt = pixfmt.encode(tile, "raw")
+                    out.append(dict(
+                        tile_id=tile_id, image_id=row.image_id, tx=tx, ty=ty,
+                        xmin=t[0], ymin=t[1], xmax=t[2], ymax=t[3],
+                        pixels=pixels, th=th, tw=tw, nchan=tile.shape[0],
+                        fmt=fmt, a=a, e=e, nodata_frac=nf))
+            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA.fields])
+
+    return rows.mapInPandas(gen, schema=TILE_SCHEMA)
 
 
 def raster_tiles(images_geo: DataFrame, tile_size: tuple[int, int],
@@ -142,50 +171,28 @@ def raster_tiles(images_geo: DataFrame, tile_size: tuple[int, int],
     (:189-204), and AOI restriction (:169-181: pixels outside the AOI
     polygon become nodata — rasterio.mask semantics — and only
     AOI-touching grid cells are kept)."""
-    ty_px, tx_px = tile_size
     aoi_rings = G.polygon_rings(aoi_wkt) if aoi_wkt else None
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                arr = decode_image(row.fmt, row.bytes, row.w, row.h)
-                transform = (row.a, row.b, row.c, row.d, row.e, row.f)
-                if aoi_rings is not None:
-                    # zero out pixels whose centers fall outside the AOI
-                    inv = G.affine_invert(transform)
-                    rings_px = [G.affine_apply(r, inv) for r in aoi_rings]
-                    inside = R.rasterize_rings(rings_px, (row.h, row.w)) > 0
-                    nodv = row.nodata if row.nodata is not None and not pd.isna(row.nodata) else 0
-                    arr = np.where(inside[None], arr,
-                                   np.asarray(nodv, dtype=arr.dtype))
-                tb = _grid_for_image(row.a, row.e, row.c, row.f,
-                                     row.w, row.h, (ty_px, tx_px),
-                                     aoi_rings=aoi_rings)
-                xm = np.sort(np.unique(tb[:, 0]))
-                ymx = np.sort(np.unique(tb[:, 3]))
-                xi = {v: i for i, v in enumerate(xm)}
-                yi = {v: i for i, v in enumerate(ymx)}
-                nod = row.nodata if row.nodata is not None and not pd.isna(row.nodata) else 0
-                for t in tb:
-                    tile, tt = R.cut_window(arr, transform, tuple(t),
-                                            (ty_px, tx_px), fill_value=nod)
-                    nf = R.nodata_fraction(tile, nod)
-                    if nodata_threshold is not None and nf >= nodata_threshold:
-                        continue
-                    out.append(dict(
-                        tile_id=tile_name(row.image_id, tt[2], tt[5]),
-                        image_id=row.image_id,
-                        tx=xi[t[0]], ty=yi[t[3]],
-                        xmin=t[0], ymin=t[1], xmax=t[2], ymax=t[3],
-                        pixels=tile.tobytes(),
-                        th=ty_px, tw=tx_px, nchan=arr.shape[0],
-                        fmt=row.fmt, a=row.a, e=row.e, nodata_frac=nf))
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA.fields])
+    def cells(row, nod):
+        arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
+        transform = (row.a, row.b, row.c, row.d, row.e, row.f)
+        if aoi_rings is not None:
+            # zero out pixels whose centers fall outside the AOI
+            inv = G.affine_invert(transform)
+            rings_px = [G.affine_apply(r, inv) for r in aoi_rings]
+            inside = R.rasterize_rings(rings_px, (row.h, row.w)) > 0
+            arr = np.where(inside[None], arr, np.asarray(nod, dtype=arr.dtype))
+        tb = _grid_for_image(row.a, row.e, row.c, row.f, row.w, row.h,
+                             tile_size, aoi_rings=aoi_rings)
+        for t, tx, ty in _grid_cells(tb):
+            tile, tt = R.cut_window(arr, transform, tuple(t), tile_size,
+                                    fill_value=nod)
+            yield tile_name(row.image_id, tt[2], tt[5]), tx, ty, t, tile
 
     cols = ["image_id", "bytes", "w", "h", "fmt",
             "a", "b", "c", "d", "e", "f", "nodata"]
-    return images_geo.select(*cols).mapInPandas(gen, schema=TILE_SCHEMA)
+    return _emit_tiles(images_geo.select(*cols), tile_size, nodata_threshold,
+                       cells)
 
 
 def raster_tiles_windowed(manifest_geo: DataFrame, tile_size: tuple[int, int],
@@ -223,6 +230,7 @@ def raster_tiles_windowed(manifest_geo: DataFrame, tile_size: tuple[int, int],
 
     Pixel output is byte-identical to raster_tiles on the same pixels
     (boundless edge tiles nodata-filled the same way)."""
+    from ..functions.tiffio import read_tiff_window
     ty_px, tx_px = tile_size
     grid = tile_grid(manifest_geo, tile_size)
     meta = manifest_geo.select("image_id", "path", "b", "d", "c", "f",
@@ -237,45 +245,24 @@ def raster_tiles_windowed(manifest_geo: DataFrame, tile_size: tuple[int, int],
             "spark.sql.shuffle.partitions"))
     jobs = jobs.repartition(partitions, "tile_id")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.tiffio import read_tiff_window
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                a, e = float(row.a), float(row.e)
-                if float(row.b or 0.0) != 0.0 or float(row.d or 0.0) != 0.0:
-                    raise ValueError(
-                        f"raster_tiles_windowed: image {row.image_id} has a "
-                        "rotated affine (b/d nonzero) — windowed reads "
-                        "require north-up rasters; use raster_tiles")
-                col0 = int(round((row.xmin - row.c) / a))
-                row0 = int(round((row.ymax - row.f) / e))
-                nod = row.nodata if row.nodata is not None \
-                    and not pd.isna(row.nodata) else 0
-                win = read_tiff_window(row.path, row0, col0, ty_px, tx_px,
-                                       level=level)
-                C = win.array.shape[0]
-                tile = np.full((C, ty_px, tx_px), nod,
-                               dtype=win.array.dtype)
-                r0, c0, r1, c1 = win.tags["window"]
-                tile[:, r0 - row0: r1 - row0, c0 - col0: c1 - col0] = \
-                    win.array
-                nf = R.nodata_fraction(tile, nod)
-                if nodata_threshold is not None and nf >= nodata_threshold:
-                    continue
-                dt = tile.dtype
-                fmt = f"raw-{dt.kind}{dt.itemsize * 8}-c{C}"
-                out.append(dict(
-                    tile_id=row.tile_id, image_id=row.image_id,
-                    tx=row.tx, ty=row.ty,
-                    xmin=row.xmin, ymin=row.ymin,
-                    xmax=row.xmax, ymax=row.ymax,
-                    pixels=tile.tobytes(), th=ty_px, tw=tx_px,
-                    nchan=C, fmt=fmt, a=a, e=e, nodata_frac=nf))
-            yield pd.DataFrame(out, columns=[f.name for f
-                                             in TILE_SCHEMA.fields])
+    def cells(row, nod):
+        if float(row.b or 0.0) != 0.0 or float(row.d or 0.0) != 0.0:
+            raise ValueError(
+                f"raster_tiles_windowed: image {row.image_id} has a "
+                "rotated affine (b/d nonzero) — windowed reads "
+                "require north-up rasters; use raster_tiles")
+        col0 = int(round((row.xmin - row.c) / row.a))
+        row0 = int(round((row.ymax - row.f) / row.e))
+        win = read_tiff_window(row.path, row0, col0, ty_px, tx_px,
+                               level=level)
+        tile = np.full((win.array.shape[0], ty_px, tx_px), nod,
+                       dtype=win.array.dtype)
+        r0, c0, r1, c1 = win.tags["window"]
+        tile[:, r0 - row0: r1 - row0, c0 - col0: c1 - col0] = win.array
+        yield (row.tile_id, row.tx, row.ty,
+               (row.xmin, row.ymin, row.xmax, row.ymax), tile)
 
-    return jobs.mapInPandas(gen, schema=TILE_SCHEMA)
+    return _emit_tiles(jobs, tile_size, nodata_threshold, cells)
 
 
 def raster_tiles_warped(images_geo: DataFrame, tile_size: tuple[int, int],
@@ -290,57 +277,34 @@ def raster_tiles_warped(images_geo: DataFrame, tile_size: tuple[int, int],
     Default bilinear (the reference's tile-warp default path).
     Separate from raster_tiles so the identity-CRS fixture-parity path stays
     byte-exact."""
-    ty_px, tx_px = tile_size
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                arr = decode_image(row.fmt, row.bytes, row.w, row.h)
-                src_t = (row.a, row.b, row.c, row.d, row.e, row.f)
-                src_epsg = int(row.epsg)
-                # reproject the image corner ring to dest CRS for bounds
-                corners = np.array([
-                    [0.0, 0.0], [row.w, 0.0], [row.w, row.h], [0.0, row.h],
-                    [0.0, 0.0]])
-                geo = G.affine_apply(corners, src_t)
-                if src_epsg != dest_epsg:
-                    lon, lat = G.to_wgs84(geo[:, 0], geo[:, 1], src_epsg)
-                    x, y = G.from_wgs84(lon, lat, dest_epsg)
-                    geo = np.stack([x, y], axis=1)
-                bounds = (geo[:, 0].min(), geo[:, 1].min(),
-                          geo[:, 0].max(), geo[:, 1].max())
-                tb = G.split_geom_bounds(bounds, (ty_px, tx_px),
-                                         resolution=dest_res)
-                # tile indices from the DEST-CRS grid, same rank-of-unique
-                # scheme as raster_tiles — downstream grid-keyed operators
-                # (vector_tiles candidate join, stitch placement) rely on
-                # distinct (tx, ty) per tile (ADVICE r01).
-                xm = np.sort(np.unique(tb[:, 0]))
-                ymx = np.sort(np.unique(tb[:, 3]))
-                xi = {v: i for i, v in enumerate(xm)}
-                yi = {v: i for i, v in enumerate(ymx)}
-                nod = row.nodata if row.nodata is not None and not pd.isna(row.nodata) else 0
-                for t in tb:
-                    dst_t = (dest_res[0], 0.0, t[0], 0.0, -dest_res[1], t[3])
-                    tile = R.warp(arr, src_t, src_epsg, dst_t,
-                                  dest_epsg, (ty_px, tx_px),
-                                  nodata=nod, resampling=resampling)
-                    nf = R.nodata_fraction(tile, nod)
-                    if nodata_threshold is not None and nf >= nodata_threshold:
-                        continue
-                    out.append(dict(
-                        tile_id=tile_name(row.image_id, t[0], t[3]),
-                        image_id=row.image_id, tx=xi[t[0]], ty=yi[t[3]],
-                        xmin=t[0], ymin=t[1], xmax=t[2], ymax=t[3],
-                        pixels=tile.tobytes(), th=ty_px, tw=tx_px,
-                        nchan=arr.shape[0], fmt=row.fmt,
-                        a=dest_res[0], e=-dest_res[1], nodata_frac=nf))
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA.fields])
+    def cells(row, nod):
+        arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
+        src_t = (row.a, row.b, row.c, row.d, row.e, row.f)
+        src_epsg = int(row.epsg)
+        # reproject the image corner ring to dest CRS for bounds
+        corners = np.array([
+            [0.0, 0.0], [row.w, 0.0], [row.w, row.h], [0.0, row.h],
+            [0.0, 0.0]])
+        geo = G.affine_apply(corners, src_t)
+        if src_epsg != dest_epsg:
+            lon, lat = G.to_wgs84(geo[:, 0], geo[:, 1], src_epsg)
+            x, y = G.from_wgs84(lon, lat, dest_epsg)
+            geo = np.stack([x, y], axis=1)
+        bounds = (geo[:, 0].min(), geo[:, 1].min(),
+                  geo[:, 0].max(), geo[:, 1].max())
+        tb = G.split_geom_bounds(bounds, tile_size, resolution=dest_res)
+        # tile indices from the DEST-CRS grid (ADVICE r01)
+        for t, tx, ty in _grid_cells(tb):
+            dst_t = (dest_res[0], 0.0, t[0], 0.0, -dest_res[1], t[3])
+            tile = R.warp(arr, src_t, src_epsg, dst_t, dest_epsg, tile_size,
+                          nodata=nod, resampling=resampling)
+            yield tile_name(row.image_id, t[0], t[3]), tx, ty, t, tile
 
     cols = ["image_id", "bytes", "w", "h", "fmt",
             "a", "b", "c", "d", "e", "f", "epsg", "nodata"]
-    return images_geo.select(*cols).mapInPandas(gen, schema=TILE_SCHEMA)
+    return _emit_tiles(images_geo.select(*cols), tile_size, nodata_threshold,
+                       cells, res=(dest_res[0], -dest_res[1]))
 
 
 INFER_TILE_SCHEMA = T.StructType([
@@ -372,7 +336,7 @@ def inference_tiles(images: DataFrame, tile_size: tuple[int, int],
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                arr = decode_image(row.fmt, row.bytes, row.w, row.h)
+                arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
                 h_img, w_img = row.h, row.w
                 if h_img < th or w_img < tw:
                     # the clamp formula goes negative here and would emit a
@@ -389,11 +353,12 @@ def inference_tiles(images: DataFrame, tile_size: tuple[int, int],
                     r0 = h_img - th if ys * y + th > h_img else ys * y
                     for x in range(x_steps):
                         c0 = w_img - tw if xs * x + tw > w_img else xs * x
-                        sub = arr[:, r0:r0 + th, c0:c0 + tw]
+                        pixels, fmt = pixfmt.encode(
+                            arr[:, r0:r0 + th, c0:c0 + tw], "raw")
                         out.append(dict(image_id=row.image_id, row0=r0,
-                                        col0=c0, pixels=sub.tobytes(),
+                                        col0=c0, pixels=pixels,
                                         th=th, tw=tw, nchan=arr.shape[0],
-                                        fmt=row.fmt))
+                                        fmt=fmt))
             yield pd.DataFrame(out, columns=[f.name for f
                                              in INFER_TILE_SCHEMA.fields])
 
@@ -594,20 +559,18 @@ def fill_nodata(tiles: DataFrame, fill_values: DataFrame) -> DataFrame:
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                dt = {"raw-u16-c1": np.uint16, "raw-i16-c3": np.int16}.get(
-                    r.fmt, np.uint8)
-                arr = np.frombuffer(r.pixels, dtype=dt).reshape(
-                    r.nchan, r.th, r.tw).copy()
-                nod = getattr(r, "nodata", 0) or 0
+                arr = pixfmt.decode(r.fmt, r.pixels, r.tw, r.th).copy()
+                nod = _nodata(getattr(r, "nodata", None))
                 for ch in range(r.nchan):
                     fv = r.fill_values[ch] if ch < len(r.fill_values) else 0.0
                     band = arr[ch]
                     band[band == nod] = np.asarray(fv, dtype=arr.dtype)
+                pixels, fmt = pixfmt.encode(arr, r.fmt)
                 out.append(dict(tile_id=r.tile_id, image_id=r.image_id,
                                 tx=r.tx, ty=r.ty, xmin=r.xmin, ymin=r.ymin,
                                 xmax=r.xmax, ymax=r.ymax,
-                                pixels=arr.tobytes(), th=r.th, tw=r.tw,
-                                nchan=r.nchan, fmt=r.fmt, a=r.a, e=r.e,
+                                pixels=pixels, th=r.th, tw=r.tw,
+                                nchan=r.nchan, fmt=fmt, a=r.a, e=r.e,
                                 nodata_frac=0.0))
             yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA.fields])
 

@@ -54,15 +54,13 @@ def with_phash(stream_df: DataFrame) -> DataFrame:
     import pandas as pd
 
     def run(batches):
-        import numpy as np
-
+        from ..functions import pixfmt
         from ..functions.raster import phash64
-        from ..operators.tiling import decode_image
         for pdf in batches:
             hashes = []
             for r in pdf.itertuples(index=False):
                 try:
-                    arr = decode_image(r.fmt, r.bytes, int(r.w), int(r.h))
+                    arr = pixfmt.decode(r.fmt, r.bytes, int(r.w), int(r.h))
                     hashes.append(phash64(arr))
                 except Exception:
                     hashes.append(None)

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 import pyspark.sql.functions as F
 
+from solaris_spark.functions import pixfmt
 from solaris_spark.operators import ann, dedup, multimodal, text
 
 
@@ -180,11 +181,11 @@ class TestMultimodal:
         assert set(out) == set(src)
         for iid, r in out.items():
             s = src[iid]
-            arr = multimodal.decode_image_any(
+            arr = pixfmt.decode(
                 s["fmt"], bytes(s["bytes"]), s["w"], s["h"])
             exp = arr[:, 5:41, 3:21]
             assert (r["w"], r["h"]) == (18, 36)
-            got = multimodal.decode_image_any(
+            got = pixfmt.decode(
                 r["fmt"], bytes(r["bytes"]), r["w"], r["h"])
             assert np.array_equal(got, exp)
         # clamped: a window larger than the image returns the whole image
@@ -205,11 +206,11 @@ class TestMultimodal:
         # geo bounds [left, bottom, right, top] → pixel window via the affine
         out = multimodal.crop_images(
             geo, [108.0, 468.0, 120.0, 488.0], mode="geo").collect()[0]
-        arr = multimodal.decode_image_any(
+        arr = pixfmt.decode(
             s["fmt"], bytes(s["bytes"]), s["w"], s["h"])
         exp = arr[:, 6:16, 4:10]
         assert (out["w"], out["h"]) == (6, 10)
-        got = multimodal.decode_image_any(
+        got = pixfmt.decode(
             out["fmt"], bytes(out["bytes"]), out["w"], out["h"])
         assert np.array_equal(got, exp)
         assert list(out["transform"]) == [108.0, 2.0, 0.0, 488.0, 0.0, -2.0]
@@ -229,11 +230,11 @@ class TestMultimodal:
             geo, [107.5, 468.3, 119.1, 487.9], mode="geo").collect()[0]
         # gdal: xoff=floor(3.751)=3, yoff=floor(6.051)=6,
         #       xsize=int(5.8+.5)=6, ysize=int(9.8+.5)=10
-        arr = multimodal.decode_image_any(
+        arr = pixfmt.decode(
             s["fmt"], bytes(s["bytes"]), s["w"], s["h"])
         exp = arr[:, 6:16, 3:9]
         assert (out["w"], out["h"]) == (6, 10)
-        got = multimodal.decode_image_any(
+        got = pixfmt.decode(
             out["fmt"], bytes(out["bytes"]), out["w"], out["h"])
         assert np.array_equal(got, exp)
         assert list(out["transform"]) == [106.0, 2.0, 0.0, 488.0, 0.0, -2.0]
@@ -250,13 +251,26 @@ class TestMultimodal:
         # functions/jpeg.py): truncated bytes are a data error, not a
         # missing codec; webp/tga stay gated
         with pytest.raises(ValueError):
-            multimodal.decode_image_any("png", b"\x89PNG", 4, 4)
+            pixfmt.decode("png", b"\x89PNG", 4, 4)
         with pytest.raises(ValueError):
-            multimodal.decode_image_any("jpeg", b"\xff\xd8\xff", 4, 4)
+            pixfmt.decode("jpeg", b"\xff\xd8\xff", 4, 4)
         with pytest.raises(NotImplementedError):
-            multimodal.decode_image_any("webp", b"RIFF", 4, 4)
+            pixfmt.decode("webp", b"RIFF", 4, 4)
         with pytest.raises(NotImplementedError):
-            multimodal.decode_image_any("tga", b"", 4, 4)
+            pixfmt.decode("tga", b"", 4, 4)
+        # outside input is validated: malformed raw fmt, a blob of the
+        # wrong length, a PNG/JPEG whose size is not the row's (w, h)
+        from solaris_spark.functions.jpeg import encode_jpeg
+        from solaris_spark.functions.png import encode_png
+        px = np.zeros((3, 4, 5), dtype=np.uint8)
+        for fmt, buf, want in [
+                ("raw-x7-c0", b"", r"raw-x7-c0.*4x4"),
+                ("raw-u12-c1", bytes(32), r"raw-u12-c1.*4x4"),
+                ("raw-u16-c1", bytes(31), r"raw-u16-c1 4x4.*31.*32"),
+                ("png", encode_png(px), r"png.*5x4.*4x4"),
+                ("jpeg", encode_jpeg(px), r"jpeg.*5x4.*4x4")]:
+            with pytest.raises(ValueError, match=want):
+                pixfmt.decode(fmt, buf, 4, 4)
 
     def test_frame_sampling(self, spark):
         buf = bytes(range(256)) * (4 * 4 * 20 // 256 + 1)

@@ -17,6 +17,7 @@ import struct
 import numpy as np
 import pytest
 
+from solaris_spark.functions import pixfmt
 from solaris_spark.functions.jpeg import (ZIGZAG, _fdct_blocks,
                                           _idct_blocks, decode_jpeg,
                                           encode_jpeg)
@@ -237,13 +238,12 @@ class TestSparkIntegration:
             "image_id string, bytes binary, w int, h int, fmt string")
         out = multimodal.crop_images(images, [10, 39, 29, 5]).collect()[0]
         assert out["fmt"] == "jpeg" and (out["w"], out["h"]) == (20, 35)
-        got = multimodal.decode_image_any(
+        got = pixfmt.decode(
             out["fmt"], bytes(out["bytes"]), out["w"], out["h"])
         exp = arr[:, 5:40, 10:30]
         assert got.shape == exp.shape
         assert np.abs(got.astype(int) - exp.astype(int)).mean() < 4
         rs = multimodal.resize_images(images, 30, 25).collect()[0]
         assert rs["fmt"] == "jpeg" and (rs["w"], rs["h"]) == (30, 25)
-        dec = multimodal.decode_image_any("jpeg", bytes(rs["bytes"]),
-                                          30, 25)
+        dec = pixfmt.decode("jpeg", bytes(rs["bytes"]), 30, 25)
         assert dec.shape == (3, 25, 30)

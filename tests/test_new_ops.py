@@ -52,6 +52,23 @@ class TestInferenceTiler:
             out["nchan"], out["h"], out["w"])
         assert np.array_equal(got[0].astype(np.uint16), src[0])
 
+    def test_stitch_roundtrip_formats(self, spark, raw_fmt, raw_image):
+        """stitch(inference_tiles(im)) == im for every raw format, with
+        overlapping strided windows and clamped edge tiles."""
+        from solaris_spark.functions import pixfmt
+        px = raw_image(37, 45)
+        images = spark.createDataFrame(
+            [("s", bytearray(px.tobytes()), 45, 37, raw_fmt)],
+            "image_id string, bytes binary, w int, h int, fmt string")
+        tiles = tiling.inference_tiles(images, (16, 16), y_step=12,
+                                       x_step=12)
+        assert {r["fmt"] for r in tiles.select("fmt").collect()} == {raw_fmt}
+        dims = images.select("image_id", "w", "h")
+        out = imageops.stitch_inference_tiles(tiles, dims).collect()[0]
+        assert out["dtype"] == str(px.dtype)
+        got = pixfmt.decode(raw_fmt, out["pixels"], out["w"], out["h"])
+        assert np.array_equal(got, px)
+
     def test_strided_window_counts(self, spark, fixture_images):
         """stride < size → overlapping windows; count matches the
         reference's 1 + ceil((dim - size) / step) formula."""

@@ -4,6 +4,7 @@
 import numpy as np
 import pytest
 
+from solaris_spark.functions import pixfmt
 from solaris_spark.functions.png import decode_png, encode_png
 
 
@@ -76,7 +77,7 @@ class TestSparkIntegration:
             "image_id string, bytes binary, w int, h int, fmt string")
         out = multimodal.crop_images(images, [10, 39, 29, 5]).collect()[0]
         assert (out["w"], out["h"]) == (20, 35)
-        got = multimodal.decode_image_any(
+        got = pixfmt.decode(
             out["fmt"], bytes(out["bytes"]), out["w"], out["h"])
         # crop re-emits the ORIGINAL fmt tag: png in → png bytes out
         assert out["fmt"] == "png"

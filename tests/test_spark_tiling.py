@@ -167,6 +167,32 @@ class TestAoiAndFill:
         assert (arr != 0).all()
         assert arr[0, 0] == int(np.mean(px))  # truncation to uint8
 
+    def test_fill_nodata_formats(self, spark, raw_fmt, raw_image):
+        """Every raw tile format fills through its own dtype and channel
+        count, and keeps its fmt."""
+        from solaris_spark.functions import pixfmt
+        from solaris_spark.operators import imageops
+        px = raw_image(30, 30)
+        px[:, :6, :8] = 0  # nodata region
+        images = spark.createDataFrame(
+            [("f", bytearray(px.tobytes()), 30, 30, raw_fmt, None, None)],
+            "image_id string, bytes binary, w int, h int, fmt string, "
+            "caption string, phash long")
+        geo = spark.createDataFrame(
+            [("f", 0.5, 0.0, 0.0, 0.0, -0.5, 15.0, 32616, 0.0)],
+            "image_id string, a double, b double, c double, d double, "
+            "e double, f double, epsg int, nodata double")
+        tiles = tiling.raster_tiles(tiling.with_geo(images, geo), (30, 30))
+        fv = imageops.channel_fill_values(images)
+        filled = tiling.fill_nodata(tiles, fv).collect()[0]
+        assert filled["fmt"] == raw_fmt
+        got = pixfmt.decode(raw_fmt, filled["pixels"], 30, 30)
+        want = px.copy()
+        means = px.astype(np.float64).mean(axis=(1, 2))
+        for ch in range(px.shape[0]):
+            want[ch][px[ch] == 0] = np.asarray(means[ch], dtype=px.dtype)
+        assert np.array_equal(got, want)
+
 
 class TestAdviceR01Fixes:
     def test_warped_tiles_have_grid_indices(self, spark, fixture_ig):
