@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import math
 import re
+from typing import NamedTuple
 
 import numpy as np
 
@@ -435,15 +436,27 @@ def clip_ring_rect(ring: np.ndarray, rect) -> np.ndarray:
     return arr
 
 
+def clip_polygon_rect(rings: list[np.ndarray], rect,
+                      signed_areas) -> tuple[list[np.ndarray], float]:
+    """polygon ∩ rect from ONE Sutherland–Hodgman pass per ring: the kept
+    clipped rings (≥ 4 vertices, input order) and the clip area, each
+    clipped ring's |area| taking the sign of its source ring so holes
+    subtract.  `signed_areas` are the rings' ring_signed_area values —
+    callers clipping one polygon against many rects pass them cached."""
+    kept, total = [], 0.0
+    for r, s in zip(rings, signed_areas):
+        c = clip_ring_rect(r, rect)
+        if len(c):
+            total += abs(ring_signed_area(c)) * (1.0 if s >= 0 else -1.0)
+            if len(c) >= 4:
+                kept.append(c)
+    return kept, abs(total)
+
+
 def clip_polygon_rect_area(rings: list[np.ndarray], rect) -> float:
     """Area of polygon ∩ rect (signed-ring aggregation handles holes)."""
-    total = 0.0
-    for r in rings:
-        clipped = clip_ring_rect(r, rect)
-        if len(clipped):
-            s = ring_signed_area(r)
-            total += math.copysign(abs(ring_signed_area(clipped)), 1.0) * (1.0 if s >= 0 else -1.0)
-    return abs(total)
+    return clip_polygon_rect(rings, rect,
+                             [ring_signed_area(r) for r in rings])[1]
 
 
 # ---------------------------------------------------------------------------
@@ -453,76 +466,24 @@ def clip_polygon_rect_area(rings: list[np.ndarray], rect) -> float:
 # (solaris/eval/iou.py:33-38: iou = inter / (a1 + a2 − inter)).
 # ---------------------------------------------------------------------------
 
-def _clip_convex(subject: list, cx: np.ndarray, cy: np.ndarray) -> list:
-    """Sutherland–Hodgman clip of `subject` pts by CCW convex clip ring."""
-    pts = subject
-    n = len(cx)
-    for i in range(n):
-        if not pts:
-            return pts
-        ex1, ey1 = cx[i], cy[i]
-        ex2, ey2 = cx[(i + 1) % n], cy[(i + 1) % n]
-        nx, ny = ey1 - ey2, ex2 - ex1  # left (inward) normal for CCW
-        out = []
-        m = len(pts)
-        for k in range(m):
-            curx, cury = pts[k]
-            prevx, prevy = pts[k - 1]
-            dc = nx * (curx - ex1) + ny * (cury - ey1)
-            dp = nx * (prevx - ex1) + ny * (prevy - ey1)
-            if dc >= 0:
-                if dp < 0:
-                    t = dp / (dp - dc)
-                    out.append((prevx + t * (curx - prevx), prevy + t * (cury - prevy)))
-                out.append((curx, cury))
-            elif dp >= 0:
-                t = dp / (dp - dc)
-                out.append((prevx + t * (curx - prevx), prevy + t * (cury - prevy)))
-        pts = out
-    return pts
-
-
-def _tri_area2(ax, ay, bx, by, cx, cy):
-    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-
-
-def _fan_triangles(rings: list[np.ndarray], origin):
-    """Yield (sign, xs(3,), ys(3,)) fan triangles over all ring edges."""
-    ox, oy = origin
-    tris = []
-    for ring in rings:
-        x, y = ring[:, 0], ring[:, 1]
-        for i in range(len(ring) - 1):
-            a2 = _tri_area2(ox, oy, x[i], y[i], x[i + 1], y[i + 1])
-            if a2 == 0.0:
-                continue
-            tris.append((1.0 if a2 > 0 else -1.0,
-                         np.array([ox, x[i], x[i + 1]]),
-                         np.array([oy, y[i], y[i + 1]])))
-    return tris
-
-
 def fan_decompose(rings: list[np.ndarray], origin) -> list:
     """Precompute the signed fan-triangle decomposition of a polygon in a
     caller-chosen local frame — reuse across many intersection-area calls
     (the greedy/SCOT joins evaluate each polygon against many partners).
-    Returns [(sign, xs(3,), ys(3,), bbox(4,)), ...]."""
+    Returns [(sign, xs(3,), ys(3,), bbox(4,)), ...] for the triangles
+    (origin, v_k, v_k+1) of non-zero area."""
     shift = np.asarray(origin, dtype=np.float64)
-    tris = _fan_triangles([r - shift for r in rings], (0.0, 0.0))
     out = []
-    for s, xs, ys in tris:
-        out.append((s, xs, ys,
-                    (xs.min(), ys.min(), xs.max(), ys.max())))
+    for ring in rings:
+        r = ring - shift
+        x0, y0, x1, y1 = r[:-1, 0], r[:-1, 1], r[1:, 0], r[1:, 1]
+        a2 = x0 * y1 - y0 * x1
+        for k in np.flatnonzero(a2 != 0.0):
+            xs = np.array([0.0, x0[k], x1[k]])
+            ys = np.array([0.0, y0[k], y1[k]])
+            out.append((1.0 if a2[k] > 0 else -1.0, xs, ys,
+                        (xs.min(), ys.min(), xs.max(), ys.max())))
     return out
-
-
-def tri_intersection_area(tris_a: list, tris_b: list) -> float:
-    """area(A∩B) from two fan_decompose results sharing the SAME origin.
-    Dispatches to the batched numpy kernel (identical arithmetic to the
-    scalar Sutherland–Hodgman, vectorized over all triangle pairs)."""
-    if not tris_a or not tris_b:
-        return 0.0
-    return _tri_intersection_area_batch(tris_a, tris_b)
 
 
 def _pack_tris(tris):
@@ -538,8 +499,12 @@ def _pack_tris(tris):
     return V, S, B
 
 
-def _tri_intersection_area_batch(tris_a: list, tris_b: list) -> float:
-    """ΣΣ s_i s_j area(T_i ∩ T_j) with every pair clipped simultaneously."""
+def tri_intersection_area(tris_a: list, tris_b: list) -> float:
+    """area(A∩B) from two fan_decompose results sharing the SAME origin —
+    the engine's one polygon intersection-area algorithm: every
+    bbox-overlapping triangle pair Sutherland–Hodgman-clipped at once."""
+    if not tris_a or not tris_b:
+        return 0.0
     VA, SA, BA = _pack_tris(tris_a)
     VB, SB, BB = _pack_tris(tris_b)
     # bbox-overlapping pairs only
@@ -599,7 +564,6 @@ def _tri_intersection_area_batch(tris_a: list, tris_b: list) -> float:
         if M < 3:
             return 0.0
     # fan areas from vertex 0 over valid vertices
-    idx = np.arange(M)
     v0 = P[:, 0:1, :]
     e1 = P[:, 1:M - 1, :] - v0
     e2 = P[:, 2:M, :] - v0
@@ -612,64 +576,93 @@ def _tri_intersection_area_batch(tris_a: list, tris_b: list) -> float:
 
 
 def polygon_intersection_area(rings_a: list[np.ndarray], rings_b: list[np.ndarray]) -> float:
-    """Exact-to-float area of A ∩ B for simple polygons (holes supported)."""
+    """Exact-to-float area of A ∩ B for simple polygons (holes supported),
+    in a local frame centred on the bbox overlap — with absolute coords ~1e6
+    the fan triangle cross-products would lose ~10 digits to cancellation."""
     if not rings_a or not rings_b:
         return 0.0
     alla, allb = np.vstack(rings_a), np.vstack(rings_b)
-    axmin, aymin = alla.min(axis=0)
-    axmax, aymax = alla.max(axis=0)
-    bxmin, bymin = allb.min(axis=0)
-    bxmax, bymax = allb.max(axis=0)
-    if axmax < bxmin or bxmax < axmin or aymax < bymin or bymax < aymin:
+    lo = np.maximum(alla.min(axis=0), allb.min(axis=0))
+    hi = np.minimum(alla.max(axis=0), allb.max(axis=0))
+    if (lo > hi).any():
         return 0.0
-    # translate to local frame first — with absolute coords ~1e6 the fan
-    # triangle cross-products lose ~10 digits to cancellation
-    ox = 0.5 * (max(axmin, bxmin) + min(axmax, bxmax))
-    oy = 0.5 * (max(aymin, bymin) + min(aymax, bymax))
-    shift = np.array([ox, oy])
-    rings_a = [r - shift for r in rings_a]
-    rings_b = [r - shift for r in rings_b]
-    tris_a = _fan_triangles(rings_a, (0.0, 0.0))
-    tris_b = _fan_triangles(rings_b, (0.0, 0.0))
-    total = 0.0
-    for sa, axs, ays in tris_a:
-        a_xmin, a_xmax = axs.min(), axs.max()
-        a_ymin, a_ymax = ays.min(), ays.max()
-        # orient clip triangle CCW
-        if _tri_area2(axs[0], ays[0], axs[1], ays[1], axs[2], ays[2]) < 0:
-            cxs, cys = axs[::-1], ays[::-1]
-        else:
-            cxs, cys = axs, ays
-        for sb, bxs, bys in tris_b:
-            if bxs.min() > a_xmax or bxs.max() < a_xmin or bys.min() > a_ymax or bys.max() < a_ymin:
-                continue
-            pts = _clip_convex(list(zip(bxs, bys)), cxs, cys)
-            if len(pts) < 3:
-                continue
-            area = 0.0
-            x0, y0 = pts[0]
-            for k in range(1, len(pts) - 1):
-                area += _tri_area2(x0, y0, pts[k][0], pts[k][1], pts[k + 1][0], pts[k + 1][1])
-            total += sa * sb * abs(0.5 * area)
-    # Σ s_i χ_{T_i} = winding = ±χ_A depending on ring orientation, so the
-    # double sum is ±area(A∩B); the magnitude is orientation-independent.
-    return abs(total)
+    origin = 0.5 * (lo + hi)
+    return tri_intersection_area(fan_decompose(rings_a, origin),
+                                 fan_decompose(rings_b, origin))
+
+
+# ---------------------------------------------------------------------------
+# Prepared polygon sets + the one IoU rule (solaris/eval/iou.py:33-38) behind
+# every matching join: parse, area, bbox and fan triangles once per polygon,
+# then any number of (A, B) pairs through tri_intersection_area.
+# ---------------------------------------------------------------------------
+
+class PolygonSet(NamedTuple):
+    rings: list        # per polygon: polygon_rings (orientation-normalized)
+    area: np.ndarray   # (n,) unsigned areas
+    bbox: np.ndarray   # (n, 4) closed [xmin, ymin, xmax, ymax]
+    tris: list         # per polygon: fan_decompose in the shared frame
+
+
+def _rings_area(rings: list[np.ndarray]) -> float:
+    return abs(sum(ring_signed_area(r) for r in rings))
+
+
+def polygon_sets(*wkt_lists) -> list[PolygonSet]:
+    """One PolygonSet per WKT list, all in ONE local frame (origin = mean of
+    every vertex) so fan triangles are decomposed once per polygon and
+    reused across every partner.  A None / empty / EMPTY WKT has no rings,
+    area 0 and an inverted bbox that overlaps nothing."""
+    rings = [[polygon_rings(w) if w else [] for w in wl] for wl in wkt_lists]
+    allr = [r for rs in rings for rr in rs for r in rr]
+    if allr:
+        allc = np.vstack(allr)
+        origin = (float(allc[:, 0].mean()), float(allc[:, 1].mean()))
+    else:
+        origin = (0.0, 0.0)
+    out = []
+    for rs in rings:
+        bbox = np.tile([np.inf, np.inf, -np.inf, -np.inf], (len(rs), 1))
+        for k, rr in enumerate(rs):
+            if rr:
+                c = np.vstack(rr)
+                bbox[k] = [*c.min(axis=0), *c.max(axis=0)]
+        out.append(PolygonSet(
+            rs, np.array([_rings_area(rr) for rr in rs], dtype=np.float64),
+            bbox, [fan_decompose(rr, origin) for rr in rs]))
+    return out
+
+
+def bbox_hits(bboxes: np.ndarray, box) -> np.ndarray:
+    """Mask of the (n, 4) closed boxes that touch the closed `box` — the
+    candidate filter ahead of the exact area refine."""
+    return ((bboxes[:, 0] <= box[2]) & (bboxes[:, 2] >= box[0])
+            & (bboxes[:, 1] <= box[3]) & (bboxes[:, 3] >= box[1]))
+
+
+def _iou(inter: float, area_a: float, area_b: float) -> tuple[float, float]:
+    # the fan-triangle intersection can overshoot the shoelace area by a few
+    # ulps; A∩B ≤ min(area A, area B) holds exactly
+    inter = min(inter, area_a, area_b)
+    union = area_a + area_b - inter
+    return inter, (inter / union if union > 0 else 0.0)
+
+
+def overlap(a: PolygonSet, i: int, b: PolygonSet, j: int) -> tuple[float, float]:
+    """(area(A∩B), IoU) of polygon i of `a` and polygon j of `b` (sets from
+    one polygon_sets call): iou = inter / (area_a + area_b − inter), 0 when
+    the union is empty."""
+    return _iou(tri_intersection_area(a.tris[i], b.tris[j]),
+                a.area[i], b.area[j])
 
 
 def iou_wkt(wkt_a: str, wkt_b: str) -> float:
-    """IoU of two polygonal WKTs — solaris/eval/iou.py:33-38 semantics:
-    iou = inter / (area_a + area_b − inter)."""
+    """IoU of two polygonal WKTs under the same rule as `overlap`; a single
+    pair needs no shared frame, so the intersection is taken in the pair's
+    own bbox-overlap frame (polygon_intersection_area)."""
     ra, rb = polygon_rings(wkt_a), polygon_rings(wkt_b)
-    inter = polygon_intersection_area(ra, rb)
-    if inter == 0.0:
-        return 0.0
-    aa = polygon_area("POLYGON EMPTY") if not ra else abs(sum(ring_signed_area(r) for r in ra))
-    ab = 0.0 if not rb else abs(sum(ring_signed_area(r) for r in rb))
-    # the fan-triangle intersection can overshoot the shoelace area by a few
-    # ulps on sliver polygons; A∩B ≤ min(area A, area B) holds exactly
-    inter = min(inter, aa, ab)
-    union = aa + ab - inter
-    return inter / union if union > 0 else 0.0
+    return _iou(polygon_intersection_area(ra, rb),
+                _rings_area(ra), _rings_area(rb))[1]
 
 
 # ---------------------------------------------------------------------------

@@ -54,57 +54,24 @@ def _greedy_match_group(pdf: pd.DataFrame, miniou: float, min_area: float) -> pd
     gt = pdf[pdf["kind"] == "gt"].sort_values("row_id")
     pred = pdf[pdf["kind"] == "pred"].sort_values("order", kind="stable")
 
-    gt_rings = [G.polygon_rings(w) if w else [] for w in gt["wkt"]]
-    gt_areas = np.array([abs(sum(G.ring_signed_area(r) for r in rr)) if rr else 0.0
-                         for rr in gt_rings])
-    keep_gt = gt_areas >= min_area
-    gt_ids = gt["row_id"].to_numpy()[keep_gt]
-    gt_rings = [r for r, k in zip(gt_rings, keep_gt) if k]
-    gt_areas = gt_areas[keep_gt]
-    gt_bbox = np.array([[*np.vstack(r).min(axis=0), *np.vstack(r).max(axis=0)]
-                        if r else [0, 0, -1, -1] for r in gt_rings]) \
-        if gt_rings else np.empty((0, 4))
+    gs, ps = G.polygon_sets(gt["wkt"], pred["wkt"])
+    gk = np.flatnonzero(gs.area >= min_area)   # kept GT / proposal indices
+    pk = np.flatnonzero(ps.area > min_area)
+    gt_ids = gt["row_id"].to_numpy()[gk]
+    pred_ids = pred["row_id"].to_numpy()[pk]
+    gt_bbox = gs.bbox[gk]
 
-    pred_rings = [G.polygon_rings(w) if w else [] for w in pred["wkt"]]
-    pred_areas = np.array([abs(sum(G.ring_signed_area(r) for r in rr)) if rr else 0.0
-                           for rr in pred_rings])
-    keep_pr = pred_areas > min_area
-    pred_ids = pred["row_id"].to_numpy()[keep_pr]
-    pred_rings = [r for r, k in zip(pred_rings, keep_pr) if k]
-    pred_areas = pred_areas[keep_pr]
+    alive = np.ones(len(gk), dtype=bool)
+    gt_best = np.zeros(len(gk))
+    out_pred_iou = np.zeros(len(pk))
+    out_pred_match = np.full(len(pk), -1, dtype=np.int64)
 
-    alive = np.ones(len(gt_ids), dtype=bool)
-    gt_best = np.zeros(len(gt_ids))
-    out_pred_iou = np.zeros(len(pred_ids))
-    out_pred_match = np.full(len(pred_ids), -1, dtype=np.int64)
-
-    # one shared local frame per image group: fan decompositions computed
-    # ONCE per polygon and reused across every candidate pair (coords stay
-    # small, so the cancellation-safety of the per-pair shift is preserved)
-    if len(gt_rings) or len(pred_rings):
-        allc = np.vstack([np.vstack(r) for r in (gt_rings + pred_rings) if r])
-        origin = (float(allc[:, 0].mean()), float(allc[:, 1].mean()))
-    else:
-        origin = (0.0, 0.0)
-    gt_tris = [G.fan_decompose(r, origin) if r else [] for r in gt_rings]
-    pred_tris = [G.fan_decompose(r, origin) if r else [] for r in pred_rings]
-
-    for i, rings in enumerate(pred_rings):
-        if pred_areas[i] <= 0 or not len(gt_ids):
-            continue
-        pb = np.vstack(rings)
-        pxmin, pymin = pb.min(axis=0)
-        pxmax, pymax = pb.max(axis=0)
-        cand = alive & (gt_bbox[:, 0] <= pxmax) & (gt_bbox[:, 2] >= pxmin) \
-            & (gt_bbox[:, 1] <= pymax) & (gt_bbox[:, 3] >= pymin)
-        idxs = np.where(cand)[0]
-        if not len(idxs):
+    for i, p in enumerate(pk):
+        if ps.area[p] <= 0:
             continue
         best_iou, best_j = -1.0, -1
-        for j in idxs:
-            inter = G.tri_intersection_area(pred_tris[i], gt_tris[j])
-            union = pred_areas[i] + gt_areas[j] - inter
-            iou = inter / union if union > 0 else 0.0
+        for j in np.flatnonzero(alive & G.bbox_hits(gt_bbox, ps.bbox[p])):
+            iou = G.overlap(ps, p, gs, gk[j])[1]
             if iou > best_iou:  # strict > keeps FIRST max (idxmax semantics)
                 best_iou, best_j = iou, j
         if best_j < 0:
@@ -120,10 +87,10 @@ def _greedy_match_group(pdf: pd.DataFrame, miniou: float, min_area: float) -> pd
     for i, pid in enumerate(pred_ids):
         rows.append((image_id, "pred", int(pid), float(out_pred_iou[i]),
                      int(out_pred_match[i]) if out_pred_match[i] >= 0 else None,
-                     float(pred_areas[i])))
+                     float(ps.area[pk[i]])))
     for j, gid in enumerate(gt_ids):
         rows.append((image_id, "gt", int(gid), float(gt_best[j]),
-                     None if alive[j] else int(gid), float(gt_areas[j])))
+                     None if alive[j] else int(gid), float(gs.area[gk[j]])))
     return pd.DataFrame(rows, columns=["image_id", "kind", "row_id",
                                        "iou_score", "matched_gt", "area"])
 
@@ -239,59 +206,26 @@ def class_matched_ious(gt: DataFrame, pred: DataFrame,
         gt_rows = pdf[pdf["kind"] == "gt"].sort_values("row_id")
         pr_rows = pdf[pdf["kind"] == "pred"].sort_values("row_id")
 
-        allw = list(gt_rows["wkt"]) + list(pr_rows["wkt"])
-        if allw:
-            allc = np.vstack([np.vstack(G.polygon_rings(w)) for w in allw])
-            origin = (float(allc[:, 0].mean()), float(allc[:, 1].mean()))
-        else:
-            origin = (0.0, 0.0)
-
-        def prep(rows):
-            rings = [G.polygon_rings(w) for w in rows["wkt"]]
-            areas = np.array([abs(sum(G.ring_signed_area(r) for r in rr))
-                              for rr in rings])
-            bbox = (np.array([[*np.vstack(r).min(0), *np.vstack(r).max(0)]
-                              for r in rings])
-                    if rings else np.empty((0, 4)))
-            tris = [G.fan_decompose(r, origin) for r in rings]
-            edges = [G.polygon_edges(r) for r in rings]
-            return rings, areas, bbox, tris, edges
-
-        g_rings, g_areas, g_bbox, g_tris, g_edges = prep(gt_rows)
-        p_rings, p_areas, p_bbox, p_tris, p_edges = prep(pr_rows)
-        g_cls = list(gt_rows["class"])
-        p_cls = list(pr_rows["class"])
-        p_conf = list(pr_rows["conf"])
-
+        gs, ps = G.polygon_sets(gt_rows["wkt"], pr_rows["wkt"])
+        g_edges = [G.polygon_edges(r) for r in gs.rings]
+        p_edges = [G.polygon_edges(r) for r in ps.rings]
         out = []
 
-        def one_pass(side, query_idx_by_class, q_rings, q_areas, q_tris,
-                     q_edges, q_cls_all, pool_rings, pool_areas, pool_bbox,
-                     pool_tris, pool_edges, pool_cls, confs):
+        def one_pass(side, query_idx_by_class, q, q_edges, pool, pool_edges,
+                     pool_cls, confs):
             alive = np.ones(len(pool_cls), dtype=bool)
             counter = {c: 0 for c in classes}
             for obj in classes:
                 for qi in query_idx_by_class.get(obj, []):
                     conf = confs[qi] if confs is not None else None
-                    qb = np.vstack(q_rings[qi])
-                    qxmin, qymin = qb.min(0)
-                    qxmax, qymax = qb.max(0)
-                    cand = alive.copy()
-                    if len(pool_cls):
-                        cand &= ((pool_bbox[:, 0] <= qxmax)
-                                 & (pool_bbox[:, 2] >= qxmin)
-                                 & (pool_bbox[:, 1] <= qymax)
-                                 & (pool_bbox[:, 3] >= qymin))
-                    idxs = np.where(cand)[0]
                     # intersects-candidates: keep those actually touching
                     pairs = []
-                    for j in idxs:
-                        inter = G.tri_intersection_area(q_tris[qi],
-                                                        pool_tris[j])
+                    for j in np.flatnonzero(alive & G.bbox_hits(pool.bbox,
+                                                                q.bbox[qi])):
+                        inter, iou = G.overlap(q, qi, pool, j)
                         if inter > 0 or G.any_segments_intersect(
                                 q_edges[qi], pool_edges[j]):
-                            union = q_areas[qi] + pool_areas[j] - inter
-                            pairs.append((j, inter / union if union > 0 else 0.0))
+                            pairs.append((j, iou))
                     if not pairs:
                         iou_val = 0.0
                     else:
@@ -311,6 +245,8 @@ def class_matched_ious(gt: DataFrame, pred: DataFrame,
                                 iou_val, conf))
                     counter[obj] += 1
 
+        g_cls = list(gt_rows["class"])
+        p_cls = list(pr_rows["class"])
         p_by_class = {}
         for i, c in enumerate(p_cls):
             p_by_class.setdefault(c, []).append(i)
@@ -318,21 +254,13 @@ def class_matched_ious(gt: DataFrame, pred: DataFrame,
         for i, c in enumerate(g_cls):
             g_by_class.setdefault(c, []).append(i)
 
-        one_pass("precision", p_by_class, p_rings, p_areas, p_tris, p_edges,
-                 p_cls, g_rings, g_areas, g_bbox, g_tris, g_edges, g_cls,
-                 p_conf)
-        one_pass("recall", g_by_class, g_rings, g_areas, g_tris, g_edges,
-                 g_cls, p_rings, p_areas, p_bbox, p_tris, p_edges, p_cls,
-                 None)
+        one_pass("precision", p_by_class, ps, p_edges, gs, g_edges, g_cls,
+                 list(pr_rows["conf"]))
+        one_pass("recall", g_by_class, gs, g_edges, ps, p_edges, p_cls, None)
         return pd.DataFrame(out, columns=[f.name for f in
                                           CLASS_IOU_SCHEMA.fields])
 
     return both.groupBy("image_id").applyInPandas(run, schema=CLASS_IOU_SCHEMA)
-
-
-# boundary-touch test (the `.intersects` candidate semantics when interiors
-# don't overlap) lives in geom.any_segments_intersect — numpy-broadcast over
-# all edge pairs, no per-pair Python loop.
 
 
 def class_scores(class_ious: DataFrame, threshold: float = 0.5) -> DataFrame:

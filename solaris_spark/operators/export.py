@@ -44,9 +44,10 @@ def yolo_labels(labels: DataFrame, images: DataFrame,
         for i in range(len(wkt)):
             rings = G.polygon_rings(wkt.iat[i])
             allc = np.vstack(rings)
-            area = abs(sum(G.ring_signed_area(r) for r in rings))
+            sas = [G.ring_signed_area(r) for r in rings]
+            area = abs(sum(sas))
             rect = (0.0, 0.0, float(im_w.iat[i]), float(im_h.iat[i]))
-            inter = G.clip_polygon_rect_area(rings, rect)
+            inter = G.clip_polygon_rect(rings, rect, sas)[1]
             rows.append((float(allc[:, 0].min()), float(allc[:, 1].min()),
                          float(allc[:, 0].max()), float(allc[:, 1].max()),
                          area, inter / area if area > 0 else 0.0))

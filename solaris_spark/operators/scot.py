@@ -47,31 +47,16 @@ def match_footprints_np(grnd: pd.DataFrame, prop: pd.DataFrame,
     if ng == 0 or np_ == 0:
         return [], [], ng, np_, 0, np_, ng, 0.0, set(g_ids), set(p_ids)
 
-    g_rings = [G.polygon_rings(w) for w in grnd["wkt"]]
-    p_rings = [G.polygon_rings(w) for w in prop["wkt"]]
-    g_area = [abs(sum(G.ring_signed_area(r) for r in rr)) for rr in g_rings]
-    p_area = [abs(sum(G.ring_signed_area(r) for r in rr)) for rr in p_rings]
-    g_bb = np.array([[*np.vstack(r).min(0), *np.vstack(r).max(0)] for r in g_rings])
-    p_bb = np.array([[*np.vstack(r).min(0), *np.vstack(r).max(0)] for r in p_rings])
-
-    allc = np.vstack([g_bb[:, :2], p_bb[:, :2]])
-    origin = (float(allc[:, 0].mean()), float(allc[:, 1].mean()))
-    g_tris = [G.fan_decompose(r, origin) for r in g_rings]
-    p_tris = [G.fan_decompose(r, origin) for r in p_rings]
-
+    gs, ps = G.polygon_sets(grnd["wkt"], prop["wkt"])
     reward = np.zeros((len(g_ids), len(p_ids)))
     iou_arr = np.zeros_like(reward)
     g_row_ids = list(grnd["id"])
     p_row_ids = list(prop["id"])
     for i in range(ng):
-        for j in range(np_):
-            if (g_bb[i, 0] > p_bb[j, 2] or p_bb[j, 0] > g_bb[i, 2]
-                    or g_bb[i, 1] > p_bb[j, 3] or p_bb[j, 1] > g_bb[i, 3]):
-                continue
-            inter = G.tri_intersection_area(g_tris[i], p_tris[j])
+        for j in np.flatnonzero(G.bbox_hits(ps.bbox, gs.bbox[i])):
+            inter, iou = G.overlap(gs, i, ps, j)
             if inter <= 0:
                 continue
-            iou = inter / (g_area[i] + p_area[j] - inter)
             gi, pj = g_idx[g_row_ids[i]], p_idx[p_row_ids[j]]
             iou_arr[gi, pj] = iou
             reward[gi, pj] = (iou > threshold) * (base_reward + iou)

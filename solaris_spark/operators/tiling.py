@@ -483,7 +483,6 @@ def vector_tiles(labels_geo_df: DataFrame, grid: DataFrame,
     ]))
     def clip(wkt: pd.Series, xmin: pd.Series, ymin: pd.Series,
              xmax: pd.Series, ymax: pd.Series) -> pd.DataFrame:
-        import math
         wkts, pixs, oas, cas = [], [], [], []
         # a label spans ~3-4 candidate tiles, so its WKT recurs within the
         # batch: parse + signed areas once per distinct geometry (r6;
@@ -499,18 +498,7 @@ def vector_tiles(labels_geo_df: DataFrame, grid: DataFrame,
                 parsed[w] = ent
             rings, sas, oa = ent
             rect = (xmin.iat[i], ymin.iat[i], xmax.iat[i], ymax.iat[i])
-            # ONE Sutherland–Hodgman pass per ring: the kept output rings
-            # and the clip area both come from the same clip results
-            # (previously clip_polygon_rect_area re-clipped every ring —
-            # identical math, evaluated twice)
-            clipped_all = [G.clip_ring_rect(r, rect) for r in rings]
-            total = 0.0
-            for rc, s in zip(clipped_all, sas):
-                if len(rc):
-                    total += math.copysign(abs(G.ring_signed_area(rc)), 1.0) \
-                        * (1.0 if s >= 0 else -1.0)
-            ca = abs(total)
-            clipped = [r for r in clipped_all if len(r) >= 4]
+            clipped, ca = G.clip_polygon_rect(rings, rect, sas)
             wkts.append(G.wkt_dump("POLYGON", clipped) if clipped else None)
             oas.append(oa)
             cas.append(ca)

@@ -6,6 +6,7 @@ operand or the clip rect; affine round trips are exact to float.
 Polygons are convex hulls of random point clouds (always simple/valid)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -72,3 +73,35 @@ def test_clip_and_affine_invariants(w):
     assert np.allclose(a, b, atol=1e-6)
     assert abs(G.polygon_area(w)
                - abs(G.ring_signed_area(rings[0]))) < 1e-9
+
+
+def _star(rng, n: int) -> np.ndarray:
+    """Random star-shaped ring (simple, usually non-convex): n >= 4 vertices
+    at jittered, sorted angles around (50, 50), angular gaps below pi."""
+    ang = (np.arange(n) + rng.uniform(0, 0.9, n)) * (2 * np.pi / n)
+    rad = rng.uniform(5, 45, n)
+    ring = np.c_[50 + rad * np.cos(ang), 50 + rad * np.sin(ang)]
+    return np.vstack([ring, ring[:1]])
+
+
+@pytest.mark.parametrize("offset", [0.0, 7e5, 3.7e6])
+def test_tri_intersection_matches_rect_clip(offset):
+    """The production intersection kernel (polygon_sets' shared frame +
+    tri_intersection_area) against an independent algorithm, the
+    Sutherland–Hodgman rect clip, on simple polygons x rectangles at
+    georeferenced offsets."""
+    rng = np.random.default_rng(7)
+    for k in range(200):
+        n = int(rng.integers(4, 16))
+        ring = (_star(rng, n) if k % 2
+                else _hull(rng.uniform(0, 100, (max(n, 6), 2)))) + offset
+        lo = rng.uniform(-20, 100, 2)
+        rect = (*(lo + offset), *(lo + rng.uniform(1, 80, 2) + offset))
+        box = np.array([(rect[0], rect[1]), (rect[2], rect[1]),
+                        (rect[2], rect[3]), (rect[0], rect[3]),
+                        (rect[0], rect[1])])
+        wp = G.wkt_dump("POLYGON", [ring])
+        p, r = G.polygon_sets([wp], [G.wkt_dump("POLYGON", [box])])
+        tri = G.tri_intersection_area(p.tris[0], r.tris[0])
+        ref = G.clip_polygon_rect_area(G.polygon_rings(wp), rect)
+        assert abs(tri - ref) <= 1e-9 * max(ref, 1.0), (k, tri, ref)

@@ -103,6 +103,39 @@ class TestIoU:
         b = a + 5.0
         assert G.polygon_intersection_area([a], [b]) == 0.0
 
+    def test_polygon_sets_empty_rows(self):
+        """None, '' and EMPTY rows have no rings, area 0 and a bbox that
+        touches nothing; the polygon rows share one frame and their pair
+        IoU follows the shared rule."""
+        sq = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
+        half = "POLYGON ((5 0, 15 0, 15 10, 5 10, 5 0))"
+        around = "POLYGON ((-5 -5, 5 -5, 5 5, -5 5, -5 -5))"
+        a, b = G.polygon_sets([sq, None, "", "POLYGON EMPTY"], [half, around])
+        assert a.rings[1:] == [[], [], []]
+        assert list(a.area) == [100.0, 0.0, 0.0, 0.0]
+        for box in b.bbox:
+            assert list(G.bbox_hits(a.bbox, box)) == [True, False,
+                                                      False, False]
+        assert list(G.bbox_hits(b.bbox, a.bbox[3])) == [False, False]
+        inter, iou = G.overlap(a, 0, b, 0)
+        assert abs(inter - 50.0) < 1e-12 and abs(iou - 50.0 / 150.0) < 1e-12
+        assert G.overlap(a, 1, b, 0) == (0.0, 0.0)
+
+    def test_overlap_clamps_to_the_smaller_area(self):
+        """The fan-triangle intersection of this pentagon with itself
+        overshoots its shoelace area by an ulp in the shared frame; the
+        IoU rule clamps it, so self-IoU is exactly 1.0."""
+        w = ("POLYGON ((7.733293563541908 2.325109555738393, "
+             "0.1784085395397191 8.073297602536648, "
+             "-7.623031022223133 2.664462763922294, "
+             "-4.889700808568469 -6.426569052674183, "
+             "4.601029727709975 -6.636300869523153, "
+             "7.733293563541908 2.325109555738393))")
+        a, b = G.polygon_sets([w], [w])
+        assert G.tri_intersection_area(a.tris[0], b.tris[0]) > a.area[0]
+        assert G.overlap(a, 0, b, 0) == (a.area[0], 1.0)
+        assert G.iou_wkt(w, w) == 1.0
+
 
 class TestGrid:
     def test_fixture_grid_100_tiles(self):

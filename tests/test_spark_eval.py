@@ -99,3 +99,119 @@ class TestGreedyMatch:
         s = evalops.image_scores(m, miniou=0.5).collect()[0]
         assert s["TruePos"] == 1 and s["FalsePos"] == 0
         assert s["FalseNeg"] == 0
+
+    def test_identical_pair_iou_is_exactly_one(self, spark):
+        """A proposal identical to its GT scores exactly 1.0 on both rows:
+        the fan-triangle intersection may overshoot the shoelace area by an
+        ulp, and the shared IoU rule clamps it to min(area_a, area_b)."""
+        w = ("POLYGON ((7.733293563541908 2.325109555738393, "
+             "0.1784085395397191 8.073297602536648, "
+             "-7.623031022223133 2.664462763922294, "
+             "-4.889700808568469 -6.426569052674183, "
+             "4.601029727709975 -6.636300869523153, "
+             "7.733293563541908 2.325109555738393))")
+        gt = spark.createDataFrame(
+            [("i", 0, w)], "image_id string, row_id long, wkt string")
+        pred = spark.createDataFrame(
+            [("i", 0, w, 1.0)],
+            "image_id string, row_id long, wkt string, conf double")
+        rows = evalops.greedy_iou_match(gt, pred, miniou=0.5).collect()
+        assert sorted(r["kind"] for r in rows) == ["gt", "pred"]
+        assert all(r["iou_score"] == 1.0 for r in rows)
+        assert all(r["matched_gt"] == 0 for r in rows)
+
+    def test_seeded_rectangles_match_closed_form(self, spark):
+        """Random axis-aligned rectangles, where IoU has a closed form:
+        greedy_iou_match gives the same matches as a plain-Python greedy
+        over the closed-form IoUs (proposals in conf-desc, row_id order;
+        candidates = alive GT whose closed rect touches; first max wins;
+        claim iff iou > miniou; per-GT best IoU over its argmax claims)."""
+        rng = np.random.default_rng(20261017)
+        miniou = 0.5
+
+        def rect_wkt(r):
+            x1, y1, x2, y2 = (repr(float(v)) for v in r)
+            return (f"POLYGON (({x1} {y1}, {x2} {y1}, {x2} {y2}, "
+                    f"{x1} {y2}, {x1} {y1}))")
+
+        def rect_iou(a, b):
+            iw = min(a[2], b[2]) - max(a[0], b[0])
+            ih = min(a[3], b[3]) - max(a[1], b[1])
+            if iw < 0 or ih < 0:
+                return None                      # not a candidate
+            inter = iw * ih
+            aa = (a[2] - a[0]) * (a[3] - a[1])
+            ab = (b[2] - b[0]) * (b[3] - b[1])
+            return inter / (aa + ab - inter)
+
+        gt_rows, pred_rows, expect = [], [], {}
+        for img in ("a", "b", "c", "d"):
+            xy = rng.uniform(0, 80, (12, 2))
+            gts = np.hstack([xy, xy + rng.uniform(2, 15, (12, 2))])
+            preds = []
+            for k in range(16):
+                if k < 11:                       # a GT, exact or jittered
+                    r = gts[rng.integers(len(gts))].copy()
+                    if k % 4:
+                        r += rng.normal(0, 1.5, 4)
+                else:                            # anywhere
+                    r = np.r_[rng.uniform(0, 80, 2), 0, 0]
+                    r[2:] = r[:2] + rng.uniform(2, 15, 2)
+                lo, hi = np.minimum(r[:2], r[2:]), np.maximum(r[:2], r[2:])
+                preds.append((k, np.r_[lo, hi + 0.5],
+                              round(float(rng.uniform()), 1)))
+            gt_rows += [(img, j, rect_wkt(g)) for j, g in enumerate(gts)]
+            pred_rows += [(img, k, rect_wkt(r), c) for k, r, c in preds]
+
+            alive = list(range(len(gts)))
+            best = [0.0] * len(gts)
+            for k, r, _ in sorted(preds, key=lambda p: (-p[2], p[0])):
+                ious = [(j, rect_iou(r, gts[j])) for j in alive]
+                ious = [(j, v) for j, v in ious if v is not None]
+                matched, score = None, 0.0
+                if ious:
+                    j, v = max(ious, key=lambda t: (t[1], -t[0]))
+                    best[j] = max(best[j], v)
+                    if v > miniou:
+                        alive.remove(j)
+                        matched, score = j, v
+                expect[(img, "pred", k)] = (score, matched)
+            for j in range(len(gts)):
+                expect[(img, "gt", j)] = (best[j],
+                                          None if j in alive else j)
+
+        gt = spark.createDataFrame(
+            gt_rows, "image_id string, row_id long, wkt string")
+        pred = spark.createDataFrame(
+            pred_rows, "image_id string, row_id long, wkt string, conf double")
+        got = {(r["image_id"], r["kind"], r["row_id"]):
+               (r["iou_score"], r["matched_gt"])
+               for r in evalops.greedy_iou_match(gt, pred, miniou).collect()}
+        assert got.keys() == expect.keys()
+        assert sum(m is not None for _, m in expect.values()) > 20
+        for key, (score, matched) in expect.items():
+            assert got[key][1] == matched, key
+            assert abs(got[key][0] - score) <= 1e-12, key
+            assert got[key][0] <= 1.0, key
+
+
+class TestClassMatchedIous:
+    @pytest.mark.parametrize("empty", ["POLYGON EMPTY", None])
+    def test_empty_proposal_scores_zero_and_consumes_no_gt(self, spark, empty):
+        """An empty proposal has no intersects-candidates: its precision
+        row scores 0 and the GT stays in the pool for the next proposal."""
+        sq = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
+        gt = spark.createDataFrame(
+            [("i", 0, sq, "a")],
+            "image_id string, row_id long, wkt string, class string")
+        pred = spark.createDataFrame(
+            [("i", 0, empty, "a", 0.9), ("i", 1, sq, "a", 0.8)],
+            "image_id string, row_id long, wkt string, class string, "
+            "conf double")
+        rows = evalops.class_matched_ious(gt, pred).collect()
+        prec = sorted((r["obj_idx"], r["iou"]) for r in rows
+                      if r["side"] == "precision")
+        rec = [r["iou"] for r in rows if r["side"] == "recall"]
+        assert prec[0] == (0, 0.0)
+        assert prec[1][0] == 1 and abs(prec[1][1] - 1.0) < 1e-12
+        assert len(rec) == 1 and abs(rec[0] - 1.0) < 1e-12

@@ -131,3 +131,12 @@ class TestScot:
         out = scot.scot_scores(self._df(spark, gt), self._df(spark, pr)).collect()[0]
         assert out["track_fp"] == 0
         assert out["track_score"] == 1.0
+
+    def test_empty_gt_counts_as_fn(self, spark):
+        """A POLYGON EMPTY footprint intersects nothing, so it is one
+        unmatched GT (a false negative), not a crash."""
+        sq = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
+        gt = [("a", "t1", 1, sq), ("a", "t1", 2, "POLYGON EMPTY")]
+        pr = [("a", "t1", 1, sq)]
+        out = scot.scot_scores(self._df(spark, gt), self._df(spark, pr)).collect()[0]
+        assert (out["track_tp"], out["track_fp"], out["track_fn"]) == (1, 0, 1)
