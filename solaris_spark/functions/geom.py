@@ -746,98 +746,177 @@ def simplify_dp(coords: np.ndarray, tol: float) -> np.ndarray:
 # instead of being noded into a valid polygon.
 # ---------------------------------------------------------------------------
 
-def offset_curve(ring: np.ndarray, radius: float, quad_segs: int = 16) -> np.ndarray:
-    """Raw GEOS/JTS-style offset curve of a ring, radius > 0, round joins.
+_EPS = float(np.finfo(np.float64).eps)
+
+
+def offset_curves(rings: list[np.ndarray], radius: float,
+                  quad_segs: int = 16) -> tuple[np.ndarray, np.ndarray]:
+    """Raw GEOS/JTS-style offset curves of many rings in one NumPy pass,
+    radius > 0, round joins.  Returns ``(xy, offsets)``: the closed curve of
+    ``rings[k]`` is ``xy[offsets[k]:offsets[k + 1]]``.
 
     Replicates OffsetSegmentGenerator vertex placement: each edge offset
     outward by `radius`; convex vertices filled with arc points spaced
     delta = totalAngle / round(totalAngle/(pi/2/quad_segs)); reflex vertices
     just connect the two offset endpoints (the raw curve self-intersects
     there — fill with NONZERO winding, which equals the topological union
-    GEOS computes).  Matches shapely 1.7 .buffer(r, resolution=16) boundary
-    lines exactly (same vertices ⇒ same scanline intersections ⇒ pixel-exact
-    rasterization parity incl. GDAL boundary tie rules).
+    GEOS computes); an exact direction reversal (a spike, or a line end)
+    gets a π cap arc.  Matches shapely 1.7 .buffer(r, resolution=16)
+    boundary lines exactly (same vertices ⇒ same scanline intersections ⇒
+    pixel-exact rasterization parity incl. GDAL boundary tie rules).
 
     Like OffsetCurveSetBuilder, repeated vertices are dropped first (a
     zero-length edge has no offset direction), and a ring that collapses
     to one distinct point buffers to the radius-`radius` circle of
-    OffsetSegmentGenerator.createCircle."""
-    pts = ring[:-1] if np.array_equal(ring[0], ring[-1]) else ring
-    n = len(pts)
-    s = 1.0 if ring_signed_area(ring) > 0 else -1.0
+    OffsetSegmentGenerator.createCircle: clockwise from (x + radius, y).
+
+    Every vertex is bit-identical to the sequential per-vertex recipe:
+    elementwise IEEE arithmetic, arc angles accumulated ``ang += delta``
+    by a row-wise cumsum (sequential), and ``math.atan2`` / ``math.cos`` /
+    ``math.sin`` (NumPy's SIMD versions round differently) mapped over
+    the arc vertices only."""
     quantum = math.pi / 2.0 / quad_segs
-    px_ = pts[:, 0]
-    py_ = pts[:, 1]
-    # rotate-by-one without np.roll (identical contents; every downstream
-    # op is elementwise, so values are bit-identical) — and work on Python
-    # floats in the per-vertex loop: identical IEEE doubles, ~3× less
-    # scalar-indexing overhead on the masks hot path
-    nx_ = np.concatenate((px_[1:], px_[:1]))
-    ny_ = np.concatenate((py_[1:], py_[:1]))
-    dxs_a = nx_ - px_
-    dys_a = ny_ - py_
-    moved = (dxs_a != 0.0) | (dys_a != 0.0)
+    nr = len(rings)
+    if nr == 0:
+        return np.empty((0, 2)), np.zeros(1, dtype=np.int64)
+    n_in = np.fromiter(map(len, rings), dtype=np.int64, count=nr)
+    allv = np.concatenate(rings).astype(np.float64, copy=False)
+    first_in = np.cumsum(n_in) - n_in
+    closed = (n_in > 1) & (allv[first_in] == allv[first_in + n_in - 1]).all(1)
+    # a closed ring's repeated last vertex is not a vertex of the curve
+    keep = np.ones(len(allv), dtype=bool)
+    keep[(first_in + n_in - 1)[closed]] = False
+    px, py = allv[keep, 0], allv[keep, 1]
+    n = n_in - closed
+    rid, st, nxt, dx, dy = _ring_walk(px, py, n)
+    moved = (dx != 0.0) | (dy != 0.0)
+    is_point = np.bincount(rid, weights=moved, minlength=nr) == 0
+    pt_x, pt_y = px[st[is_point]], py[st[is_point]]
+    dropped = np.zeros(nr, dtype=bool)
     if not moved.all():
-        if not moved.any():
-            return _point_curve(float(px_[0]), float(py_[0]), radius, quantum)
-        kept = pts[moved]
-        return offset_curve(np.vstack([kept, kept[:1]]), radius, quad_segs)
-    lens_a = np.sqrt(dxs_a ** 2 + dys_a ** 2)
-    xs = px_.tolist()
-    ys = py_.tolist()
-    dxs = dxs_a.tolist()
-    dys = dys_a.tolist()
-    lens = lens_a.tolist()
-    out = []
-    for i in range(n):
-        j = (i - 1) % n
-        # outward unit normals of incoming (j) and outgoing (i) edges
-        if s > 0:
-            n1 = (dys[j] / lens[j], -dxs[j] / lens[j])
-            n2 = (dys[i] / lens[i], -dxs[i] / lens[i])
+        dropped[rid[~moved]] = True
+        dropped &= ~is_point
+        px, py = px[moved], py[moved]
+        n = np.bincount(rid[moved], minlength=nr)
+        rid, st, nxt, dx, dy = _ring_walk(px, py, n)
+
+    # orientation: sign of the shoelace sum about the ring's first vertex.
+    # Where the sum clears a summation-order error bound its sign is the
+    # one ring_signed_area finds; near-zero rings (spikes, doubled paths)
+    # ask ring_signed_area itself, on the ring the sequential recipe uses.
+    x0 = st[rid]
+    xc = px - px[x0]
+    yc = py - py[x0]
+    xr, yr = xc[nxt], yc[nxt]
+    a, b = xc * yr, yc * xr
+    area2 = np.bincount(rid, weights=a - b, minlength=nr)
+    bound = np.bincount(rid, weights=np.abs(a) + np.abs(b), minlength=nr)
+    s = np.where(area2 > 0.0, 1.0, -1.0)
+    unsure = ~is_point & (np.abs(area2) <= 2.0 * _EPS * (n + 2) * bound)
+    for k in np.flatnonzero(unsure).tolist():
+        if dropped[k]:
+            kept = np.stack([px[st[k]:st[k] + n[k]], py[st[k]:st[k] + n[k]]],
+                            axis=1)
+            ring = np.vstack([kept, kept[:1]])
         else:
-            n1 = (-dys[j] / lens[j], dxs[j] / lens[j])
-            n2 = (-dys[i] / lens[i], dxs[i] / lens[i])
-        vx, vy = xs[i], ys[i]
-        p1 = (vx + radius * n1[0], vy + radius * n1[1])  # end of offset edge j
-        p2 = (vx + radius * n2[0], vy + radius * n2[1])  # start of offset edge i
-        cross = dxs[j] * dys[i] - dys[j] * dxs[i]
-        dot = dxs[j] * dxs[i] + dys[j] * dys[i]
-        out.append(p1)
-        # convex turn → fillet arc; exact direction reversal (line end cap /
-        # spike, cross == 0 and opposite directions) → π arc
-        is_cap = cross == 0.0 and dot < 0.0
-        if s * cross > 0.0 or is_cap:
-            th1 = math.atan2(n1[1], n1[0])
-            th2 = math.atan2(n2[1], n2[0])
-            total = math.pi if is_cap else (s * (th2 - th1)) % (2 * math.pi)
-            if 0.0 < total <= math.pi:
-                nsegs = int(total / quantum + 0.5)
-                if nsegs >= 1:
-                    delta = total / nsegs
-                    ang = delta
-                    while ang < total - 1e-12:
-                        th = th1 + s * ang
-                        out.append((vx + radius * math.cos(th),
-                                    vy + radius * math.sin(th)))
-                        ang += delta
-        out.append(p2)
-    out.append(out[0])
-    return np.asarray(out, dtype=np.float64)
+            ring = rings[k]
+        s[k] = 1.0 if ring_signed_area(ring) > 0 else -1.0
+
+    # outward unit normal of every edge (edge i runs from vertex i to nxt[i])
+    sv = s[rid]
+    lens = np.sqrt(dx ** 2 + dy ** 2)
+    enx = (sv * dy) / lens
+    eny = (-sv * dx) / lens
+    prv = np.empty_like(nxt)
+    prv[nxt] = np.arange(len(nxt))
+    # vertex i closes edge prv[i] at p1 and opens edge i at p2
+    p1x = px + radius * enx[prv]
+    p1y = py + radius * eny[prv]
+    p2x = px + radius * enx
+    p2y = py + radius * eny
+    cross = dx[prv] * dy - dy[prv] * dx
+    dot = dx[prv] * dx + dy[prv] * dy
+    cap = (cross == 0.0) & (dot < 0.0)
+    ai = np.flatnonzero((sv * cross > 0.0) | cap)
+    th1 = np.fromiter(map(math.atan2, eny[prv[ai]].tolist(),
+                          enx[prv[ai]].tolist()), dtype=np.float64,
+                      count=len(ai))
+    th2 = np.fromiter(map(math.atan2, eny[ai].tolist(), enx[ai].tolist()),
+                      dtype=np.float64, count=len(ai))
+    sa = sv[ai]
+    total = np.where(cap[ai], math.pi,
+                     np.remainder(sa * (th2 - th1), 2 * math.pi))
+    ok = (total > 0.0) & (total <= math.pi)
+    nseg = np.where(ok, total / quantum + 0.5, 0.0).astype(np.int64)
+    ok &= nseg >= 1
+    ai, th1, sa, total, nseg = ai[ok], th1[ok], sa[ok], total[ok], nseg[ok]
+    narc = np.zeros(len(px), dtype=np.int64)
+    arc_x = arc_y = np.empty(0)
+    if len(ai):
+        delta = total / nseg
+        ang = np.cumsum(np.broadcast_to(delta[:, None],
+                                        (len(ai), int(nseg.max()))), axis=1)
+        inarc = ang < (total - 1e-12)[:, None]
+        narc[ai] = inarc.sum(axis=1)
+        th = (th1[:, None] + sa[:, None] * ang)[inarc].tolist()
+        cos = np.fromiter(map(math.cos, th), dtype=np.float64, count=len(th))
+        sin = np.fromiter(map(math.sin, th), dtype=np.float64, count=len(th))
+        arc_x = np.repeat(px[ai], narc[ai]) + radius * cos
+        arc_y = np.repeat(py[ai], narc[ai]) + radius * sin
+
+    # layout: per vertex p1, its arc, p2; per ring the closing p1 of its
+    # first vertex; a point ring is the createCircle polygon
+    cx, cy = _unit_circle(quantum)
+    cnt = 2 + narc
+    ring_len = np.where(is_point, len(cx),
+                        np.bincount(rid, weights=cnt, minlength=nr)
+                        .astype(np.int64) + 1)
+    offsets = np.concatenate(([0], np.cumsum(ring_len)))
+    xy = np.empty((int(offsets[-1]), 2))
+    run = np.cumsum(cnt) - cnt
+    pos = offsets[:-1][rid] + run - run[x0]
+    xy[pos, 0], xy[pos, 1] = p1x, p1y
+    xy[pos + 1 + narc, 0], xy[pos + 1 + narc, 1] = p2x, p2y
+    if len(ai):
+        k = np.repeat(pos[ai] + 1 - (np.cumsum(narc[ai]) - narc[ai]),
+                      narc[ai]) + np.arange(len(arc_x))
+        xy[k, 0], xy[k, 1] = arc_x, arc_y
+    ring_end = offsets[1:][~is_point] - 1
+    xy[ring_end] = xy[offsets[:-1][~is_point]]
+    if is_point.any():
+        k = offsets[:-1][is_point][:, None] + np.arange(len(cx))
+        xy[k, 0] = pt_x[:, None] + radius * cx
+        xy[k, 1] = pt_y[:, None] + radius * cy
+        # the circle starts and ends at (x + radius, y) exactly
+        xy[k[:, 0], 1] = xy[k[:, -1], 1] = pt_y
+    return xy, offsets
 
 
-def _point_curve(x: float, y: float, radius: float,
-                 quantum: float) -> np.ndarray:
-    """OffsetSegmentGenerator.createCircle: the closed clockwise circle
-    starting at (x + radius, y), one vertex per fillet quantum."""
+def _ring_walk(px: np.ndarray, py: np.ndarray, n: np.ndarray):
+    """Ring id, ring start, next-vertex index (wrapping inside each ring)
+    and edge vectors of rings stored back to back, ``n[k]`` vertices each."""
+    rid = np.repeat(np.arange(len(n)), n)
+    st = np.cumsum(n) - n
+    nxt = np.arange(1, len(px) + 1)
+    last = (st + n - 1)[n > 0]
+    nxt[last] = st[n > 0]
+    return rid, st, nxt, px[nxt] - px, py[nxt] - py
+
+
+def _unit_circle(quantum: float) -> tuple[np.ndarray, np.ndarray]:
+    """cos/sin of createCircle's angles 0, −inc, −2·inc, … and back to 0."""
     nsegs = int(2.0 * math.pi / quantum + 0.5)
     inc = 2.0 * math.pi / nsegs
-    out = [(x + radius, y)]
-    for i in range(1, nsegs):
-        th = -i * inc
-        out.append((x + radius * math.cos(th), y + radius * math.sin(th)))
-    out.append(out[0])
-    return np.asarray(out, dtype=np.float64)
+    th = (-np.arange(1, nsegs) * inc).tolist()
+    cx = [1.0, *map(math.cos, th), 1.0]
+    cy = [0.0, *map(math.sin, th), 0.0]
+    return np.array(cx), np.array(cy)
+
+
+def offset_curve(ring: np.ndarray, radius: float,
+                 quad_segs: int = 16) -> np.ndarray:
+    """offset_curves of one ring: its closed (m, 2) curve."""
+    return offset_curves([ring], radius, quad_segs)[0]
 
 
 def line_offset_curve(coords: np.ndarray, radius: float,
@@ -845,17 +924,17 @@ def line_offset_curve(coords: np.ndarray, radius: float,
     """GEOS-style buffer outline of an open LINESTRING with round caps:
     the doubled path p0..pn-1..p1 closed is a degenerate ring whose offset
     curve IS the line buffer outline (direction reversals at both ends turn
-    into the π cap arcs via offset_curve's cap handling)."""
+    into the π cap arcs of offset_curves)."""
     pts = np.asarray(coords, dtype=np.float64)
     if len(pts) >= 2 and np.array_equal(pts[0], pts[-1]):
         # closed linestring: buffer = ring offset both sides; approximate by
         # treating as the doubled open path of its vertices
         pts = pts[:-1]
     doubled = np.vstack([pts, pts[-2:0:-1], pts[:1]])
-    # fake ring orientation: ring_signed_area is 0 for a doubled path, so
-    # force s=+1 by nudging: offset_curve computes s from signed area — a
-    # degenerate path yields s=-1 branch if area <= 0; both give the same
-    # capsule under nonzero winding (sides swap, arcs sweep the other way).
+    # a doubled path has zero signed area, so its orientation is whichever
+    # sign the shoelace rounding gives; both sides of the path get the
+    # same capsule under nonzero winding (sides swap, arcs sweep the other
+    # way)
     return offset_curve(doubled, radius, quad_segs)
 
 

@@ -71,6 +71,11 @@ def encode(arr: np.ndarray, like_fmt: str) -> tuple[bytes, str]:
     if like_fmt in ("jpeg", "jpg"):
         from .jpeg import encode_jpeg
         return encode_jpeg(arr, quality=90), like_fmt
+    le = arr.astype(arr.dtype.newbyteorder("<"), copy=False)
+    return le.tobytes(), raw_fmt(arr)
+
+
+def raw_fmt(arr: np.ndarray) -> str:
+    """The ``raw-…`` fmt of a (C, Y, X) array's samples and channels."""
     dt = arr.dtype
-    le = arr.astype(dt.newbyteorder("<"), copy=False)
-    return le.tobytes(), f"raw-{dt.kind}{dt.itemsize * 8}-c{arr.shape[0]}"
+    return f"raw-{dt.kind}{dt.itemsize * 8}-c{arr.shape[0]}"

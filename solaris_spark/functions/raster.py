@@ -183,25 +183,42 @@ def rasterize_count_groups(ring_groups: list[list[np.ndarray]],
     above any image's label count; past that bound the call raises rather
     than wrap.
     """
+    rings, groups = [], []
+    for gi, group in enumerate(ring_groups):
+        rings.extend(group)
+        groups.extend([gi] * len(group))
+    n = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
+    xy = np.concatenate(rings) if rings else np.empty((0, 2))
+    return rasterize_count_packed(xy, np.concatenate(([0], np.cumsum(n))),
+                                  np.asarray(groups, dtype=np.int64),
+                                  len(ring_groups), shape, winding)
+
+
+def rasterize_count_packed(xy: np.ndarray, offsets: np.ndarray,
+                           groups: np.ndarray, n_groups: int,
+                           shape: tuple[int, int],
+                           winding: bool = False) -> np.ndarray:
+    """rasterize_count_groups over rings stored back to back: ring k is
+    ``xy[offsets[k]:offsets[k + 1]]`` and belongs to group ``groups[k]``
+    (``0 <= groups[k] < n_groups``, rings in group order) — the layout
+    geom.offset_curves returns, so a whole image's buffers are counted
+    without splitting them into per-ring arrays."""
     h, w = shape
-    ex1l, ey1l, ex2l, ey2l, egl = [], [], [], [], []
-    for gi, rings in enumerate(ring_groups):
-        for ring in rings:
-            if len(ring) < 2:
-                continue
-            ex1l.append(ring[:-1, 0]); ey1l.append(ring[:-1, 1])
-            ex2l.append(ring[1:, 0]); ey2l.append(ring[1:, 1])
-            egl.append(np.full(len(ring) - 1, gi, dtype=np.int64))
-    if len(ring_groups) * h * (w + 1) >= 2 ** 63:
-        raise ValueError(f"{len(ring_groups)} groups on a {h}x{w} frame "
+    if n_groups * h * (w + 1) >= 2 ** 63:
+        raise ValueError(f"{n_groups} groups on a {h}x{w} frame "
                          "overflow the int64 crossing key")
     diff = np.zeros(h * w + 1, dtype=np.int32)
     counts = diff[:h * w].reshape(h, w)
-    if not ex1l:
+    nv = len(xy)
+    if nv < 2:
         return counts
-    ex1 = np.concatenate(ex1l); ey1 = np.concatenate(ey1l)
-    ex2 = np.concatenate(ex2l); ey2 = np.concatenate(ey2l)
-    egrp = np.concatenate(egl)
+    # edge i joins vertex i to i + 1 unless i + 1 starts the next ring
+    edge = np.ones(nv - 1, dtype=bool)
+    starts = offsets[1:-1]
+    edge[starts[(starts > 0) & (starts < nv)] - 1] = False
+    ex1, ey1 = xy[:-1, 0][edge], xy[:-1, 1][edge]
+    ex2, ey2 = xy[1:, 0][edge], xy[1:, 1][edge]
+    egrp = np.repeat(groups, np.diff(offsets))[:-1][edge]
     flip = ey1 > ey2
     ex1f = np.where(flip, ex2, ex1); ey1f = np.where(flip, ey2, ey1)
     ex2f = np.where(flip, ex1, ex2); ey2f = np.where(flip, ey1, ey2)
@@ -272,7 +289,7 @@ def rasterize_shapes(shapes, shape: tuple[int, int],
 
 # ---------------------------------------------------------------------------
 # Buffered-polygon rasterization (contact/road masks): the GEOS-style raw
-# offset curve (geom.offset_curve) filled with nonzero winding.
+# offset curves (geom.offset_curves) filled with nonzero winding.
 # ---------------------------------------------------------------------------
 
 
@@ -281,15 +298,18 @@ def rasterize_geos_buffer(rings: list[np.ndarray], radius: float,
                           out: np.ndarray | None = None,
                           accumulate: bool = False) -> np.ndarray:
     """Rasterize buffer(polygon, radius) pixel-exactly vs the reference's
-    shapely-buffer → GDAL-rasterize path: build the GEOS-style offset curve
-    (geom.offset_curve) and scanline-fill it with NONZERO winding and the
-    GDAL boundary tie rules.  Boundary lines coincide with the GEOS buffer
-    polygon's, so ties resolve identically.
+    shapely-buffer → GDAL-rasterize path: build the GEOS-style offset
+    curves of the polygon's rings (geom.offset_curves, one pass) and
+    scanline-fill them with NONZERO winding and the GDAL boundary tie
+    rules.  Boundary lines coincide with the GEOS buffer polygon's, so ties
+    resolve identically.  masks.build_mask_arrays counts every label's
+    curves of an image in one rasterize_count_packed call instead.
 
     With ``accumulate=True`` (and an integer ``out``), adds +1 to the
     buffered-union pixels in place — overlap counting with O(bbox) traffic
     per call instead of a full-frame bool + astype + add."""
-    curves = [G.offset_curve(r, radius) for r in rings if len(r) >= 4]
+    xy, offsets = G.offset_curves([r for r in rings if len(r) >= 4], radius)
+    curves = np.split(xy, offsets[1:-1])
     if accumulate:
         return rasterize_rings(curves, shape, out=out, value=1,
                                winding=True, accumulate=True)

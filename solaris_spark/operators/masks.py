@@ -1,5 +1,7 @@
 """Mask generation as Spark operators: footprint / boundary / contact /
-road / instance channels per image (or per tile), via applyInPandas.
+road / instance channels per image (or per tile): image_masks through
+applyInArrow (the mask leaves as one zero-copy Arrow value), the others
+through applyInPandas.
 
 Re-expresses df_to_px_mask and friends (solaris/vector/mask.py:19-132,
 135-236 footprint, 239-318 boundary, 321-444 contact, 447-564 road,
@@ -17,9 +19,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import geom as G
 from ..functions import pixfmt
@@ -33,6 +37,7 @@ MASK_SCHEMA = T.StructType([
     T.StructField("nchan", T.IntegerType(), False),
     T.StructField("channels", T.StringType(), False),
 ])
+_MASK_ARROW = to_arrow_schema(MASK_SCHEMA)
 
 
 def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
@@ -69,15 +74,21 @@ def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
             b = R.erosion_square(fp, boundary_width) ^ fp
         out["boundary"] = (b > 0).astype(np.uint8) * burn_value
     if "contact" in channels:
-        # the same pass, nonzero winding, over every label's GEOS-parity
-        # offset curve (a collapsed label buffers to a disc): each covering
-        # label contributes exactly +1 per pixel, as in the per-label
-        # rasterize_geos_buffer loop
-        curve_groups = [
-            [G.offset_curve(r, contact_spacing / 2.0)
-             for r in rings if len(r) >= 4]
-            for rings in ring_sets]
-        cnt = R.rasterize_count_groups(curve_groups, shape, winding=True)
+        # every label's GEOS-parity offset curves (a collapsed label buffers
+        # to a disc) in one geom.offset_curves pass, counted in one
+        # nonzero-winding pass grouped by label: each covering label adds
+        # exactly +1 per pixel, as a per-label rasterize_geos_buffer loop
+        # would
+        rings, groups = [], []
+        for gi, label in enumerate(ring_sets):
+            for r in label:
+                if len(r) >= 4:
+                    rings.append(r)
+                    groups.append(gi)
+        xy, offsets = G.offset_curves(rings, contact_spacing / 2.0)
+        cnt = R.rasterize_count_packed(xy, offsets,
+                                       np.asarray(groups, dtype=np.int64),
+                                       len(ring_sets), shape, winding=True)
         c = (cnt >= 2) & (fp == 0)
         out["contact"] = c.astype(np.uint8) * burn_value
     return np.stack([out[c] for c in channels], axis=-1)
@@ -103,22 +114,27 @@ def image_masks(labels: DataFrame, images_geo: DataFrame,
     if num_partitions:
         lab = lab.repartition(num_partitions, "image_id")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r0 = pdf.iloc[0]
-        shape = (int(r0["h"]), int(r0["w"]))
+    def run(tbl: pa.Table) -> pa.Table:
+        r0 = tbl.slice(0, 1).to_pylist()[0]
+        shape = (r0["h"], r0["w"])
         transform = ((r0["a"], r0["b"], r0["c"], r0["d"], r0["e"], r0["f"])
                      if do_transform else None)
-        arr = build_mask_arrays(list(pdf["wkt"].dropna()), shape, channels,
+        arr = build_mask_arrays(tbl.column("wkt").drop_null().to_pylist(),
+                                shape, channels,
                                 boundary_width=boundary_width,
                                 boundary_type=boundary_type,
                                 contact_spacing=contact_spacing,
                                 transform=transform)
-        return pd.DataFrame([{
-            "image_id": r0["image_id"], "mask": arr.tobytes(),
-            "h": shape[0], "w": shape[1], "nchan": arr.shape[-1],
-            "channels": ",".join(channels)}])
+        # the stacked mask's own memory backs the binary value (no copy)
+        mask = pa.BinaryArray.from_buffers(pa.binary(), 1, [
+            None, pa.py_buffer(np.array([0, arr.nbytes], dtype=np.int32)),
+            pa.py_buffer(arr)])
+        ints = [pa.array([v], pa.int32()) for v in (*shape, arr.shape[-1])]
+        return pa.Table.from_arrays(
+            [pa.array([r0["image_id"]]), mask, *ints,
+             pa.array([",".join(channels)])], schema=_MASK_ARROW)
 
-    return lab.groupBy("image_id").applyInPandas(run, schema=MASK_SCHEMA)
+    return lab.groupBy("image_id").applyInArrow(run, schema=MASK_SCHEMA)
 
 
 def road_masks(roads: DataFrame, images_geo: DataFrame,

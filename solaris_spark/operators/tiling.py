@@ -14,8 +14,14 @@ derived *inside* the UDF from the georegistration row (no grid shuffle, no
 driver materialization).  The only shuffles in the whole pipeline are the
 label⋈tile candidate equi-join (on (image_id, tx, ty) — prunable, salted for
 hot images via joins.py helpers) and whatever aggregation the caller adds.
-Pixels ride through Arrow batches bounded at 64 MB and 10k records
-(session.py).
+
+Pixels cross the Python boundary as Arrow, both ways.  Spark sends image
+batches bounded at the session's ``maxBytesPerBatch`` (64 MB) and 10k
+records (session.py); every blob-emitting operator here (the three raster
+tilers, inference_tiles, fill_nodata) is a mapInArrow over
+blobs.blob_batches, which reads input blobs in place and returns its tiles
+in Arrow batches cut at the same 64 MB: each batch's pixels sit in one
+contiguous buffer behind the binary column, no pandas in between.
 """
 
 from __future__ import annotations
@@ -31,6 +37,7 @@ from pyspark.sql import DataFrame
 from ..functions import geom as G
 from ..functions import pixfmt
 from ..functions import raster as R
+from .blobs import map_blobs
 
 
 TILE_SCHEMA = T.StructType([
@@ -129,37 +136,35 @@ def tile_grid(images_geo: DataFrame, tile_size: tuple[int, int]) -> DataFrame:
         .mapInPandas(gen, schema=GRID_SCHEMA)
 
 
+def _tile_rows(cells, tile_size, nodata_threshold, res):
+    """TILE_SCHEMA rows of one input row: ``cells(row, nodata)`` yields
+    (tile_id, tx, ty, bounds, tile) for every grid cell, tile being the
+    (C, th, tw) pixels; tiles whose nodata fraction reaches
+    ``nodata_threshold`` are dropped (raster_tile.py:189-204) and the rest
+    carry their pixels as little-endian raw (pixfmt).  The tile pixel size
+    (a, e) is the row's own unless ``res`` fixes it."""
+    th, tw = tile_size
+
+    def rows_of(row):
+        nod = _nodata(row.nodata)
+        a, e = res or (row.a, row.e)
+        for tile_id, tx, ty, t, tile in cells(row, nod):
+            nf = R.nodata_fraction(tile, nod)
+            if nodata_threshold is not None and nf >= nodata_threshold:
+                continue
+            yield (tile_id, row.image_id, tx, ty, t[0], t[1], t[2], t[3],
+                   tile, th, tw, tile.shape[0], pixfmt.raw_fmt(tile), a, e,
+                   nf)
+
+    return rows_of
+
+
 def _emit_tiles(rows: DataFrame, tile_size: tuple[int, int],
                 nodata_threshold: float | None, cells,
                 res: tuple[float, float] | None = None) -> DataFrame:
-    """The emit path shared by the raster tilers.  ``cells(row, nodata)``
-    yields (tile_id, tx, ty, bounds, tile) for every grid cell of an input
-    row, tile being the (C, th, tw) pixels; this drops tiles whose
-    nodata fraction reaches ``nodata_threshold`` (raster_tile.py:189-204),
-    encodes the pixels as little-endian raw (pixfmt) and assembles
-    TILE_SCHEMA rows.  The tile pixel size (a, e) is the row's own unless
-    ``res`` fixes it."""
-    th, tw = tile_size
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                nod = _nodata(row.nodata)
-                a, e = res or (row.a, row.e)
-                for tile_id, tx, ty, t, tile in cells(row, nod):
-                    nf = R.nodata_fraction(tile, nod)
-                    if nodata_threshold is not None and nf >= nodata_threshold:
-                        continue
-                    pixels, fmt = pixfmt.encode(tile, "raw")
-                    out.append(dict(
-                        tile_id=tile_id, image_id=row.image_id, tx=tx, ty=ty,
-                        xmin=t[0], ymin=t[1], xmax=t[2], ymax=t[3],
-                        pixels=pixels, th=th, tw=tw, nchan=tile.shape[0],
-                        fmt=fmt, a=a, e=e, nodata_frac=nf))
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA.fields])
-
-    return rows.mapInPandas(gen, schema=TILE_SCHEMA)
+    """The emit path shared by the raster tilers."""
+    return map_blobs(rows, TILE_SCHEMA,
+                     _tile_rows(cells, tile_size, nodata_threshold, res))
 
 
 def raster_tiles(images_geo: DataFrame, tile_size: tuple[int, int],
@@ -172,6 +177,15 @@ def raster_tiles(images_geo: DataFrame, tile_size: tuple[int, int],
     polygon become nodata — rasterio.mask semantics — and only
     AOI-touching grid cells are kept)."""
     aoi_rings = G.polygon_rings(aoi_wkt) if aoi_wkt else None
+    cols = ["image_id", "bytes", "w", "h", "fmt",
+            "a", "b", "c", "d", "e", "f", "nodata"]
+    return _emit_tiles(images_geo.select(*cols), tile_size, nodata_threshold,
+                       raster_cells(tile_size, aoi_rings))
+
+
+def raster_cells(tile_size: tuple[int, int], aoi_rings=None):
+    """raster_tiles' cells: decode the image, blank pixels outside the AOI,
+    cut every grid cell with boundless nodata fill."""
 
     def cells(row, nod):
         arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
@@ -189,10 +203,7 @@ def raster_tiles(images_geo: DataFrame, tile_size: tuple[int, int],
                                     fill_value=nod)
             yield tile_name(row.image_id, tt[2], tt[5]), tx, ty, t, tile
 
-    cols = ["image_id", "bytes", "w", "h", "fmt",
-            "a", "b", "c", "d", "e", "f", "nodata"]
-    return _emit_tiles(images_geo.select(*cols), tile_size, nodata_threshold,
-                       cells)
+    return cells
 
 
 def raster_tiles_windowed(manifest_geo: DataFrame, tile_size: tuple[int, int],
@@ -332,38 +343,30 @@ def inference_tiles(images: DataFrame, tile_size: tuple[int, int],
     ys = y_step or th
     xs = x_step or tw
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
-                h_img, w_img = row.h, row.w
-                if h_img < th or w_img < tw:
-                    # the clamp formula goes negative here and would emit a
-                    # short pixel buffer labeled full-size (the reference
-                    # InferenceTiler crashes obscurely on this input too) —
-                    # fail fast with the offending image named
-                    raise ValueError(
-                        f"image {row.image_id} ({w_img}x{h_img}) is smaller "
-                        f"than the tile size ({tw}x{th}); pad or filter "
-                        "such images before inference_tiles")
-                y_steps = int(1 + np.ceil((h_img - th) / ys))
-                x_steps = int(1 + np.ceil((w_img - tw) / xs))
-                for y in range(y_steps):
-                    r0 = h_img - th if ys * y + th > h_img else ys * y
-                    for x in range(x_steps):
-                        c0 = w_img - tw if xs * x + tw > w_img else xs * x
-                        pixels, fmt = pixfmt.encode(
-                            arr[:, r0:r0 + th, c0:c0 + tw], "raw")
-                        out.append(dict(image_id=row.image_id, row0=r0,
-                                        col0=c0, pixels=pixels,
-                                        th=th, tw=tw, nchan=arr.shape[0],
-                                        fmt=fmt))
-            yield pd.DataFrame(out, columns=[f.name for f
-                                             in INFER_TILE_SCHEMA.fields])
+    def rows_of(row):
+        arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
+        h_img, w_img = row.h, row.w
+        if h_img < th or w_img < tw:
+            # the clamp formula goes negative here and would emit a short
+            # pixel buffer labeled full-size (the reference InferenceTiler
+            # crashes obscurely on this input too) — fail fast with the
+            # offending image named
+            raise ValueError(
+                f"image {row.image_id} ({w_img}x{h_img}) is smaller "
+                f"than the tile size ({tw}x{th}); pad or filter "
+                "such images before inference_tiles")
+        fmt = pixfmt.raw_fmt(arr)
+        y_steps = int(1 + np.ceil((h_img - th) / ys))
+        x_steps = int(1 + np.ceil((w_img - tw) / xs))
+        for y in range(y_steps):
+            r0 = h_img - th if ys * y + th > h_img else ys * y
+            for x in range(x_steps):
+                c0 = w_img - tw if xs * x + tw > w_img else xs * x
+                yield (row.image_id, r0, c0, arr[:, r0:r0 + th, c0:c0 + tw],
+                       th, tw, arr.shape[0], fmt)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(gen, schema=INFER_TILE_SCHEMA)
+    return map_blobs(images.select("image_id", "bytes", "w", "h", "fmt"),
+                     INFER_TILE_SCHEMA, rows_of)
 
 
 LABEL_TILE_SCHEMA = T.StructType([
@@ -543,26 +546,18 @@ def fill_nodata(tiles: DataFrame, fill_values: DataFrame) -> DataFrame:
     fill = channel-wise means from raster_tile.py:479-483)."""
     t = tiles.join(fill_values, "image_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = pixfmt.decode(r.fmt, r.pixels, r.tw, r.th).copy()
-                nod = _nodata(getattr(r, "nodata", None))
-                for ch in range(r.nchan):
-                    fv = r.fill_values[ch] if ch < len(r.fill_values) else 0.0
-                    band = arr[ch]
-                    band[band == nod] = np.asarray(fv, dtype=arr.dtype)
-                pixels, fmt = pixfmt.encode(arr, r.fmt)
-                out.append(dict(tile_id=r.tile_id, image_id=r.image_id,
-                                tx=r.tx, ty=r.ty, xmin=r.xmin, ymin=r.ymin,
-                                xmax=r.xmax, ymax=r.ymax,
-                                pixels=pixels, th=r.th, tw=r.tw,
-                                nchan=r.nchan, fmt=fmt, a=r.a, e=r.e,
-                                nodata_frac=0.0))
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA.fields])
+    def rows_of(r):
+        arr = pixfmt.decode(r.fmt, r.pixels, r.tw, r.th).copy()
+        nod = _nodata(getattr(r, "nodata", None))
+        for ch in range(r.nchan):
+            fv = r.fill_values[ch] if ch < len(r.fill_values) else 0.0
+            band = arr[ch]
+            band[band == nod] = np.asarray(fv, dtype=arr.dtype)
+        pixels, fmt = pixfmt.encode(arr, r.fmt)
+        yield (r.tile_id, r.image_id, r.tx, r.ty, r.xmin, r.ymin, r.xmax,
+               r.ymax, pixels, r.th, r.tw, r.nchan, fmt, r.a, r.e, 0.0)
 
-    return t.mapInPandas(run, schema=TILE_SCHEMA)
+    return map_blobs(t, TILE_SCHEMA, rows_of)
 
 
 def empty_tiles(grid: DataFrame, label_tiles: DataFrame) -> DataFrame:

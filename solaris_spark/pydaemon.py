@@ -39,13 +39,16 @@ Activated by ``session.get_spark`` via
 ``spark.python.daemon.module=solaris_spark.pydaemon`` — a documented Spark
 configuration (`Configuration: spark.python.daemon.module`).  Everything
 else delegates to the stock ``pyspark.daemon`` (same fork model, same
-socket protocol, same signal handling).
+socket protocol, same signal handling).  Both fixes rebind private PySpark
+names, so ``install`` checks that they exist first and otherwise leaves the
+stock loop running, with one warning.
 """
 
 from __future__ import annotations
 
 import gc
 import importlib
+import logging
 import os
 
 import pyspark.daemon as _daemon
@@ -102,16 +105,32 @@ class _GcShim:
         return n
 
 
-_worker.setup_spark_files = _setup_spark_files
-_daemon.worker_main = _worker.main  # rebind in case daemon captured it early
-_daemon.gc = _GcShim()
+def install(worker=_worker, daemon=_daemon) -> bool:
+    """Patch both costs into the worker and daemon modules.  The patches
+    rebind private PySpark names (``worker.setup_spark_files``,
+    ``worker.main``, ``daemon.gc``, ``daemon.worker_main``); if any of them
+    is missing, the PySpark release is not the one these patches were
+    written for, so nothing is patched, stock behaviour stays, and one
+    warning names what is missing."""
+    missing = [f"{mod.__name__}.{name}"
+               for mod, names in ((worker, ("setup_spark_files", "main")),
+                                  (daemon, ("gc", "worker_main")))
+               for name in names if not hasattr(mod, name)]
+    if missing:
+        logging.getLogger(__name__).warning(
+            "solaris_spark.pydaemon: %s not found; running the stock "
+            "pyspark.daemon loop unpatched", ", ".join(missing))
+        return False
+    worker.setup_spark_files = _setup_spark_files
+    daemon.worker_main = worker.main  # rebind in case daemon captured it early
+    daemon.gc = _GcShim()
+    return True
 
-# Freeze the daemon's import-time object graph before any fork so the first
-# per-task collect in every child is already cheap (children inherit the
-# permanent generation through fork).
-gc.freeze()
-
-manager = _daemon.manager
 
 if __name__ == "__main__":
-    manager()
+    if install():
+        # Freeze the daemon's import-time object graph before any fork so
+        # the first per-task collect in every child is already cheap
+        # (children inherit the permanent generation through fork).
+        gc.freeze()
+    _daemon.manager()

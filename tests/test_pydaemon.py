@@ -1,0 +1,57 @@
+"""The worker-daemon patches apply only to the PySpark internals they were
+written against; anything else keeps the stock daemon loop."""
+
+import gc
+import logging
+import types
+
+from solaris_spark import pydaemon
+
+
+def _stubs():
+    def main(infile, outfile):
+        return None
+
+    def setup_spark_files(infile):
+        return None
+
+    worker = types.ModuleType("stub_worker")
+    worker.main = main
+    worker.setup_spark_files = setup_spark_files
+    daemon = types.ModuleType("stub_daemon")
+    daemon.gc = gc
+    daemon.worker_main = None
+    return worker, daemon
+
+
+def test_install_patches_matching_modules():
+    worker, daemon = _stubs()
+    assert pydaemon.install(worker, daemon)
+    assert worker.setup_spark_files is pydaemon._setup_spark_files
+    assert daemon.worker_main is worker.main
+    assert isinstance(daemon.gc, pydaemon._GcShim)
+
+
+def test_missing_setup_spark_files_keeps_stock_behaviour(caplog):
+    worker, daemon = _stubs()
+    del worker.setup_spark_files
+    with caplog.at_level(logging.WARNING, logger=pydaemon.__name__):
+        assert not pydaemon.install(worker, daemon)
+    assert not hasattr(worker, "setup_spark_files")
+    assert daemon.gc is gc and daemon.worker_main is None
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "stub_worker.setup_spark_files" in warnings[0].getMessage()
+
+
+def test_missing_daemon_gc_keeps_stock_behaviour(caplog):
+    worker, daemon = _stubs()
+    stock_setup = worker.setup_spark_files
+    del daemon.gc
+    with caplog.at_level(logging.WARNING, logger=pydaemon.__name__):
+        assert not pydaemon.install(worker, daemon)
+    assert worker.setup_spark_files is stock_setup
+    assert daemon.worker_main is None
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "stub_daemon.gc" in warnings[0].getMessage()
