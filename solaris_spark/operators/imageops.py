@@ -16,8 +16,11 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import imops, pixfmt
+from .blobs import group_blobs, map_blobs
+from .masks import MASK_SCHEMA
 
-UINT8_SCHEMA = T.StructType([
+# one image per row in any pixfmt format (to_uint8, resize_images, crop)
+IMAGE_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
     T.StructField("bytes", T.BinaryType(), True),
     T.StructField("w", T.IntegerType(), True),
@@ -28,26 +31,20 @@ UINT8_SCHEMA = T.StructType([
 
 def to_uint8(images: DataFrame, rescale: bool = False,
              rescale_min="auto", rescale_max="auto") -> DataFrame:
-    """imread(make_8bit=True) as a mapInPandas operator: decode, dtype
-    heuristic, optional per-channel rescale, 8-bit output (fmt raw-u8-cN)."""
+    """imread(make_8bit=True) as a blob map: decode, dtype heuristic,
+    optional per-channel rescale, 8-bit output (fmt raw-u8-cN)."""
 
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = pixfmt.decode(r.fmt, r.bytes, r.w, r.h)  # (C, Y, X)
-                yxc = np.moveaxis(arr, 0, -1)
-                fmt = imops.infer_format(yxc)
-                u8 = imops.preprocess_im_arr(yxc, fmt, rescale=rescale,
-                                             rescale_min=rescale_min,
-                                             rescale_max=rescale_max)
-                payload, fmt = pixfmt.encode(np.moveaxis(u8, -1, 0), "raw")
-                out.append(dict(image_id=r.image_id, bytes=payload,
-                                w=r.w, h=r.h, fmt=fmt))
-            yield pd.DataFrame(out)
+    def rows_of(r):
+        yxc = np.moveaxis(pixfmt.decode(r.fmt, r.bytes, r.w, r.h), 0, -1)
+        u8 = imops.preprocess_im_arr(yxc, imops.infer_format(yxc),
+                                     rescale=rescale,
+                                     rescale_min=rescale_min,
+                                     rescale_max=rescale_max)
+        chw = np.moveaxis(u8, -1, 0)
+        yield (r.image_id, chw, r.w, r.h, pixfmt.raw_fmt(chw))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(run, schema=UINT8_SCHEMA)
+    return map_blobs(images.select("image_id", "bytes", "w", "h", "fmt"),
+                     IMAGE_SCHEMA, rows_of)
 
 
 STITCH_SCHEMA = T.StructType([
@@ -58,6 +55,21 @@ STITCH_SCHEMA = T.StructType([
     T.StructField("nchan", T.IntegerType(), False),
     T.StructField("dtype", T.StringType(), False),
 ])
+
+
+def _stitched_row(rows, refs, canvas, method):
+    """The STITCH_SCHEMA row of one image: its tile rows decoded and
+    stitched (imops.stitch_images) at their (row0, col0) ``refs`` onto a
+    (h, w) ``canvas`` whose bottom-left img_h × img_w is the image."""
+    r0 = rows[0]
+    tiles = [np.moveaxis(pixfmt.decode(r.fmt, r.pixels, r.tw, r.th), 0, -1)
+             for r in rows]
+    out = imops.stitch_images(np.stack(tiles), idx_refs=refs,
+                              out_width=canvas[1], out_height=canvas[0],
+                              method=method)
+    out = out[canvas[0] - r0.img_h:, :r0.img_w]
+    return (r0.image_id, np.moveaxis(out, -1, 0), *out.shape,
+            str(out.dtype))
 
 
 def stitch_tiles(tiles: DataFrame, out_dims: DataFrame,
@@ -71,32 +83,19 @@ def stitch_tiles(tiles: DataFrame, out_dims: DataFrame,
     t = tiles.join(out_dims.select("image_id", F.col("w").alias("img_w"),
                                    F.col("h").alias("img_h")), "image_id")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r0 = pdf.iloc[0]
-        H, W = int(r0["img_h"]), int(r0["img_w"])
-        th, tw = int(r0["th"]), int(r0["tw"])
-        max_ty = int(pdf["ty"].max())
-        max_tx = int(pdf["tx"].max())
+    def rows_of(rows):
+        th, tw = rows[0].th, rows[0].tw
+        max_ty = max(r.ty for r in rows)
         # grid ty ascends bottom-up (geo y), pixel rows go top-down; the grid
         # is anchored at the image's bottom edge, so the canvas may overhang
         # above the image top — stitch onto the canvas, then crop its bottom
         # H rows / left W cols.
-        canvas_h, canvas_w = (max_ty + 1) * th, (max_tx + 1) * tw
-        arrs, refs = [], []
-        for _, r in pdf.iterrows():
-            a = pixfmt.decode(r["fmt"], r["pixels"], tw, th)
-            arrs.append(np.moveaxis(a, 0, -1))
-            refs.append(((max_ty - int(r["ty"])) * th, int(r["tx"]) * tw))
-        out = imops.stitch_images(np.stack(arrs), idx_refs=refs,
-                                  out_width=canvas_w, out_height=canvas_h,
-                                  method=method)
-        out = out[canvas_h - H:, :W]
-        return pd.DataFrame([dict(image_id=r0["image_id"],
-                                  pixels=np.moveaxis(out, -1, 0).tobytes(),
-                                  h=H, w=W, nchan=out.shape[-1],
-                                  dtype=str(out.dtype))])
+        canvas = ((max_ty + 1) * th, (max(r.tx for r in rows) + 1) * tw)
+        yield _stitched_row(
+            rows, [((max_ty - r.ty) * th, r.tx * tw) for r in rows], canvas,
+            method)
 
-    return t.groupBy("image_id").applyInPandas(run, schema=STITCH_SCHEMA)
+    return group_blobs(t, "image_id", STITCH_SCHEMA, rows_of)
 
 
 def stitch_inference_tiles(tiles: DataFrame, out_dims: DataFrame,
@@ -108,23 +107,11 @@ def stitch_inference_tiles(tiles: DataFrame, out_dims: DataFrame,
     t = tiles.join(out_dims.select("image_id", F.col("w").alias("img_w"),
                                    F.col("h").alias("img_h")), "image_id")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r0 = pdf.iloc[0]
-        H, W = int(r0["img_h"]), int(r0["img_w"])
-        th, tw = int(r0["th"]), int(r0["tw"])
-        arrs, refs = [], []
-        for _, r in pdf.iterrows():
-            a = pixfmt.decode(r["fmt"], r["pixels"], tw, th)
-            arrs.append(np.moveaxis(a, 0, -1))
-            refs.append((int(r["row0"]), int(r["col0"])))
-        out = imops.stitch_images(np.stack(arrs), idx_refs=refs,
-                                  out_width=W, out_height=H, method=method)
-        return pd.DataFrame([dict(image_id=r0["image_id"],
-                                  pixels=np.moveaxis(out, -1, 0).tobytes(),
-                                  h=H, w=W, nchan=out.shape[-1],
-                                  dtype=str(out.dtype))])
+    def rows_of(rows):
+        yield _stitched_row(rows, [(r.row0, r.col0) for r in rows],
+                            (rows[0].img_h, rows[0].img_w), method)
 
-    return t.groupBy("image_id").applyInPandas(run, schema=STITCH_SCHEMA)
+    return group_blobs(t, "image_id", STITCH_SCHEMA, rows_of)
 
 
 def binarize_preds(masks: DataFrame, channel_scaling=None,
@@ -133,21 +120,13 @@ def binarize_preds(masks: DataFrame, channel_scaling=None,
     per-row channel-scaled sum + threshold → single-channel uint8×255."""
     scaling = list(channel_scaling) if channel_scaling is not None else None
 
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.mask, dtype=np.uint8).reshape(
-                    r.h, r.w, r.nchan)
-                b = imops.preds_to_binary(arr, scaling, bg_threshold)
-                out.append(dict(image_id=r.image_id, mask=b.tobytes(),
-                                h=r.h, w=r.w, nchan=1,
-                                channels="binary"))
-            yield pd.DataFrame(out)
+    def rows_of(r):
+        arr = np.frombuffer(r.mask, dtype=np.uint8).reshape(r.h, r.w, r.nchan)
+        yield (r.image_id, imops.preds_to_binary(arr, scaling, bg_threshold),
+               r.h, r.w, 1, "binary")
 
-    from .masks import MASK_SCHEMA
-    return masks.select("image_id", "mask", "h", "w", "nchan") \
-        .mapInPandas(run, schema=MASK_SCHEMA)
+    return map_blobs(masks.select("image_id", "mask", "h", "w", "nchan"),
+                     MASK_SCHEMA, rows_of)
 
 
 def channel_fill_values(images: DataFrame) -> DataFrame:

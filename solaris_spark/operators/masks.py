@@ -1,7 +1,9 @@
 """Mask generation as Spark operators: footprint / boundary / contact /
-road / instance channels per image (or per tile): image_masks through
-applyInArrow (the mask leaves as one zero-copy Arrow value), the others
-through applyInPandas.
+road / instance channels per image (or per tile).  image_masks, road_masks
+and instance_masks group label rows by image and emit their masks through
+blobs.group_blobs, in Arrow batches bounded at the session's 64 MB (one
+instance_masks image can carry many label-sized masks);
+masks_to_polygons emits scalar polygon rows through applyInPandas.
 
 Re-expresses df_to_px_mask and friends (solaris/vector/mask.py:19-132,
 135-236 footprint, 239-318 boundary, 321-444 contact, 447-564 road,
@@ -11,23 +13,23 @@ Re-expresses df_to_px_mask and friends (solaris/vector/mask.py:19-132,
 Scale design: one group = one image's labels (KBs of WKT) producing one
 mask (HxW bytes).  Groups shuffle only label rows; pixels are created
 executor-side.  For 10^12 images the shuffle key is image_id (salting not
-needed: label cardinality per image is small and uniform; for the rare
-mega-image, pre-aggregate labels with collect_list and mapInPandas).
+needed: label cardinality per image is small and uniform).
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import geom as G
 from ..functions import pixfmt
 from ..functions import raster as R
+from .blobs import group_blobs
 
 MASK_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -37,7 +39,11 @@ MASK_SCHEMA = T.StructType([
     T.StructField("nchan", T.IntegerType(), False),
     T.StructField("channels", T.StringType(), False),
 ])
-_MASK_ARROW = to_arrow_schema(MASK_SCHEMA)
+
+
+def _affine(row) -> tuple:
+    """The (a, b, c, d, e, f) affine of an images_geo-joined row."""
+    return (row.a, row.b, row.c, row.d, row.e, row.f)
 
 
 def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
@@ -114,27 +120,19 @@ def image_masks(labels: DataFrame, images_geo: DataFrame,
     if num_partitions:
         lab = lab.repartition(num_partitions, "image_id")
 
-    def run(tbl: pa.Table) -> pa.Table:
-        r0 = tbl.slice(0, 1).to_pylist()[0]
-        shape = (r0["h"], r0["w"])
-        transform = ((r0["a"], r0["b"], r0["c"], r0["d"], r0["e"], r0["f"])
-                     if do_transform else None)
-        arr = build_mask_arrays(tbl.column("wkt").drop_null().to_pylist(),
-                                shape, channels,
+    def rows_of(rows):
+        r0 = rows[0]
+        arr = build_mask_arrays([r.wkt for r in rows if r.wkt is not None],
+                                (r0.h, r0.w), channels,
                                 boundary_width=boundary_width,
                                 boundary_type=boundary_type,
                                 contact_spacing=contact_spacing,
-                                transform=transform)
-        # the stacked mask's own memory backs the binary value (no copy)
-        mask = pa.BinaryArray.from_buffers(pa.binary(), 1, [
-            None, pa.py_buffer(np.array([0, arr.nbytes], dtype=np.int32)),
-            pa.py_buffer(arr)])
-        ints = [pa.array([v], pa.int32()) for v in (*shape, arr.shape[-1])]
-        return pa.Table.from_arrays(
-            [pa.array([r0["image_id"]]), mask, *ints,
-             pa.array([",".join(channels)])], schema=_MASK_ARROW)
+                                transform=_affine(r0) if do_transform
+                                else None)
+        yield (r0.image_id, arr, r0.h, r0.w, arr.shape[-1],
+               ",".join(channels))
 
-    return lab.groupBy("image_id").applyInArrow(run, schema=MASK_SCHEMA)
+    return group_blobs(lab, "image_id", MASK_SCHEMA, rows_of)
 
 
 def road_masks(roads: DataFrame, images_geo: DataFrame,
@@ -148,43 +146,43 @@ def road_masks(roads: DataFrame, images_geo: DataFrame,
                              "f", "epsg")
     rd = roads.select("image_id", "wkt").join(dims, "image_id")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r0 = pdf.iloc[0]
-        shape = (int(r0["h"]), int(r0["w"]))
-        transform = (r0["a"], r0["b"], r0["c"], r0["d"], r0["e"], r0["f"])
-        inv = G.affine_invert(transform)
-        epsg = int(r0["epsg"])
-        mask = np.zeros(shape, dtype=np.uint8)
+    def rows_of(rows):
+        r0 = rows[0]
+        shape = (r0.h, r0.w)
+        inv = G.affine_invert(_affine(r0))
         lines = []
-        for w in pdf["wkt"].dropna():
-            gtype, parts = G.wkt_parse(w)
+        for r in rows:
+            if r.wkt is None:
+                continue
+            gtype, parts = G.wkt_parse(r.wkt)
             if gtype == "LINESTRING":
                 lines.append(parts[0])
             elif gtype == "MULTILINESTRING":
                 lines.extend(parts)
-        if lines and meters and epsg == 4326:
+        zone = None
+        if lines and meters and r0.epsg == 4326:
             allc = np.vstack(lines)
             zone = G.utm_zone_epsg(float(allc[:, 0].mean()),
                                    float(allc[:, 1].mean()))
-            for ln in lines:
+        mask = np.zeros(shape, dtype=np.uint8)
+        for ln in lines:
+            if zone is not None:
+                # buffer in metres, then lon/lat → pixels
                 E, N = G.wgs84_to_utm(ln[:, 0], ln[:, 1], zone)
-                curve = G.line_offset_curve(np.stack([E, N], axis=1), width / 2.0)
+                curve = G.line_offset_curve(np.stack([E, N], axis=1),
+                                            width / 2.0)
                 lon, lat = G.utm_to_wgs84(curve[:, 0], curve[:, 1], zone)
-                cpx = G.affine_apply(np.stack([lon, lat], axis=1), inv)
-                # burn directly into the shared frame (O(bbox) traffic)
-                R.rasterize_rings([cpx], shape, out=mask, value=burn_value,
-                                  winding=True)
-        else:
-            for ln in lines:
-                ln_px = G.affine_apply(ln, inv) if epsg else ln
-                curve = G.line_offset_curve(ln_px, width / 2.0)
-                R.rasterize_rings([curve], shape, out=mask, value=burn_value,
-                                  winding=True)
-        return pd.DataFrame([{
-            "image_id": r0["image_id"], "mask": mask.tobytes(),
-            "h": shape[0], "w": shape[1], "nchan": 1, "channels": "road"}])
+                curve = G.affine_apply(np.stack([lon, lat], axis=1), inv)
+            else:
+                # CRS → pixels (no CRS: already pixels), then buffer
+                curve = G.line_offset_curve(
+                    G.affine_apply(ln, inv) if r0.epsg else ln, width / 2.0)
+            # burn directly into the shared frame (O(bbox) traffic)
+            R.rasterize_rings([curve], shape, out=mask, value=burn_value,
+                              winding=True)
+        yield (r0.image_id, mask, shape[0], shape[1], 1, "road")
 
-    return rd.groupBy("image_id").applyInPandas(run, schema=MASK_SCHEMA)
+    return group_blobs(rd, "image_id", MASK_SCHEMA, rows_of)
 
 
 POLYGONIZE_SCHEMA = T.StructType([
@@ -255,32 +253,33 @@ def instance_masks(labels: DataFrame, images_geo: DataFrame,
                              "f", "nodata")
     lab = labels.select("image_id", "label_id",
                         F.col(geom_col).alias("wkt")).join(dims, "image_id")
-    if nodata_aware and images is not None:
-        lab = lab.join(images.select("image_id", "bytes", "fmt"), "image_id")
-
     has_img = nodata_aware and images is not None
+    if has_img:
+        lab = lab.join(images.select("image_id", "bytes", "fmt"), "image_id")
+    return group_blobs(lab, "image_id", INSTANCE_SCHEMA,
+                       _instance_rows(do_transform, burn_value, has_img))
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r0 = pdf.iloc[0]
-        shape = (int(r0["h"]), int(r0["w"]))
-        transform = (r0["a"], r0["b"], r0["c"], r0["d"], r0["e"], r0["f"])
-        inv = G.affine_invert(transform) if do_transform else None
+
+def _instance_rows(do_transform: bool, burn_value: int, has_img: bool):
+    """INSTANCE_SCHEMA rows of one image's label rows: one rasterize_rings
+    mask per label, zeroed where the joined image (``has_img``) equals its
+    nodata value."""
+
+    def rows_of(rows):
+        r0 = rows[0]
+        shape = (r0.h, r0.w)
+        inv = G.affine_invert(_affine(r0)) if do_transform else None
         bad = None
-        if has_img and r0["nodata"] is not None and not pd.isna(r0["nodata"]):
-            arr = pixfmt.decode(r0["fmt"], r0["bytes"], int(r0["w"]),
-                                int(r0["h"]))
-            bad = (arr == r0["nodata"]).any(axis=0)
-        rows = []
-        for _, rr in pdf.iterrows():
-            rings = G.polygon_rings(rr["wkt"])
+        if has_img and r0.nodata is not None and not math.isnan(r0.nodata):
+            arr = pixfmt.decode(r0.fmt, r0.bytes, r0.w, r0.h)
+            bad = (arr == r0.nodata).any(axis=0)
+        for r in rows:
+            rings = G.polygon_rings(r.wkt)
             if inv is not None:
-                rings = [G.affine_apply(r, inv) for r in rings]
+                rings = [G.affine_apply(ring, inv) for ring in rings]
             m = R.rasterize_rings(rings, shape, value=burn_value)
             if bad is not None:
                 m = np.where(bad, 0, m)
-            rows.append({"image_id": rr["image_id"],
-                         "label_id": int(rr["label_id"]),
-                         "mask": m.tobytes(), "h": shape[0], "w": shape[1]})
-        return pd.DataFrame(rows)
+            yield (r.image_id, r.label_id, m, shape[0], shape[1])
 
-    return lab.groupBy("image_id").applyInPandas(run, schema=INSTANCE_SCHEMA)
+    return rows_of

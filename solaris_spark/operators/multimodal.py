@@ -1,6 +1,6 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata,
-with decode / feature-extract / resize / frame-sample as mapInPandas
-operators.
+"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+Resize, crop and frame sampling emit blobs through blobs.map_blobs;
+feature extraction emits small scalar rows through mapInPandas.
 
 Images decode and re-encode through functions/pixfmt.py: raw formats, PNG
 and JPEG (baseline and progressive) are native codecs; other image formats
@@ -19,6 +19,8 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import pixfmt
+from .blobs import map_blobs
+from .imageops import IMAGE_SCHEMA
 
 # ---------------------------------------------------------------------------
 # audio / video decoders — deterministic fakes
@@ -84,58 +86,35 @@ def image_features(images: DataFrame) -> DataFrame:
         .mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-RESIZE_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType(), False),
-    T.StructField("bytes", T.BinaryType(), True),
-    T.StructField("w", T.IntegerType(), True),
-    T.StructField("h", T.IntegerType(), True),
-    T.StructField("fmt", T.StringType(), True),
-])
-
-
 def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Area-mean resize (exact block average via 2-D cumsum — the same
     kernel phash uses; bilinear is a drop-in swap)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = pixfmt.decode(r.fmt, r.bytes, int(r.w), int(r.h))
-                C, H, W = arr.shape
-                ys = np.minimum((np.arange(out_h + 1) * H / out_h).astype(int), H)
-                xs = np.minimum((np.arange(out_w + 1) * W / out_w).astype(int), W)
-                res = np.empty((C, out_h, out_w), dtype=arr.dtype)
-                for c in range(C):
-                    cs = np.zeros((H + 1, W + 1))
-                    cs[1:, 1:] = arr[c].astype(np.float64).cumsum(0).cumsum(1)
-                    for i in range(out_h):
-                        y0, y1 = ys[i], max(ys[i + 1], ys[i] + 1)
-                        for j in range(out_w):
-                            x0, x1 = xs[j], max(xs[j + 1], xs[j] + 1)
-                            s = cs[y1, x1] - cs[y0, x1] - cs[y1, x0] + cs[y0, x0]
-                            res[c, i, j] = s / ((y1 - y0) * (x1 - x0))
-                payload, fmt = pixfmt.encode(res, r.fmt)
-                out.append(dict(image_id=r.image_id, bytes=payload,
-                                w=out_w, h=out_h, fmt=fmt))
-            yield pd.DataFrame(out)
+    def rows_of(r):
+        arr = pixfmt.decode(r.fmt, r.bytes, r.w, r.h)
+        C, H, W = arr.shape
+        ys = np.minimum((np.arange(out_h + 1) * H / out_h).astype(int), H)
+        xs = np.minimum((np.arange(out_w + 1) * W / out_w).astype(int), W)
+        res = np.empty((C, out_h, out_w), dtype=arr.dtype)
+        for c in range(C):
+            cs = np.zeros((H + 1, W + 1))
+            cs[1:, 1:] = arr[c].astype(np.float64).cumsum(0).cumsum(1)
+            for i in range(out_h):
+                y0, y1 = ys[i], max(ys[i + 1], ys[i] + 1)
+                for j in range(out_w):
+                    x0, x1 = xs[j], max(xs[j + 1], xs[j] + 1)
+                    s = cs[y1, x1] - cs[y0, x1] - cs[y1, x0] + cs[y0, x0]
+                    res[c, i, j] = s / ((y1 - y0) * (x1 - x0))
+        payload, fmt = pixfmt.encode(res, r.fmt)
+        yield (r.image_id, payload, out_w, out_h, fmt)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-CROP_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType(), False),
-    T.StructField("bytes", T.BinaryType(), True),
-    T.StructField("w", T.IntegerType(), True),
-    T.StructField("h", T.IntegerType(), True),
-    T.StructField("fmt", T.StringType(), True),
-])
+    return map_blobs(images.select("image_id", "bytes", "w", "h", "fmt"),
+                     IMAGE_SCHEMA, rows_of)
 
 
 def crop_images(images: DataFrame, bounds, mode: str = "pixel") -> DataFrame:
     """Crop every image to `bounds` — solaris/preproc/image.py:373-409
-    (`Crop`) semantics re-expressed as one mapInPandas pass:
+    (`Crop`) semantics re-expressed as one blob map:
 
     - bounds = [left, bottom, right, top].
     - mode='pixel': INCLUSIVE pixel window (gdal srcWin width =
@@ -158,50 +137,44 @@ def crop_images(images: DataFrame, bounds, mode: str = "pixel") -> DataFrame:
     if isinstance(mode, bool) or mode not in ("pixel", "p", 0, "geo", "g", 1):
         raise ValueError(f"invalid crop mode: {mode!r}")
     geo = mode in ("geo", "g", 1)
-    schema = CROP_SCHEMA
+    schema = IMAGE_SCHEMA
     cols = ["image_id", "bytes", "w", "h", "fmt"]
     if geo:
         schema = T.StructType(
-            CROP_SCHEMA.fields
+            IMAGE_SCHEMA.fields
             + [T.StructField("transform", T.ArrayType(T.DoubleType()), True)])
         cols = cols + ["transform"]
     left, bottom, right, top = (float(v) for v in bounds)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = pixfmt.decode(r.fmt, r.bytes, int(r.w), int(r.h))
-                C, H, W = arr.shape
-                if geo:
-                    # gdal.Translate srcWin derivation: floor(+0.001 px)
-                    # offsets, extent-derived nearest-rounded sizes — NOT
-                    # four independently rounded corners, which can land
-                    # one pixel off for edge-misaligned bounds (ADVICE r3)
-                    gt = [float(v) for v in r.transform]
-                    x0 = int(np.floor((left - gt[0]) / gt[1] + 0.001))
-                    y0 = int(np.floor((top - gt[3]) / gt[5] + 0.001))
-                    x1 = x0 + int((right - left) / gt[1] + 0.5)
-                    y1 = y0 + int((bottom - top) / gt[5] + 0.5)
-                else:
-                    x0, y0 = int(left), int(top)
-                    x1, y1 = int(right) + 1, int(bottom) + 1
-                x0c, y0c = max(0, x0), max(0, y0)
-                x1c, y1c = min(W, x1), min(H, y1)
-                if x1c <= x0c or y1c <= y0c:
-                    continue
-                win = np.ascontiguousarray(arr[:, y0c:y1c, x0c:x1c])
-                payload, fmt = pixfmt.encode(win, r.fmt)
-                rec = dict(image_id=r.image_id, bytes=payload,
-                           w=int(x1c - x0c), h=int(y1c - y0c), fmt=fmt)
-                if geo:
-                    gt = [float(v) for v in r.transform]
-                    rec["transform"] = [gt[0] + x0c * gt[1], gt[1], gt[2],
-                                        gt[3] + y0c * gt[5], gt[4], gt[5]]
-                out.append(rec)
-            yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
+    def rows_of(r):
+        arr = pixfmt.decode(r.fmt, r.bytes, r.w, r.h)
+        C, H, W = arr.shape
+        if geo:
+            # gdal.Translate srcWin derivation: floor(+0.001 px) offsets,
+            # extent-derived nearest-rounded sizes — NOT four independently
+            # rounded corners, which can land one pixel off for
+            # edge-misaligned bounds (ADVICE r3)
+            gt = [float(v) for v in r.transform]
+            x0 = int(np.floor((left - gt[0]) / gt[1] + 0.001))
+            y0 = int(np.floor((top - gt[3]) / gt[5] + 0.001))
+            x1 = x0 + int((right - left) / gt[1] + 0.5)
+            y1 = y0 + int((bottom - top) / gt[5] + 0.5)
+        else:
+            x0, y0 = int(left), int(top)
+            x1, y1 = int(right) + 1, int(bottom) + 1
+        x0c, y0c = max(0, x0), max(0, y0)
+        x1c, y1c = min(W, x1), min(H, y1)
+        if x1c <= x0c or y1c <= y0c:
+            return
+        win = np.ascontiguousarray(arr[:, y0c:y1c, x0c:x1c])
+        payload, fmt = pixfmt.encode(win, r.fmt)
+        row = (r.image_id, payload, x1c - x0c, y1c - y0c, fmt)
+        if geo:
+            row += ([gt[0] + x0c * gt[1], gt[1], gt[2],
+                     gt[3] + y0c * gt[5], gt[4], gt[5]],)
+        yield row
 
-    return images.select(*cols).mapInPandas(run, schema=schema)
+    return map_blobs(images.select(*cols), schema, rows_of)
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType([
@@ -243,21 +216,14 @@ FRAME_SCHEMA = T.StructType([
 
 def sample_frames(videos: DataFrame, sample_every: int = 10) -> DataFrame:
     """videos(video_id, bytes, w, h, n_frames) → one row per sampled frame
-    (UDTF-shaped: rows out > rows in; Arrow batches stay bounded because
-    frames explode executor-side)."""
+    (UDTF-shaped: rows out > rows in; frames explode executor-side, and
+    map_blobs cuts the output batches at 64 MB)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                frames = sample_video_frames_fake(
-                    r.bytes, int(r.w), int(r.h), int(r.n_frames), sample_every)
-                for k, fr in enumerate(frames):
-                    out.append(dict(video_id=r.video_id,
-                                    frame_idx=k * sample_every,
-                                    bytes=fr.tobytes(),
-                                    w=int(r.w), h=int(r.h)))
-            yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
+    def rows_of(r):
+        frames = sample_video_frames_fake(r.bytes, r.w, r.h, r.n_frames,
+                                          sample_every)
+        for k, fr in enumerate(frames):
+            yield (r.video_id, k * sample_every, fr, r.w, r.h)
 
-    return videos.select("video_id", "bytes", "w", "h", "n_frames") \
-        .mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_blobs(videos.select("video_id", "bytes", "w", "h", "n_frames"),
+                     FRAME_SCHEMA, rows_of)

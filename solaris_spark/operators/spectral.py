@@ -3,20 +3,21 @@
 Wraps the vectorized kernels in functions/spectral.py over a generic
 spectral-image schema (image_id, pixels binary, h, w, nchan, dtype —
 dtype is any numpy name incl. complex64/complex128 for SAR data).
-One mapInPandas per operator; chains fuse into a single Python stage.
+One blob map (blobs.map_blobs) per operator, output batches bounded at the
+session's 64 MB Arrow batch size even when an operator widens the dtype.
 Reference surface: solaris/preproc/sar.py:17-170, optical.py:9-92.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import spectral as S
+from .blobs import map_blobs
 
 SPECTRAL_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -31,26 +32,26 @@ SPECTRAL_SCHEMA = T.StructType([
 def band_math(images: DataFrame,
               fn: Callable[[np.ndarray], np.ndarray]) -> DataFrame:
     """Generic per-image band math (sar.py:17-32 BandMath): `fn` maps a
-    (C, Y, X) array to a new array; 2-D outputs get a channel axis."""
+    (C, Y, X) array to a new array; 2-D outputs get a channel axis.  The
+    output pixels are little-endian, and ``dtype`` names them so."""
+    return map_blobs(
+        images.select("image_id", "pixels", "h", "w", "nchan", "dtype"),
+        SPECTRAL_SCHEMA, _band_rows(fn))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)) \
-                    .reshape(r.nchan, r.h, r.w)
-                res = fn(arr)
-                if res.ndim == 2:
-                    res = res[None]
-                out.append(dict(image_id=r.image_id,
-                                pixels=np.ascontiguousarray(res).tobytes(),
-                                h=res.shape[1], w=res.shape[2],
-                                nchan=res.shape[0], dtype=str(res.dtype)))
-            yield pd.DataFrame(out, columns=[f.name for f
-                                             in SPECTRAL_SCHEMA.fields])
 
-    return images.select("image_id", "pixels", "h", "w", "nchan", "dtype") \
-        .mapInPandas(run, schema=SPECTRAL_SCHEMA)
+def _band_rows(fn: Callable[[np.ndarray], np.ndarray]):
+    """The SPECTRAL_SCHEMA row of one image row, its pixels mapped by fn."""
+
+    def rows_of(r):
+        arr = np.frombuffer(r.pixels, dtype=np.dtype(r.dtype)) \
+            .reshape(r.nchan, r.h, r.w)
+        res = fn(arr)
+        if res.ndim == 2:
+            res = res[None]
+        yield (r.image_id, res, res.shape[1], res.shape[2], res.shape[0],
+               str(res.dtype.newbyteorder("<")))
+
+    return rows_of
 
 
 def amplitude(images: DataFrame) -> DataFrame:

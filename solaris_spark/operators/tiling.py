@@ -21,7 +21,10 @@ records (session.py); every blob-emitting operator here (the three raster
 tilers, inference_tiles, fill_nodata) is a mapInArrow over
 blobs.blob_batches, which reads input blobs in place and returns its tiles
 in Arrow batches cut at the same 64 MB: each batch's pixels sit in one
-contiguous buffer behind the binary column, no pandas in between.
+contiguous buffer behind the binary column, no pandas in between.  The
+package's other pixel-emitting operators (masks, stitching, image and
+spectral maps, synthetic images, streaming ingest) leave Python the same
+way, through blobs.map_blobs or its grouped twin blobs.group_blobs.
 """
 
 from __future__ import annotations

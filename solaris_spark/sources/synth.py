@@ -11,9 +11,10 @@ plus the georegistration sidecar and pixel-coordinate building labels:
     labels(image_id, label_id, wkt_pix)
 
 Everything is seeded by ``(seed, image_id)`` so any row can be regenerated
-independently on any executor — generation happens INSIDE mapInPandas, so a
-10^12-row table never materializes on the driver (driver only holds the id
-range).  A special "fixture mirror" row reproduces the reference's
+independently on any executor — generation happens INSIDE the UDFs
+(images through blobs.map_blobs, sidecar and labels through mapInPandas),
+so a 10^12-row table never materializes on the driver (driver only holds
+the id range).  A special "fixture mirror" row reproduces the reference's
 ``sample_geotiff.tif`` pixels + ``sample.csv`` labels for exact parity tests
 (solaris/tests/test_tile/test_tile.py, tests/test_vector/test_mask.py).
 """
@@ -29,6 +30,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
+
+from ..operators.blobs import map_blobs
 
 FIXTURE_IMAGE_ID = "img_fixture_sample_geotiff"
 FIXTURE_TIF = "/root/reference/solaris/data/sample_geotiff.tif"
@@ -128,18 +131,19 @@ def images_table(spark: SparkSession, n_images: int, seed: int = 42,
                  include_fixture: bool = True,
                  partitions: int | None = None,
                  min_px: int = 64, max_px: int = 256) -> DataFrame:
-    """Distributed deterministic generation: spark.range → mapInPandas."""
+    """Distributed deterministic generation: spark.range → a blob map of
+    synth_image_row over the ids, output batches bounded at the session's
+    Arrow batch size.  With include_fixture, the sample_geotiff mirror row
+    (read from the reference fixture file) is appended."""
     if partitions is None:
         partitions = max(4, min(256, n_images // 64 or 4))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [synth_image_row(seed, int(i), min_px, max_px)
-                    for i in b["id"]]
-            yield pd.DataFrame(rows)
+    def rows_of(r):
+        row = synth_image_row(seed, r.id, min_px, max_px)
+        yield tuple(row[k] for k in IMAGES_SCHEMA.names)
 
-    df = (spark.range(0, n_images, 1, partitions)
-          .mapInPandas(gen, schema=IMAGES_SCHEMA))
+    df = map_blobs(spark.range(0, n_images, 1, partitions), IMAGES_SCHEMA,
+                   rows_of)
     if include_fixture:
         df = df.unionByName(fixture_image_df(spark))
     return df

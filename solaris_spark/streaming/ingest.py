@@ -7,8 +7,8 @@ front door: micro-batch ingest of newly-landed image files into the
 partitioned images table, with exactly-once file tracking via the
 Structured Streaming checkpoint.
 
-Pattern: readStream(binaryFile) → decode/validate/phash in mapInPandas →
-writeStream(availableNow) to parquet.  availableNow drains the backlog and
+Pattern: readStream(binaryFile) → decode/validate/phash in a blob map
+(operators/blobs.py) → writeStream(availableNow) to parquet.  availableNow drains the backlog and
 stops — cron-able, and semantically identical to repeated batch runs, which
 is why it composes with the batch lineage/resume machinery.
 """
@@ -18,6 +18,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions import pixfmt
+from ..functions.raster import phash64
+from ..operators.blobs import map_blobs
 from ..sources.synth import IMAGES_SCHEMA
 
 
@@ -50,24 +53,17 @@ def stream_images_from_files(spark: SparkSession, src_dir: str,
 
 
 def with_phash(stream_df: DataFrame) -> DataFrame:
-    """Compute the phash column in-flight (vectorized, Arrow batches)."""
-    import pandas as pd
+    """Compute the phash column in-flight; a row whose bytes do not decode
+    (or are NULL) passes through with a NULL phash."""
 
-    def run(batches):
-        from ..functions import pixfmt
-        from ..functions.raster import phash64
-        for pdf in batches:
-            hashes = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    arr = pixfmt.decode(r.fmt, r.bytes, int(r.w), int(r.h))
-                    hashes.append(phash64(arr))
-                except Exception:
-                    hashes.append(None)
-            pdf = pdf.assign(phash=pd.array(hashes, dtype="Int64"))
-            yield pdf
+    def rows_of(r):
+        try:
+            ph = phash64(pixfmt.decode(r.fmt, r.bytes, r.w, r.h))
+        except Exception:
+            ph = None
+        yield (r.image_id, r.bytes, r.w, r.h, r.fmt, r.caption, ph)
 
-    return stream_df.mapInPandas(run, schema=IMAGES_SCHEMA)
+    return map_blobs(stream_df, IMAGES_SCHEMA, rows_of)
 
 
 def ingest_available_now(stream_df: DataFrame, table_dir: str,

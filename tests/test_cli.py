@@ -26,6 +26,7 @@ class TestMakeMasks:
         ("sample_fbc_mask.tif",
          ["-f", "-e", "-c", "-et", "outer", "-ew", "5", "-cs", "15"]),
     ])
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_golden_parity(self, spark, tmp_path, fname, extra):
         """Reference CLI goldens, pixel-exact (test_cli.py:60-86)."""
         out = str(tmp_path / fname)
@@ -39,6 +40,7 @@ class TestMakeMasks:
 
 
 class TestSpacenetEval:
+    @pytest.mark.needs_reference("SN2_sample_truth.csv")
     def test_sn2_results_csv_parity(self, spark, tmp_path):
         """Summary CSV matches SN2_test_results.csv
         (spacenet_buildings2_dataset_test.py:11-33)."""
@@ -59,6 +61,7 @@ class TestSpacenetEval:
 
 
 class TestMakeGraphs:
+    @pytest.mark.needs_reference("sample_roads.geojson")
     def test_isomorphic_to_reference_pickle(self, spark, tmp_path):
         """nx.is_isomorphic vs the reference golden (test_cli.py:36-59)."""
         nx = pytest.importorskip("networkx")
@@ -81,6 +84,7 @@ class TestMakeGraphs:
 
 
 class TestGeotransformFootprints:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_to_pixel_golden(self, spark, tmp_path):
         """Pixel-frame footprints match gj_to_px_result.geojson coords
         (test_cli.py:13-34; numeric compare, not text diff)."""
@@ -108,6 +112,7 @@ class TestGeotransformFootprints:
 
 
 class TestMaskToPolygons:
+    @pytest.mark.needs_reference("sample_fp_mask.tif")
     def test_roundtrip_mask(self, spark, tmp_path):
         """Footprint mask → polygons covers the mask's set pixels (the
         reference registers this console script with an EMPTY module —
@@ -130,6 +135,7 @@ class TestMaskToPolygons:
 
 
 class TestMakeMasksBatch:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_batch_equals_single_runs(self, spark, tmp_path):
         """--batch --argument_csv runs every row in ONE Spark job and each
         output equals the corresponding single-run golden (the reference's
@@ -154,6 +160,7 @@ class TestMakeMasksBatch:
 
 
 class TestGeotransformBatch:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_batch_outputs_match_single(self, spark, tmp_path):
         import csv as _csv
         args_csv = str(tmp_path / "gargs.csv")
@@ -179,6 +186,7 @@ class TestGeotransformBatch:
 
 
 class TestSpacenetEvalOffNadir:
+    @pytest.mark.needs_reference("sample_truth_competition.csv")
     def test_competition_golden(self, spark, tmp_path):
         """Off-nadir branch vs the reference CLI golden
         (off_nadir_dataset_test.py:26-45: sample_*_competition.csv →

@@ -38,6 +38,7 @@ def _px_labels(spark):
 
 
 class TestYolo:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_golden_w_column(self, spark):
         """w values match yolo_gdf_result.csv to 4dp (test_polygon.py:132)."""
         lab = _px_labels(spark)
@@ -63,6 +64,7 @@ class TestYolo:
 
 
 class TestCoco:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_golden_first_bbox(self, spark):
         """annotations[0].bbox parity with coco_sample_2.json
         (test_coco.py:10-25's 'simplified test')."""
@@ -118,6 +120,7 @@ class TestSplitAndRound:
 
 
 class TestSplitGeom47:
+    @pytest.mark.needs_reference("test_polygon_split.geojson")
     def test_47_tiles(self):
         """split_geom on the reprojected test polygon: 1024px tiles at 30 m
         → exactly 47 polygon-touching tiles (test_geo.py:157-164)."""
@@ -137,6 +140,7 @@ class TestSplitGeom47:
 
 
 class TestCocoFromTileDirs:
+    @pytest.mark.needs_reference("rastertile_test_expected")
     def test_sample_3_full_dirs(self, spark):
         """geojson2coco over the full tile dirs (test_coco.py:44-55):
         annotation count matches coco_sample_3.json."""
@@ -147,6 +151,7 @@ class TestCocoFromTileDirs:
         rows = out.collect()
         assert len(rows) == len(exp["annotations"])
 
+    @pytest.mark.needs_reference("rastertile_test_expected")
     def test_sample_1_bbox_parity(self, spark):
         """The two tiles coco_sample_1.json was built from: bbox/area
         multisets match to 1e-6 (test_coco.py:27-42)."""

@@ -70,6 +70,7 @@ class TestStitchKernel:
 
 
 class TestSparkStitch:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_tiles_roundtrip_fixture(self, spark):
         """raster_tiles → stitch_tiles reproduces the source image exactly."""
         from solaris_spark.operators import imageops, tiling
@@ -87,6 +88,7 @@ class TestSparkStitch:
         src = read_tiff("/root/reference/solaris/data/sample_geotiff.tif").array
         assert np.array_equal(out, src)
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_to_uint8_operator(self, spark):
         from solaris_spark.operators import imageops
         from solaris_spark.sources import synth

@@ -76,6 +76,7 @@ class TestReproject:
 
 
 class TestIoU:
+    @pytest.mark.needs_reference("gt.geojson")
     def test_pinned_iou(self):
         """tests/test_eval/iou_test.py:8-19 — 0.073499798744833519 ± 1e-9."""
         gj = json.load(open("/root/reference/solaris/data/gt.geojson"))
@@ -89,6 +90,7 @@ class TestIoU:
                         G.wkt_dump("POLYGON", [ring]))
         assert abs(iou - 0.073499798744833519) < 1e-9
 
+    @pytest.mark.needs_reference("gt.geojson")
     def test_self_intersection_identity(self):
         gj = json.load(open("/root/reference/solaris/data/gt.geojson"))
         for feat in gj["features"][:10]:
@@ -138,6 +140,7 @@ class TestIoU:
 
 
 class TestGrid:
+    @pytest.mark.needs_reference("rastertile_test_expected")
     def test_fixture_grid_100_tiles(self):
         bounds = (733601.0, 3725139.0 - 450.0, 733601.0 + 450.0, 3725139.0)
         tb = G.split_geom_bounds(bounds, (90, 90), resolution=(0.5, 0.5))
@@ -219,6 +222,7 @@ class TestBatchedSegmentIntersect:
 
 
 class TestAffineGdfGolden:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_sample_csv_affine_golden(self):
         """affine_transform_gdf parity: sample.csv pixel footprints through
         the sample_geotiff affine with precision=0 match aff_gdf_result.csv
@@ -247,6 +251,7 @@ class TestAffineGdfGolden:
 
 
 class TestReprojectFullFileGolden:
+    @pytest.mark.needs_reference("gt.geojson")
     def test_gt_geojson_both_directions(self):
         """Full-file reproject parity (test_geo.py:108-127): every gt.geojson
         footprint reprojected UTM16→4326 overlaps its gt_epsg4326.json twin

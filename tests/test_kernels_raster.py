@@ -31,22 +31,27 @@ def golden(name):
 
 
 class TestFootprint:
+    @pytest.mark.needs_reference("sample.csv")
     def test_fp_mask_exact(self, footprint):
         assert np.array_equal(footprint, golden("sample_fp_mask.tif")[0])
 
+    @pytest.mark.needs_reference("sample.csv")
     def test_fp_df2px(self, footprint):
         assert np.array_equal(footprint, golden("sample_fp_from_df2px.tif")[0])
 
 
 class TestBoundary:
+    @pytest.mark.needs_reference("sample.csv")
     def test_inner_3(self, footprint):
         m = ((R.erosion_square(footprint, 3) ^ footprint) > 0).astype(np.uint8) * 255
         assert np.array_equal(m, golden("sample_b_mask_inner.tif")[0])
 
+    @pytest.mark.needs_reference("sample.csv")
     def test_outer_3(self, footprint):
         m = ((R.dilation_square(footprint, 3) ^ footprint) > 0).astype(np.uint8) * 255
         assert np.array_equal(m, golden("sample_b_mask_outer.tif")[0])
 
+    @pytest.mark.needs_reference("sample.csv")
     def test_outer_10(self, footprint):
         m = ((R.dilation_square(footprint, 10) ^ footprint) > 0).astype(np.uint8) * 255
         assert np.array_equal(m, golden("sample_b_mask_outer_10.tif")[0])
@@ -60,10 +65,12 @@ def contact_mask(shapes, footprint, spacing):
 
 
 class TestContact:
+    @pytest.mark.needs_reference("sample.csv")
     def test_contact_10(self, sample_shapes, footprint):
         assert np.array_equal(contact_mask(sample_shapes, footprint, 10.0),
                               golden("sample_c_mask.tif")[0])
 
+    @pytest.mark.needs_reference("sample.csv")
     def test_contact_15_fbc(self, sample_shapes, footprint):
         fbc = golden("sample_fbc_from_df2px.tif")
         assert np.array_equal(footprint, fbc[0])
@@ -73,6 +80,7 @@ class TestContact:
 
 
 class TestTiffIO:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_geotiff_read(self):
         im = read_tiff(os.path.join(DATA, "sample_geotiff.tif"))
         assert im.array.shape == (1, 900, 900)
@@ -80,6 +88,7 @@ class TestTiffIO:
         assert im.transform == (0.5, 0.0, 733601.0, 0.0, -0.5, 3725139.0)
         assert im.epsg == 32616
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_tile_window_parity(self):
         """Each expected tile equals the matching window of the source."""
         im = read_tiff(os.path.join(DATA, "sample_geotiff.tif"))
@@ -152,6 +161,7 @@ class TestWarpBilinear:
 
 
 class TestWarpedTilingOperator:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_utm_image_to_wgs84_tiles(self, spark):
         """raster_tiles_warped: UTM fixture → 4326 grid tiles; values in the
         interior match direct bilinear sampling (spot check via mean)."""
@@ -313,6 +323,7 @@ class TestWarpResampling:
 
 
 class TestWarpedTilingResampling:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_cubic_and_nearest_tile_variants(self, spark):
         """raster_tiles_warped(resampling=...) — cubic/nearest produce the
         same tile grid as bilinear with close but non-identical pixels."""

@@ -46,10 +46,12 @@ def class_ious(spark):
 
 
 class TestMapVector:
+    @pytest.mark.needs_reference("eval_vector/gt")
     def test_map_pinned_085(self, spark, class_ious):
         res = evalops.mean_average_precision(class_ious)
         assert round(res["mAP"], 2) == 0.85
 
+    @pytest.mark.needs_reference("eval_vector/gt")
     def test_ap_by_class_dataframe_shape(self, spark, class_ious):
         """The primary AP output is a (class, ap) DataFrame — the dict is
         a driver-side wrapper over it, and both agree."""
@@ -60,6 +62,7 @@ class TestMapVector:
         assert rows == res["ap_by_class"]
         assert round(float(np.mean(list(rows.values()))), 2) == 0.85
 
+    @pytest.mark.needs_reference("eval_vector/gt")
     def test_class_scores_sane(self, spark, class_ious):
         cs = evalops.class_scores(class_ious).collect()
         assert len(cs) >= 3

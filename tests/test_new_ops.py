@@ -23,6 +23,7 @@ def fixture_images(spark):
 
 
 class TestInferenceTiler:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_golden_250_tiles(self, spark, fixture_images):
         """16 clamped 250x250 tiles of the 900x900 fixture, pixel-exact vs
         inference_tiler_test_output.npy; (row0, col0) refs exact."""
@@ -40,6 +41,7 @@ class TestInferenceTiler:
             assert np.array_equal(np.moveaxis(got, 0, -1),
                                   exp[i].astype(np.uint16)), i
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_stitch_roundtrip_exact(self, spark, fixture_images):
         """stitch(inference_tiles(im)) == im, including the overlapping
         clamped edge tiles (test_image.py:33-44 parity)."""
@@ -69,6 +71,7 @@ class TestInferenceTiler:
         got = pixfmt.decode(raw_fmt, out["pixels"], out["w"], out["h"])
         assert np.array_equal(got, px)
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_strided_window_counts(self, spark, fixture_images):
         """stride < size → overlapping windows; count matches the
         reference's 1 + ceil((dim - size) / step) formula."""
@@ -198,6 +201,7 @@ class TestBinarizePredsOperator:
 
 
 class TestStitchFirstGolden:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_stitch_first_npy_golden(self, spark, fixture_images):
         """test_raster/test_image.py:46-57 exactly: InferenceTiler 250px
         tiles of the fixture, tile #11 (+10), stitch method='first' →

@@ -36,6 +36,7 @@ def match_all(polys, gold, thresh=0.999999):
 
 
 class TestPolygonize:
+    @pytest.mark.needs_reference("sample_fp_mask_from_geojson.tif")
     def test_basic_golden(self):
         mask = read_tiff(f"{DATA}/sample_fp_mask_from_geojson.tif").array[0]
         polys = P.mask_to_polygons(mask, min_area=40)
@@ -43,6 +44,7 @@ class TestPolygonize:
         assert len(polys) == len(gold) == 43
         assert match_all(polys, gold) == 43
 
+    @pytest.mark.needs_reference("sample_fp_mask_from_geojson.tif")
     def test_transform_min_area_simplify_golden(self):
         mask = read_tiff(f"{DATA}/sample_fp_mask_from_geojson.tif").array[0]
         im = read_tiff(f"{DATA}/sample_geotiff.tif")
@@ -83,6 +85,7 @@ class TestPolygonize:
 
 
 class TestSparkPolygonize:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_operator(self, spark):
         import csv
 

@@ -25,6 +25,7 @@ def gj_rows(path, img="img0"):
 
 
 class TestGreedyMatch:
+    @pytest.mark.needs_reference("gt.geojson")
     def test_pinned_tp_fp_fn(self, spark):
         """TP=8, FP=20, FN=20, P=R=F1=0.2857142857142857."""
         gt = spark.createDataFrame(gj_rows(f"{DATA}/gt.geojson"),
@@ -39,6 +40,7 @@ class TestGreedyMatch:
         assert s["Recall"] == 0.2857142857142857
         assert s["F1Score"] == 0.2857142857142857
 
+    @pytest.mark.needs_reference("SN2_sample_truth.csv")
     def test_per_building_iou_1e9(self, spark):
         """SN2 per-building IoU vs golden CSV to eps=1e-9 (evaluator_test.py:72-94)."""
         tr = pd.read_csv(f"{DATA}/SN2_sample_truth.csv")

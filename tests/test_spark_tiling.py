@@ -24,6 +24,7 @@ def fixture_ig(spark):
 
 
 class TestRasterTiling:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_100_tiles_exact(self, spark, fixture_ig):
         tiles = tiling.raster_tiles(fixture_ig, (90, 90)).collect()
         assert len(tiles) == 100
@@ -42,6 +43,7 @@ class TestRasterTiling:
 
 
 class TestVectorTiling:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_clip_parity(self, spark, fixture_ig):
         grid = tiling.tile_grid(fixture_ig, (90, 90))
         gj = json.load(open(os.path.join(DATA, "geotiff_labels.geojson")))
@@ -90,6 +92,7 @@ class TestVectorTiling:
             n_match += 1
         assert n_match == 100
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_empty_tiles_anti_join(self, spark, fixture_ig):
         grid = tiling.tile_grid(fixture_ig, (90, 90))
         lab = spark.createDataFrame(
@@ -102,6 +105,7 @@ class TestVectorTiling:
 
 
 class TestCustomProjTiling:
+    @pytest.mark.needs_reference("sample_geotiff_custom_proj.tif")
     def test_16_tiles_exact(self, spark):
         """128x128 tiling of the 3-band int16 custom-proj fixture with
         nodata -9999 — mirrors test_tile.py:55-72 (16 tiles, exact)."""
@@ -129,6 +133,7 @@ class TestCustomProjTiling:
 
 
 class TestAoiAndFill:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_aoi_restricted_tiling(self, spark, fixture_ig):
         """AOI restriction: grid limited to AOI-touching cells; pixels
         outside the AOI zeroed (raster_tile.py:169-181 semantics)."""
@@ -195,6 +200,7 @@ class TestAoiAndFill:
 
 
 class TestAdviceR01Fixes:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_warped_tiles_have_grid_indices(self, spark, fixture_ig):
         """raster_tiles_warped assigns distinct (tx, ty) from the dest-CRS
         grid (ADVICE r01: was tx=ty=0 for every tile, collapsing grid-keyed
@@ -209,6 +215,7 @@ class TestAdviceR01Fixes:
         by_tx = sorted(tiles, key=lambda r: r["xmin"])
         assert [r["tx"] for r in by_tx] == sorted(r["tx"] for r in by_tx)
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_vector_tiles_tile_pix(self, spark, fixture_ig):
         """tile_px enables the tile-local pixel frame (reference
         vector_tile.py output_type='px'): coords land in [0, tile_px] and
@@ -238,6 +245,7 @@ class TestAdviceR01Fixes:
                 assert np.allclose(g["xmin"] + p[:, 0] * rx, q[:, 0], atol=1e-6)
                 assert np.allclose(g["ymax"] - p[:, 1] * ry, q[:, 1], atol=1e-6)
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_vector_tiles_no_candidate_pad(self, spark, fixture_ig):
         """Exact floor candidate range: a label strictly inside one tile
         produces exactly one surviving row AND feeds only its own tile to

@@ -44,6 +44,25 @@ class TestIngest:
         ingest.ingest_available_now(stream3, table, ckpt)
         assert spark.read.parquet(table).count() == 4
 
+    def test_with_phash_keeps_null_bytes_row(self, spark):
+        """A row with NULL bytes passes through as (bytes NULL, phash
+        NULL); a decodable row keeps its bytes and gets its phash."""
+        from solaris_spark.functions.raster import phash64
+        from solaris_spark.sources.synth import IMAGES_SCHEMA
+
+        px = np.arange(3 * 6 * 8, dtype=np.uint8).reshape(3, 6, 8)
+        df = spark.createDataFrame(
+            [("ok", bytearray(px.tobytes()), 8, 6, "raw-u8-c3", None, None),
+             ("null", None, 8, 6, "raw-u8-c3", "no bytes", None)],
+            IMAGES_SCHEMA)
+        rows = {r["image_id"]: r for r in ingest.with_phash(df).collect()}
+        assert set(rows) == {"ok", "null"}
+        assert rows["null"]["bytes"] is None
+        assert rows["null"]["phash"] is None
+        assert rows["null"]["caption"] == "no bytes"
+        assert bytes(rows["ok"]["bytes"]) == px.tobytes()
+        assert rows["ok"]["phash"] == phash64(px)
+
 
 class TestStatefulSessions:
     def test_session_state_across_microbatches(self, spark, tmp_path):

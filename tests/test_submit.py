@@ -9,10 +9,13 @@ import shutil
 import subprocess
 import zipfile
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class TestSparkSubmit:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_py_files_zip_pipeline(self, tmp_path):
         zip_path = str(tmp_path / "solaris_spark.zip")
         with zipfile.ZipFile(zip_path, "w") as zf:

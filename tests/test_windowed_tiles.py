@@ -17,11 +17,13 @@ FIXTURE = "/root/reference/solaris/data/sample_geotiff.tif"
 
 
 class TestWindowKernel:
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_window_matches_full_decode(self):
         full = read_tiff(FIXTURE)
         win = read_tiff_window(FIXTURE, 100, 200, 256, 300)
         assert np.array_equal(win.array, full.array[:, 100:356, 200:500])
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_transform_shifts_to_window_origin(self):
         full = read_tiff(FIXTURE)
         win = read_tiff_window(FIXTURE, 100, 200, 256, 300)
@@ -29,6 +31,7 @@ class TestWindowKernel:
         assert win.transform == (a, 0.0, c + 200 * a, 0.0, e, f + 100 * e)
         assert win.epsg == full.epsg == 32616
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_reads_only_window_strips(self):
         """The I/O contract: a 256/900-row window reads a proportional
         slice of the payload, not the whole file."""
@@ -38,6 +41,7 @@ class TestWindowKernel:
         # strips are whole-width, so the floor is ~rows/height of payload
         assert win.tags["bytes_read"] >= 256 / 900 * 0.9 * full_size * 0.5
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_edge_window_clamps(self):
         full = read_tiff(FIXTURE)
         win = read_tiff_window(FIXTURE, 890, 880, 64, 64)
@@ -52,6 +56,7 @@ class TestWindowKernel:
         win = read_tiff_window(p, 10, 5, 20, 30)
         assert np.array_equal(win.array, arr[:, 10:30, 5:35])
 
+    @pytest.mark.needs_reference("sample_geotiff.tif")
     def test_disjoint_window_raises(self):
         with pytest.raises(ValueError):
             read_tiff_window(FIXTURE, 2000, 0, 64, 64)
@@ -381,6 +386,7 @@ class TestWindowedTiling:
 
 
 class TestBigEndian:
+    @pytest.mark.needs_reference("datagen_sample/sample_1.tif")
     def test_reads_motorola_order_fixture(self):
         """The reference's datagen samples are big-endian (MM) uint16
         TIFFs — byte order comes from the header, not an assumption."""
