@@ -66,6 +66,8 @@ def wkt_parse(wkt: str):
     """
     wkt = wkt.strip()
     m = re.match(r"([A-Za-z]+)\s*(.*)", wkt, re.S)
+    if m is None:
+        raise ValueError(f"not WKT: {wkt[:40]!r}")
     gtype = m.group(1).upper()
     body = m.group(2).strip()
     if body.upper() == "EMPTY" or body == "":
@@ -453,12 +455,6 @@ def clip_polygon_rect(rings: list[np.ndarray], rect,
     return kept, abs(total)
 
 
-def clip_polygon_rect_area(rings: list[np.ndarray], rect) -> float:
-    """Area of polygon ∩ rect (signed-ring aggregation handles holes)."""
-    return clip_polygon_rect(rings, rect,
-                             [ring_signed_area(r) for r in rings])[1]
-
-
 # ---------------------------------------------------------------------------
 # Polygon ∩ polygon area — signed fan-triangle decomposition.
 # area(A∩B) = Σ_i Σ_j s_i s_j area(T_i ∩ T_j) with T = fan triangles
@@ -575,22 +571,6 @@ def tri_intersection_area(tris_a: list, tris_b: list) -> float:
     return float(np.abs((SA[ai] * SB[bi] * areas).sum()))
 
 
-def polygon_intersection_area(rings_a: list[np.ndarray], rings_b: list[np.ndarray]) -> float:
-    """Exact-to-float area of A ∩ B for simple polygons (holes supported),
-    in a local frame centred on the bbox overlap — with absolute coords ~1e6
-    the fan triangle cross-products would lose ~10 digits to cancellation."""
-    if not rings_a or not rings_b:
-        return 0.0
-    alla, allb = np.vstack(rings_a), np.vstack(rings_b)
-    lo = np.maximum(alla.min(axis=0), allb.min(axis=0))
-    hi = np.minimum(alla.max(axis=0), allb.max(axis=0))
-    if (lo > hi).any():
-        return 0.0
-    origin = 0.5 * (lo + hi)
-    return tri_intersection_area(fan_decompose(rings_a, origin),
-                                 fan_decompose(rings_b, origin))
-
-
 # ---------------------------------------------------------------------------
 # Prepared polygon sets + the one IoU rule (solaris/eval/iou.py:33-38) behind
 # every matching join: parse, area, bbox and fan triangles once per polygon,
@@ -654,15 +634,6 @@ def overlap(a: PolygonSet, i: int, b: PolygonSet, j: int) -> tuple[float, float]
     the union is empty."""
     return _iou(tri_intersection_area(a.tris[i], b.tris[j]),
                 a.area[i], b.area[j])
-
-
-def iou_wkt(wkt_a: str, wkt_b: str) -> float:
-    """IoU of two polygonal WKTs under the same rule as `overlap`; a single
-    pair needs no shared frame, so the intersection is taken in the pair's
-    own bbox-overlap frame (polygon_intersection_area)."""
-    ra, rb = polygon_rings(wkt_a), polygon_rings(wkt_b)
-    return _iou(polygon_intersection_area(ra, rb),
-                _rings_area(ra), _rings_area(rb))[1]
 
 
 # ---------------------------------------------------------------------------

@@ -11,207 +11,55 @@ Parity targets in the reference:
                        solaris/tile/raster_tile.py:332-348
 - nodata fraction    → solaris/tile/raster_tile.py:189-204
 - phash / PSNR       → not in reference; required by BASELINE.json input_hint
+
+Every polygon fill in the engine runs on one scanline algorithm: the
+batched crossing generator ``_transitions`` (edges, ``r + 0.5`` scanlines,
+the ``floor(x + 0.5)`` tie rule, one stable integer-key sort, even-odd or
+nonzero winding).  Two finishers turn its ±1 changes into pixels:
+``rasterize_count_packed`` / ``rasterize_count_groups`` cumsum them over
+the whole frame into per-pixel coverage counts (the footprint, contact and
+road masks of an image), and ``rasterize_rings`` cumsums one polygon's
+changes over their bounding window only (instance masks, AOI blanking).
+The image-level count keeps the full-frame cumsum: its window is most of
+the frame, and copying it back into a frame costs more than it saves.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import geom as G
-
 # ---------------------------------------------------------------------------
 # Rasterization — GDAL GDALdllImageFilledPolygon semantics:
 #   scanline at dy = row + 0.5; edge contributes iff dy1 <= dy < dy2
-#   (half-open after orienting dy1 < dy2); intersections sorted and paired
-#   (even-odd); pair [xs, xe] burns columns floor(xs+0.5) .. floor(xe+0.5)-1.
+#   (half-open after orienting dy1 < dy2); a crossing acts at column
+#   floor(x + 0.5), and a column is covered while the crossings at or left
+#   of it leave an odd count (even-odd) or a nonzero winding sum.
 # ---------------------------------------------------------------------------
 
 
-def rasterize_rings(rings: list[np.ndarray], shape: tuple[int, int],
-                    out: np.ndarray | None = None, value: int = 1,
-                    winding: bool = False, accumulate: bool = False) -> np.ndarray:
-    """Fill one polygon (exterior + hole rings, even-odd) into a (H, W) array.
+def _transitions(xy: np.ndarray, offsets: np.ndarray, groups: np.ndarray,
+                 shape: tuple[int, int], winding: bool):
+    """The engine's one scanline crossing generator: the ±1 coverage
+    changes of rings stored back to back (ring k is
+    ``xy[offsets[k]:offsets[k + 1]]``, in group ``groups[k]``), as
+    (rows, cols, steps) with cols in [0, w].
 
-    Coordinates are in pixel space (col = x, row = y), matching
-    features.rasterize with the identity transform used at
-    solaris/vector/mask.py:204 for pixel-coordinate dataframes.
-
-    ``accumulate=True`` ADDS ``value`` to covered pixels instead of
-    replacing them (caller passes an integer ``out``) — overlap counting
-    without materializing a full-frame indicator per polygon.  Either way
-    only the polygon's bbox window is touched: per-label memory traffic is
-    O(bbox), not O(frame), which is what keeps the mask kernel off the
-    memory-bandwidth ceiling at high parallelism.
-    """
+    A pixel decision depends on a crossing's rounded column
+    ``col = floor(x + 0.5)`` alone: column c of one (group, row) is covered
+    iff the running crossing count (even-odd: odd) or winding sum
+    (nonzero: != 0) over the crossings with ``col <= c`` says so.
+    Crossings that tie on ``col`` put their changes into the same cell,
+    where they cancel in any order, so one stable argsort of the integer
+    key ``(group·h + row)·(w + 1) + clip(col, 0, w)`` orders them
+    (crossings arrive in per-edge runs, which timsort merges cheaply).
+    Every (group, row) segment opens and closes at coverage 0, so each
+    row's steps sum to zero."""
     h, w = shape
-    if out is None:
-        out = np.zeros((h, w), dtype=np.uint8)
-    if not rings:
-        return out
-
-    # gather all edges from all rings
-    x1s, y1s, x2s, y2s = [], [], [], []
-    for ring in rings:
-        if len(ring) < 2:
-            continue
-        x1s.append(ring[:-1, 0]); y1s.append(ring[:-1, 1])
-        x2s.append(ring[1:, 0]); y2s.append(ring[1:, 1])
-    if not x1s:
-        return out
-    ex1 = np.concatenate(x1s); ey1 = np.concatenate(y1s)
-    ex2 = np.concatenate(x2s); ey2 = np.concatenate(y2s)
-    # orient so ey1 < ey2
-    flip = ey1 > ey2
-    ex1f = np.where(flip, ex2, ex1); ey1f = np.where(flip, ey2, ey1)
-    ex2f = np.where(flip, ex1, ex2); ey2f = np.where(flip, ey1, ey2)
-    nonh = ey1f != ey2f
-    ex1f, ey1f, ex2f, ey2f = ex1f[nonh], ey1f[nonh], ex2f[nonh], ey2f[nonh]
-    if len(ex1f) == 0:
-        return out
-
-    slope = (ex2f - ex1f) / (ey2f - ey1f)
-    # crossing direction for nonzero-winding fill (+1 edge pointed down in
-    # pixel space pre-flip, -1 otherwise)
-    esign = np.where(flip[nonh], -1, 1).astype(np.int64)
-
-    # vectorized across ALL scanlines: for edge k the scanlines dy = r + 0.5
-    # with ey1 <= dy < ey2 are r in [ceil(ey1-0.5), ceil(ey2-0.5) - 1]
-    r0 = np.maximum(np.ceil(ey1f - 0.5), 0).astype(np.int64)
-    r1 = np.minimum(np.ceil(ey2f - 0.5) - 1, h - 1).astype(np.int64)
-    counts = np.maximum(r1 - r0 + 1, 0)
-    total = int(counts.sum())
-    if total == 0:
-        return out
-    eidx = np.repeat(np.arange(len(ex1f)), counts)
-    # per-repeat scanline row: r0[e] + offset within the edge's run
-    offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
-    rows = r0[eidx] + offs
-    dys = rows + 0.5
-    xs = ex1f[eidx] + (dys - ey1f[eidx]) * slope[eidx]
-
-    order = np.lexsort((xs, rows))
-    rows_s = rows[order]
-    xs_s = xs[order]
-    # segment boundaries per row
-    newrow = np.empty(total, dtype=bool)
-    newrow[0] = True
-    newrow[1:] = rows_s[1:] != rows_s[:-1]
-    seg_start = np.where(newrow)[0]
-    pos_in_row = np.arange(total) - np.repeat(seg_start, np.diff(
-        np.append(seg_start, total)))
-
-    if winding:
-        sgn = esign[eidx][order]
-        csum = np.cumsum(sgn)
-        base = np.repeat(np.where(newrow, csum - sgn, 0)[seg_start], np.diff(
-            np.append(seg_start, total)))
-        run = csum - base
-        covered = (run != 0)
-        last_in_row = np.empty(total, dtype=bool)
-        last_in_row[:-1] = newrow[1:]
-        last_in_row[-1] = True
-        take = covered & ~last_in_row
-        starts = np.floor(xs_s[take] + 0.5).astype(np.int64)
-        # end x = next element in the same row (guaranteed since not last)
-        ends = np.floor(xs_s[np.where(take)[0] + 1] + 0.5).astype(np.int64)
-        srows = rows_s[take]
-    else:
-        even = (pos_in_row % 2) == 0
-        starts = np.floor(xs_s[even] + 0.5).astype(np.int64)
-        ends = np.floor(xs_s[~even] + 0.5).astype(np.int64)
-        srows = rows_s[even]
-
-    keep = (ends > starts) & (starts < w) & (ends > 0)
-    if not keep.any():
-        return out
-    starts = np.clip(starts[keep], 0, w)
-    ends = np.clip(ends[keep], 0, w)
-    srows = srows[keep]
-    # operate on the bbox window only — full-frame cumsum would dominate for
-    # small polygons on large rasters
-    rlo, rhi = int(srows.min()), int(srows.max())
-    clo = int(starts.min())
-    chi = min(int(ends.max()), w)
-    wh = rhi - rlo + 1
-    ww = chi - clo  # ends are exclusive → covered cols are clo..chi-1
-    starts = np.clip(starts - clo, 0, ww)
-    ends = np.clip(ends - clo, 0, ww)
-    diff = np.zeros(wh * (ww + 1), dtype=np.int32)
-    np.add.at(diff, (srows - rlo) * (ww + 1) + starts, 1)
-    np.add.at(diff, (srows - rlo) * (ww + 1) + ends, -1)
-    cov = np.cumsum(diff.reshape(wh, ww + 1), axis=1)[:, :ww] > 0
-    sub = out[rlo:rhi + 1, clo:chi]
-    if accumulate:
-        sub[cov] += value
-    else:
-        sub[cov] = value
-    return out
-
-
-def rasterize_count_groups(ring_groups: list[list[np.ndarray]],
-                           shape: tuple[int, int],
-                           winding: bool = False) -> np.ndarray:
-    """Coverage COUNTS over many polygons in ONE vectorized pass: returns an
-    int32 (H, W) array where each pixel holds the number of `ring_groups`
-    entries covering it (each group = one polygon's rings, filled even-odd,
-    or nonzero-winding when ``winding``).
-
-    Bit-equivalent to looping ``rasterize_rings(accumulate=True)`` per
-    group: the edges, scanline positions ``r + 0.5`` and intersection xs
-    are the same expressions.  Only the crossings' order differs.  A pixel
-    decision depends on a crossing's rounded column ``col = floor(x + 0.5)``
-    alone: column c of one (group, row) is covered iff the running crossing
-    count (even-odd: odd) or winding sum (nonzero: != 0) over the crossings
-    with ``col <= c`` says so.  Crossings that tie on ``col`` put their
-    transitions into the same difference cell, where they cancel in any
-    order, so one stable argsort of the integer key
-    ``(group·h + row)·(w + 1) + clip(col, 0, w)`` orders them (crossings
-    arrive in per-edge runs, which timsort merges cheaply).  Both fill
-    rules then share one pass: a running sum per (group, row) segment, its
-    coverage indicator, and the indicator's ±1 changes added into a flat
-    int32 difference array of ``h·w + 1`` cells.  Every segment opens and
-    closes at indicator 0, so each row's changes sum to zero; a change
-    right of the frame (``col = w``) may land on the next row's first cell
-    and the flat cumsum still equals the row-wise one, giving the counts in
-    place.  The per-group fixed cost (~40 array ops per ``rasterize_rings``
-    call) is paid once for the whole batch — this is the mask kernel's hot
-    path (a SpaceNet-like image carries 100-250 footprints).
-
-    The key is below ``len(ring_groups)·h·(w + 1)``.  A frame whose int32
-    counts fit in memory has far fewer than 2^40 cells, which leaves room
-    for over 2^23 groups per call before int64 wraps, orders of magnitude
-    above any image's label count; past that bound the call raises rather
-    than wrap.
-    """
-    rings, groups = [], []
-    for gi, group in enumerate(ring_groups):
-        rings.extend(group)
-        groups.extend([gi] * len(group))
-    n = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
-    xy = np.concatenate(rings) if rings else np.empty((0, 2))
-    return rasterize_count_packed(xy, np.concatenate(([0], np.cumsum(n))),
-                                  np.asarray(groups, dtype=np.int64),
-                                  len(ring_groups), shape, winding)
-
-
-def rasterize_count_packed(xy: np.ndarray, offsets: np.ndarray,
-                           groups: np.ndarray, n_groups: int,
-                           shape: tuple[int, int],
-                           winding: bool = False) -> np.ndarray:
-    """rasterize_count_groups over rings stored back to back: ring k is
-    ``xy[offsets[k]:offsets[k + 1]]`` and belongs to group ``groups[k]``
-    (``0 <= groups[k] < n_groups``, rings in group order) — the layout
-    geom.offset_curves returns, so a whole image's buffers are counted
-    without splitting them into per-ring arrays."""
-    h, w = shape
-    if n_groups * h * (w + 1) >= 2 ** 63:
-        raise ValueError(f"{n_groups} groups on a {h}x{w} frame "
-                         "overflow the int64 crossing key")
-    diff = np.zeros(h * w + 1, dtype=np.int32)
-    counts = diff[:h * w].reshape(h, w)
+    none = (np.empty(0, np.int64), np.empty(0, np.int64),
+            np.empty(0, np.int32))
     nv = len(xy)
     if nv < 2:
-        return counts
+        return none
     # edge i joins vertex i to i + 1 unless i + 1 starts the next ring
     edge = np.ones(nv - 1, dtype=bool)
     starts = offsets[1:-1]
@@ -226,17 +74,21 @@ def rasterize_count_packed(xy: np.ndarray, offsets: np.ndarray,
     ex1f, ey1f, ex2f, ey2f = ex1f[nonh], ey1f[nonh], ex2f[nonh], ey2f[nonh]
     egrp = egrp[nonh]
     if len(ex1f) == 0:
-        return counts
+        return none
 
     slope = (ex2f - ex1f) / (ey2f - ey1f)
+    # crossing direction for nonzero winding: +1 where the edge points down
+    # in pixel space before the flip, -1 otherwise
     esign = np.where(flip[nonh], -1, 1).astype(np.int64)
 
+    # every scanline of every edge at once: for edge k the scanlines
+    # dy = r + 0.5 with ey1 <= dy < ey2 are r in [ceil(ey1-0.5), ceil(ey2-0.5) - 1]
     r0 = np.maximum(np.ceil(ey1f - 0.5), 0).astype(np.int64)
     r1 = np.minimum(np.ceil(ey2f - 0.5) - 1, h - 1).astype(np.int64)
     cnt = np.maximum(r1 - r0 + 1, 0)
     total = int(cnt.sum())
     if total == 0:
-        return counts
+        return none
     eidx = np.repeat(np.arange(len(ex1f)), cnt)
     offs = np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
     rows = r0[eidx] + offs
@@ -254,67 +106,109 @@ def rasterize_count_packed(xy: np.ndarray, offsets: np.ndarray,
     run -= np.repeat(run[first] - step[first], np.diff(np.append(first, total)))
     inside = (run != 0) if winding else (run & 1).astype(bool)
     # a segment closes at its last crossing (an open ring leaves a nonzero
-    # sum, as in rasterize_rings), so each row's changes sum to zero and
-    # the next segment's first change is measured against 0
+    # sum on some rows), so the next segment's first change is measured
+    # against 0
     inside[first[1:] - 1] = False
     inside[-1] = False
     trans = np.diff(inside.view(np.int8), prepend=np.int8(0))
     nz = np.flatnonzero(trans)
-    cell = (rows * w + col)[order[nz]]
-    # int32 values keep np.add.at on its fast path (no casting loop)
-    np.add.at(diff, cell, trans[nz].astype(np.int32))
+    sel = order[nz]
+    # int32 steps keep np.add.at on its fast path (no casting loop)
+    return rows[sel], col[sel], trans[nz].astype(np.int32)
+
+
+def _pack(rings: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """(xy, offsets): the rings back to back, ring k at
+    ``xy[offsets[k]:offsets[k + 1]]``."""
+    n = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
+    xy = np.concatenate(rings) if rings else np.empty((0, 2))
+    return xy, np.concatenate(([0], np.cumsum(n)))
+
+
+def rasterize_rings(rings: list[np.ndarray], shape: tuple[int, int],
+                    value: int = 1) -> np.ndarray:
+    """Fill one polygon (exterior + hole rings, even-odd) into a new uint8
+    (H, W) array: ``value`` on covered pixels, 0 elsewhere.
+
+    Coordinates are in pixel space (col = x, row = y), matching
+    features.rasterize with the identity transform used at
+    solaris/vector/mask.py:204 for pixel-coordinate dataframes.
+
+    The window finisher: the crossings' changes are summed over their
+    own row/column bounding window only, so a label costs O(bbox), not
+    O(frame).  A change at the window's right edge lands on the next row's
+    first cell, where the row's changes have already summed to zero, so
+    the window needs no extra column."""
+    out = np.zeros(shape, dtype=np.uint8)
+    rows, cols, steps = _transitions(*_pack(rings),
+                                     np.zeros(len(rings), dtype=np.int64),
+                                     shape, False)
+    if len(rows) == 0:
+        return out
+    rlo, rhi = int(rows.min()), int(rows.max())
+    clo, chi = int(cols.min()), int(cols.max())
+    wh, ww = rhi - rlo + 1, chi - clo
+    diff = np.zeros(wh * ww + 1, dtype=np.int32)
+    np.add.at(diff, (rows - rlo) * ww + (cols - clo), steps)
     np.cumsum(diff, out=diff)
-    return counts
-
-
-def rasterize_shapes(shapes, shape: tuple[int, int],
-                     transform=None, dtype=np.uint8) -> np.ndarray:
-    """features.rasterize equivalent: list of (rings, burn_value) burned in
-    order (REPLACE merge).  `transform` is the geo affine (a,b,c,d,e,f) of the
-    raster; geometry coords are converted to pixel space with its inverse."""
-    h, w = shape
-    out = np.zeros((h, w), dtype=dtype)
-    inv = None
-    if transform is not None and tuple(transform) != (1.0, 0.0, 0.0, 0.0, 1.0, 0.0):
-        inv = G.affine_invert(transform)
-    for rings, val in shapes:
-        if inv is not None:
-            rings = [G.affine_apply(r, inv) for r in rings]
-        # burn directly into the shared frame (REPLACE on covered pixels —
-        # identical to the former out[m > 0] = val, without materializing
-        # a full-frame indicator + masked write per shape)
-        rasterize_rings(rings, (h, w), out=out, value=val)
+    out[rlo:rhi + 1, clo:chi][diff[:-1].reshape(wh, ww) > 0] = value
     return out
 
 
-# ---------------------------------------------------------------------------
-# Buffered-polygon rasterization (contact/road masks): the GEOS-style raw
-# offset curves (geom.offset_curves) filled with nonzero winding.
-# ---------------------------------------------------------------------------
+def rasterize_count_groups(ring_groups: list[list[np.ndarray]],
+                           shape: tuple[int, int],
+                           winding: bool = False) -> np.ndarray:
+    """Coverage COUNTS over many polygons in ONE vectorized pass: returns an
+    int32 (H, W) array where each pixel holds the number of `ring_groups`
+    entries covering it (each group = one polygon's rings, filled even-odd,
+    or nonzero-winding when ``winding``)."""
+    rings, groups = [], []
+    for gi, group in enumerate(ring_groups):
+        rings.extend(group)
+        groups.extend([gi] * len(group))
+    return rasterize_count_packed(*_pack(rings),
+                                  np.asarray(groups, dtype=np.int64),
+                                  len(ring_groups), shape, winding)
 
 
-def rasterize_geos_buffer(rings: list[np.ndarray], radius: float,
-                          shape: tuple[int, int],
-                          out: np.ndarray | None = None,
-                          accumulate: bool = False) -> np.ndarray:
-    """Rasterize buffer(polygon, radius) pixel-exactly vs the reference's
-    shapely-buffer → GDAL-rasterize path: build the GEOS-style offset
-    curves of the polygon's rings (geom.offset_curves, one pass) and
-    scanline-fill them with NONZERO winding and the GDAL boundary tie
-    rules.  Boundary lines coincide with the GEOS buffer polygon's, so ties
-    resolve identically.  masks.build_mask_arrays counts every label's
-    curves of an image in one rasterize_count_packed call instead.
+def rasterize_count_packed(xy: np.ndarray, offsets: np.ndarray,
+                           groups: np.ndarray, n_groups: int,
+                           shape: tuple[int, int],
+                           winding: bool = False) -> np.ndarray:
+    """rasterize_count_groups over rings stored back to back: ring k is
+    ``xy[offsets[k]:offsets[k + 1]]`` and belongs to group ``groups[k]``
+    (``0 <= groups[k] < n_groups``, rings in group order) — the layout
+    geom.offset_curves returns, so a whole image's buffers are counted
+    without splitting them into per-ring arrays.
 
-    With ``accumulate=True`` (and an integer ``out``), adds +1 to the
-    buffered-union pixels in place — overlap counting with O(bbox) traffic
-    per call instead of a full-frame bool + astype + add."""
-    xy, offsets = G.offset_curves([r for r in rings if len(r) >= 4], radius)
-    curves = np.split(xy, offsets[1:-1])
-    if accumulate:
-        return rasterize_rings(curves, shape, out=out, value=1,
-                               winding=True, accumulate=True)
-    m = rasterize_rings(curves, shape, winding=True)
-    return m > 0
+    The full-frame finisher: every group's changes go into one flat int32
+    difference array of ``h·w + 1`` cells, whose cumsum is the counts in
+    place.  A change right of the frame (``col = w``) lands on the next
+    row's first cell and the flat cumsum still equals the row-wise one.
+    Each label covering a pixel adds exactly +1 there, as a per-label
+    loop of single-polygon fills would.  The per-group fixed cost of the
+    crossing generator is paid once for the whole batch — this is the mask
+    kernel's hot path (a SpaceNet-like image carries 100-250 footprints).
+    The counts keep this flat cumsum rather than the window finisher: an
+    image's labels span most of the frame, and copying that window back
+    into a frame raised the footprint count of a 1000² synth image with
+    200 labels from 9.0 to 12.7 ms (median of 20 calls, 4-vCPU Xeon host).
+
+    The sort key is below ``n_groups·h·(w + 1)``.  A frame whose int32
+    counts fit in memory has far fewer than 2^40 cells, which leaves room
+    for over 2^23 groups per call before int64 wraps, orders of magnitude
+    above any image's label count; past that bound the call raises rather
+    than wrap.
+    """
+    h, w = shape
+    if n_groups * h * (w + 1) >= 2 ** 63:
+        raise ValueError(f"{n_groups} groups on a {h}x{w} frame "
+                         "overflow the int64 crossing key")
+    diff = np.zeros(h * w + 1, dtype=np.int32)
+    rows, cols, steps = _transitions(xy, offsets, groups, shape, winding)
+    np.add.at(diff, rows * w + cols, steps)
+    np.cumsum(diff, out=diff)
+    return diff[:h * w].reshape(h, w)
 
 
 # ---------------------------------------------------------------------------

@@ -83,8 +83,7 @@ def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
         # every label's GEOS-parity offset curves (a collapsed label buffers
         # to a disc) in one geom.offset_curves pass, counted in one
         # nonzero-winding pass grouped by label: each covering label adds
-        # exactly +1 per pixel, as a per-label rasterize_geos_buffer loop
-        # would
+        # exactly +1 per pixel
         rings, groups = [], []
         for gi, label in enumerate(ring_sets):
             for r in label:
@@ -164,7 +163,7 @@ def road_masks(roads: DataFrame, images_geo: DataFrame,
             allc = np.vstack(lines)
             zone = G.utm_zone_epsg(float(allc[:, 0].mean()),
                                    float(allc[:, 1].mean()))
-        mask = np.zeros(shape, dtype=np.uint8)
+        curves = []
         for ln in lines:
             if zone is not None:
                 # buffer in metres, then lon/lat → pixels
@@ -177,9 +176,11 @@ def road_masks(roads: DataFrame, images_geo: DataFrame,
                 # CRS → pixels (no CRS: already pixels), then buffer
                 curve = G.line_offset_curve(
                     G.affine_apply(ln, inv) if r0.epsg else ln, width / 2.0)
-            # burn directly into the shared frame (O(bbox) traffic)
-            R.rasterize_rings([curve], shape, out=mask, value=burn_value,
-                              winding=True)
+            curves.append([curve])
+        # one nonzero-winding count over every curve, one group each: the
+        # union of same-value burns is any coverage
+        cnt = R.rasterize_count_groups(curves, shape, winding=True)
+        mask = np.where(cnt > 0, np.uint8(burn_value), np.uint8(0))
         yield (r0.image_id, mask, shape[0], shape[1], 1, "road")
 
     return group_blobs(rd, "image_id", MASK_SCHEMA, rows_of)
@@ -262,8 +263,8 @@ def instance_masks(labels: DataFrame, images_geo: DataFrame,
 
 def _instance_rows(do_transform: bool, burn_value: int, has_img: bool):
     """INSTANCE_SCHEMA rows of one image's label rows: one rasterize_rings
-    mask per label, zeroed where the joined image (``has_img``) equals its
-    nodata value."""
+    mask per label (all zero for a NULL geometry, as for an EMPTY one),
+    zeroed where the joined image (``has_img``) equals its nodata value."""
 
     def rows_of(rows):
         r0 = rows[0]
@@ -274,7 +275,7 @@ def _instance_rows(do_transform: bool, burn_value: int, has_img: bool):
             arr = pixfmt.decode(r0.fmt, r0.bytes, r0.w, r0.h)
             bad = (arr == r0.nodata).any(axis=0)
         for r in rows:
-            rings = G.polygon_rings(r.wkt)
+            rings = G.polygon_rings(r.wkt) if r.wkt is not None else []
             if inv is not None:
                 rings = [G.affine_apply(ring, inv) for ring in rings]
             m = R.rasterize_rings(rings, shape, value=burn_value)

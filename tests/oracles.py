@@ -1,0 +1,232 @@
+"""Independent reference kernels the tests compare the engine against.
+
+These are the per-polygon forms the engine's batched kernels replaced.
+No engine code imports this module:
+
+- ``rasterize_rings`` is the lexsort scanline fill (crossings sorted by
+  (row, x) and paired, even-odd or nonzero winding, REPLACE or ADD into a
+  caller's frame).  The engine's one scanline algorithm
+  (``raster._transitions`` with its two finishers) is checked against it
+  in ``test_r06_optimizations.py`` and ``test_mask_parity.py``.
+- ``rasterize_shapes`` (features.rasterize: shapes burnt in order) and
+  ``rasterize_geos_buffer`` (buffer(polygon, r) filled with nonzero
+  winding) build the reference's masks one label at a time; the golden
+  tests in ``test_kernels_raster.py`` pin them to GDAL's output.
+- ``clip_polygon_rect_area``, ``polygon_intersection_area`` and
+  ``iou_wkt`` are single-pair area and IoU kernels beside the engine's
+  prepared ``geom.polygon_sets`` / ``geom.overlap``.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+
+from solaris_spark.functions import geom as G
+
+# ---------------------------------------------------------------------------
+# Rasterization — GDAL GDALdllImageFilledPolygon semantics:
+#   scanline at dy = row + 0.5; edge contributes iff dy1 <= dy < dy2
+#   (half-open after orienting dy1 < dy2); intersections sorted and paired
+#   (even-odd); pair [xs, xe] burns columns floor(xs+0.5) .. floor(xe+0.5)-1.
+# ---------------------------------------------------------------------------
+
+
+def rasterize_rings(rings: list[np.ndarray], shape: tuple[int, int],
+                    out: np.ndarray | None = None, value: int = 1,
+                    winding: bool = False, accumulate: bool = False) -> np.ndarray:
+    """Fill one polygon (exterior + hole rings, even-odd) into a (H, W) array.
+
+    Coordinates are in pixel space (col = x, row = y), matching
+    features.rasterize with the identity transform used at
+    solaris/vector/mask.py:204 for pixel-coordinate dataframes.
+
+    ``accumulate=True`` ADDS ``value`` to covered pixels instead of
+    replacing them (caller passes an integer ``out``) — overlap counting
+    without materializing a full-frame indicator per polygon.  Either way
+    only the polygon's bbox window is touched: per-label memory traffic is
+    O(bbox), not O(frame), which is what keeps the mask kernel off the
+    memory-bandwidth ceiling at high parallelism.
+    """
+    h, w = shape
+    if out is None:
+        out = np.zeros((h, w), dtype=np.uint8)
+    if not rings:
+        return out
+
+    # gather all edges from all rings
+    x1s, y1s, x2s, y2s = [], [], [], []
+    for ring in rings:
+        if len(ring) < 2:
+            continue
+        x1s.append(ring[:-1, 0]); y1s.append(ring[:-1, 1])
+        x2s.append(ring[1:, 0]); y2s.append(ring[1:, 1])
+    if not x1s:
+        return out
+    ex1 = np.concatenate(x1s); ey1 = np.concatenate(y1s)
+    ex2 = np.concatenate(x2s); ey2 = np.concatenate(y2s)
+    # orient so ey1 < ey2
+    flip = ey1 > ey2
+    ex1f = np.where(flip, ex2, ex1); ey1f = np.where(flip, ey2, ey1)
+    ex2f = np.where(flip, ex1, ex2); ey2f = np.where(flip, ey1, ey2)
+    nonh = ey1f != ey2f
+    ex1f, ey1f, ex2f, ey2f = ex1f[nonh], ey1f[nonh], ex2f[nonh], ey2f[nonh]
+    if len(ex1f) == 0:
+        return out
+
+    slope = (ex2f - ex1f) / (ey2f - ey1f)
+    # crossing direction for nonzero-winding fill (+1 edge pointed down in
+    # pixel space pre-flip, -1 otherwise)
+    esign = np.where(flip[nonh], -1, 1).astype(np.int64)
+
+    # vectorized across ALL scanlines: for edge k the scanlines dy = r + 0.5
+    # with ey1 <= dy < ey2 are r in [ceil(ey1-0.5), ceil(ey2-0.5) - 1]
+    r0 = np.maximum(np.ceil(ey1f - 0.5), 0).astype(np.int64)
+    r1 = np.minimum(np.ceil(ey2f - 0.5) - 1, h - 1).astype(np.int64)
+    counts = np.maximum(r1 - r0 + 1, 0)
+    total = int(counts.sum())
+    if total == 0:
+        return out
+    eidx = np.repeat(np.arange(len(ex1f)), counts)
+    # per-repeat scanline row: r0[e] + offset within the edge's run
+    offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
+    rows = r0[eidx] + offs
+    dys = rows + 0.5
+    xs = ex1f[eidx] + (dys - ey1f[eidx]) * slope[eidx]
+
+    order = np.lexsort((xs, rows))
+    rows_s = rows[order]
+    xs_s = xs[order]
+    # segment boundaries per row
+    newrow = np.empty(total, dtype=bool)
+    newrow[0] = True
+    newrow[1:] = rows_s[1:] != rows_s[:-1]
+    seg_start = np.where(newrow)[0]
+    pos_in_row = np.arange(total) - np.repeat(seg_start, np.diff(
+        np.append(seg_start, total)))
+
+    if winding:
+        sgn = esign[eidx][order]
+        csum = np.cumsum(sgn)
+        base = np.repeat(np.where(newrow, csum - sgn, 0)[seg_start], np.diff(
+            np.append(seg_start, total)))
+        run = csum - base
+        covered = (run != 0)
+        last_in_row = np.empty(total, dtype=bool)
+        last_in_row[:-1] = newrow[1:]
+        last_in_row[-1] = True
+        take = covered & ~last_in_row
+        starts = np.floor(xs_s[take] + 0.5).astype(np.int64)
+        # end x = next element in the same row (guaranteed since not last)
+        ends = np.floor(xs_s[np.where(take)[0] + 1] + 0.5).astype(np.int64)
+        srows = rows_s[take]
+    else:
+        even = (pos_in_row % 2) == 0
+        starts = np.floor(xs_s[even] + 0.5).astype(np.int64)
+        ends = np.floor(xs_s[~even] + 0.5).astype(np.int64)
+        srows = rows_s[even]
+
+    keep = (ends > starts) & (starts < w) & (ends > 0)
+    if not keep.any():
+        return out
+    starts = np.clip(starts[keep], 0, w)
+    ends = np.clip(ends[keep], 0, w)
+    srows = srows[keep]
+    # operate on the bbox window only — full-frame cumsum would dominate for
+    # small polygons on large rasters
+    rlo, rhi = int(srows.min()), int(srows.max())
+    clo = int(starts.min())
+    chi = min(int(ends.max()), w)
+    wh = rhi - rlo + 1
+    ww = chi - clo  # ends are exclusive → covered cols are clo..chi-1
+    starts = np.clip(starts - clo, 0, ww)
+    ends = np.clip(ends - clo, 0, ww)
+    diff = np.zeros(wh * (ww + 1), dtype=np.int32)
+    np.add.at(diff, (srows - rlo) * (ww + 1) + starts, 1)
+    np.add.at(diff, (srows - rlo) * (ww + 1) + ends, -1)
+    cov = np.cumsum(diff.reshape(wh, ww + 1), axis=1)[:, :ww] > 0
+    sub = out[rlo:rhi + 1, clo:chi]
+    if accumulate:
+        sub[cov] += value
+    else:
+        sub[cov] = value
+    return out
+
+
+def rasterize_shapes(shapes, shape: tuple[int, int],
+                     transform=None, dtype=np.uint8) -> np.ndarray:
+    """features.rasterize equivalent: list of (rings, burn_value) burned in
+    order (REPLACE merge).  `transform` is the geo affine (a,b,c,d,e,f) of the
+    raster; geometry coords are converted to pixel space with its inverse."""
+    h, w = shape
+    out = np.zeros((h, w), dtype=dtype)
+    inv = None
+    if transform is not None and tuple(transform) != (1.0, 0.0, 0.0, 0.0, 1.0, 0.0):
+        inv = G.affine_invert(transform)
+    for rings, val in shapes:
+        if inv is not None:
+            rings = [G.affine_apply(r, inv) for r in rings]
+        # burn directly into the shared frame (REPLACE on covered pixels —
+        # identical to the former out[m > 0] = val, without materializing
+        # a full-frame indicator + masked write per shape)
+        rasterize_rings(rings, (h, w), out=out, value=val)
+    return out
+
+
+def rasterize_geos_buffer(rings: list[np.ndarray], radius: float,
+                          shape: tuple[int, int],
+                          out: np.ndarray | None = None,
+                          accumulate: bool = False) -> np.ndarray:
+    """Rasterize buffer(polygon, radius) pixel-exactly vs the reference's
+    shapely-buffer → GDAL-rasterize path: build the GEOS-style offset
+    curves of the polygon's rings (geom.offset_curves, one pass) and
+    scanline-fill them with NONZERO winding and the GDAL boundary tie
+    rules.  Boundary lines coincide with the GEOS buffer polygon's, so ties
+    resolve identically.  masks.build_mask_arrays counts every label's
+    curves of an image in one rasterize_count_packed call instead.
+
+    With ``accumulate=True`` (and an integer ``out``), adds +1 to the
+    buffered-union pixels in place — overlap counting with O(bbox) traffic
+    per call instead of a full-frame bool + astype + add."""
+    xy, offsets = G.offset_curves([r for r in rings if len(r) >= 4], radius)
+    curves = np.split(xy, offsets[1:-1])
+    if accumulate:
+        return rasterize_rings(curves, shape, out=out, value=1,
+                               winding=True, accumulate=True)
+    m = rasterize_rings(curves, shape, winding=True)
+    return m > 0
+
+
+# ---------------------------------------------------------------------------
+# Single-pair polygon areas and IoU
+# ---------------------------------------------------------------------------
+
+
+def clip_polygon_rect_area(rings: list[np.ndarray], rect) -> float:
+    """Area of polygon ∩ rect (signed-ring aggregation handles holes)."""
+    return G.clip_polygon_rect(rings, rect,
+                               [G.ring_signed_area(r) for r in rings])[1]
+
+
+def polygon_intersection_area(rings_a: list[np.ndarray], rings_b: list[np.ndarray]) -> float:
+    """Exact-to-float area of A ∩ B for simple polygons (holes supported),
+    in a local frame centred on the bbox overlap — with absolute coords ~1e6
+    the fan triangle cross-products would lose ~10 digits to cancellation."""
+    if not rings_a or not rings_b:
+        return 0.0
+    alla, allb = np.vstack(rings_a), np.vstack(rings_b)
+    lo = np.maximum(alla.min(axis=0), allb.min(axis=0))
+    hi = np.minimum(alla.max(axis=0), allb.max(axis=0))
+    if (lo > hi).any():
+        return 0.0
+    origin = 0.5 * (lo + hi)
+    return G.tri_intersection_area(G.fan_decompose(rings_a, origin),
+                                   G.fan_decompose(rings_b, origin))
+
+
+def iou_wkt(wkt_a: str, wkt_b: str) -> float:
+    """IoU of two polygonal WKTs under the same rule as `geom.overlap`; a
+    single pair needs no shared frame, so the intersection is taken in the
+    pair's own bbox-overlap frame (polygon_intersection_area)."""
+    ra, rb = G.polygon_rings(wkt_a), G.polygon_rings(wkt_b)
+    return G._iou(polygon_intersection_area(ra, rb),
+                  G._rings_area(ra), G._rings_area(rb))[1]

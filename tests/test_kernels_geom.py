@@ -5,11 +5,13 @@ tests/test_utils/test_geo.py and tests/test_eval/iou_test.py.
 """
 
 import json
+import re
 
 import numpy as np
 import pytest
 
 from solaris_spark.functions import geom as G
+from tests import oracles as O
 
 AFF = (0.5, 0.0, 733601.0, 0.0, -0.5, 3725139.0)
 SQUARE = "POLYGON ((10 20, 10 10, 20 10, 20 20, 10 20))"
@@ -53,14 +55,14 @@ class TestReproject:
         got = G.reproject_wkt(UTM_POLY, 32616, 4326)
         _, pg = G.wkt_parse(got)
         _, pe = G.wkt_parse(LL_POLY)
-        sim = G.polygon_intersection_area(pg, pe) / G.polygon_area(LL_POLY)
+        sim = O.polygon_intersection_area(pg, pe) / G.polygon_area(LL_POLY)
         assert sim > 0.99999
 
     def test_wgs84_to_utm(self):
         got = G.reproject_wkt(LL_POLY, 4326, 32616)
         _, pg = G.wkt_parse(got)
         _, pe = G.wkt_parse(UTM_POLY)
-        sim = G.polygon_intersection_area(pg, pe) / G.polygon_area(UTM_POLY)
+        sim = O.polygon_intersection_area(pg, pe) / G.polygon_area(UTM_POLY)
         assert sim > 0.99999
 
     def test_roundtrip_micron(self):
@@ -86,9 +88,12 @@ class TestIoU:
                            (736354.0, 3722759.0), (736352.0, 3722755.5),
                            (736348.5, 3722755.5), (736346.0, 3722757.5),
                            (736348.0, 3722762.5)])
-        iou = G.iou_wkt(G.wkt_dump("POLYGON", [pred]),
+        iou = O.iou_wkt(G.wkt_dump("POLYGON", [pred]),
                         G.wkt_dump("POLYGON", [ring]))
         assert abs(iou - 0.073499798744833519) < 1e-9
+        a, b = G.polygon_sets([G.wkt_dump("POLYGON", [pred])],
+                              [G.wkt_dump("POLYGON", [ring])])
+        assert abs(G.overlap(a, 0, b, 0)[1] - 0.073499798744833519) < 1e-9
 
     @pytest.mark.needs_reference("gt.geojson")
     def test_self_intersection_identity(self):
@@ -97,13 +102,13 @@ class TestIoU:
             ring = np.asarray(feat["geometry"]["coordinates"][0],
                               dtype=np.float64)[:, :2]
             area = abs(G.ring_signed_area(ring))
-            inter = G.polygon_intersection_area([ring], [ring])
+            inter = O.polygon_intersection_area([ring], [ring])
             assert abs(inter - area) <= 1e-9 * max(area, 1.0)
 
     def test_disjoint(self):
         a = np.array([(0.0, 0.0), (1, 0), (1, 1), (0, 1), (0, 0)])
         b = a + 5.0
-        assert G.polygon_intersection_area([a], [b]) == 0.0
+        assert O.polygon_intersection_area([a], [b]) == 0.0
 
     def test_polygon_sets_empty_rows(self):
         """None, '' and EMPTY rows have no rings, area 0 and a bbox that
@@ -136,7 +141,7 @@ class TestIoU:
         a, b = G.polygon_sets([w], [w])
         assert G.tri_intersection_area(a.tris[0], b.tris[0]) > a.area[0]
         assert G.overlap(a, 0, b, 0) == (a.area[0], 1.0)
-        assert G.iou_wkt(w, w) == 1.0
+        assert O.iou_wkt(w, w) == 1.0
 
 
 class TestGrid:
@@ -170,6 +175,13 @@ class TestWkt:
         t, parts = G.wkt_parse("POLYGON EMPTY")
         assert parts == []
 
+    @pytest.mark.parametrize("text", ["", "  \n\t ", "123 (1 2)"])
+    def test_non_wkt_text_raises_value_error(self, text):
+        """Text with no leading geometry type is rejected as a ValueError
+        naming what it got, not an AttributeError from the parser."""
+        with pytest.raises(ValueError, match=re.escape(repr(text.strip()))):
+            G.wkt_parse(text)
+
 
 class TestHoleOrientation:
     def test_area_and_iou_orientation_insensitive(self):
@@ -182,12 +194,12 @@ class TestHoleOrientation:
         w_bad = f"POLYGON (({ext}), ({hole_same}))"
         w_ok = f"POLYGON (({ext}), ({hole_opp}))"
         assert abs(G.polygon_area(w_bad) - 84.0) < 1e-9
-        assert abs(G.iou_wkt(w_bad, w_bad) - 1.0) < 1e-12
-        assert abs(G.iou_wkt(w_bad, w_ok) - 1.0) < 1e-12
+        assert abs(O.iou_wkt(w_bad, w_bad) - 1.0) < 1e-12
+        assert abs(O.iou_wkt(w_bad, w_ok) - 1.0) < 1e-12
         # intersection with a probe overlapping the hole region: the hole
         # contributes nothing regardless of winding
         probe = "POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))"
-        assert G.iou_wkt(w_bad, probe) == 0.0
+        assert O.iou_wkt(w_bad, probe) == 0.0
 
 
 class TestBatchedSegmentIntersect:
@@ -277,12 +289,12 @@ class TestReprojectFullFileGolden:
             _, pg = G.wkt_parse(got)
             _, pe = G.wkt_parse(wl)
             a = G.polygon_area(wl)
-            assert G.polygon_intersection_area(pg, pe) / a > 0.99999
+            assert O.polygon_intersection_area(pg, pe) / a > 0.99999
             back = G.reproject_wkt(wl, 4326, 32616)
             _, pb = G.wkt_parse(back)
             _, pu = G.wkt_parse(wu)
             au = G.polygon_area(wu)
-            assert G.polygon_intersection_area(pb, pu) / au > 0.99999
+            assert O.polygon_intersection_area(pb, pu) / au > 0.99999
 
 
 class TestWebMercator:

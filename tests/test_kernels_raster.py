@@ -11,6 +11,7 @@ import pytest
 
 from solaris_spark.functions import geom as G, raster as R
 from solaris_spark.functions.tiffio import read_tiff
+from tests import oracles as O
 
 DATA = "/root/reference/solaris/data"
 
@@ -23,7 +24,7 @@ def sample_shapes():
 
 @pytest.fixture(scope="module")
 def footprint(sample_shapes):
-    return R.rasterize_shapes(sample_shapes, (900, 900))
+    return O.rasterize_shapes(sample_shapes, (900, 900))
 
 
 def golden(name):
@@ -60,7 +61,7 @@ class TestBoundary:
 def contact_mask(shapes, footprint, spacing):
     cnt = np.zeros((900, 900), dtype=np.int32)
     for rings, _ in shapes:
-        cnt += R.rasterize_geos_buffer(rings, spacing / 2.0, (900, 900)).astype(np.int32)
+        cnt += O.rasterize_geos_buffer(rings, spacing / 2.0, (900, 900)).astype(np.int32)
     return ((cnt >= 2) & (footprint == 0)).astype(np.uint8) * 255
 
 

@@ -2,8 +2,9 @@
 
 ``masks.build_mask_arrays`` (one batched scanline pass per channel) must be
 byte-equal to the same masks built label by label from the single-polygon
-kernels — the recipe of ``tests/test_kernels_raster.py::contact_mask``,
-which checks those kernels against the reference goldens.  Labels come from
+kernels in ``tests/oracles.py`` — the recipe of
+``tests/test_kernels_raster.py::contact_mask``, which checks those kernels
+against the reference goldens.  Labels come from
 ``synth.synth_labels_for``, so these tests need no reference fixtures.
 """
 
@@ -16,6 +17,7 @@ from solaris_spark.functions import geom as G
 from solaris_spark.functions import raster as R
 from solaris_spark.operators import masks
 from solaris_spark.sources import synth
+from tests import oracles as O
 
 CHANNELS = ["footprint", "boundary", "contact"]
 
@@ -23,12 +25,12 @@ CHANNELS = ["footprint", "boundary", "contact"]
 def oracle_masks(wkts, shape, boundary_type="inner", boundary_width=3,
                  contact_spacing=10.0):
     ring_sets = [G.polygon_rings(w) for w in wkts]
-    fp = R.rasterize_shapes([(rings, 255) for rings in ring_sets], shape)
+    fp = O.rasterize_shapes([(rings, 255) for rings in ring_sets], shape)
     morph = R.dilation_square if boundary_type == "outer" else R.erosion_square
     b = ((morph(fp, boundary_width) ^ fp) > 0).astype(np.uint8) * 255
     cnt = np.zeros(shape, dtype=np.int32)
     for rings in ring_sets:
-        cnt += R.rasterize_geos_buffer(rings, contact_spacing / 2.0,
+        cnt += O.rasterize_geos_buffer(rings, contact_spacing / 2.0,
                                        shape).astype(np.int32)
     c = ((cnt >= 2) & (fp == 0)).astype(np.uint8) * 255
     return np.stack([fp, b, c], axis=-1)
@@ -91,9 +93,9 @@ class TestCollapsedLabel:
         assert contact.any()
         # contact = the collapsed label's disc ∩ the box's buffer, minus
         # footprints; the disc's chords lie inside the true circle
-        disc = R.rasterize_geos_buffer(G.polygon_rings(point), spacing / 2,
+        disc = O.rasterize_geos_buffer(G.polygon_rings(point), spacing / 2,
                                        shape)
-        box_buf = R.rasterize_geos_buffer(G.polygon_rings(box), spacing / 2,
+        box_buf = O.rasterize_geos_buffer(G.polygon_rings(box), spacing / 2,
                                           shape)
         assert np.array_equal(contact, disc & box_buf & (out[..., 0] == 0))
         rows, cols = np.nonzero(contact)

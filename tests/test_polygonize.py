@@ -9,6 +9,7 @@ import pytest
 
 from solaris_spark.functions import geom as G, polygonize as P
 from solaris_spark.functions.tiffio import read_tiff
+from tests import oracles as O
 
 DATA = "/root/reference/solaris/data"
 
@@ -24,7 +25,7 @@ def match_all(polys, gold, thresh=0.999999):
     for rings, val, area in polys:
         best = 0.0
         for grings in gold:
-            inter = G.polygon_intersection_area(rings, grings)
+            inter = O.polygon_intersection_area(rings, grings)
             ga = abs(G.ring_signed_area(grings[0])) - sum(
                 abs(G.ring_signed_area(h)) for h in grings[1:])
             union = area + ga - inter

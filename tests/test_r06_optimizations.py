@@ -1,9 +1,11 @@
 """Focused tests for the r6 optimization internals:
 
 - rasterize_count_groups (one batched scanline pass over many polygons)
-  must be bit-equivalent to the per-polygon rasterize_rings loop it
-  replaced in build_mask_arrays — even-odd fills, holes, and winding
-  offset curves alike, on fixed and on seeded random shapes;
+  must be bit-equivalent to a loop of the per-polygon lexsort rasterizer
+  in tests/oracles.py — even-odd fills, holes, and winding offset curves
+  alike, on fixed and on seeded random shapes — and the engine's
+  rasterize_rings (the same crossings, summed over their bounding window)
+  equal to the oracle's single-polygon fill;
 - the custom worker daemon's setup_spark_files cache must re-invalidate
   import caches exactly when the Spark-files state changes;
 - the daemon's GC shim must do a full unfreeze-collect sweep on schedule;
@@ -19,6 +21,7 @@ import pytest
 
 from solaris_spark.functions import geom as G
 from solaris_spark.functions import raster as R
+from tests import oracles as O
 
 
 def _rand_poly(rng, cx, cy, rad, k):
@@ -45,7 +48,7 @@ class TestRasterizeCountGroups:
                 G.wkt_dump("POLYGON", rings))])
         loop = np.zeros(shape, dtype=np.int32)
         for rings in groups:
-            R.rasterize_rings(rings, shape, out=loop, value=1,
+            O.rasterize_rings(rings, shape, out=loop, value=1,
                               accumulate=True)
         batched = R.rasterize_count_groups(groups, shape)
         assert np.array_equal(loop, batched)
@@ -61,7 +64,7 @@ class TestRasterizeCountGroups:
                                        int(rng.integers(4, 8)))])))
         loop = np.zeros(shape, dtype=np.int32)
         for rings in ring_sets:
-            R.rasterize_geos_buffer(rings, 5.0, shape, out=loop,
+            O.rasterize_geos_buffer(rings, 5.0, shape, out=loop,
                                     accumulate=True)
         curves = [[G.offset_curve(r, 5.0) for r in rings if len(r) >= 4]
                   for rings in ring_sets]
@@ -72,9 +75,12 @@ class TestRasterizeCountGroups:
     def test_randomized_parity_with_per_polygon_oracles(self, seed):
         """Seeded shapes against the per-polygon kernels, under both fill
         rules and for GEOS-style buffers: off-frame and partly off-frame
-        shapes, vertices snapped to integers or half-integers (column ties,
+        shapes, a self-crossing pentagram, a shape across each frame edge,
+        vertices snapped to integers or half-integers (column ties,
         horizontal edges), axis-aligned boxes, holes, overlapping groups,
-        and 1-row / 1-column frames."""
+        and 1-row / 1-column frames.  Each group alone through the engine's
+        rasterize_rings (the window finisher) equals the oracle's even-odd
+        fill, with value 255 into uint8 on odd seeds."""
         rng = np.random.default_rng(1000 + seed)
         h, w = (int(v) for v in rng.integers(8, 90, size=2))
         if seed % 8 == 0:
@@ -99,18 +105,34 @@ class TestRasterizeCountGroups:
             if snap:  # 1: integer vertices, 2: half-integer vertices
                 rings = [np.round(r * snap) / snap for r in rings]
             groups.append(rings)
+        # a pentagram: even-odd leaves its centre empty, nonzero fills it
+        ang = rng.uniform(0, 2 * np.pi) + np.arange(6) * 4 * np.pi / 5
+        groups.append([np.c_[rng.uniform(0, w) + 30 * np.cos(ang),
+                             rng.uniform(0, h) + 30 * np.sin(ang)]])
+        for cx, cy in ((0, h / 2), (w, h / 2), (w / 2, 0), (w / 2, h)):
+            # a diamond around a point of each frame edge
+            dx0, dx1, dy0, dy1 = rng.uniform(0.3, 20, size=4)
+            groups.append([np.array([[cx - dx0, cy], [cx, cy - dy0],
+                                     [cx + dx1, cy], [cx, cy + dy1],
+                                     [cx - dx0, cy]])])
         shape = (h, w)
+        value = 255 if seed % 2 else int(rng.integers(1, 255))
+        for rings in groups:
+            got = R.rasterize_rings(rings, shape, value=value)
+            assert got.dtype == np.uint8
+            assert np.array_equal(got, O.rasterize_rings(rings, shape,
+                                                         value=value))
         for winding in (False, True):
             loop = np.zeros(shape, dtype=np.int32)
             for rings in groups:
-                R.rasterize_rings(rings, shape, out=loop, value=1,
+                O.rasterize_rings(rings, shape, out=loop, value=1,
                                   winding=winding, accumulate=True)
             assert np.array_equal(
                 R.rasterize_count_groups(groups, shape, winding=winding),
                 loop), f"seed {seed} winding={winding}"
         loop = np.zeros(shape, dtype=np.int32)
         for rings in groups:
-            R.rasterize_geos_buffer(rings, 2.5, shape, out=loop,
+            O.rasterize_geos_buffer(rings, 2.5, shape, out=loop,
                                     accumulate=True)
         curves = [[G.offset_curve(r, 2.5) for r in rings if len(r) >= 4]
                   for rings in groups]
@@ -119,7 +141,7 @@ class TestRasterizeCountGroups:
 
     def test_unclosed_rings_close_at_each_rows_last_crossing(self):
         """An open ring leaves an odd winding sum on some rows; coverage
-        stops at the row's last crossing, as in rasterize_rings, instead
+        stops at the row's last crossing, as in the oracle, instead
         of running on into later rows or groups."""
         shape = (30, 40)
         box = np.array([[2.0, 2.0], [30.0, 2.0], [30.0, 20.0], [2.0, 20.0],
@@ -131,7 +153,7 @@ class TestRasterizeCountGroups:
                   [np.array([[25.0, 5.0], [38.0, 12.0], [27.0, 28.0]])]]
         loop = np.zeros(shape, dtype=np.int32)
         for rings in groups:
-            R.rasterize_rings(rings, shape, out=loop, value=1,
+            O.rasterize_rings(rings, shape, out=loop, value=1,
                               winding=True, accumulate=True)
         assert np.array_equal(
             R.rasterize_count_groups(groups, shape, winding=True), loop)

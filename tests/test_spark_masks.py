@@ -11,6 +11,7 @@ from solaris_spark.functions import raster as R
 from solaris_spark.functions.tiffio import read_tiff
 from solaris_spark.operators import masks
 from solaris_spark.sources import synth
+from tests import oracles as O
 
 DATA = "/root/reference/solaris/data"
 
@@ -73,7 +74,7 @@ def _road_oracle(wkts, t, epsg, shape, width):
     """road_masks rebuilt one line at a time: each line's
     line_offset_curve (in metres in the UTM zone of all vertices' mean for
     EPSG 4326, else in pixels after the affine) burnt on its own by
-    rasterize_rings(winding=True), the masks OR-ed."""
+    the oracle's rasterize_rings(winding=True), the masks OR-ed."""
     lines = []
     for w in wkts:
         gtype, parts = G.wkt_parse(w)
@@ -90,7 +91,7 @@ def _road_oracle(wkts, t, epsg, shape, width):
             curve = G.affine_apply(np.stack([lon, lat], axis=1), inv)
         else:
             curve = G.line_offset_curve(G.affine_apply(ln, inv), width / 2.0)
-        one = R.rasterize_rings([curve], shape, value=255, winding=True)
+        one = O.rasterize_rings([curve], shape, value=255, winding=True)
         np.maximum(mask, one, out=mask)
     return mask
 
@@ -169,3 +170,24 @@ class TestInstanceMasks:
                                channels=["footprint"]).collect()[0]
         fp_arr = unpack(fp)[:, :, 0]
         assert np.array_equal(acc, fp_arr)
+
+    def test_null_geometry_gives_an_all_zero_mask(self, spark):
+        """A NULL label geometry gives an all-zero mask row for its
+        label_id, as POLYGON EMPTY does, next to a real label's mask."""
+        box = "POLYGON ((2 2, 9 2, 9 7.5, 2 7.5, 2 2))"
+        lab = spark.createDataFrame(
+            [("img", 0, box), ("img", 1, None), ("img", 2, "POLYGON EMPTY")],
+            "image_id string, label_id int, wkt_pix string")
+        geo = spark.createDataFrame(
+            [("img", 12, 10, 1.0, 0.0, 0.0, 0.0, 1.0, 0.0, None)],
+            "image_id string, w int, h int, a double, b double, c double, "
+            "d double, e double, f double, nodata double")
+        rows = sorted(masks.instance_masks(lab, geo).collect(),
+                      key=lambda r: r["label_id"])
+        assert [r["label_id"] for r in rows] == [0, 1, 2]
+        got = [np.frombuffer(r["mask"], dtype=np.uint8).reshape(10, 12)
+               for r in rows]
+        assert np.array_equal(got[0], R.rasterize_rings(
+            G.polygon_rings(box), (10, 12), value=255))
+        assert (got[0] == 255).sum() == 7 * 5
+        assert not got[1].any() and not got[2].any()

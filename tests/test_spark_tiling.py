@@ -12,6 +12,7 @@ from solaris_spark.functions import geom as G
 from solaris_spark.functions.tiffio import read_tiff
 from solaris_spark.operators import tiling
 from solaris_spark.sources import synth
+from tests import oracles as O
 
 DATA = "/root/reference/solaris/data"
 
@@ -84,7 +85,7 @@ class TestVectorTiling:
                            - sum(abs(G.ring_signed_area(h)) for h in g[1:])
                            for g in gs)
             a_our = area(ours)
-            inter = sum(G.polygon_intersection_area(go, ge)
+            inter = sum(O.polygon_intersection_area(go, ge)
                         for go in ours for ge in exp_geoms)
             assert a_our > 0, fn
             assert inter / a_our > 0.99999, fn
