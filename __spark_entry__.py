@@ -1087,7 +1087,7 @@ def g_jpeg_features(spark, sf_dir):
     """Feature extraction over JPEG-encoded images — the pure-Python
     baseline codec (functions/jpeg.py: huffman + IDCT, 4:2:0/4:4:4,
     restart markers, progressive SOF2) decoding inside the same
-    mapInPandas pipeline as raw blobs.  Deterministic seeded smooth
+    blobs.map_blobs pipeline as raw blobs.  Deterministic seeded smooth
     content, encoded at varied quality/subsampling/restart settings —
     sequential for rows 0-3, progressive for rows 4-7; decoded features
     pinned as a VALUES oracle (spec-vector + round-trip correctness in
@@ -1124,7 +1124,7 @@ def g_jpeg_features(spark, sf_dir):
 
 def g_png_features(spark, sf_dir):
     """Feature extraction over PNG-encoded images — the pure-Python codec
-    (functions/png.py) decoding inside the same mapInPandas pipeline as
+    (functions/png.py) decoding inside the same blobs.map_blobs pipeline as
     raw blobs; features pinned equal to the raw-bytes path (lossless)."""
     import numpy as np
 

@@ -34,7 +34,8 @@ def _load_label_rows(source_file: str, geom_col: str):
     if source_file.lower().endswith(".csv"):
         with open(source_file) as fh:
             return [row[geom_col] for row in csv.DictReader(fh)]
-    gj = json.load(open(source_file))
+    with open(source_file) as fh:
+        gj = json.load(fh)
     wkts = []
     for f in gj["features"]:
         g = f["geometry"]
@@ -179,7 +180,8 @@ def make_graphs_main(argv=None, spark=None) -> str:
     spark, own = _get_spark(spark)
     try:
         from .operators import graph as graphops
-        gj = json.load(open(a.source_file))
+        with open(a.source_file) as fh:
+            gj = json.load(fh)
         rows = []
         for i, f in enumerate(gj["features"]):
             g = f["geometry"]
@@ -251,7 +253,7 @@ def geotransform_footprints_main(argv=None, spark=None) -> str:
 
     `--batch --argument_csv FILE` (reference -b/-a: one row per job with
     source_file, reference_image, output_path columns) fans the jobs out
-    over executors via mapInPandas — one task per geojson instead of the
+    over executors via blobs.map_blobs — one task per geojson instead of the
     reference's multiprocessing Pool."""
     p = argparse.ArgumentParser(description="Interconvert footprint frames")
     p.add_argument("--source_file", "-s")
@@ -278,7 +280,8 @@ def geotransform_footprints_main(argv=None, spark=None) -> str:
                 out = np.round(out, a.decimal_precision)
             return out.tolist()
 
-        gj = json.load(open(source_file))
+        with open(source_file) as fh:
+            gj = json.load(fh)
         for f in gj["features"]:
             g = f["geometry"]
             if g["type"] == "Polygon":
@@ -304,22 +307,21 @@ def geotransform_footprints_main(argv=None, spark=None) -> str:
         jobs = list(csv.DictReader(fh))
     spark, own = _get_spark(spark)
     try:
-        import pandas as pd
+        import pyspark.sql.types as T
 
-        def exec_jobs(batches):
-            for pdf in batches:
-                n = [run_one(r.source_file, r.reference_image, r.output_path)
-                     for r in pdf.itertuples(index=False)]
-                yield pd.DataFrame({"output_path": pdf["output_path"],
-                                    "n_features": n})
+        from .operators.blobs import map_blobs
+
+        def rows_of(r):
+            yield (r.output_path,
+                   run_one(r.source_file, r.reference_image, r.output_path))
 
         df = spark.createDataFrame(
             [(j["source_file"], j["reference_image"], j["output_path"])
              for j in jobs],
             "source_file string, reference_image string, output_path string")
-        (df.repartition(min(len(jobs), 64))
-           .mapInPandas(exec_jobs, schema="output_path string, n_features long")
-           .collect())
+        map_blobs(df.repartition(min(len(jobs), 64)), T.StructType([
+            T.StructField("output_path", T.StringType()),
+            T.StructField("n_features", T.LongType())]), rows_of).collect()
         return jobs[-1]["output_path"]
     finally:
         if own:

@@ -281,32 +281,6 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -
 # split_geom's `not geometry.intersection(box).is_empty` — touching counts)
 # ---------------------------------------------------------------------------
 
-def _orient(ax, ay, bx, by, cx, cy):
-    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-
-
-def _on_seg(ax, ay, bx, by, px_, py_):
-    return (min(ax, bx) <= px_ <= max(ax, bx)) and (min(ay, by) <= py_ <= max(ay, by))
-
-
-def segments_intersect(a1, a2, b1, b2) -> bool:
-    d1 = _orient(*b1, *b2, *a1)
-    d2 = _orient(*b1, *b2, *a2)
-    d3 = _orient(*a1, *a2, *b1)
-    d4 = _orient(*a1, *a2, *b2)
-    if ((d1 > 0) != (d2 > 0)) and ((d3 > 0) != (d4 > 0)) and d1 != 0 and d2 != 0 and d3 != 0 and d4 != 0:
-        return True
-    if d1 == 0 and _on_seg(*b1, *b2, *a1):
-        return True
-    if d2 == 0 and _on_seg(*b1, *b2, *a2):
-        return True
-    if d3 == 0 and _on_seg(*a1, *a2, *b1):
-        return True
-    if d4 == 0 and _on_seg(*a1, *a2, *b2):
-        return True
-    return False
-
-
 def polygon_edges(rings: list[np.ndarray]) -> np.ndarray:
     """All ring edges as one (n, 4) array [x1, y1, x2, y2] — input to the
     batched segment-intersection kernel."""
@@ -317,10 +291,11 @@ def polygon_edges(rings: list[np.ndarray]) -> np.ndarray:
 
 def any_segments_intersect(ea: np.ndarray, eb: np.ndarray) -> bool:
     """True iff ANY edge of `ea` intersects ANY edge of `eb` (closed-set
-    semantics incl. endpoint/collinear touch) — the numpy-broadcast
-    equivalent of the scalar segments_intersect over all edge pairs.
-    Replaces the O(E_a × E_b) pure-Python quadruple loop in the class-eval
-    candidate test (VERDICT r01 #4); identical predicate arithmetic."""
+    semantics incl. endpoint/collinear touch): orientation signs of each
+    edge's endpoints against the other edge, with a collinear endpoint
+    counting when it lies on the other edge's closed bounding box.  The
+    engine's one segment predicate, evaluated for all edge pairs at once
+    (class-eval candidates, rect_intersects_polygon)."""
     if not len(ea) or not len(eb):
         return False
     a1 = ea[:, None, 0:2]
@@ -375,15 +350,10 @@ def rect_intersects_polygon(rect, rings: list[np.ndarray]) -> bool:
     if points_in_polygon(cx, cy, rings).any():
         return True
     # edge-edge intersection
-    corners = [(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax), (xmin, ymin)]
-    for ring in rings:
-        for i in range(len(ring) - 1):
-            a1 = (ring[i, 0], ring[i, 1])
-            a2 = (ring[i + 1, 0], ring[i + 1, 1])
-            for j in range(4):
-                if segments_intersect(a1, a2, corners[j], corners[j + 1]):
-                    return True
-    return False
+    rect_edges = np.array([[xmin, ymin, xmax, ymin], [xmax, ymin, xmax, ymax],
+                           [xmax, ymax, xmin, ymax], [xmin, ymax, xmin, ymin]],
+                          dtype=np.float64)
+    return any_segments_intersect(polygon_edges(rings), rect_edges)
 
 
 # ---------------------------------------------------------------------------

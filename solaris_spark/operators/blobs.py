@@ -1,15 +1,17 @@
-"""The Python side of every blob-emitting Arrow UDF: reading input rows
-out of Arrow batches and returning rows with one binary column as Arrow
-batches bounded by bytes.
+"""The Python side of every Arrow UDF that returns rows: reading input
+rows out of Arrow batches and returning output rows as Arrow batches
+bounded by bytes.
 
 Spark bounds the batches it sends to Python by
 ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MB in
 session.get_spark) but takes whatever a UDF returns, and a grouped UDF's
-result for one group would otherwise leave as one batch.  A UDF whose rows
-carry MB-scale blobs (tiles, masks, images) must bound its own output:
-map_blobs runs a per-row generator under ``mapInArrow``, group_blobs a
-per-group one under ``applyInArrow``'s iterator form, and both cut the
-output at the same bound, with no pandas conversion either way.
+result for one group would otherwise leave as one batch.  Every operator
+that returns rows from Python does so here: map_blobs runs a per-row
+generator under ``mapInArrow``, group_blobs a per-group one under
+``applyInArrow``'s iterator form, and both cut the output at the same
+bound, with no pandas conversion either way.  An output schema may carry
+one binary column (tiles, masks, images: each batch's blobs sit in one
+contiguous buffer) or none (grid cells, labels, match rows, scores).
 """
 
 from __future__ import annotations
@@ -60,18 +62,18 @@ def arrow_rows(batch: pa.RecordBatch) -> list:
 
 
 class BlobBatches:
-    """Output rows of a Spark schema with one binary column, assembled
-    into Arrow record batches.  Each blob (an array, written as its
-    little-endian C-order bytes, a bytes-like, or None for null) is copied
-    once, into one contiguous buffer per batch that backs the binary
-    column; the other columns come from Python lists.  A batch is cut
-    before a row would take it past ``max_bytes`` (a single larger row goes
-    alone)."""
+    """Output rows of a Spark schema with at most one binary column,
+    assembled into Arrow record batches.  Each blob (an array, written as
+    its little-endian C-order bytes, a bytes-like, or None for null) is
+    copied once, into one contiguous buffer per batch that backs the
+    binary column; the other columns come from Python lists.  A batch is
+    cut before a row would take it past ``max_bytes`` (a single larger row
+    goes alone)."""
 
     def __init__(self, schema: T.StructType, max_bytes: int):
         self.schema = to_arrow_schema(schema)
-        self.blob = next(i for i, f in enumerate(schema.fields)
-                         if isinstance(f.dataType, T.BinaryType))
+        self.blob = next((i for i, f in enumerate(schema.fields)
+                          if isinstance(f.dataType, T.BinaryType)), None)
         self.strs = [i for i, f in enumerate(schema.fields)
                      if isinstance(f.dataType, T.StringType)]
         self.max_bytes = max_bytes
@@ -82,9 +84,12 @@ class BlobBatches:
         """Queue one row (values in schema order); returns the full batch
         this row did not fit into, if any."""
         # strings are at most 4 UTF-8 bytes per character; every column
-        # takes at most 8 more bytes per row (offsets, scalars, validity)
-        size = _nbytes(row[self.blob]) + 8 * len(row) \
+        # takes at most 8 more bytes per row (offsets, scalars, validity);
+        # list values are not counted (the lists here hold a few numbers)
+        size = 8 * len(row) \
             + 4 * sum(len(row[i]) for i in self.strs if row[i] is not None)
+        if self.blob is not None:
+            size += _nbytes(row[self.blob])
         full = None
         if self.rows and self.nbytes + size > self.max_bytes:
             full = self.flush()
@@ -95,27 +100,30 @@ class BlobBatches:
     def flush(self) -> pa.RecordBatch:
         """The queued rows as one batch (possibly empty); the queue empties."""
         rows, self.rows, self.nbytes = self.rows, [], 0
-        blobs = [r[self.blob] for r in rows]
-        offs = np.zeros(len(rows) + 1, dtype=np.int32)
-        np.cumsum([_nbytes(b) for b in blobs], out=offs[1:])
-        buf = np.empty(int(offs[-1]), dtype=np.uint8)
-        for b, i, j in zip(blobs, offs[:-1].tolist(), offs[1:].tolist()):
-            if isinstance(b, np.ndarray):
-                dst = buf[i:j].view(b.dtype.newbyteorder("<"))
-                dst.reshape(b.shape)[...] = b
-            elif b is not None:
-                buf[i:j] = np.frombuffer(b, dtype=np.uint8)
-        valid = np.array([b is not None for b in blobs], dtype=bool)
-        nulls = len(rows) - int(valid.sum())
-        bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) \
-            if nulls else None
         cols = list(zip(*rows)) or [()] * len(self.schema)
-        arrays = [
-            pa.BinaryArray.from_buffers(f.type, len(rows), [
-                bitmap, pa.py_buffer(offs), pa.py_buffer(buf)], nulls)
-            if k == self.blob else pa.array(cols[k], type=f.type)
-            for k, f in enumerate(self.schema)]
+        arrays = [_binary_array(f.type, cols[k]) if k == self.blob
+                  else pa.array(cols[k], type=f.type)
+                  for k, f in enumerate(self.schema)]
         return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
+
+
+def _binary_array(typ: pa.DataType, blobs) -> pa.Array:
+    """A binary column whose values sit in one contiguous buffer."""
+    offs = np.zeros(len(blobs) + 1, dtype=np.int32)
+    np.cumsum([_nbytes(b) for b in blobs], out=offs[1:])
+    buf = np.empty(int(offs[-1]), dtype=np.uint8)
+    for b, i, j in zip(blobs, offs[:-1].tolist(), offs[1:].tolist()):
+        if isinstance(b, np.ndarray):
+            dst = buf[i:j].view(b.dtype.newbyteorder("<"))
+            dst.reshape(b.shape)[...] = b
+        elif b is not None:
+            buf[i:j] = np.frombuffer(b, dtype=np.uint8)
+    valid = np.array([b is not None for b in blobs], dtype=bool)
+    nulls = len(blobs) - int(valid.sum())
+    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) \
+        if nulls else None
+    return pa.BinaryArray.from_buffers(typ, len(blobs), [
+        bitmap, pa.py_buffer(offs), pa.py_buffer(buf)], nulls)
 
 
 def _nbytes(blob) -> int:
@@ -126,9 +134,10 @@ def _nbytes(blob) -> int:
 
 def _emit(units: Iterable[Iterable[tuple]], schema: T.StructType,
           max_bytes: int) -> Iterator[pa.RecordBatch]:
-    """The output side of every blob UDF: each unit (an iterable of output
-    rows) leaves in BlobBatches of at most ``max_bytes``, cut at every unit
-    end, and a unit with no output rows yields one empty batch."""
+    """The output side of every row-returning UDF: each unit (an iterable
+    of output rows) leaves in BlobBatches of at most ``max_bytes``, cut at
+    every unit end, and a unit with no output rows yields one empty
+    batch."""
     out = BlobBatches(schema, max_bytes)
     for unit in units:
         sent = False
@@ -143,7 +152,7 @@ def _emit(units: Iterable[Iterable[tuple]], schema: T.StructType,
 
 def blob_batches(batches: Iterator[pa.RecordBatch], schema: T.StructType,
                  max_bytes: int, rows_of) -> Iterator[pa.RecordBatch]:
-    """The body of a blob-emitting mapInArrow UDF: ``rows_of(row)`` yields
+    """The body of a row-returning mapInArrow UDF: ``rows_of(row)`` yields
     the output rows (tuples in ``schema`` order) of one input row; the
     output is cut at every input batch end."""
     return _emit((chain.from_iterable(map(rows_of, arrow_rows(batch)))
@@ -153,7 +162,7 @@ def blob_batches(batches: Iterator[pa.RecordBatch], schema: T.StructType,
 def group_blob_batches(batches: Iterator[pa.RecordBatch],
                        schema: T.StructType, max_bytes: int,
                        rows_of) -> Iterator[pa.RecordBatch]:
-    """The body of a blob-emitting grouped applyInArrow UDF:
+    """The body of a row-returning grouped applyInArrow UDF:
     ``rows_of(rows)`` yields the output rows of one group, given all its
     input rows (a group with none yields one empty batch)."""
     rows = [row for batch in batches for row in arrow_rows(batch)]
@@ -177,7 +186,8 @@ def _bounded(df: DataFrame, schema: T.StructType, body, rows_of):
 
 
 def map_blobs(df: DataFrame, schema: T.StructType, rows_of) -> DataFrame:
-    """``df.mapInArrow`` over blob_batches(rows_of)."""
+    """``df.mapInArrow`` over blob_batches(rows_of); ``schema`` has at most
+    one binary column."""
     return df.mapInArrow(_bounded(df, schema, blob_batches, rows_of),
                          schema=schema)
 
@@ -185,6 +195,7 @@ def map_blobs(df: DataFrame, schema: T.StructType, rows_of) -> DataFrame:
 def group_blobs(df: DataFrame, key: str, schema: T.StructType,
                 rows_of) -> DataFrame:
     """``df.groupBy(key).applyInArrow`` over group_blob_batches(rows_of);
-    the iterator type hints select applyInArrow's iterator form."""
+    ``schema`` has at most one binary column.  The iterator type hints
+    select applyInArrow's iterator form."""
     return df.groupBy(key).applyInArrow(
         _bounded(df, schema, group_blob_batches, rows_of), schema=schema)

@@ -14,19 +14,20 @@ Re-expresses (Spark-first):
 
 The sequential claim semantics exist only WITHIN an image group —
 images are the parallel axis (10^12 of them at scale), so the engine runs
-groupBy(image_id).applyInPandas(greedy) after a cell-key candidate join.
+the greedy match as one blobs.group_blobs group per image_id after a
+cell-key candidate join; its rows leave Python as bounded Arrow batches.
 Salting hot images is the caller's knob (plans/skew.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 
 from ..functions import geom as G
+from .blobs import group_blobs
 
 MATCH_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -38,8 +39,9 @@ MATCH_SCHEMA = T.StructType([
 ])
 
 
-def _greedy_match_group(pdf: pd.DataFrame, miniou: float, min_area: float) -> pd.DataFrame:
-    """One image's greedy match. Exact reference semantics:
+def _greedy_match_group(rows: list, miniou: float, min_area: float) -> list:
+    """One image's greedy match over its input rows (image_id, row_id,
+    wkt, order, kind), as MATCH_SCHEMA tuples. Exact reference semantics:
 
     - GT filtered to area >= min_area; proposals to area > min_area
       (base.py:114-120 — note the asymmetric comparison)
@@ -50,15 +52,16 @@ def _greedy_match_group(pdf: pd.DataFrame, miniou: float, min_area: float) -> pd
     - per-GT "iou_score" records the max IoU over proposals whose argmax it
       was, even when below miniou (base.py:138-146 / get_iou_by_building)
     """
-    image_id = pdf["image_id"].iloc[0]
-    gt = pdf[pdf["kind"] == "gt"].sort_values("row_id")
-    pred = pdf[pdf["kind"] == "pred"].sort_values("order", kind="stable")
+    image_id = rows[0].image_id
+    gt = sorted((r for r in rows if r.kind == "gt"), key=lambda r: r.row_id)
+    pred = sorted((r for r in rows if r.kind == "pred"),
+                  key=lambda r: r.order)
 
-    gs, ps = G.polygon_sets(gt["wkt"], pred["wkt"])
+    gs, ps = G.polygon_sets([r.wkt for r in gt], [r.wkt for r in pred])
     gk = np.flatnonzero(gs.area >= min_area)   # kept GT / proposal indices
     pk = np.flatnonzero(ps.area > min_area)
-    gt_ids = gt["row_id"].to_numpy()[gk]
-    pred_ids = pred["row_id"].to_numpy()[pk]
+    gt_ids = np.array([r.row_id for r in gt], dtype=np.int64)[gk]
+    pred_ids = np.array([r.row_id for r in pred], dtype=np.int64)[pk]
     gt_bbox = gs.bbox[gk]
 
     alive = np.ones(len(gk), dtype=bool)
@@ -83,16 +86,15 @@ def _greedy_match_group(pdf: pd.DataFrame, miniou: float, min_area: float) -> pd
             out_pred_match[i] = gt_ids[best_j]
             alive[best_j] = False
 
-    rows = []
+    out = []
     for i, pid in enumerate(pred_ids):
-        rows.append((image_id, "pred", int(pid), float(out_pred_iou[i]),
-                     int(out_pred_match[i]) if out_pred_match[i] >= 0 else None,
-                     float(ps.area[pk[i]])))
+        out.append((image_id, "pred", int(pid), float(out_pred_iou[i]),
+                    int(out_pred_match[i]) if out_pred_match[i] >= 0 else None,
+                    float(ps.area[pk[i]])))
     for j, gid in enumerate(gt_ids):
-        rows.append((image_id, "gt", int(gid), float(gt_best[j]),
-                     None if alive[j] else int(gid), float(gs.area[gk[j]])))
-    return pd.DataFrame(rows, columns=["image_id", "kind", "row_id",
-                                       "iou_score", "matched_gt", "area"])
+        out.append((image_id, "gt", int(gid), float(gt_best[j]),
+                    None if alive[j] else int(gid), float(gs.area[gk[j]])))
+    return out
 
 
 def greedy_iou_match(gt: DataFrame, pred: DataFrame, miniou: float = 0.5,
@@ -115,10 +117,10 @@ def greedy_iou_match(gt: DataFrame, pred: DataFrame, miniou: float = 0.5,
                   F.lit(0).alias("order"), F.lit("gt").alias("kind"))
     both = p.unionByName(g)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _greedy_match_group(pdf, miniou, min_area)
+    def rows_of(rows):
+        return _greedy_match_group(rows, miniou, min_area)
 
-    return both.groupBy("image_id").applyInPandas(run, schema=MATCH_SCHEMA)
+    return group_blobs(both, "image_id", MATCH_SCHEMA, rows_of)
 
 
 def image_scores(match: DataFrame, miniou: float = 0.5) -> DataFrame:
@@ -194,19 +196,23 @@ def class_matched_ious(gt: DataFrame, pred: DataFrame,
         classes = sorted(r["class"] for r in
                          gt.select("class").distinct().collect())
 
-    g = gt.select("image_id", "row_id", "wkt", "class",
+    # "class" is a Python keyword, so the rows carry it as "cls"
+    g = gt.select("image_id", "row_id", "wkt", F.col("class").alias("cls"),
                   F.lit(None).cast("double").alias("conf"),
                   F.lit("gt").alias("kind"))
-    p = pred.select("image_id", "row_id", "wkt", "class", "conf",
-                    F.lit("pred").alias("kind"))
+    p = pred.select("image_id", "row_id", "wkt", F.col("class").alias("cls"),
+                    "conf", F.lit("pred").alias("kind"))
     both = g.unionByName(p)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        image_id = pdf["image_id"].iloc[0]
-        gt_rows = pdf[pdf["kind"] == "gt"].sort_values("row_id")
-        pr_rows = pdf[pdf["kind"] == "pred"].sort_values("row_id")
+    def rows_of(rows):
+        image_id = rows[0].image_id
+        gt_rows = sorted((r for r in rows if r.kind == "gt"),
+                         key=lambda r: r.row_id)
+        pr_rows = sorted((r for r in rows if r.kind == "pred"),
+                         key=lambda r: r.row_id)
 
-        gs, ps = G.polygon_sets(gt_rows["wkt"], pr_rows["wkt"])
+        gs, ps = G.polygon_sets([r.wkt for r in gt_rows],
+                                [r.wkt for r in pr_rows])
         g_edges = [G.polygon_edges(r) for r in gs.rings]
         p_edges = [G.polygon_edges(r) for r in ps.rings]
         out = []
@@ -245,8 +251,8 @@ def class_matched_ious(gt: DataFrame, pred: DataFrame,
                                 iou_val, conf))
                     counter[obj] += 1
 
-        g_cls = list(gt_rows["class"])
-        p_cls = list(pr_rows["class"])
+        g_cls = [r.cls for r in gt_rows]
+        p_cls = [r.cls for r in pr_rows]
         p_by_class = {}
         for i, c in enumerate(p_cls):
             p_by_class.setdefault(c, []).append(i)
@@ -255,12 +261,11 @@ def class_matched_ious(gt: DataFrame, pred: DataFrame,
             g_by_class.setdefault(c, []).append(i)
 
         one_pass("precision", p_by_class, ps, p_edges, gs, g_edges, g_cls,
-                 list(pr_rows["conf"]))
+                 [r.conf for r in pr_rows])
         one_pass("recall", g_by_class, gs, g_edges, ps, p_edges, p_cls, None)
-        return pd.DataFrame(out, columns=[f.name for f in
-                                          CLASS_IOU_SCHEMA.fields])
+        return out
 
-    return both.groupBy("image_id").applyInPandas(run, schema=CLASS_IOU_SCHEMA)
+    return group_blobs(both, "image_id", CLASS_IOU_SCHEMA, rows_of)
 
 
 def class_scores(class_ious: DataFrame, threshold: float = 0.5) -> DataFrame:

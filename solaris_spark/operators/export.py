@@ -23,6 +23,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 
 from ..functions import geom as G
+from .blobs import map_blobs
 
 
 def yolo_labels(labels: DataFrame, images: DataFrame,
@@ -112,11 +113,9 @@ def coco_from_tile_dirs(spark, im_dir: str, gj_dir: str,
     emit COCO annotation rows with 1-based image ids in sorted-image order.
 
     The pairing is the manifest join (sources/dataset.py); the per-pair
-    file reads + geo→px transform run on executors (mapInPandas), so a
+    file reads + geo→px transform run on executors (blobs.map_blobs), so a
     100k-tile labeling job is one distributed pass."""
     import json
-
-    import pyspark.sql.types as TT
 
     from ..functions.tiffio import read_tiff
     from ..sources.dataset import make_dataset_manifest
@@ -136,34 +135,28 @@ def coco_from_tile_dirs(spark, im_dir: str, gj_dir: str,
     # sort isn't evaluated twice
     n_pairs = manifest.count()
 
-    out_schema = TT.StructType([
-        TT.StructField("image_id", TT.StringType()),
-        TT.StructField("img_id", TT.IntegerType()),
-        TT.StructField("label_id", TT.IntegerType()),
-        TT.StructField("wkt_pix", TT.StringType()),
+    out_schema = T.StructType([
+        T.StructField("image_id", T.StringType()),
+        T.StructField("img_id", T.IntegerType()),
+        T.StructField("label_id", T.IntegerType()),
+        T.StructField("wkt_pix", T.StringType()),
     ])
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                im = read_tiff(r.image)
-                inv = G.affine_invert(tuple(float(v) for v in im.transform))
-                gj = json.load(open(r.label))
-                for i, f in enumerate(gj["features"]):
-                    g = f["geometry"]
-                    if g["type"] != "Polygon":
-                        continue
-                    rings = [G.affine_apply(
-                        np.asarray(rr, dtype=np.float64)[:, :2], inv)
-                        for rr in g["coordinates"]]
-                    out.append((str(r.img_id), int(r.img_id), i,
-                                G.wkt_dump("POLYGON", rings)))
-            yield pd.DataFrame(out, columns=[f.name for f
-                                             in out_schema.fields])
+    def rows_of(r):
+        im = read_tiff(r.image)
+        inv = G.affine_invert(tuple(float(v) for v in im.transform))
+        with open(r.label) as fh:
+            gj = json.load(fh)
+        for i, f in enumerate(gj["features"]):
+            g = f["geometry"]
+            if g["type"] != "Polygon":
+                continue
+            rings = [G.affine_apply(np.asarray(rr, dtype=np.float64)[:, :2],
+                                    inv) for rr in g["coordinates"]]
+            yield (str(r.img_id), r.img_id, i, G.wkt_dump("POLYGON", rings))
 
-    lab = jobs.repartition(max(4, min(n_pairs, 256))) \
-        .mapInPandas(gen, schema=out_schema)
+    lab = map_blobs(jobs.repartition(max(4, min(n_pairs, 256))), out_schema,
+                    rows_of)
     coco = coco_annotations(lab)
     return coco.withColumn("image_id", F.col("image_id").cast("int"))
 

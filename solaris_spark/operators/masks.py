@@ -3,7 +3,7 @@ road / instance channels per image (or per tile).  image_masks, road_masks
 and instance_masks group label rows by image and emit their masks through
 blobs.group_blobs, in Arrow batches bounded at the session's 64 MB (one
 instance_masks image can carry many label-sized masks);
-masks_to_polygons emits scalar polygon rows through applyInPandas.
+masks_to_polygons returns its scalar polygon rows through group_blobs too.
 
 Re-expresses df_to_px_mask and friends (solaris/vector/mask.py:19-132,
 135-236 footprint, 239-318 boundary, 321-444 contact, 447-564 road,
@@ -21,13 +21,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import geom as G
 from ..functions import pixfmt
+from ..functions import polygonize as P
 from ..functions import raster as R
 from .blobs import group_blobs
 
@@ -211,24 +211,19 @@ def masks_to_polygons(masks_df: DataFrame, min_area: float = 40.0,
         src = src.join(images_geo.select("image_id", "a", "b", "c",
                                          "d", "e", "f"), "image_id")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..functions import polygonize as P
-        rows = []
-        for _, r in pdf.iterrows():
-            arr = np.frombuffer(r["mask"], dtype=np.uint8).reshape(
-                int(r["h"]), int(r["w"]), int(r["nchan"]))[:, :, channel]
-            transform = ((r["a"], r["b"], r["c"], r["d"], r["e"], r["f"])
+    def rows_of(rows):
+        for r in rows:
+            arr = np.frombuffer(r.mask, dtype=np.uint8).reshape(
+                r.h, r.w, r.nchan)[:, :, channel]
+            transform = ((r.a, r.b, r.c, r.d, r.e, r.f)
                          if do_transform else None)
             polys = P.mask_to_polygons(arr, min_area=min_area,
                                        transform=transform,
                                        simplify_tol=simplify_tol)
             for i, (rings, val, area) in enumerate(polys):
-                rows.append(dict(image_id=r["image_id"], poly_id=i,
-                                 wkt=G.wkt_dump("POLYGON", rings),
-                                 value=val, area=area))
-        return pd.DataFrame(rows, columns=[f.name for f in POLYGONIZE_SCHEMA.fields])
+                yield (r.image_id, i, G.wkt_dump("POLYGON", rings), val, area)
 
-    return src.groupBy("image_id").applyInPandas(run, schema=POLYGONIZE_SCHEMA)
+    return group_blobs(src, "image_id", POLYGONIZE_SCHEMA, rows_of)
 
 
 INSTANCE_SCHEMA = T.StructType([

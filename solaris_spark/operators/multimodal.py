@@ -1,6 +1,6 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
-Resize, crop and frame sampling emit blobs through blobs.map_blobs;
-feature extraction emits small scalar rows through mapInPandas.
+Every operator returns its rows through blobs.map_blobs: resize, crop and
+frame sampling emit blobs, feature extraction small scalar rows.
 
 Images decode and re-encode through functions/pixfmt.py: raw formats, PNG
 and JPEG (baseline and progressive) are native codecs; other image formats
@@ -10,15 +10,13 @@ and JPEG (baseline and progressive) are native codecs; other image formats
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import pixfmt
+from ..functions.raster import phash64
 from .blobs import map_blobs
 from .imageops import IMAGE_SCHEMA
 
@@ -65,25 +63,16 @@ def image_features(images: DataFrame) -> DataFrame:
     Batch shape: MB-scale blobs in Arrow batches bounded at 64 MB and 10k
     records (session.py)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.raster import phash64
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = pixfmt.decode(r.fmt, r.bytes, int(r.w), int(r.h))
-                f = arr.astype(np.float64)
-                gy = np.abs(np.diff(f, axis=1)).mean()
-                gx = np.abs(np.diff(f, axis=2)).mean()
-                out.append(dict(
-                    image_id=r.image_id,
-                    mean=[float(c.mean()) for c in f],
-                    std=[float(c.std()) for c in f],
-                    edge_density=float(gx + gy),
-                    phash=phash64(arr)))
-            yield pd.DataFrame(out)
+    def rows_of(r):
+        arr = pixfmt.decode(r.fmt, r.bytes, r.w, r.h)
+        f = arr.astype(np.float64)
+        gy = np.abs(np.diff(f, axis=1)).mean()
+        gx = np.abs(np.diff(f, axis=2)).mean()
+        yield (r.image_id, [float(c.mean()) for c in f],
+               [float(c.std()) for c in f], float(gx + gy), phash64(arr))
 
-    return images.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_blobs(images.select("image_id", "bytes", "w", "h", "fmt"),
+                     FEATURE_SCHEMA, rows_of)
 
 
 def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -189,20 +178,14 @@ def audio_features(clips: DataFrame) -> DataFrame:
     """clips(clip_id, bytes, sample_rate) → duration/RMS/zero-crossings.
     Decode is the deterministic int16-PCM fake (real codec import-gated)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                x = decode_audio_fake(r.bytes, int(r.sample_rate))
-                zc = int(((x[:-1] * x[1:]) < 0).sum())
-                out.append(dict(clip_id=r.clip_id,
-                                duration_sec=len(x) / float(r.sample_rate),
-                                rms=float(np.sqrt((x ** 2).mean())) if len(x) else 0.0,
-                                zero_crossings=zc))
-            yield pd.DataFrame(out)
+    def rows_of(r):
+        x = decode_audio_fake(r.bytes, r.sample_rate)
+        zc = int(((x[:-1] * x[1:]) < 0).sum())
+        yield (r.clip_id, len(x) / float(r.sample_rate),
+               float(np.sqrt((x ** 2).mean())) if len(x) else 0.0, zc)
 
-    return clips.select("clip_id", "bytes", "sample_rate") \
-        .mapInPandas(run, schema=AUDIO_FEATURE_SCHEMA)
+    return map_blobs(clips.select("clip_id", "bytes", "sample_rate"),
+                     AUDIO_FEATURE_SCHEMA, rows_of)
 
 
 FRAME_SCHEMA = T.StructType([

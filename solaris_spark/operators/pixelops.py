@@ -14,10 +14,11 @@ Re-expresses solaris/eval/pixel.py (iou :8-53, f1 :56-131, relaxed_f1
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+from .blobs import group_blobs
 
 
 def pixel_counts(truth: np.ndarray, prop: np.ndarray,
@@ -82,22 +83,18 @@ def mask_pair_counts(pairs: DataFrame, prop_threshold: float = 0.5,
                      relaxed_radius: int = 3,
                      group_col: str = "group_id") -> DataFrame:
     """Per-tile counts from mask pairs: (group_id, truth binary, prop binary,
-    h, w).  One Arrow batch per group keeps pixels executor-side."""
+    h, w).  Groups read their masks in place from the Arrow batches, so
+    pixels stay executor-side."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for _, r in pdf.iterrows():
-            h, w = int(r["h"]), int(r["w"])
-            t = np.frombuffer(r["truth"], dtype=np.uint8).reshape(h, w)
-            p = np.frombuffer(r["prop"], dtype=np.uint8).reshape(h, w)
-            tp, fp, tn, fn = pixel_counts(t, p, prop_threshold)
-            ph, npr, rh, nt = relaxed_counts(t, p, relaxed_radius)
-            rows.append(dict(group_id=r[group_col], tp=tp, fp=fp, tn=tn,
-                             fn=fn, prec_hits=ph, n_prop=npr,
-                             rec_hits=rh, n_truth=nt))
-        return pd.DataFrame(rows)
+    def rows_of(rows):
+        for key, truth, prop, h, w in rows:
+            t = np.frombuffer(truth, dtype=np.uint8).reshape(h, w)
+            p = np.frombuffer(prop, dtype=np.uint8).reshape(h, w)
+            yield (key, *pixel_counts(t, p, prop_threshold),
+                   *relaxed_counts(t, p, relaxed_radius))
 
-    return pairs.groupBy(group_col).applyInPandas(run, schema=COUNTS_SCHEMA)
+    return group_blobs(pairs.select(group_col, "truth", "prop", "h", "w"),
+                       group_col, COUNTS_SCHEMA, rows_of)
 
 
 def pixel_scores(counts: DataFrame) -> DataFrame:

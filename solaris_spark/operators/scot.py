@@ -3,21 +3,22 @@ join + cross-timestep change/tracking accounting.
 
 Re-expresses solaris/eval/scot.py (match_footprints :5-71, scot_one_aoi
 :74-195, scot_multi_aoi :198-237) Spark-first: AOIs are the parallel axis
-(groupBy(aoi).applyInPandas); within an AOI the timestep loop is inherently
-sequential (cumulative change/track sets) and runs in numpy with the
-engine's polygon-intersection and assignment kernels (scipy-free).
+(one blobs.group_blobs group per AOI); within an AOI the timestep loop is
+inherently sequential (cumulative change/track sets) and runs in numpy
+with the engine's polygon-intersection and assignment kernels
+(scipy-free).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import geom as G
 from ..functions.assign import linear_sum_assignment
+from .blobs import group_blobs
 
 SCOT_SCHEMA = T.StructType([
     T.StructField("aoi", T.StringType(), False),
@@ -34,24 +35,25 @@ SCOT_SCHEMA = T.StructType([
 ])
 
 
-def match_footprints_np(grnd: pd.DataFrame, prop: pd.DataFrame,
-                        threshold: float = 0.25, base_reward: float = 100.0):
-    """One timestep's optimal matching — scot.py:5-71 semantics: IoU over
+def match_footprints_np(grnd: list, prop: list, threshold: float = 0.25,
+                        base_reward: float = 100.0):
+    """One timestep's optimal matching over ground-truth and proposal rows
+    (each with ``id`` and ``wkt``) — scot.py:5-71 semantics: IoU over
     intersecting pairs, reward = (iou>t)·(base+iou), maximize assignment,
     prune iou<=t."""
-    g_ids = sorted(set(grnd["id"]))
-    p_ids = sorted(set(prop["id"]))
+    g_row_ids = [r.id for r in grnd]
+    p_row_ids = [r.id for r in prop]
+    g_ids = sorted(set(g_row_ids))
+    p_ids = sorted(set(p_row_ids))
     g_idx = {v: i for i, v in enumerate(g_ids)}
     p_idx = {v: i for i, v in enumerate(p_ids)}
     ng, np_ = len(grnd), len(prop)
     if ng == 0 or np_ == 0:
         return [], [], ng, np_, 0, np_, ng, 0.0, set(g_ids), set(p_ids)
 
-    gs, ps = G.polygon_sets(grnd["wkt"], prop["wkt"])
+    gs, ps = G.polygon_sets([r.wkt for r in grnd], [r.wkt for r in prop])
     reward = np.zeros((len(g_ids), len(p_ids)))
     iou_arr = np.zeros_like(reward)
-    g_row_ids = list(grnd["id"])
-    p_row_ids = list(prop["id"])
     for i in range(ng):
         for j in np.flatnonzero(G.bbox_hits(ps.bbox, gs.bbox[i])):
             inter, iou = G.overlap(gs, i, ps, j)
@@ -73,26 +75,27 @@ def match_footprints_np(grnd: pd.DataFrame, prop: pd.DataFrame,
     return g_match, p_match, ng, np_, tp, fp, fn, f1, set(g_ids), set(p_ids)
 
 
-def scot_one_aoi_np(pdf: pd.DataFrame, threshold=0.25, base_reward=100.0,
+def scot_one_aoi_np(rows: list, threshold=0.25, base_reward=100.0,
                     beta=2.0) -> dict:
     """scot_one_aoi:74-195 — sequential over sorted timesteps inside one
-    AOI group (kind column: 'gt' | 'prop')."""
-    aoi = pdf["aoi"].iloc[0]
-    grnd = pdf[pdf["kind"] == "gt"]
-    prop = pdf[pdf["kind"] == "prop"]
+    AOI group, given its rows (aoi, timestep, id, wkt, kind: 'gt' |
+    'prop')."""
+    aoi = rows[0].aoi
+    grnd = [r for r in rows if r.kind == "gt"]
+    prop = [r for r in rows if r.kind == "prop"]
     # timesteps come from GT ONLY — the reference derives both loops from
     # grnd_df (scot.py scot_one_aoi), silently skipping proposals at
     # timesteps with no ground truth; mirror that for score parity
     # (ADVICE r01: union-of-timesteps scored such proposals as FPs).
-    timesteps = sorted(set(grnd["timestep"]))
+    timesteps = sorted({r.timestep for r in grnd})
 
     tp_net = fp_net = fn_net = 0
     all_g, all_p = [], []
     change_tp = change_fp = change_fn = 0
     change_g, change_p = set(), set()
     for i, ts in enumerate(timesteps):
-        gts = grnd[grnd["timestep"] == ts]
-        pts = prop[prop["timestep"] == ts]
+        gts = [r for r in grnd if r.timestep == ts]
+        pts = [r for r in prop if r.timestep == ts]
         g_ids, p_ids, ng, np_, tp, fp, fn, f1, g_set, p_set = \
             match_footprints_np(gts, pts, threshold, base_reward)
         tp_net += tp; fp_net += fp; fn_net += fn
@@ -137,7 +140,8 @@ def scot_scores(gt: DataFrame, prop: DataFrame, threshold: float = 0.25,
     p = prop.select("aoi", "timestep", "id", "wkt", F.lit("prop").alias("kind"))
     both = g.unionByName(p)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame([scot_one_aoi_np(pdf, threshold, base_reward, beta)])
+    def rows_of(rows):
+        score = scot_one_aoi_np(rows, threshold, base_reward, beta)
+        yield tuple(score[k] for k in SCOT_SCHEMA.names)
 
-    return both.groupBy("aoi").applyInPandas(run, schema=SCOT_SCHEMA)
+    return group_blobs(both, "aoi", SCOT_SCHEMA, rows_of)

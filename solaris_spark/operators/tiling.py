@@ -17,19 +17,18 @@ hot images via joins.py helpers) and whatever aggregation the caller adds.
 
 Pixels cross the Python boundary as Arrow, both ways.  Spark sends image
 batches bounded at the session's ``maxBytesPerBatch`` (64 MB) and 10k
-records (session.py); every blob-emitting operator here (the three raster
-tilers, inference_tiles, fill_nodata) is a mapInArrow over
-blobs.blob_batches, which reads input blobs in place and returns its tiles
-in Arrow batches cut at the same 64 MB: each batch's pixels sit in one
-contiguous buffer behind the binary column, no pandas in between.  The
-package's other pixel-emitting operators (masks, stitching, image and
-spectral maps, synthetic images, streaming ingest) leave Python the same
-way, through blobs.map_blobs or its grouped twin blobs.group_blobs.
+records (session.py); every operator here that returns rows from Python (the
+three raster tilers, inference_tiles, fill_nodata and the pixel-free
+tile_grid) is a mapInArrow over blobs.blob_batches, which reads input blobs
+in place and returns its rows in Arrow batches cut at the same 64 MB: each
+batch's pixels sit in one contiguous buffer behind the binary column, no
+pandas in between.  The package's other row-returning operators (masks,
+stitching, image and spectral maps, synthetic tables, evaluation,
+streaming ingest) leave Python the same way, through blobs.map_blobs or
+its grouped twin blobs.group_blobs.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -122,21 +121,16 @@ def _nodata(v) -> float:
 def tile_grid(images_geo: DataFrame, tile_size: tuple[int, int]) -> DataFrame:
     """Grid-only DataFrame (no pixels) — cheap planning/join input."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                tb = _grid_for_image(row.a, row.e, row.c, row.f,
-                                     row.w, row.h, tile_size)
-                for t, tx, ty in _grid_cells(tb):
-                    out.append(dict(
-                        tile_id=tile_name(row.image_id, t[0], t[3]),
-                        image_id=row.image_id, tx=tx, ty=ty,
-                        xmin=t[0], ymin=t[1], xmax=t[2], ymax=t[3]))
-            yield pd.DataFrame(out, columns=[f.name for f in GRID_SCHEMA.fields])
+    def rows_of(row):
+        tb = _grid_for_image(row.a, row.e, row.c, row.f, row.w, row.h,
+                             tile_size)
+        for t, tx, ty in _grid_cells(tb):
+            xmin, ymin, xmax, ymax = t.tolist()
+            yield (tile_name(row.image_id, xmin, ymax), row.image_id, tx, ty,
+                   xmin, ymin, xmax, ymax)
 
-    return images_geo.select("image_id", "w", "h", "a", "e", "c", "f") \
-        .mapInPandas(gen, schema=GRID_SCHEMA)
+    cols = ["image_id", "w", "h", "a", "e", "c", "f"]
+    return map_blobs(images_geo.select(*cols), GRID_SCHEMA, rows_of)
 
 
 def _tile_rows(cells, tile_size, nodata_threshold, res):

@@ -28,20 +28,23 @@ Equal ordering-key values always land in the same bucket (bucket index =
 count of boundaries strictly below the value), so within-tie behavior is
 identical to the single-window plan.
 
-The bucketed frame appears twice in the one final job (totals subtree +
-window subtree).  With a deterministic upstream (scan/filter — every
-in-repo caller) both evaluations bucket identically.  For a
-NONDETERMINISTIC upstream (sampling, rand, re-read of changing source)
-pass ``cache_input=True`` so both subtrees read one materialization; the
-cache is the caller's to release (``returned_df.unpersist`` after the
-terminal action).
+The input is read three times: by the percentile pass and by the totals
+and window subtrees of the one final job.  With a deterministic upstream
+(scan/filter — every in-repo caller) every read sees the same rows and
+buckets them identically.  When Spark's optimized plan of the input is
+NONDETERMINISTIC (sampling, ``rand``, a shuffle feeding a
+nondeterministic expression), or the plan cannot be inspected (no JVM
+DataFrame, e.g. Spark Connect), the function first materializes the
+input with ``localCheckpoint()`` so all three reads see one set of rows.
+The checkpoint blocks belong to the returned plan, and Spark's
+ContextCleaner frees them once that plan is garbage-collected; there is
+no cache for the caller to release.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
-from pyspark.storagelevel import StorageLevel
 
 _BKT = "__prefix_bkt"
 
@@ -49,8 +52,7 @@ _BKT = "__prefix_bkt"
 def global_running_agg(df: DataFrame, order_col: str,
                        aggs: dict[str, Column], *, ascending: bool = True,
                        tie_cols: tuple = (), n_buckets: int = 64,
-                       accuracy: int = 10000,
-                       cache_input: bool = False) -> DataFrame:
+                       accuracy: int = 10000) -> DataFrame:
     """Append running-SUM columns over a GLOBAL ordering without a
     single-partition window.
 
@@ -59,20 +61,25 @@ def global_running_agg(df: DataFrame, order_col: str,
     the same total order ``Window.orderBy`` would use.  Numeric types are
     preserved (decimal sums stay decimal and widen exactly as the
     single-window plan does; offsets are exact decimal sums, not floats).
+    A nondeterministic input is materialized once first (module docstring).
     """
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None or not jdf.queryExecution().optimizedPlan().deterministic():
+        df = df.localCheckpoint()
     qs = [i / n_buckets for i in range(1, n_buckets)]
     row = df.select(F.percentile_approx(
         F.col(order_col).cast("double"), qs, accuracy).alias("b")).first()
     bounds = sorted(set(row["b"] or [])) if row is not None else []
 
-    if bounds:
-        arr = F.array(*[F.lit(float(b)) for b in bounds])
-        bucket = F.size(F.filter(
-            arr, lambda x: x < F.col(order_col).cast("double")))
-    else:
-        bucket = F.lit(0)
-    if cache_input:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    # bucket = number of boundaries strictly below the value, as a sum of
+    # comparisons, not a higher-order filter over a boundary array: Spark
+    # 4.1's constraint inference can copy such a filter onto the offsets
+    # side of the join below, where the ordering column does not exist,
+    # and the job then fails binding it (seen in a fresh session).
+    key = F.col(order_col).cast("double")
+    bucket = F.lit(0)
+    for b in bounds:
+        bucket = bucket + F.when(F.lit(float(b)) < key, 1).otherwise(0)
     d = df.withColumn(_BKT, bucket)
 
     # per-bucket totals: bounded (≤ n_buckets rows).  Exclusive prefix =

@@ -16,7 +16,7 @@ timing attributes it to:
    entire import graph each time).
 
 Neither cost scales down with task size, so short tasks (the common case for
-fine-grained mapInPandas stages: 128 tasks × a few ms of real work) are
+fine-grained mapInArrow stages: 128 tasks × a few ms of real work) are
 ~40× pure overhead.  Fixes, both semantics-preserving:
 
 1. ``setup_spark_files`` is replaced with a version that skips

@@ -12,7 +12,7 @@ plus the georegistration sidecar and pixel-coordinate building labels:
 
 Everything is seeded by ``(seed, image_id)`` so any row can be regenerated
 independently on any executor — generation happens INSIDE the UDFs
-(images through blobs.map_blobs, sidecar and labels through mapInPandas),
+(images, sidecar and labels all through blobs.map_blobs),
 so a 10^12-row table never materializes on the driver (driver only holds
 the id range).  A special "fixture mirror" row reproduces the reference's
 ``sample_geotiff.tif`` pixels + ``sample.csv`` labels for exact parity tests
@@ -21,12 +21,11 @@ the id range).  A special "fixture mirror" row reproduces the reference's
 
 from __future__ import annotations
 
+import csv
 import hashlib
 import os
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
@@ -172,25 +171,17 @@ def image_geo_table(spark: SparkSession, images: DataFrame,
                     seed: int = 42) -> DataFrame:
     """Georegistration sidecar. Synthetic rows: 0.5 m/px north-up UTM grid,
     origin deterministic in zone 16; fixture row: the exact fixture affine."""
-    a, b, c, d, e, f = FIXTURE_TRANSFORM
 
-    def geo(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for img_id in pdf["image_id"]:
-                if img_id == FIXTURE_IMAGE_ID:
-                    out.append(dict(image_id=img_id, a=a, b=b, c=c, d=d,
-                                    e=e, f=f, epsg=FIXTURE_EPSG, nodata=0.0))
-                else:
-                    rng = _rng_for(seed + 2, img_id)
-                    ox = 700000.0 + float(rng.integers(0, 2000)) * 50.0
-                    oy = 3700000.0 + float(rng.integers(0, 2000)) * 50.0
-                    out.append(dict(image_id=img_id, a=0.5, b=0.0, c=ox,
-                                    d=0.0, e=-0.5, f=oy, epsg=FIXTURE_EPSG,
-                                    nodata=0.0))
-            yield pd.DataFrame(out)
+    def rows_of(r):
+        if r.image_id == FIXTURE_IMAGE_ID:
+            yield (r.image_id, *FIXTURE_TRANSFORM, FIXTURE_EPSG, 0.0)
+        else:
+            rng = _rng_for(seed + 2, r.image_id)
+            ox = 700000.0 + float(rng.integers(0, 2000)) * 50.0
+            oy = 3700000.0 + float(rng.integers(0, 2000)) * 50.0
+            yield (r.image_id, 0.5, 0.0, ox, 0.0, -0.5, oy, FIXTURE_EPSG, 0.0)
 
-    return images.select("image_id").mapInPandas(geo, schema=GEO_SCHEMA)
+    return map_blobs(images.select("image_id"), GEO_SCHEMA, rows_of)
 
 
 def labels_table(spark: SparkSession, images: DataFrame, seed: int = 42,
@@ -198,21 +189,18 @@ def labels_table(spark: SparkSession, images: DataFrame, seed: int = 42,
     """Pixel-coordinate polygon labels per image. Fixture row mirrors
     sample.csv's PolygonWKT_Pix column (151 footprints)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import csv
-        for pdf in batches:
-            out = []
-            for img_id, w, h in zip(pdf["image_id"], pdf["w"], pdf["h"]):
-                if img_id == FIXTURE_IMAGE_ID:
-                    if os.path.exists(FIXTURE_CSV):
-                        rows = list(csv.DictReader(open(FIXTURE_CSV)))
-                        for i, r in enumerate(rows):
-                            out.append(dict(image_id=img_id, label_id=i,
-                                            wkt_pix=r["PolygonWKT_Pix"]))
-                else:
-                    for i, wkt in enumerate(synth_labels_for(
-                            seed, img_id, w, h, min_labels, max_labels)):
-                        out.append(dict(image_id=img_id, label_id=i, wkt_pix=wkt))
-            yield pd.DataFrame(out)
+    def rows_of(r):
+        if r.image_id == FIXTURE_IMAGE_ID:
+            if os.path.exists(FIXTURE_CSV):
+                with open(FIXTURE_CSV) as fh:
+                    wkts = [c["PolygonWKT_Pix"] for c in csv.DictReader(fh)]
+            else:
+                wkts = []
+        else:
+            wkts = synth_labels_for(seed, r.image_id, r.w, r.h,
+                                    min_labels, max_labels)
+        for i, wkt in enumerate(wkts):
+            yield (r.image_id, i, wkt)
 
-    return images.select("image_id", "w", "h").mapInPandas(gen, schema=LABELS_SCHEMA)
+    return map_blobs(images.select("image_id", "w", "h"), LABELS_SCHEMA,
+                     rows_of)

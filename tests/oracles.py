@@ -15,6 +15,11 @@ No engine code imports this module:
 - ``clip_polygon_rect_area``, ``polygon_intersection_area`` and
   ``iou_wkt`` are single-pair area and IoU kernels beside the engine's
   prepared ``geom.polygon_sets`` / ``geom.overlap``.
+- ``segments_intersect`` is the scalar form of the closed-set segment
+  predicate that ``geom.any_segments_intersect`` evaluates for all edge
+  pairs at once, and ``rect_intersects_polygon`` the per-edge-pair loop
+  over it that ``geom.rect_intersects_polygon`` replaced with one
+  batched call (both checked in ``test_kernels_geom.py``).
 """
 
 from __future__ import annotations
@@ -230,3 +235,69 @@ def iou_wkt(wkt_a: str, wkt_b: str) -> float:
     ra, rb = G.polygon_rings(wkt_a), G.polygon_rings(wkt_b)
     return G._iou(polygon_intersection_area(ra, rb),
                   G._rings_area(ra), G._rings_area(rb))[1]
+
+
+# ---------------------------------------------------------------------------
+# Scalar segment predicate (closed-set: endpoint and collinear touches
+# count) and the per-edge rect/polygon test built on it
+# ---------------------------------------------------------------------------
+
+
+def _orient(ax, ay, bx, by, cx, cy):
+    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
+
+
+def _on_seg(ax, ay, bx, by, px_, py_):
+    return (min(ax, bx) <= px_ <= max(ax, bx)) and (min(ay, by) <= py_ <= max(ay, by))
+
+
+def segments_intersect(a1, a2, b1, b2) -> bool:
+    d1 = _orient(*b1, *b2, *a1)
+    d2 = _orient(*b1, *b2, *a2)
+    d3 = _orient(*a1, *a2, *b1)
+    d4 = _orient(*a1, *a2, *b2)
+    if ((d1 > 0) != (d2 > 0)) and ((d3 > 0) != (d4 > 0)) and d1 != 0 and d2 != 0 and d3 != 0 and d4 != 0:
+        return True
+    if d1 == 0 and _on_seg(*b1, *b2, *a1):
+        return True
+    if d2 == 0 and _on_seg(*b1, *b2, *a2):
+        return True
+    if d3 == 0 and _on_seg(*a1, *a2, *b1):
+        return True
+    if d4 == 0 and _on_seg(*a1, *a2, *b2):
+        return True
+    return False
+
+
+def rect_intersects_polygon(rect, rings: list[np.ndarray]) -> bool:
+    """True iff closed rect [xmin,ymin,xmax,ymax] touches/overlaps the
+    polygon, the edge test looping over every (polygon edge, rect edge)
+    pair with the scalar segments_intersect."""
+    xmin, ymin, xmax, ymax = rect
+    if not rings:
+        return False
+    allc = np.vstack(rings)
+    if allc[:, 0].max() < xmin or allc[:, 0].min() > xmax:
+        return False
+    if allc[:, 1].max() < ymin or allc[:, 1].min() > ymax:
+        return False
+    # any polygon vertex inside the closed rect
+    inside_rect = ((allc[:, 0] >= xmin) & (allc[:, 0] <= xmax)
+                   & (allc[:, 1] >= ymin) & (allc[:, 1] <= ymax))
+    if inside_rect.any():
+        return True
+    # any rect corner inside the polygon
+    cx = np.array([xmin, xmax, xmax, xmin])
+    cy = np.array([ymin, ymin, ymax, ymax])
+    if G.points_in_polygon(cx, cy, rings).any():
+        return True
+    # edge-edge intersection
+    corners = [(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax), (xmin, ymin)]
+    for ring in rings:
+        for i in range(len(ring) - 1):
+            a1 = (ring[i, 0], ring[i, 1])
+            a2 = (ring[i + 1, 0], ring[i + 1, 1])
+            for j in range(4):
+                if segments_intersect(a1, a2, corners[j], corners[j + 1]):
+                    return True
+    return False

@@ -203,3 +203,44 @@ class TestSpacenetEvalOffNadir:
             assert list(got[col]) == list(exp[col]), col
         for col in ["F1Score", "Precision", "Recall"]:
             assert np.allclose(got[col], exp[col], atol=1e-12), col
+
+
+class TestGeotransformBatchSynth:
+    def test_batch_outputs_match_single_runs(self, spark, tmp_path):
+        """--batch over two jobs (two sources, two reference images)
+        writes exactly what the single runs write."""
+        import csv as _csv
+
+        from solaris_spark.functions.tiffio import write_tiff
+        jobs = []
+        for k in range(2):
+            t = (0.5, 0.0, 733600.0 + 100 * k, 0.0, -0.5, 3725200.0)
+            ref_im = str(tmp_path / f"ref{k}.tif")
+            write_tiff(ref_im, np.zeros((1, 8, 8), np.uint8), transform=t)
+            ring = [[t[2] + x, t[5] - y] for x, y in
+                    ((1.25, 1), (4.5, 1), (4.5, 3.75), (1.25, 1))]
+            feats = [{"type": "Polygon", "coordinates": [ring]},
+                     {"type": "MultiPolygon", "coordinates": [[ring]]},
+                     {"type": "LineString", "coordinates": ring[:2]}]
+            src = str(tmp_path / f"src{k}.geojson")
+            with open(src, "w") as fh:
+                json.dump({"type": "FeatureCollection", "features": [
+                    {"type": "Feature", "properties": {"k": k},
+                     "geometry": g} for g in feats]}, fh)
+            jobs.append((src, ref_im, str(tmp_path / f"batch{k}.geojson")))
+        args_csv = str(tmp_path / "args.csv")
+        with open(args_csv, "w", newline="") as fh:
+            w = _csv.writer(fh)
+            w.writerow(["source_file", "reference_image", "output_path"])
+            w.writerows(jobs)
+        for flags in (["-p", "-d", "1"], ["-g"]):
+            cli.geotransform_footprints_main(["-b", "-a", args_csv, *flags],
+                                             spark=spark)
+            for k, (src, ref_im, out) in enumerate(jobs):
+                single = str(tmp_path / f"single{k}.geojson")
+                cli.geotransform_footprints_main(
+                    ["-s", src, "-r", ref_im, "-o", single, *flags])
+                with open(out) as fa, open(single) as fb:
+                    got, exp = json.load(fa), json.load(fb)
+                assert got == exp
+                assert got["features"][0]["properties"] == {"k": k}

@@ -171,3 +171,49 @@ class TestCocoFromTileDirs:
                       for a in exp["annotations"])
         assert len(got) == len(expb)
         assert np.allclose(np.array(got), np.array(expb), atol=1e-6)
+
+
+class TestCocoFromTileDirsSynth:
+    def test_two_written_tiles(self, spark, tmp_path):
+        """Two GeoTIFF tiles written with their affines plus one GeoJSON
+        each: every Polygon comes back in its tile's pixel frame, under
+        the 1-based id of its tile in sorted order; other geometry types
+        are skipped."""
+        from solaris_spark.functions.tiffio import write_tiff
+        im_dir, gj_dir = tmp_path / "im", tmp_path / "gj"
+        im_dir.mkdir()
+        gj_dir.mkdir()
+        tiles = {"100_200": (0.5, 0.0, 733600.0, 0.0, -0.5, 3725200.0),
+                 "150_200": (0.5, 0.0, 733650.0, 0.0, -0.5, 3725200.0)}
+        want = []
+        for img_id, (key, t) in enumerate(sorted(tiles.items()), start=1):
+            write_tiff(str(im_dir / f"tile_{key}.tif"),
+                       np.zeros((1, 20, 20), np.uint8), transform=t)
+            px = [[[2, 3], [9, 3], [9, 8], [2, 8], [2, 3]],
+                  [[10 + img_id, 10], [15, 10], [15, 16], [10 + img_id, 10]]]
+            feats = [{"type": "Feature", "properties": {},
+                      "geometry": {"type": "Polygon", "coordinates": [
+                          [[t[2] + c * t[0], t[5] + r * t[4]]
+                           for c, r in ring]]}}
+                     for ring in px]
+            feats.insert(1, {"type": "Feature", "properties": {},
+                             "geometry": {"type": "LineString",
+                                          "coordinates": [[t[2], t[5]],
+                                                          [t[2] + 1, t[5]]]}})
+            with open(gj_dir / f"tile_{key}.geojson", "w") as fh:
+                json.dump({"type": "FeatureCollection", "features": feats},
+                          fh)
+            for label_id, ring in zip((0, 2), px):
+                xs, ys = [p[0] for p in ring], [p[1] for p in ring]
+                want.append((img_id, label_id,
+                             [float(v) for p in ring for v in p],
+                             [min(xs), min(ys), max(xs) - min(xs),
+                              max(ys) - min(ys)]))
+        out = export.coco_from_tile_dirs(spark, str(im_dir), str(gj_dir))
+        got = sorted((r["image_id"], r["id"], r["segmentation"], r["bbox"])
+                     for r in out.collect())
+        assert len(got) == len(want) == 4
+        for g, w in zip(got, sorted(want)):
+            assert g[:2] == w[:2]
+            assert np.allclose(g[2], w[2], atol=1e-6)
+            assert np.allclose(g[3], w[3], atol=1e-6)

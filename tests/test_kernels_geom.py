@@ -212,7 +212,7 @@ class TestBatchedSegmentIntersect:
             ea = rng.uniform(0, 10, (3, 4))
             eb = rng.uniform(0, 10, (4, 4))
             expect = any(
-                G.segments_intersect((e[0], e[1]), (e[2], e[3]),
+                O.segments_intersect((e[0], e[1]), (e[2], e[3]),
                                      (f[0], f[1]), (f[2], f[3]))
                 for e in ea for f in eb)
             assert G.any_segments_intersect(ea, eb) == expect
@@ -228,6 +228,36 @@ class TestBatchedSegmentIntersect:
         # disjoint parallel
         assert not G.any_segments_intersect(np.array([[0., 0., 2., 0.]]),
                                             np.array([[0., 1., 2., 1.]]))
+
+    def test_rect_intersects_polygon_matches_scalar_loop(self):
+        """rect_intersects_polygon's one batched edge test ≡ the per-edge-
+        pair scalar loop, over seeded random pairs on an integer grid (so
+        edge and corner touches are frequent) plus explicit touches."""
+        import numpy as np
+        rng = np.random.default_rng(11)
+        cases = []
+        for _ in range(600):
+            pts = rng.integers(0, 9, (int(rng.integers(3, 7)), 2)).astype(float)
+            x0, y0 = rng.integers(0, 8, 2).astype(float)
+            w, h = rng.integers(0, 4, 2).astype(float)
+            cases.append(((x0, y0, x0 + w, y0 + h),
+                          [np.vstack([pts, pts[:1]])]))
+        sq = np.array([[2., 2.], [5., 2.], [5., 5.], [2., 5.], [2., 2.]])
+        band = np.array([[0., 3.], [9., 3.], [9., 4.], [0., 4.], [0., 3.]])
+        cases += [
+            ((5., 3., 7., 4.), [sq]),     # shares part of an edge
+            ((5., 5., 6., 6.), [sq]),     # corner on corner
+            ((0., 0., 2., 2.), [sq]),     # corner on corner, other side
+            ((3., 5., 4., 6.), [sq]),     # rect edge on polygon edge
+            ((1., 3., 2., 4.), [sq]),     # rect edge on polygon edge, outside
+            ((5.5, 3., 6., 4.), [sq]),    # disjoint, bboxes apart
+            ((3., 1., 4., 6.), [band]),   # edges cross, no vertex inside
+        ]
+        got = [G.rect_intersects_polygon(r, rings) for r, rings in cases]
+        want = [O.rect_intersects_polygon(r, rings) for r, rings in cases]
+        assert got == want
+        assert got[-7:] == [True, True, True, True, True, False, True]
+        assert 100 < sum(got) < len(got) - 100
         # empty
         assert not G.any_segments_intersect(np.empty((0, 4)),
                                             np.array([[0., 0., 1., 1.]]))

@@ -74,6 +74,27 @@ class TestGlobalRunningAgg:
         df = spark.createDataFrame([], "id int, v double")
         assert global_running_agg(df, "v", {"n": F.lit(1)}).count() == 0
 
+    @pytest.mark.parametrize("kind", ["rand", "unseeded_udf"])
+    def test_nondeterministic_input_counts_1_to_n(self, spark, kind):
+        """A nondeterministic ordering column over a repartitioned input:
+        the percentile pass and both subtrees of the final job read one
+        materialization, so the running counts are exactly 1..n in the
+        global order (v, id).  F.rand is seeded per partition, so a
+        recomputation repeats it; the unseeded Python UDF draws new values
+        on every evaluation."""
+        import random
+        df = spark.range(3000).repartition(7)
+        if kind == "rand":
+            v = F.rand()
+        else:
+            v = F.udf(lambda i: random.random(), "double") \
+                .asNondeterministic()("id")
+        rows = global_running_agg(df.withColumn("v", v), "v",
+                                  {"n": F.lit(1)}, tie_cols=("id",),
+                                  n_buckets=8).collect()
+        rows.sort(key=lambda r: (r["v"], r["id"]))
+        assert [r["n"] for r in rows] == list(range(1, 3001))
+
 
 class TestPropertyParity:
     def test_random_cases_match_single_window(self, spark):

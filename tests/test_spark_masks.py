@@ -191,3 +191,35 @@ class TestInstanceMasks:
             G.polygon_rings(box), (10, 12), value=255))
         assert (got[0] == 255).sum() == 7 * 5
         assert not got[1].any() and not got[2].any()
+
+
+class TestMasksToPolygonsSynth:
+    @pytest.mark.parametrize("do_transform", [False, True])
+    def test_equals_per_mask_polygonize(self, spark, do_transform):
+        """masks_to_polygons over image_masks of synthetic labels gives the
+        rows polygonize.mask_to_polygons gives on the same mask bytes, in
+        pixel or (with do_transform) CRS coordinates."""
+        from solaris_spark.functions import polygonize as P
+        from solaris_spark.operators import tiling
+        images = synth.images_table(spark, 4, seed=5, include_fixture=False,
+                                    min_px=48, max_px=96)
+        ig = tiling.with_geo(images, synth.image_geo_table(spark, images,
+                                                           seed=5))
+        labels = synth.labels_table(spark, images, seed=5)
+        m = masks.image_masks(labels, ig, channels=["footprint"]).cache()
+        got = sorted(tuple(r) for r in masks.masks_to_polygons(
+            m, min_area=20.0, do_transform=do_transform,
+            images_geo=ig).collect())
+        affine = {r["image_id"]: tuple(r[k] for k in "abcdef")
+                  for r in ig.select("image_id", *"abcdef").collect()}
+        want = []
+        for r in m.collect():
+            polys = P.mask_to_polygons(
+                unpack(r)[:, :, 0], min_area=20.0,
+                transform=affine[r["image_id"]] if do_transform else None)
+            want += [(r["image_id"], i, G.wkt_dump("POLYGON", rings),
+                      val, area)
+                     for i, (rings, val, area) in enumerate(polys)]
+        m.unpersist()
+        assert len({r[0] for r in want}) == 4
+        assert got == sorted(want)

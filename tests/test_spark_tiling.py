@@ -260,3 +260,21 @@ class TestAdviceR01Fixes:
         rows = tiling.vector_tiles(lab, grid).collect()
         assert len(rows) == 1
         assert rows[0]["truncated"] == 0
+
+
+class TestTileGridSynth:
+    def test_grid_matches_raster_tiles(self, spark):
+        """tile_grid's rows carry the tile ids, grid indices and bounds of
+        raster_tiles on the same (synthetic, fixture-free) images."""
+        images = synth.images_table(spark, 3, seed=9, include_fixture=False,
+                                    min_px=40, max_px=100)
+        ig = tiling.with_geo(images, synth.image_geo_table(spark, images,
+                                                           seed=9))
+        cols = ("tile_id", "image_id", "tx", "ty",
+                "xmin", "ymin", "xmax", "ymax")
+        grid = sorted(tuple(r) for r in tiling.tile_grid(ig, (32, 32))
+                      .select(*cols).collect())
+        tiles = sorted(tuple(r) for r in tiling.raster_tiles(ig, (32, 32))
+                       .select(*cols).collect())
+        assert len({r[1] for r in grid}) == 3 and len(grid) > 3
+        assert grid == tiles

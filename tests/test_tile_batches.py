@@ -1,12 +1,14 @@
-"""The Arrow blob emitter (blobs.blob_batches and its grouped twin
+"""The Arrow row emitter (blobs.blob_batches and its grouped twin
 blobs.group_blob_batches) driven directly, without Spark, over real
 operator rows: tiling's tile rows, instance_masks' per-label masks and
-band_math's widened pixels.  Output batches stay within the byte bound,
-keep every row and its bytes, carry nulls, and an input with no output
-rows still yields one batch of the right schema."""
+band_math's widened pixels, plus rows of a schema with no binary column.
+Output batches stay within the byte bound, keep every row and its bytes,
+carry nulls, and an input with no output rows still yields one batch of
+the right schema."""
 
 import numpy as np
 import pyarrow as pa
+import pyspark.sql.types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from solaris_spark.functions import geom as G
@@ -195,3 +197,77 @@ def test_widening_band_math_stays_within_the_bound():
             k += 1
     assert k == 4
     assert sum(sizes) > BOUND and len(sizes) >= 2 and max(sizes) <= BOUND
+
+
+# A schema with no binary column: a string, a nullable long and a
+# nullable list<double>.
+ROW_SCHEMA = T.StructType([
+    T.StructField("name", T.StringType(), False),
+    T.StructField("n", T.LongType(), True),
+    T.StructField("xs", T.ArrayType(T.DoubleType()), True),
+])
+
+
+def _rows_for(k: int) -> list[tuple]:
+    """Input row k's output rows (k % 4 of them), with NULL longs and
+    lists among them."""
+    return [(f"row{k}-{j}", None if (k + j) % 3 == 0 else 10 * k + j,
+             None if (k + j) % 5 == 0 else [k + 0.5] * j)
+            for j in range(k % 4)]
+
+
+def _ids(lo: int, hi: int) -> pa.RecordBatch:
+    return pa.RecordBatch.from_pydict({"k": pa.array(range(lo, hi),
+                                                     pa.int64())})
+
+
+def _as_tuples(batches) -> list[tuple]:
+    for b in batches:
+        assert b.schema == to_arrow_schema(ROW_SCHEMA)
+    return [tuple(r.values()) for b in batches for r in b.to_pylist()]
+
+
+def test_rows_without_a_blob_column_round_trip_in_order():
+    want = [row for k in range(40) for row in _rows_for(k)]
+    assert any(r[1] is None for r in want) and any(r[2] is None for r in want)
+    out = list(blobs.blob_batches(iter([_ids(0, 25), _ids(25, 40)]),
+                                  ROW_SCHEMA, BOUND,
+                                  lambda r: _rows_for(r.k)))
+    assert len(out) == 2            # cut at every input batch end only
+    assert _as_tuples(out) == want
+    assert out[0].column("n").null_count > 0
+
+
+def test_small_bound_cuts_rows_without_a_blob_column_between_rows():
+    want = [row for k in range(40) for row in _rows_for(k)]
+    many = list(blobs.blob_batches(iter([_ids(0, 40)]), ROW_SCHEMA, 200,
+                                   lambda r: _rows_for(r.k)))
+    assert len(many) > 5
+    assert max(b.num_rows for b in many) < len(want)
+    assert _as_tuples(many) == want
+
+
+def test_grouped_rows_without_a_blob_column():
+    """A group split over two input batches: rows_of sees all its rows
+    once; a small bound cuts the output between rows."""
+    want = [row for k in range(30) for row in _rows_for(k)]
+
+    def rows_of(rows):
+        assert [r.k for r in rows] == list(range(30))
+        return [row for r in rows for row in _rows_for(r.k)]
+
+    for bound, n_batches in ((BOUND, 1), (200, None)):
+        out = list(blobs.group_blob_batches(
+            iter([_ids(0, 12), _ids(12, 30)]), ROW_SCHEMA, bound, rows_of))
+        assert _as_tuples(out) == want
+        assert len(out) == 1 if n_batches == 1 else len(out) > 5
+
+
+def test_no_input_rows_without_a_blob_column_yield_one_empty_batch():
+    for out in (
+            list(blobs.blob_batches(iter([_ids(0, 0)]), ROW_SCHEMA, BOUND,
+                                    lambda r: _rows_for(r.k))),
+            list(blobs.group_blob_batches(iter([]), ROW_SCHEMA, BOUND,
+                                          lambda rows: []))):
+        assert len(out) == 1 and out[0].num_rows == 0
+        assert out[0].schema == to_arrow_schema(ROW_SCHEMA)
