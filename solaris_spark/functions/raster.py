@@ -265,27 +265,71 @@ def _minmax_reflect(a: np.ndarray, lo: int, hi: int, axis: int, is_min: bool) ->
 # ---------------------------------------------------------------------------
 
 
+def window_origins(transform, bounds) -> tuple[np.ndarray, np.ndarray]:
+    """(row0, col0) int64 pixel origins of tiles ``bounds`` (T, 4) =
+    (xmin, ymin, xmax, ymax) rows under geo ``transform``, derived the way
+    rasterio from_bounds does: col = (x - c)/a, row = (y - f)/e, rounded
+    half to even (operator precision: the fixtures use exact multiples)."""
+    a, _, c, _, e, f = transform
+    bounds = np.asarray(bounds, dtype=np.float64).reshape(-1, 4)
+    col0 = np.rint((bounds[:, 0] - c) / a).astype(np.int64)
+    row0 = np.rint((bounds[:, 3] - f) / e).astype(np.int64)  # e < 0
+    return row0, col0
+
+
+def cut_windows(src: np.ndarray, transform, bounds, tile_hw: tuple[int, int],
+                fill=0) -> np.ndarray:
+    """Cut every tile of ``bounds`` (T, 4) from (C, Y, X) ``src`` with geo
+    ``transform`` into one (T, C, th, tw) array; area outside the image
+    extent holds ``fill`` (rasterio's boundless read).
+
+    Every window is a strided view of ``src`` and one fancy index copies
+    them all out, so a tile inside the image costs its pixel copy and no
+    Python.  A window past the image edge is gathered clamped inside it,
+    then refilled on its own (``fill``, then the part the image covers):
+    the Python work is O(grid perimeter), and no nodata-padded copy of
+    the image is made.  Memory is the tiles alone: callers bound it by
+    cutting one grid column at a time."""
+    row0, col0 = window_origins(transform, bounds)
+    return _gather(src, row0, col0, tile_hw, fill)
+
+
+def _gather(src, row0, col0, tile_hw, fill) -> np.ndarray:
+    th, tw = tile_hw
+    C, H, W = src.shape
+    if H >= th and W >= tw:
+        # windows clamped inside the image; a clamped one is an edge window
+        rows = np.minimum(np.maximum(row0, 0), H - th)
+        cols = np.minimum(np.maximum(col0, 0), W - tw)
+        edge = (rows != row0) | (cols != col0)
+        sc, sr, sw = src.strides
+        windows = np.lib.stride_tricks.as_strided(
+            src, shape=(H - th + 1, W - tw + 1, C, th, tw),
+            strides=(sr, sw, sc, sr, sw), writeable=False)
+        tiles = windows[rows, cols]
+    else:
+        tiles = np.empty((len(row0), C, th, tw), dtype=src.dtype)
+        edge = np.ones(len(row0), dtype=bool)
+    for k in np.flatnonzero(edge).tolist():
+        r, c = int(row0[k]), int(col0[k])
+        # np.full's cast, so a fill the dtype cannot hold lands the same
+        np.copyto(tiles[k], fill, casting="unsafe")
+        r0, r1 = max(r, 0), min(r + th, H)
+        c0, c1 = max(c, 0), min(c + tw, W)
+        if r1 > r0 and c1 > c0:
+            tiles[k, :, r0 - r:r1 - r, c0 - c:c1 - c] = src[:, r0:r1, c0:c1]
+    return tiles
+
+
 def cut_window(src: np.ndarray, transform, bounds, tile_hw: tuple[int, int],
                fill_value: float = 0) -> tuple[np.ndarray, tuple]:
-    """Cut tile `bounds` = (xmin, ymin, xmax, ymax) from (C, Y, X) `src` with
-    geo `transform`; out-of-extent area filled with `fill_value`.
-
-    Returns (tile (C, th, tw), tile_transform). Row/col window is derived the
-    way rasterio from_bounds does: col = (x - c)/a, row = (y - f)/e, rounded
-    to int (operator precision: the fixtures use exact multiples)."""
-    a, b, c0, d, e, f0 = transform
-    th, tw = tile_hw
-    xmin, ymin, xmax, ymax = bounds
-    col0 = int(round((xmin - c0) / a))
-    row0 = int(round((ymax - f0) / e))  # e < 0 for north-up
-    C, H, W = src.shape
-    tile = np.full((C, th, tw), fill_value, dtype=src.dtype)
-    r0, r1 = max(row0, 0), min(row0 + th, H)
-    c0_, c1 = max(col0, 0), min(col0 + tw, W)
-    if r1 > r0 and c1 > c0_:
-        tile[:, r0 - row0 : r1 - row0, c0_ - col0 : c1 - col0] = src[:, r0:r1, c0_:c1]
-    tile_transform = (a, b, c0 + col0 * a, d, e, f0 + row0 * e)
-    return tile, tile_transform
+    """cut_windows for one tile ``bounds`` = (xmin, ymin, xmax, ymax):
+    returns (tile (C, th, tw), tile_transform)."""
+    a, b, c, d, e, f = transform
+    row0, col0 = window_origins(transform, bounds)
+    tile = _gather(src, row0, col0, tile_hw, fill_value)[0]
+    r, k = int(row0[0]), int(col0[0])
+    return tile, (a, b, c + k * a, d, e, f + r * e)
 
 
 def _cubic_kernel(t: np.ndarray, a: float = -0.5) -> np.ndarray:
@@ -422,13 +466,41 @@ def resize_average(src: np.ndarray, factor_y: int, factor_x: int) -> np.ndarray:
     return out.astype(src.dtype)
 
 
+def nodata_fractions(tiles: np.ndarray, nodata) -> np.ndarray:
+    """Per tile of (T, C, th, tw) ``tiles``, the fraction of pixels where
+    ALL bands equal ``nodata`` (solaris/tile/raster_tile.py:195-196), as
+    one reduction.
+
+    The comparison is NumPy's ``tiles == nodata`` except that integer
+    pixels of at most 32 bits are compared in their own dtype: NumPy
+    compares them with a float nodata in float64, which holds every such
+    value exactly, so an integral in-range nodata matches the same pixels
+    and a NaN, non-integral or out-of-range one matches none (0.0) —
+    without widening every pixel to float64.  Float pixels, and 64-bit
+    integers, whose float64 images can collide, keep NumPy's comparison."""
+    t = len(tiles)
+    if nodata is None or t == 0:
+        return np.zeros(t)
+    dt = tiles.dtype
+    if dt.kind in "iu" and dt.itemsize <= 4:
+        v = float(nodata)
+        info = np.iinfo(dt)
+        if not (v.is_integer() and info.min <= v <= info.max):
+            return np.zeros(t)
+        nodata = dt.type(v)
+    # band by band, so the temporaries are two bands' worth of booleans
+    px = tiles.reshape(t, tiles.shape[1], -1)
+    allnod = px[:, 0] == nodata
+    for band in range(1, px.shape[1]):
+        allnod &= px[:, band] == nodata
+    # count_nonzero per tile: a bool sum over an axis casts every element
+    return np.fromiter(map(np.count_nonzero, allnod), np.float64, t) \
+        / allnod.shape[1]
+
+
 def nodata_fraction(tile: np.ndarray, nodata) -> float:
-    """Fraction of pixels where ALL bands equal nodata —
-    solaris/tile/raster_tile.py:195-196."""
-    if nodata is None:
-        return 0.0
-    allnod = np.all(tile == nodata, axis=0)
-    return float(allnod.mean())
+    """nodata_fractions of one (C, th, tw) tile."""
+    return float(nodata_fractions(tile[None], nodata)[0])
 
 
 # ---------------------------------------------------------------------------

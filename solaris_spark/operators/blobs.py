@@ -3,15 +3,17 @@ rows out of Arrow batches and returning output rows as Arrow batches
 bounded by bytes.
 
 Spark bounds the batches it sends to Python by
-``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MB in
-session.get_spark) but takes whatever a UDF returns, and a grouped UDF's
-result for one group would otherwise leave as one batch.  Every operator
-that returns rows from Python does so here: map_blobs runs a per-row
-generator under ``mapInArrow``, group_blobs a per-group one under
-``applyInArrow``'s iterator form, and both cut the output at the same
-bound, with no pandas conversion either way.  An output schema may carry
-one binary column (tiles, masks, images: each batch's blobs sit in one
-contiguous buffer) or none (grid cells, labels, match rows, scores).
+``spark.sql.execution.arrow.maxBytesPerBatch`` (4 MB in
+session.get_spark: one or two MB-scale images per batch, so Spark encodes
+the next batch while Python works on this one) but takes whatever a UDF
+returns, and a grouped UDF's result for one group would otherwise leave
+as one batch.  Every operator that returns rows from Python does so
+here: map_blobs runs a per-row generator under ``mapInArrow``,
+group_blobs a per-group one under ``applyInArrow``'s iterator form, and
+both cut the output at the same bound, with no pandas conversion either
+way.  An output schema may carry one binary column (tiles, masks,
+images: each batch's blobs sit in one contiguous buffer) or none (grid
+cells, labels, match rows, scores).
 """
 
 from __future__ import annotations
@@ -65,10 +67,11 @@ class BlobBatches:
     """Output rows of a Spark schema with at most one binary column,
     assembled into Arrow record batches.  Each blob (an array, written as
     its little-endian C-order bytes, a bytes-like, or None for null) is
-    copied once, into one contiguous buffer per batch that backs the
-    binary column; the other columns come from Python lists.  A batch is
-    cut before a row would take it past ``max_bytes`` (a single larger row
-    goes alone)."""
+    copied once, as its row is queued, to the end of one contiguous buffer
+    per batch that backs the binary column, so a queued row keeps no blob
+    (nor the array a blob is a view of) alive; the other columns come from
+    Python lists.  A batch is cut before a row would take it past
+    ``max_bytes`` (a single larger row goes alone)."""
 
     def __init__(self, schema: T.StructType, max_bytes: int):
         self.schema = to_arrow_schema(schema)
@@ -79,10 +82,11 @@ class BlobBatches:
         self.max_bytes = max_bytes
         self.rows: list[tuple] = []
         self.nbytes = 0
+        self.buf: np.ndarray | None = None   # the queued blobs' bytes
+        self.ends: list[int] = []            # each blob's end in buf
 
-    def add(self, row: tuple) -> pa.RecordBatch | None:
-        """Queue one row (values in schema order); returns the full batch
-        this row did not fit into, if any."""
+    def size(self, row: tuple) -> int:
+        """The bytes ``row`` (values in schema order) adds to a batch."""
         # strings are at most 4 UTF-8 bytes per character; every column
         # takes at most 8 more bytes per row (offsets, scalars, validity);
         # list values are not counted (the lists here hold a few numbers)
@@ -90,40 +94,50 @@ class BlobBatches:
             + 4 * sum(len(row[i]) for i in self.strs if row[i] is not None)
         if self.blob is not None:
             size += _nbytes(row[self.blob])
-        full = None
-        if self.rows and self.nbytes + size > self.max_bytes:
-            full = self.flush()
+        return size
+
+    def add(self, row: tuple, size: int) -> None:
+        """Queue one row of ``size`` bytes, its blob copied into the
+        batch's buffer (allocated at the batch's first row, large enough
+        for every row that fits)."""
+        if self.blob is not None:
+            blob = row[self.blob]
+            n = _nbytes(blob)
+            if self.buf is None:
+                self.buf = np.empty(max(self.max_bytes, n), dtype=np.uint8)
+            i = self.ends[-1] if self.ends else 0
+            if isinstance(blob, np.ndarray):
+                dst = self.buf[i:i + n].view(blob.dtype.newbyteorder("<"))
+                dst.reshape(blob.shape)[...] = blob
+            elif blob is not None:
+                self.buf[i:i + n] = np.frombuffer(blob, dtype=np.uint8)
+            self.ends.append(i + n)
+            # the blob's slot keeps only whether it is non-null
+            row = row[:self.blob] + (blob is not None,) + row[self.blob + 1:]
         self.rows.append(row)
         self.nbytes += size
-        return full
 
     def flush(self) -> pa.RecordBatch:
         """The queued rows as one batch (possibly empty); the queue empties."""
         rows, self.rows, self.nbytes = self.rows, [], 0
         cols = list(zip(*rows)) or [()] * len(self.schema)
-        arrays = [_binary_array(f.type, cols[k]) if k == self.blob
+        arrays = [self._binary_array(f.type, cols[k]) if k == self.blob
                   else pa.array(cols[k], type=f.type)
                   for k, f in enumerate(self.schema)]
         return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
 
-
-def _binary_array(typ: pa.DataType, blobs) -> pa.Array:
-    """A binary column whose values sit in one contiguous buffer."""
-    offs = np.zeros(len(blobs) + 1, dtype=np.int32)
-    np.cumsum([_nbytes(b) for b in blobs], out=offs[1:])
-    buf = np.empty(int(offs[-1]), dtype=np.uint8)
-    for b, i, j in zip(blobs, offs[:-1].tolist(), offs[1:].tolist()):
-        if isinstance(b, np.ndarray):
-            dst = buf[i:j].view(b.dtype.newbyteorder("<"))
-            dst.reshape(b.shape)[...] = b
-        elif b is not None:
-            buf[i:j] = np.frombuffer(b, dtype=np.uint8)
-    valid = np.array([b is not None for b in blobs], dtype=bool)
-    nulls = len(blobs) - int(valid.sum())
-    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) \
-        if nulls else None
-    return pa.BinaryArray.from_buffers(typ, len(blobs), [
-        bitmap, pa.py_buffer(offs), pa.py_buffer(buf)], nulls)
+    def _binary_array(self, typ: pa.DataType, valid) -> pa.Array:
+        """The queued blobs as a binary column over the batch's buffer."""
+        buf, ends, self.buf, self.ends = self.buf, self.ends, None, []
+        offs = np.zeros(len(ends) + 1, dtype=np.int32)
+        offs[1:] = ends
+        valid = np.array(valid, dtype=bool)
+        nulls = len(valid) - int(valid.sum())
+        bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) \
+            if nulls else None
+        data = pa.py_buffer(buf[:offs[-1]] if buf is not None else b"")
+        return pa.BinaryArray.from_buffers(typ, len(valid), [
+            bitmap, pa.py_buffer(offs), data], nulls)
 
 
 def _nbytes(blob) -> int:
@@ -137,15 +151,20 @@ def _emit(units: Iterable[Iterable[tuple]], schema: T.StructType,
     """The output side of every row-returning UDF: each unit (an iterable
     of output rows) leaves in BlobBatches of at most ``max_bytes``, cut at
     every unit end, and a unit with no output rows yields one empty
-    batch."""
+    batch.  A full batch is yielded before the next row is queued, so a
+    consumer that drops it first holds one batch's buffer at a time."""
     out = BlobBatches(schema, max_bytes)
     for unit in units:
         sent = False
         for row in unit:
-            full = out.add(row)
-            if full is not None:
+            size = out.size(row)
+            if out.rows and out.nbytes + size > max_bytes:
                 sent = True
-                yield full
+                yield out.flush()
+            out.add(row, size)
+            # the row's blob may be a view whose base (a chunk of tiles)
+            # should not outlive the copy
+            del row
         if out.rows or not sent:
             yield out.flush()
 
@@ -172,7 +191,7 @@ def group_blob_batches(batches: Iterator[pa.RecordBatch],
 def _bounded(df: DataFrame, schema: T.StructType, body, rows_of):
     """The Arrow UDF running ``body`` (blob_batches or group_blob_batches)
     over rows_of, its output cut at the bound Spark uses for the batches it
-    sends to Python: ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MB
+    sends to Python: ``spark.sql.execution.arrow.maxBytesPerBatch`` (4 MB
     in session.get_spark)."""
     spark = df.sparkSession
     conf = spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch")

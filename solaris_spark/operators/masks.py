@@ -1,7 +1,8 @@
 """Mask generation as Spark operators: footprint / boundary / contact /
 road / instance channels per image (or per tile).  image_masks, road_masks
 and instance_masks group label rows by image and emit their masks through
-blobs.group_blobs, in Arrow batches bounded at the session's 64 MB (one
+blobs.group_blobs, in Arrow batches bounded at the session's 4 MB
+(session.py: small batches let Spark's encoding overlap the UDF; one
 instance_masks image can carry many label-sized masks);
 masks_to_polygons returns its scalar polygon rows through group_blobs too.
 

@@ -60,8 +60,9 @@ FEATURE_SCHEMA = T.StructType([
 
 def image_features(images: DataFrame) -> DataFrame:
     """Decode → per-channel stats + gradient edge density + phash.
-    Batch shape: MB-scale blobs in Arrow batches bounded at 64 MB and 10k
-    records (session.py)."""
+    Batch shape: MB-scale blobs in Arrow batches bounded at 4 MB (one or
+    two images, so Spark encodes the next batch while this one is read)
+    and 10k records (session.py)."""
 
     def rows_of(r):
         arr = pixfmt.decode(r.fmt, r.bytes, r.w, r.h)
@@ -200,7 +201,7 @@ FRAME_SCHEMA = T.StructType([
 def sample_frames(videos: DataFrame, sample_every: int = 10) -> DataFrame:
     """videos(video_id, bytes, w, h, n_frames) → one row per sampled frame
     (UDTF-shaped: rows out > rows in; frames explode executor-side, and
-    map_blobs cuts the output batches at 64 MB)."""
+    map_blobs cuts the output batches at the session's 4 MB)."""
 
     def rows_of(r):
         frames = sample_video_frames_fake(r.bytes, r.w, r.h, r.n_frames,

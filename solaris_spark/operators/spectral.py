@@ -4,7 +4,8 @@ Wraps the vectorized kernels in functions/spectral.py over a generic
 spectral-image schema (image_id, pixels binary, h, w, nchan, dtype —
 dtype is any numpy name incl. complex64/complex128 for SAR data).
 One blob map (blobs.map_blobs) per operator, output batches bounded at the
-session's 64 MB Arrow batch size even when an operator widens the dtype.
+session's 4 MB Arrow batch size (session.py: small enough that encoding
+overlaps the UDF) even when an operator widens the dtype.
 Reference surface: solaris/preproc/sar.py:17-170, optical.py:9-92.
 """
 

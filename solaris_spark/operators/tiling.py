@@ -16,16 +16,26 @@ label⋈tile candidate equi-join (on (image_id, tx, ty) — prunable, salted for
 hot images via joins.py helpers) and whatever aggregation the caller adds.
 
 Pixels cross the Python boundary as Arrow, both ways.  Spark sends image
-batches bounded at the session's ``maxBytesPerBatch`` (64 MB) and 10k
-records (session.py); every operator here that returns rows from Python (the
-three raster tilers, inference_tiles, fill_nodata and the pixel-free
-tile_grid) is a mapInArrow over blobs.blob_batches, which reads input blobs
-in place and returns its rows in Arrow batches cut at the same 64 MB: each
-batch's pixels sit in one contiguous buffer behind the binary column, no
-pandas in between.  The package's other row-returning operators (masks,
-stitching, image and spectral maps, synthetic tables, evaluation,
-streaming ingest) leave Python the same way, through blobs.map_blobs or
-its grouped twin blobs.group_blobs.
+batches bounded at the session's ``maxBytesPerBatch`` (4 MB) and 10k
+records (session.py): one or two 1000² images per batch, so the JVM
+encodes the next image while Python cuts this one.  Every operator here
+that returns rows from Python (the three raster tilers, inference_tiles,
+fill_nodata and the pixel-free tile_grid) is a mapInArrow over
+blobs.blob_batches, which reads input blobs in place and returns its rows
+in Arrow batches cut at the same bound: each batch's pixels sit in one
+contiguous buffer behind the binary column, no pandas in between.  The
+package's other row-returning operators (masks, stitching, image and
+spectral maps, synthetic tables, evaluation, streaming ingest) leave
+Python the same way, through blobs.map_blobs or its grouped twin
+blobs.group_blobs.
+
+An image is cut one grid column at a time (split_geom's outer loop, so
+rows keep its order): one raster.cut_windows gather gives the column's
+(n, C, th, tw) tiles, one raster.nodata_fractions call their nodata
+fractions, and _tile_rows only builds the rows.  The windowed and warped
+tilers hand _tile_rows the same chunks (one tile per job row; one warp
+per tile, stacked per column), and Python memory past the decoded image
+stays at one column of tiles plus one output batch.
 """
 
 from __future__ import annotations
@@ -103,14 +113,19 @@ def with_geo(images: DataFrame, geo: DataFrame) -> DataFrame:
     return images.join(geo, "image_id")
 
 
-def _grid_cells(tb: np.ndarray):
-    """(bounds, tx, ty) per grid cell; tx / ty are the rank of the cell's
-    xmin / ymax among the grid's distinct values, so grid-keyed operators
-    downstream (vector_tiles candidate join, stitch placement) see distinct
-    indices per tile."""
+def _grid_columns(tb: np.ndarray):
+    """The grid's cells one grid column at a time, in split_geom's order
+    (its outer loop walks xmin): (bounds (n, 4), tx, ty) per column.
+    tx / ty are the rank of the cell's xmin / ymax among the grid's
+    distinct values, so grid-keyed operators downstream (vector_tiles
+    candidate join, stitch placement) see distinct indices per tile."""
+    if not len(tb):
+        return
     tx = np.unique(tb[:, 0], return_inverse=True)[1]
     ty = np.unique(tb[:, 3], return_inverse=True)[1]
-    return zip(tb, tx.tolist(), ty.tolist())
+    cuts = (np.flatnonzero(tb[1:, 0] != tb[:-1, 0]) + 1).tolist()
+    for i, j in zip([0] + cuts, cuts + [len(tb)]):
+        yield tb[i:j], tx[i:j].tolist(), ty[i:j].tolist()
 
 
 def _nodata(v) -> float:
@@ -124,10 +139,11 @@ def tile_grid(images_geo: DataFrame, tile_size: tuple[int, int]) -> DataFrame:
     def rows_of(row):
         tb = _grid_for_image(row.a, row.e, row.c, row.f, row.w, row.h,
                              tile_size)
-        for t, tx, ty in _grid_cells(tb):
-            xmin, ymin, xmax, ymax = t.tolist()
-            yield (tile_name(row.image_id, xmin, ymax), row.image_id, tx, ty,
-                   xmin, ymin, xmax, ymax)
+        for cols, txs, tys in _grid_columns(tb):
+            for (xmin, ymin, xmax, ymax), tx, ty in zip(cols.tolist(), txs,
+                                                        tys):
+                yield (tile_name(row.image_id, xmin, ymax), row.image_id,
+                       tx, ty, xmin, ymin, xmax, ymax)
 
     cols = ["image_id", "w", "h", "a", "e", "c", "f"]
     return map_blobs(images_geo.select(*cols), GRID_SCHEMA, rows_of)
@@ -135,23 +151,28 @@ def tile_grid(images_geo: DataFrame, tile_size: tuple[int, int]) -> DataFrame:
 
 def _tile_rows(cells, tile_size, nodata_threshold, res):
     """TILE_SCHEMA rows of one input row: ``cells(row, nodata)`` yields
-    (tile_id, tx, ty, bounds, tile) for every grid cell, tile being the
-    (C, th, tw) pixels; tiles whose nodata fraction reaches
-    ``nodata_threshold`` are dropped (raster_tile.py:189-204) and the rest
-    carry their pixels as little-endian raw (pixfmt).  The tile pixel size
-    (a, e) is the row's own unless ``res`` fixes it."""
+    the row's grid cells in chunks of one or more, each as (tile_ids, tx,
+    ty, bounds (n, 4), tiles (n, C, th, tw)); one nodata_fractions call
+    per chunk drops the tiles whose fraction reaches ``nodata_threshold``
+    (raster_tile.py:189-204), and the rest carry their pixels as
+    little-endian raw (pixfmt).  The tile pixel size (a, e) is the row's
+    own unless ``res`` fixes it."""
     th, tw = tile_size
 
     def rows_of(row):
         nod = _nodata(row.nodata)
         a, e = res or (row.a, row.e)
-        for tile_id, tx, ty, t, tile in cells(row, nod):
-            nf = R.nodata_fraction(tile, nod)
-            if nodata_threshold is not None and nf >= nodata_threshold:
-                continue
-            yield (tile_id, row.image_id, tx, ty, t[0], t[1], t[2], t[3],
-                   tile, th, tw, tile.shape[0], pixfmt.raw_fmt(tile), a, e,
-                   nf)
+        for ids, txs, tys, tb, tiles in cells(row, nod):
+            nfs = R.nodata_fractions(tiles, nod).tolist()
+            fmt = pixfmt.raw_fmt(tiles[0])
+            for k, (xmin, ymin, xmax, ymax) in enumerate(tb.tolist()):
+                if nodata_threshold is not None \
+                        and nfs[k] >= nodata_threshold:
+                    continue
+                yield (ids[k], row.image_id, txs[k], tys[k], xmin, ymin,
+                       xmax, ymax, tiles[k], th, tw, tiles.shape[1], fmt,
+                       a, e, nfs[k])
+            del tiles   # before the next chunk is cut
 
     return rows_of
 
@@ -182,7 +203,8 @@ def raster_tiles(images_geo: DataFrame, tile_size: tuple[int, int],
 
 def raster_cells(tile_size: tuple[int, int], aoi_rings=None):
     """raster_tiles' cells: decode the image, blank pixels outside the AOI,
-    cut every grid cell with boundless nodata fill."""
+    cut each grid column's tiles with one cut_windows gather (boundless
+    nodata fill), so memory beyond the image is one column of tiles."""
 
     def cells(row, nod):
         arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
@@ -195,10 +217,15 @@ def raster_cells(tile_size: tuple[int, int], aoi_rings=None):
             arr = np.where(inside[None], arr, np.asarray(nod, dtype=arr.dtype))
         tb = _grid_for_image(row.a, row.e, row.c, row.f, row.w, row.h,
                              tile_size, aoi_rings=aoi_rings)
-        for t, tx, ty in _grid_cells(tb):
-            tile, tt = R.cut_window(arr, transform, tuple(t), tile_size,
-                                    fill_value=nod)
-            yield tile_name(row.image_id, tt[2], tt[5]), tx, ty, t, tile
+        for cols, txs, tys in _grid_columns(tb):
+            # names from the cut windows' origins, as cut_window's
+            # tile transform gives them
+            row0, col0 = R.window_origins(transform, cols)
+            ids = [tile_name(row.image_id, x, y) for x, y in
+                   zip((row.c + col0 * row.a).tolist(),
+                       (row.f + row0 * row.e).tolist())]
+            yield ids, txs, tys, cols, R.cut_windows(arr, transform, cols,
+                                                     tile_size, nod)
 
     return cells
 
@@ -229,7 +256,7 @@ def raster_tiles_windowed(manifest_geo: DataFrame, tile_size: tuple[int, int],
 
     Requires north-up manifests: rows with a rotated affine (b or d
     nonzero) raise, because the window inversion below is diagonal-only —
-    raster_tiles (full-decode path) handles those via cut_window.
+    raster_tiles (full-decode path) handles those via cut_windows.
 
     ``level`` selects a COG overview IFD (0 = full resolution) — the
     zoomed-out tile-serving path.  The manifest's (w, h, a, e, c, f) must
@@ -238,8 +265,6 @@ def raster_tiles_windowed(manifest_geo: DataFrame, tile_size: tuple[int, int],
 
     Pixel output is byte-identical to raster_tiles on the same pixels
     (boundless edge tiles nodata-filled the same way)."""
-    from ..functions.tiffio import read_tiff_window
-    ty_px, tx_px = tile_size
     grid = tile_grid(manifest_geo, tile_size)
     meta = manifest_geo.select("image_id", "path", "b", "d", "c", "f",
                                "a", "e", "nodata")
@@ -252,6 +277,15 @@ def raster_tiles_windowed(manifest_geo: DataFrame, tile_size: tuple[int, int],
         partitions = int(manifest_geo.sparkSession.conf.get(
             "spark.sql.shuffle.partitions"))
     jobs = jobs.repartition(partitions, "tile_id")
+    return _emit_tiles(jobs, tile_size, nodata_threshold,
+                       windowed_cells(tile_size, level))
+
+
+def windowed_cells(tile_size: tuple[int, int], level: int = 0):
+    """raster_tiles_windowed's cells: each job row is one tile, read from
+    its file window and nodata-filled past the image edge."""
+    from ..functions.tiffio import read_tiff_window
+    ty_px, tx_px = tile_size
 
     def cells(row, nod):
         if float(row.b or 0.0) != 0.0 or float(row.d or 0.0) != 0.0:
@@ -263,14 +297,14 @@ def raster_tiles_windowed(manifest_geo: DataFrame, tile_size: tuple[int, int],
         row0 = int(round((row.ymax - row.f) / row.e))
         win = read_tiff_window(row.path, row0, col0, ty_px, tx_px,
                                level=level)
-        tile = np.full((win.array.shape[0], ty_px, tx_px), nod,
+        tile = np.full((1, win.array.shape[0], ty_px, tx_px), nod,
                        dtype=win.array.dtype)
         r0, c0, r1, c1 = win.tags["window"]
-        tile[:, r0 - row0: r1 - row0, c0 - col0: c1 - col0] = win.array
-        yield (row.tile_id, row.tx, row.ty,
-               (row.xmin, row.ymin, row.xmax, row.ymax), tile)
+        tile[0, :, r0 - row0: r1 - row0, c0 - col0: c1 - col0] = win.array
+        yield ([row.tile_id], [row.tx], [row.ty],
+               np.array([[row.xmin, row.ymin, row.xmax, row.ymax]]), tile)
 
-    return _emit_tiles(jobs, tile_size, nodata_threshold, cells)
+    return cells
 
 
 def raster_tiles_warped(images_geo: DataFrame, tile_size: tuple[int, int],
@@ -285,6 +319,18 @@ def raster_tiles_warped(images_geo: DataFrame, tile_size: tuple[int, int],
     Default bilinear (the reference's tile-warp default path).
     Separate from raster_tiles so the identity-CRS fixture-parity path stays
     byte-exact."""
+    cols = ["image_id", "bytes", "w", "h", "fmt",
+            "a", "b", "c", "d", "e", "f", "epsg", "nodata"]
+    return _emit_tiles(images_geo.select(*cols), tile_size, nodata_threshold,
+                       warped_cells(tile_size, dest_epsg, dest_res,
+                                    resampling),
+                       res=(dest_res[0], -dest_res[1]))
+
+
+def warped_cells(tile_size: tuple[int, int], dest_epsg: int,
+                 dest_res: tuple[float, float], resampling: str = "bilinear"):
+    """raster_tiles_warped's cells: the dest-CRS grid over the image's
+    reprojected bounds, one warp per tile, stacked per grid column."""
 
     def cells(row, nod):
         arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
@@ -303,16 +349,17 @@ def raster_tiles_warped(images_geo: DataFrame, tile_size: tuple[int, int],
                   geo[:, 0].max(), geo[:, 1].max())
         tb = G.split_geom_bounds(bounds, tile_size, resolution=dest_res)
         # tile indices from the DEST-CRS grid (ADVICE r01)
-        for t, tx, ty in _grid_cells(tb):
-            dst_t = (dest_res[0], 0.0, t[0], 0.0, -dest_res[1], t[3])
-            tile = R.warp(arr, src_t, src_epsg, dst_t, dest_epsg, tile_size,
-                          nodata=nod, resampling=resampling)
-            yield tile_name(row.image_id, t[0], t[3]), tx, ty, t, tile
+        for cols, txs, tys in _grid_columns(tb):
+            origins = [(x, y) for x, _, _, y in cols.tolist()]
+            tiles = np.stack([
+                R.warp(arr, src_t, src_epsg,
+                       (dest_res[0], 0.0, x, 0.0, -dest_res[1], y),
+                       dest_epsg, tile_size, nodata=nod,
+                       resampling=resampling) for x, y in origins])
+            ids = [tile_name(row.image_id, x, y) for x, y in origins]
+            yield ids, txs, tys, cols, tiles
 
-    cols = ["image_id", "bytes", "w", "h", "fmt",
-            "a", "b", "c", "d", "e", "f", "epsg", "nodata"]
-    return _emit_tiles(images_geo.select(*cols), tile_size, nodata_threshold,
-                       cells, res=(dest_res[0], -dest_res[1]))
+    return cells
 
 
 INFER_TILE_SCHEMA = T.StructType([

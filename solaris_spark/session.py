@@ -4,12 +4,18 @@ Design notes for the 100 TB deployment (vs the local[32] sandbox):
 
 - Arrow is mandatory: every geometry/raster kernel runs in pandas/Arrow UDFs
   (BASELINE.json input_hint: "no per-row Python").
-- Arrow batches are bounded by bytes: 64 MB
+- Arrow batches are bounded by bytes: 4 MB
   (``spark.sql.execution.arrow.maxBytesPerBatch``) because ``images.bytes``
   rows are MB-scale blobs — one Arrow batch must stay well under executor
   memory (SURVEY.md §4 "Spill/memory") — with a 10k-record cap
   (``maxRecordsPerBatch``) so thin WKT/text rows still travel in few
-  batches.
+  batches.  Spark fills a batch while it is under 4 MB, so it holds two
+  1000² RGB images (3 MB each), and the JVM encodes the next batch while
+  Python works on this one; at 64 MB it encoded a
+  whole partition before Python started (tile_mask: raster_tiles 1.08 s
+  a pass at 64 MB, 0.54-0.74 s at 4 MB; 1-2 MB gave the same within the
+  host's noise, 8-16 MB were slower).  Thin rows still reach the 10k
+  cap first (10k WKT rows of up to ~400 B).
 - AQE on for runtime re-planning + skew-join splitting (hot tile cells).
 - On a real cluster, add the Iceberg catalog config documented in
   sources/catalog.py; the sandbox has no Iceberg runtime jar, so tables are
@@ -65,8 +71,9 @@ def get_spark(app_name: str = "solaris_spark",
         # overhead (r6: WKT/text rows are ~100 B, so 64-row batches meant
         # ~100× more Python round-trips than the 10k-row default).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # one or two 1000² images per batch: encoding overlaps the UDF
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                str(64 * 1024 * 1024))
+                str(4 * 1024 * 1024))
         # stock pyspark.daemon pays ~300 ms/task (zipimporter re-reads in
         # importlib.invalidate_caches + full gc.collect between tasks) —
         # see solaris_spark/pydaemon.py for the measurements and fix

@@ -20,6 +20,12 @@ No engine code imports this module:
   pairs at once, and ``rect_intersects_polygon`` the per-edge-pair loop
   over it that ``geom.rect_intersects_polygon`` replaced with one
   batched call (both checked in ``test_kernels_geom.py``).
+- ``cut_window``, ``nodata_fraction`` and ``tile_rows`` with its
+  ``raster_cells`` / ``warped_cells`` / ``windowed_cells`` are the
+  tile-at-a-time raster tiler: one boundless window read and one float
+  nodata comparison per grid cell.  The engine's ``raster.cut_windows``,
+  ``raster.nodata_fractions`` and per-column ``tiling._tile_rows`` are
+  checked against them in ``test_tile_cut.py``.
 """
 
 from __future__ import annotations
@@ -27,6 +33,10 @@ from __future__ import annotations
 import numpy as np
 
 from solaris_spark.functions import geom as G
+from solaris_spark.functions import pixfmt
+from solaris_spark.functions import raster as R
+from solaris_spark.functions.tiffio import read_tiff_window
+from solaris_spark.operators import tiling
 
 # ---------------------------------------------------------------------------
 # Rasterization — GDAL GDALdllImageFilledPolygon semantics:
@@ -301,3 +311,135 @@ def rect_intersects_polygon(rect, rings: list[np.ndarray]) -> bool:
                 if segments_intersect(a1, a2, corners[j], corners[j + 1]):
                     return True
     return False
+
+
+# ---------------------------------------------------------------------------
+# Raster tiling, one tile at a time (solaris/tile/raster_tile.py:152-219,
+# window read with boundless fill :332-348, nodata filter :189-204)
+# ---------------------------------------------------------------------------
+
+
+def cut_window(src: np.ndarray, transform, bounds, tile_hw: tuple[int, int],
+               fill_value: float = 0) -> tuple[np.ndarray, tuple]:
+    """Cut tile ``bounds`` = (xmin, ymin, xmax, ymax) from (C, Y, X) ``src``
+    with geo ``transform``; out-of-extent area filled with ``fill_value``.
+    Returns (tile (C, th, tw), tile_transform); the window is rasterio
+    from_bounds' col = (x - c)/a, row = (y - f)/e, rounded to int."""
+    a, b, c0, d, e, f0 = transform
+    th, tw = tile_hw
+    xmin, ymin, xmax, ymax = bounds
+    col0 = int(round((xmin - c0) / a))
+    row0 = int(round((ymax - f0) / e))
+    C, H, W = src.shape
+    tile = np.full((C, th, tw), fill_value, dtype=src.dtype)
+    r0, r1 = max(row0, 0), min(row0 + th, H)
+    c0_, c1 = max(col0, 0), min(col0 + tw, W)
+    if r1 > r0 and c1 > c0_:
+        tile[:, r0 - row0:r1 - row0, c0_ - col0:c1 - col0] = \
+            src[:, r0:r1, c0_:c1]
+    return tile, (a, b, c0 + col0 * a, d, e, f0 + row0 * e)
+
+
+def nodata_fraction(tile: np.ndarray, nodata) -> float:
+    """Fraction of pixels where ALL bands equal nodata, by NumPy's own
+    ``tile == nodata`` (integers against a float compare in float64)."""
+    if nodata is None:
+        return 0.0
+    return float(np.all(tile == nodata, axis=0).mean())
+
+
+def tile_rows(cells, tile_size, nodata_threshold, res):
+    """TILE_SCHEMA rows of one input row, one grid cell at a time:
+    ``cells(row, nodata)`` yields (tile_id, tx, ty, bounds, tile) per cell,
+    tile being its (C, th, tw) pixels."""
+    th, tw = tile_size
+
+    def rows_of(row):
+        # a NULL (or NaN) nodata column means 0
+        nod = 0 if row.nodata is None or row.nodata != row.nodata \
+            else row.nodata
+        a, e = res or (row.a, row.e)
+        for tile_id, tx, ty, t, tile in cells(row, nod):
+            nf = nodata_fraction(tile, nod)
+            if nodata_threshold is not None and nf >= nodata_threshold:
+                continue
+            yield (tile_id, row.image_id, tx, ty, t[0], t[1], t[2], t[3],
+                   tile, th, tw, tile.shape[0], pixfmt.raw_fmt(tile), a, e,
+                   nf)
+
+    return rows_of
+
+
+def _grid_cells(tb: np.ndarray):
+    """(bounds, tx, ty) per grid cell, tx / ty the rank of its xmin / ymax."""
+    tx = np.unique(tb[:, 0], return_inverse=True)[1]
+    ty = np.unique(tb[:, 3], return_inverse=True)[1]
+    return zip(tb, tx.tolist(), ty.tolist())
+
+
+def raster_cells(tile_size, aoi_rings=None):
+    """raster_tiles' cells: decode, blank pixels outside the AOI, cut every
+    grid cell with its own boundless window read."""
+
+    def cells(row, nod):
+        arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
+        transform = (row.a, row.b, row.c, row.d, row.e, row.f)
+        if aoi_rings is not None:
+            inv = G.affine_invert(transform)
+            rings_px = [G.affine_apply(r, inv) for r in aoi_rings]
+            inside = R.rasterize_rings(rings_px, (row.h, row.w)) > 0
+            arr = np.where(inside[None], arr, np.asarray(nod, dtype=arr.dtype))
+        tb = tiling._grid_for_image(row.a, row.e, row.c, row.f, row.w, row.h,
+                                    tile_size, aoi_rings=aoi_rings)
+        for t, tx, ty in _grid_cells(tb):
+            tile, tt = cut_window(arr, transform, tuple(t), tile_size,
+                                  fill_value=nod)
+            yield tiling.tile_name(row.image_id, tt[2], tt[5]), tx, ty, t, tile
+
+    return cells
+
+
+def warped_cells(tile_size, dest_epsg, dest_res, resampling="bilinear"):
+    """raster_tiles_warped's cells: one warp per dest-CRS grid cell."""
+
+    def cells(row, nod):
+        arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
+        src_t = (row.a, row.b, row.c, row.d, row.e, row.f)
+        src_epsg = int(row.epsg)
+        corners = np.array([[0.0, 0.0], [row.w, 0.0], [row.w, row.h],
+                            [0.0, row.h], [0.0, 0.0]])
+        geo = G.affine_apply(corners, src_t)
+        if src_epsg != dest_epsg:
+            lon, lat = G.to_wgs84(geo[:, 0], geo[:, 1], src_epsg)
+            x, y = G.from_wgs84(lon, lat, dest_epsg)
+            geo = np.stack([x, y], axis=1)
+        bounds = (geo[:, 0].min(), geo[:, 1].min(),
+                  geo[:, 0].max(), geo[:, 1].max())
+        tb = G.split_geom_bounds(bounds, tile_size, resolution=dest_res)
+        for t, tx, ty in _grid_cells(tb):
+            dst_t = (dest_res[0], 0.0, t[0], 0.0, -dest_res[1], t[3])
+            tile = R.warp(arr, src_t, src_epsg, dst_t, dest_epsg, tile_size,
+                          nodata=nod, resampling=resampling)
+            yield tiling.tile_name(row.image_id, t[0], t[3]), tx, ty, t, tile
+
+    return cells
+
+
+def windowed_cells(tile_size, level=0):
+    """raster_tiles_windowed's cells: one file window read per job row."""
+
+    ty_px, tx_px = tile_size
+
+    def cells(row, nod):
+        col0 = int(round((row.xmin - row.c) / row.a))
+        row0 = int(round((row.ymax - row.f) / row.e))
+        win = read_tiff_window(row.path, row0, col0, ty_px, tx_px,
+                               level=level)
+        tile = np.full((win.array.shape[0], ty_px, tx_px), nod,
+                       dtype=win.array.dtype)
+        r0, c0, r1, c1 = win.tags["window"]
+        tile[:, r0 - row0:r1 - row0, c0 - col0:c1 - col0] = win.array
+        yield (row.tile_id, row.tx, row.ty,
+               (row.xmin, row.ymin, row.xmax, row.ymax), tile)
+
+    return cells

@@ -6,6 +6,8 @@ Output batches stay within the byte bound, keep every row and its bytes,
 carry nulls, and an input with no output rows still yields one batch of
 the right schema."""
 
+import tracemalloc
+
 import numpy as np
 import pyarrow as pa
 import pyspark.sql.types as T
@@ -16,6 +18,7 @@ from solaris_spark.functions import pixfmt
 from solaris_spark.functions import raster as R
 from solaris_spark.operators import blobs, masks, spectral, tiling
 from solaris_spark.sources import synth
+from tests import oracles as O
 
 BOUND = 64 * 1024 * 1024
 TRANSFORM = (0.5, 0.0, 733600.0, 0.0, -0.5, 3726000.0)
@@ -38,10 +41,10 @@ def _image_batch(iid: str, px: np.ndarray, nodata=None) -> pa.RecordBatch:
     return pa.RecordBatch.from_pydict(cols)
 
 
-def _tile_batches(batch, tile, nodata_threshold=None):
+def _tile_batches(batch, tile, nodata_threshold=None, bound=BOUND):
     rows_of = tiling._tile_rows(tiling.raster_cells(tile), tile,
                                 nodata_threshold, None)
-    return blobs.blob_batches(iter([batch]), tiling.TILE_SCHEMA, BOUND,
+    return blobs.blob_batches(iter([batch]), tiling.TILE_SCHEMA, bound,
                                rows_of)
 
 
@@ -61,12 +64,39 @@ def test_mega_image_batches_stay_within_the_bound():
         for k in (0, len(rows["pixels"]) - 1):
             bounds = (rows["xmin"][k], rows["ymin"][k], rows["xmax"][k],
                       rows["ymax"][k])
-            want, _ = R.cut_window(px, TRANSFORM, bounds, tile)
+            want, _ = O.cut_window(px, TRANSFORM, bounds, tile)
             assert rows["pixels"][k] == want.tobytes()
             assert rows["fmt"][k] == "raw-u8-c3"
         n_tiles += out.num_rows
     assert n_tiles == (side // tile[0]) ** 2
     assert len(sizes) >= 2 and max(sizes) <= BOUND, sizes
+
+
+def test_mega_image_memory_is_one_tile_column_plus_one_batch():
+    """Python memory while tiling the 6000×6000 image (NumPy reports its
+    allocations to tracemalloc) stays within one output batch's buffer,
+    one grid column of tiles (12 × 750 KB), and the nodata comparison's
+    two bands of booleans per tile of that column: tiles are cut one
+    column at a time and copied into the batch as they are queued, so
+    neither the image's 144 tiles nor a second batch are ever held."""
+    side, tile, bound = 6000, (500, 500), 8 * 1024 * 1024
+    px = np.random.default_rng(0).integers(0, 256, (3, side, side),
+                                           dtype=np.uint8)
+    batch = _image_batch("mega", px)
+    column = (side // tile[1]) * px.itemsize * 3 * tile[0] * tile[1]
+    limit = bound + column + 2 * column // 3 + 2 * 1024 * 1024
+    tracemalloc.start()
+    try:
+        base = tracemalloc.get_traced_memory()[0]
+        n_tiles = 0
+        for out in _tile_batches(batch, tile, bound=bound):
+            n_tiles += out.num_rows
+            del out
+        peak = tracemalloc.get_traced_memory()[1] - base
+    finally:
+        tracemalloc.stop()
+    assert n_tiles == (side // tile[0]) ** 2
+    assert peak <= limit, (peak, limit)
 
 
 def test_small_bound_cuts_between_tiles_and_keeps_order():
