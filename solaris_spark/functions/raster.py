@@ -277,48 +277,37 @@ def window_origins(transform, bounds) -> tuple[np.ndarray, np.ndarray]:
     return row0, col0
 
 
-def cut_windows(src: np.ndarray, transform, bounds, tile_hw: tuple[int, int],
-                fill=0) -> np.ndarray:
-    """Cut every tile of ``bounds`` (T, 4) from (C, Y, X) ``src`` with geo
-    ``transform`` into one (T, C, th, tw) array; area outside the image
-    extent holds ``fill`` (rasterio's boundless read).
+def cut_windows(src: np.ndarray, row0: np.ndarray, col0: np.ndarray,
+                tile_hw: tuple[int, int], fill=0) -> np.ndarray:
+    """Cut the (th, tw) windows at pixel origins ``row0``, ``col0`` (from
+    window_origins) out of (C, Y, X) ``src`` into one (T, C, th, tw)
+    array; area outside the image extent holds ``fill`` (rasterio's
+    boundless read, ``fill`` cast as np.full casts it).
 
-    Every window is a strided view of ``src`` and one fancy index copies
-    them all out, so a tile inside the image costs its pixel copy and no
-    Python.  A window past the image edge is gathered clamped inside it,
-    then refilled on its own (``fill``, then the part the image covers):
-    the Python work is O(grid perimeter), and no nodata-padded copy of
-    the image is made.  Memory is the tiles alone: callers bound it by
-    cutting one grid column at a time."""
-    row0, col0 = window_origins(transform, bounds)
-    return _gather(src, row0, col0, tile_hw, fill)
-
-
-def _gather(src, row0, col0, tile_hw, fill) -> np.ndarray:
+    The windows' bounding box is a view of ``src`` when it lies inside the
+    image, else a ``fill``-padded copy of it; one fancy index over its
+    sliding windows copies every tile out, with no Python per tile.
+    Memory is the tiles plus, for a box that leaves the image, the box:
+    callers bound it by cutting one grid column at a time."""
     th, tw = tile_hw
     C, H, W = src.shape
-    if H >= th and W >= tw:
-        # windows clamped inside the image; a clamped one is an edge window
-        rows = np.minimum(np.maximum(row0, 0), H - th)
-        cols = np.minimum(np.maximum(col0, 0), W - tw)
-        edge = (rows != row0) | (cols != col0)
-        sc, sr, sw = src.strides
-        windows = np.lib.stride_tricks.as_strided(
-            src, shape=(H - th + 1, W - tw + 1, C, th, tw),
-            strides=(sr, sw, sc, sr, sw), writeable=False)
-        tiles = windows[rows, cols]
+    if not len(row0):
+        return np.empty((0, C, th, tw), dtype=src.dtype)
+    r_lo, c_lo = int(row0.min()), int(col0.min())
+    r_hi, c_hi = int(row0.max()) + th, int(col0.max()) + tw
+    if r_lo >= 0 and c_lo >= 0 and r_hi <= H and c_hi <= W:
+        box = src[:, r_lo:r_hi, c_lo:c_hi]
     else:
-        tiles = np.empty((len(row0), C, th, tw), dtype=src.dtype)
-        edge = np.ones(len(row0), dtype=bool)
-    for k in np.flatnonzero(edge).tolist():
-        r, c = int(row0[k]), int(col0[k])
-        # np.full's cast, so a fill the dtype cannot hold lands the same
-        np.copyto(tiles[k], fill, casting="unsafe")
-        r0, r1 = max(r, 0), min(r + th, H)
-        c0, c1 = max(c, 0), min(c + tw, W)
+        box = np.full((C, r_hi - r_lo, c_hi - c_lo), fill, dtype=src.dtype)
+        r0, r1 = max(r_lo, 0), min(r_hi, H)
+        c0, c1 = max(c_lo, 0), min(c_hi, W)
         if r1 > r0 and c1 > c0:
-            tiles[k, :, r0 - r:r1 - r, c0 - c:c1 - c] = src[:, r0:r1, c0:c1]
-    return tiles
+            box[:, r0 - r_lo:r1 - r_lo, c0 - c_lo:c1 - c_lo] = \
+                src[:, r0:r1, c0:c1]
+    windows = np.lib.stride_tricks.sliding_window_view(box, (th, tw),
+                                                       axis=(1, 2))
+    # (C, rows, cols, th, tw) -> (rows, cols, C, th, tw)
+    return windows.transpose(1, 2, 0, 3, 4)[row0 - r_lo, col0 - c_lo]
 
 
 def cut_window(src: np.ndarray, transform, bounds, tile_hw: tuple[int, int],
@@ -327,7 +316,7 @@ def cut_window(src: np.ndarray, transform, bounds, tile_hw: tuple[int, int],
     returns (tile (C, th, tw), tile_transform)."""
     a, b, c, d, e, f = transform
     row0, col0 = window_origins(transform, bounds)
-    tile = _gather(src, row0, col0, tile_hw, fill_value)[0]
+    tile = cut_windows(src, row0, col0, tile_hw, fill_value)[0]
     r, k = int(row0[0]), int(col0[0])
     return tile, (a, b, c + k * a, d, e, f + r * e)
 

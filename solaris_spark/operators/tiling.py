@@ -35,7 +35,8 @@ rows keep its order): one raster.cut_windows gather gives the column's
 fractions, and _tile_rows only builds the rows.  The windowed and warped
 tilers hand _tile_rows the same chunks (one tile per job row; one warp
 per tile, stacked per column), and Python memory past the decoded image
-stays at one column of tiles plus one output batch.
+stays at one column of tiles (plus, for a column that leaves the image,
+its nodata-padded box) and one output batch.
 """
 
 from __future__ import annotations
@@ -113,16 +114,21 @@ def with_geo(images: DataFrame, geo: DataFrame) -> DataFrame:
     return images.join(geo, "image_id")
 
 
+def _grid_index(tb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(tx, ty) per grid cell: the rank of the cell's xmin / ymax among the
+    grid's distinct values, so grid-keyed operators downstream
+    (vector_tiles candidate join, stitch placement) see distinct indices
+    per tile."""
+    return (np.unique(tb[:, 0], return_inverse=True)[1],
+            np.unique(tb[:, 3], return_inverse=True)[1])
+
+
 def _grid_columns(tb: np.ndarray):
     """The grid's cells one grid column at a time, in split_geom's order
-    (its outer loop walks xmin): (bounds (n, 4), tx, ty) per column.
-    tx / ty are the rank of the cell's xmin / ymax among the grid's
-    distinct values, so grid-keyed operators downstream (vector_tiles
-    candidate join, stitch placement) see distinct indices per tile."""
+    (its outer loop walks xmin): (bounds (n, 4), tx, ty) per column."""
     if not len(tb):
         return
-    tx = np.unique(tb[:, 0], return_inverse=True)[1]
-    ty = np.unique(tb[:, 3], return_inverse=True)[1]
+    tx, ty = _grid_index(tb)
     cuts = (np.flatnonzero(tb[1:, 0] != tb[:-1, 0]) + 1).tolist()
     for i, j in zip([0] + cuts, cuts + [len(tb)]):
         yield tb[i:j], tx[i:j].tolist(), ty[i:j].tolist()
@@ -139,11 +145,11 @@ def tile_grid(images_geo: DataFrame, tile_size: tuple[int, int]) -> DataFrame:
     def rows_of(row):
         tb = _grid_for_image(row.a, row.e, row.c, row.f, row.w, row.h,
                              tile_size)
-        for cols, txs, tys in _grid_columns(tb):
-            for (xmin, ymin, xmax, ymax), tx, ty in zip(cols.tolist(), txs,
-                                                        tys):
-                yield (tile_name(row.image_id, xmin, ymax), row.image_id,
-                       tx, ty, xmin, ymin, xmax, ymax)
+        tx, ty = _grid_index(tb)
+        for (xmin, ymin, xmax, ymax), i, j in zip(tb.tolist(), tx.tolist(),
+                                                  ty.tolist()):
+            yield (tile_name(row.image_id, xmin, ymax), row.image_id, i, j,
+                   xmin, ymin, xmax, ymax)
 
     cols = ["image_id", "w", "h", "a", "e", "c", "f"]
     return map_blobs(images_geo.select(*cols), GRID_SCHEMA, rows_of)
@@ -204,7 +210,8 @@ def raster_tiles(images_geo: DataFrame, tile_size: tuple[int, int],
 def raster_cells(tile_size: tuple[int, int], aoi_rings=None):
     """raster_tiles' cells: decode the image, blank pixels outside the AOI,
     cut each grid column's tiles with one cut_windows gather (boundless
-    nodata fill), so memory beyond the image is one column of tiles."""
+    nodata fill), so memory beyond the image is one column of tiles (and,
+    for a column that leaves the image, its nodata-padded box)."""
 
     def cells(row, nod):
         arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
@@ -224,7 +231,7 @@ def raster_cells(tile_size: tuple[int, int], aoi_rings=None):
             ids = [tile_name(row.image_id, x, y) for x, y in
                    zip((row.c + col0 * row.a).tolist(),
                        (row.f + row0 * row.e).tolist())]
-            yield ids, txs, tys, cols, R.cut_windows(arr, transform, cols,
+            yield ids, txs, tys, cols, R.cut_windows(arr, row0, col0,
                                                      tile_size, nod)
 
     return cells

@@ -15,7 +15,17 @@ Design notes for the 100 TB deployment (vs the local[32] sandbox):
   whole partition before Python started (tile_mask: raster_tiles 1.08 s
   a pass at 64 MB, 0.54-0.74 s at 4 MB; 1-2 MB gave the same within the
   host's noise, 8-16 MB were slower).  Thin rows still reach the 10k
-  cap first (10k WKT rows of up to ~400 B).
+  cap first: a row is cut by bytes before the cap only above ~420 B
+  (4 MiB / 10k), and label_eval's WKT is 100-130 B in pixel and
+  151-201 B in CRS coordinates.  Counted per input batch (seed 7), one
+  51,200-row partition of labels reaches labels_geo's UDF in 10k-row
+  batches (about 1.5 MB of arguments each) at 4 MB and at 64 MB alike,
+  and at the benchmark's own size (400 labels, about 1,030 clip
+  candidates a partition) labels_geo and vector_tiles get the same
+  batches under both bounds, while greedy_iou_match's per-image groups
+  hold at most 53 rows (5.7 KB of WKT).  Rows of 1 KB would come 4,000
+  to a batch: 2.5x the batches of the cap, not the ~100x of r6's
+  64-row batches.
 - AQE on for runtime re-planning + skew-join splitting (hot tile cells).
 - On a real cluster, add the Iceberg catalog config documented in
   sources/catalog.py; the sandbox has no Iceberg runtime jar, so tables are

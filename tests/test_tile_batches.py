@@ -10,6 +10,7 @@ import tracemalloc
 
 import numpy as np
 import pyarrow as pa
+import pytest
 import pyspark.sql.types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -72,19 +73,26 @@ def test_mega_image_batches_stay_within_the_bound():
     assert len(sizes) >= 2 and max(sizes) <= BOUND, sizes
 
 
-def test_mega_image_memory_is_one_tile_column_plus_one_batch():
+@pytest.mark.parametrize("tile_px", [500, 480])
+def test_mega_image_memory_is_one_tile_column_plus_one_batch(tile_px):
     """Python memory while tiling the 6000×6000 image (NumPy reports its
     allocations to tracemalloc) stays within one output batch's buffer,
-    one grid column of tiles (12 × 750 KB), and the nodata comparison's
-    two bands of booleans per tile of that column: tiles are cut one
-    column at a time and copied into the batch as they are queued, so
-    neither the image's 144 tiles nor a second batch are ever held."""
-    side, tile, bound = 6000, (500, 500), 8 * 1024 * 1024
+    one grid column of tiles (12 × 750 KB at 500 px), and the nodata
+    comparison's two bands of booleans per tile of that column: tiles are
+    cut one column at a time and copied into the batch as they are
+    queued, so neither the image's tiles nor a second batch are ever
+    held.  A 480 px grid overhangs the image, so every column is cut from
+    a nodata-padded box as large as the column, held while the column is
+    gathered; the 500 px grid divides the image and needs none."""
+    side, tile, bound = 6000, (tile_px, tile_px), 8 * 1024 * 1024
     px = np.random.default_rng(0).integers(0, 256, (3, side, side),
                                            dtype=np.uint8)
     batch = _image_batch("mega", px)
-    column = (side // tile[1]) * px.itemsize * 3 * tile[0] * tile[1]
-    limit = bound + column + 2 * column // 3 + 2 * 1024 * 1024
+    n = -(-side // tile_px)
+    column = n * px.itemsize * 3 * tile_px * tile_px
+    box = column if side % tile_px else 0
+    # the box is freed before the nodata comparison runs
+    limit = bound + column + max(box, 2 * column // 3) + 2 * 1024 * 1024
     tracemalloc.start()
     try:
         base = tracemalloc.get_traced_memory()[0]
@@ -95,7 +103,7 @@ def test_mega_image_memory_is_one_tile_column_plus_one_batch():
         peak = tracemalloc.get_traced_memory()[1] - base
     finally:
         tracemalloc.stop()
-    assert n_tiles == (side // tile[0]) ** 2
+    assert n_tiles == n * n
     assert peak <= limit, (peak, limit)
 
 

@@ -185,7 +185,7 @@ def test_cut_windows_overhanging_every_side(dtype, fill, tile):
     row0, col0 = R.window_origins(TRANSFORM, tb)
     assert row0.min() < 0 and col0.min() < 0
     assert (row0 + tile[0]).max() > 37 and (col0 + tile[1]).max() > 53
-    got = R.cut_windows(px, TRANSFORM, tb, tile, fill)
+    got = R.cut_windows(px, row0, col0, tile, fill)
     assert got.shape == (len(tb), 2) + tile and got.dtype == px.dtype
     for k, t in enumerate(tb):
         want, tt = O.cut_window(px, TRANSFORM, tuple(t), tile, fill)
@@ -203,8 +203,9 @@ def test_tile_rows_over_a_grid_overhanging_every_side():
         arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
         for cols, txs, tys in tiling._grid_columns(tb_of(row)):
             ids = [f"t{x}_{y}" for x, y in zip(txs, tys)]
-            yield ids, txs, tys, cols, R.cut_windows(arr, TRANSFORM, cols,
-                                                     tile, nod)
+            row0, col0 = R.window_origins(TRANSFORM, cols)
+            yield ids, txs, tys, cols, R.cut_windows(arr, row0, col0, tile,
+                                                     nod)
 
     def oracle_cells(row, nod):
         arr = pixfmt.decode(row.fmt, row.bytes, row.w, row.h)
