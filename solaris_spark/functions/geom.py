@@ -1,7 +1,7 @@
 """Pure-NumPy geometry kernels for the Spark engine.
 
 These re-implement the geometry semantics the reference delegates to
-shapely/GEOS, as vectorizable NumPy functions usable inside pandas/Arrow
+shapely/GEOS, as vectorizable NumPy functions usable inside Arrow
 UDFs (no shapely in this sandbox).  Reference parity targets:
 
 - WKT parse/dump           → solaris/utils/core.py:74-85

@@ -31,9 +31,9 @@ anchored the way the LZW codec's is:
 
 Decoder speed: entropy decoding uses 16-bit-prefix Huffman lookup
 tables (the classic libjpeg fast path) instead of bit-by-bit tree
-walks; dequant + IDCT are one einsum over all blocks.  Like png.py, the
-scale story is parallelism ACROSS images/tiles (one Spark task each),
-not within one decode.
+walks; dequant + IDCT are two BLAS-free einsums over all blocks.  Like
+png.py, the scale story is parallelism ACROSS images/tiles (one Spark
+task each), not within one decode.
 
 Array convention matches the engine: (C, H, W) uint8; chroma upsampling
 is box replication (libjpeg's "fancy" triangle upsample differs by ≤1
@@ -136,17 +136,23 @@ _DCT_A[0] *= 1.0 / np.sqrt(2.0)
 del _u, _x
 
 
+# The two transforms are pairs of plain (non-optimized) einsums: NumPy's
+# own sum-of-products loops give the same bits on every CPU, where
+# optimize=True hands the contraction to BLAS dgemm, whose result depends
+# on the kernel OpenBLAS picks for the host (FMA or not).
+
+
 def _idct_blocks(blocks: np.ndarray) -> np.ndarray:
     """(n, 8, 8) dequantized coefficients → (n, 8, 8) spatial samples
     (before +128 level shift)."""
-    return np.einsum("ux,nuv,vy->nxy", _DCT_A, blocks, _DCT_A,
-                     optimize=True)
+    return np.einsum("nxv,vy->nxy",
+                     np.einsum("ux,nuv->nxv", _DCT_A, blocks), _DCT_A)
 
 
 def _fdct_blocks(blocks: np.ndarray) -> np.ndarray:
     """(n, 8, 8) level-shifted samples → (n, 8, 8) DCT coefficients."""
-    return np.einsum("ux,nxy,vy->nuv", _DCT_A, blocks, _DCT_A,
-                     optimize=True)
+    return np.einsum("nuy,vy->nuv",
+                     np.einsum("ux,nxy->nuy", _DCT_A, blocks), _DCT_A)
 
 
 class _HuffLUT:

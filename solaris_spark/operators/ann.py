@@ -10,8 +10,8 @@ Two tiers (as a 100 TB pipeline needs both):
   restricted to the query's probe cells, exact cosine refine + top-k.
   Search cost drops |targets| → |targets|·probes/n_cells.
 
-Centroids travel as a Spark BROADCAST VARIABLE consumed by Arrow-batched
-pandas UDFs (one matrix product per batch) — NOT as unrolled SQL literal
+Centroids travel as a Spark BROADCAST VARIABLE consumed by scalar Arrow
+UDFs (one matrix product per batch) — NOT as unrolled SQL literal
 expressions, which blow up codegen beyond ~100 cells (VERDICT r01 #6).
 Plan size is independent of n_cells × dim; n_cells=4096 @ dim=768 is a
 25 MB broadcast, well within executor budgets.
@@ -20,9 +20,11 @@ Plan size is independent of n_cells × dim; n_cells=4096 @ dim=768 is a
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
+
+from .blobs import scalar_udf
 
 
 def _cosine_expr(a: str, b: str):
@@ -55,35 +57,35 @@ def _broadcast_centroids(spark, centroids: np.ndarray):
 
 
 def _cell_assign_udf(bc):
-    """pandas_udf: nearest-centroid cell id per vector.  One (batch × dim)
-    @ (dim × n_cells) matrix product per Arrow batch; centroids ride the
-    shared broadcast.  argmin ties break to the lowest cell id."""
+    """Scalar Arrow UDF: nearest-centroid cell id per vector.  One
+    (batch × dim) @ (dim × n_cells) matrix product per Arrow batch;
+    centroids ride the shared broadcast.  argmin ties break to the lowest
+    cell id."""
 
-    @F.pandas_udf("int")
-    def assign(v: pd.Series) -> pd.Series:
+    @scalar_udf(T.IntegerType())
+    def assign(v):
         C = bc.value
-        if not len(v):
-            return pd.Series([], dtype="int32")
+        if not v:
+            return []
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
         d = -2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
-        return pd.Series(np.argmin(d, axis=1).astype("int32"))
+        return np.argmin(d, axis=1).astype("int32")
 
     return assign
 
 
 def _probe_cells_udf(bc, n_probe: int):
-    """pandas_udf: the n_probe nearest cell ids per query vector (stable
-    argsort — ties break to the lowest cell id)."""
+    """Scalar Arrow UDF: the n_probe nearest cell ids per query vector
+    (stable argsort — ties break to the lowest cell id)."""
 
-    @F.pandas_udf("array<int>")
-    def probe(v: pd.Series) -> pd.Series:
+    @scalar_udf(T.ArrayType(T.IntegerType()))
+    def probe(v):
         C = bc.value
-        if not len(v):
-            return pd.Series([], dtype="object")
+        if not v:
+            return []
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
         d = -2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
-        idx = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in idx])
+        return np.argsort(d, axis=1, kind="stable")[:, :n_probe].tolist()
 
     return probe
 
@@ -93,7 +95,7 @@ def train_centroids(vectors: DataFrame, vec_col: str, n_cells: int,
                     sample_fraction: float = 1.0) -> np.ndarray:
     """Seeded Lloyd iterations over a sample.  Returns (n_cells, dim).
     Deterministic: initial centroids are the first n_cells rows; assignment
-    runs as a broadcast-centroid pandas UDF and the update as one Spark
+    runs as a broadcast-centroid Arrow UDF and the update as one Spark
     aggregation per iteration (scales to any N; plan size independent of
     both n_cells and dim)."""
     spark = vectors.sparkSession

@@ -1,8 +1,10 @@
-"""The Python side of every Arrow UDF that returns rows: reading input
-rows out of Arrow batches and returning output rows as Arrow batches
-bounded by bytes.
+"""The Python side of every Arrow UDF: reading Arrow columns as Python
+values, and returning a scalar UDF's column, or a row-returning UDF's rows
+as Arrow batches bounded by bytes.  No pandas conversion either way.
 
-Spark bounds the batches it sends to Python by
+Every column UDF is a scalar_udf: its body reads arrow_values and its
+result leaves as one Arrow array of the declared type.  Spark bounds the
+batches it sends to Python by
 ``spark.sql.execution.arrow.maxBytesPerBatch`` (4 MB in
 session.get_spark: one or two MB-scale images per batch, so Spark encodes
 the next batch while Python works on this one) but takes whatever a UDF
@@ -10,24 +12,24 @@ returns, and a grouped UDF's result for one group would otherwise leave
 as one batch.  Every operator that returns rows from Python does so
 here: map_blobs runs a per-row generator under ``mapInArrow``,
 group_blobs a per-group one under ``applyInArrow``'s iterator form, and
-both cut the output at the same bound, with no pandas conversion either
-way.  An output schema may carry one binary column (tiles, masks,
-images: each batch's blobs sit in one contiguous buffer) or none (grid
-cells, labels, match rows, scores).
+both cut the output at the same bound.  An output schema may carry one
+binary column (tiles, masks, images: each batch's blobs sit in one
+contiguous buffer) or none (grid cells, labels, match rows, scores).
 """
 
 from __future__ import annotations
 
 from collections import namedtuple
 from collections.abc import Iterable, Iterator
-from functools import lru_cache
+from functools import lru_cache, wraps
 from itertools import chain
 
 import numpy as np
 import pyarrow as pa
+import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 
 @lru_cache(maxsize=None)
@@ -35,32 +37,55 @@ def _row_type(names: tuple[str, ...]):
     return namedtuple("Row", names, rename=True)
 
 
+def arrow_values(col: pa.Array) -> list:
+    """One Arrow column as Python values, NULL as None, except that a
+    binary value is a zero-copy memoryview into the column's data buffer
+    (pixfmt.decode reads raw pixels straight from it)."""
+    if pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type):
+        _, offs, data = col.buffers()
+        odt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+        o = np.frombuffer(offs, dtype=odt)[
+            col.offset:col.offset + len(col) + 1].tolist()
+        mv = memoryview(data) if data is not None else memoryview(b"")
+        vals = [mv[i:j] for i, j in zip(o[:-1], o[1:])]
+        if col.null_count:
+            vals = [None if null else v for v, null
+                    in zip(vals, col.is_null().to_pylist())]
+        return vals
+    if not col.null_count and (pa.types.is_integer(col.type)
+                               or pa.types.is_floating(col.type)):
+        # the same Python values as to_pylist, ~20× faster on a 200-row
+        # column (the label columns of an image_masks group)
+        return col.to_numpy().tolist()
+    return col.to_pylist()
+
+
 def arrow_rows(batch: pa.RecordBatch) -> list:
-    """The rows of an Arrow batch as namedtuples of Python values, except
-    that a binary value is a zero-copy memoryview into the batch's data
-    buffer (pixfmt.decode reads raw pixels straight from it)."""
-    cols = []
-    for col in batch.columns:
-        if pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type):
-            _, offs, data = col.buffers()
-            odt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
-            o = np.frombuffer(offs, dtype=odt)[
-                col.offset:col.offset + len(col) + 1].tolist()
-            mv = memoryview(data) if data is not None else memoryview(b"")
-            vals = [mv[i:j] for i, j in zip(o[:-1], o[1:])]
-            if col.null_count:
-                vals = [None if null else v for v, null
-                        in zip(vals, col.is_null().to_pylist())]
-            cols.append(vals)
-        elif not col.null_count and (pa.types.is_integer(col.type)
-                                     or pa.types.is_floating(col.type)):
-            # the same Python values as to_pylist, ~20× faster on a
-            # 200-row column (the label columns of an image_masks group)
-            cols.append(col.to_numpy().tolist())
-        else:
-            cols.append(col.to_pylist())
+    """The rows of an Arrow batch as namedtuples of arrow_values."""
     row = _row_type(tuple(batch.schema.names))
-    return [row._make(vals) for vals in zip(*cols)]
+    return [row._make(vals) for vals in zip(*map(arrow_values,
+                                                 batch.columns))]
+
+
+def scalar_udf(return_type: T.DataType):
+    """Decorator: ``body`` as a scalar Arrow UDF (an ArrowEvalPython plan
+    node).  The body gets each argument column as a list of arrow_values
+    and returns the result column's values, which leave as one Arrow
+    array of ``return_type``.  NaN leaves as NULL, at any depth
+    (pyarrow's ``from_pandas`` rule, as Spark's pandas UDFs did); a body
+    that does float math reads NULL as NaN, as they did, through
+    ``np.asarray(values, dtype=np.float64)``."""
+    arrow_type = to_arrow_type(return_type)
+
+    def wrap(body):
+        @wraps(body)
+        def udf(*cols):
+            return pa.array(body(*map(arrow_values, cols)), type=arrow_type,
+                            from_pandas=True)
+
+        return F.arrow_udf(udf, return_type)
+
+    return wrap
 
 
 class BlobBatches:

@@ -11,9 +11,11 @@ baseline in ann.py.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame
+
+from .blobs import scalar_udf
 
 # md5 hex → integer, identical in Spark and DuckDB
 def _md5_int(col):
@@ -220,7 +222,7 @@ def embedding_near_dup_pairs(emb: DataFrame, id_col: str = "vec_id",
     the sketch, refine with exact cosine ≥ threshold.
 
     The (n_planes × dim) plane matrix travels as a Spark BROADCAST consumed
-    by one Arrow-batched pandas UDF (a single matrix product per batch) —
+    by one scalar Arrow UDF (a single matrix product per batch) —
     NOT as unrolled SQL literal arrays, whose codegen cost grows with
     n_planes × dim (~12k literals at dim=768; same fix as the IVF
     centroids in ann.py)."""
@@ -238,15 +240,14 @@ def embedding_near_dup_pairs(emb: DataFrame, id_col: str = "vec_id",
         bc = sc.broadcast(np.ascontiguousarray(planes))
         _SRP_PLANES[key] = bc
 
-    @F.pandas_udf("string")
-    def srp_sketch(v: pd.Series) -> pd.Series:
+    @scalar_udf(T.StringType())
+    def srp_sketch(v):
         P = bc.value
-        if not len(v):
-            return pd.Series([], dtype="object")
+        if not v:
+            return []
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
         bits = (X @ P.T) >= 0.0
-        return pd.Series(["".join("1" if b else "0" for b in row)
-                          for row in bits])
+        return ["".join("1" if b else "0" for b in row) for row in bits]
 
     s = emb.select(id_col, vec_col, srp_sketch(F.col(vec_col)).alias("sketch"))
     a, b = s.alias("a"), s.alias("b")

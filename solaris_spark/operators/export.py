@@ -17,13 +17,12 @@ write by image_id).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
 
 from ..functions import geom as G
-from .blobs import map_blobs
+from .blobs import map_blobs, scalar_udf
 
 
 def yolo_labels(labels: DataFrame, images: DataFrame,
@@ -35,25 +34,24 @@ def yolo_labels(labels: DataFrame, images: DataFrame,
     j = labels.join(images.select("image_id", F.col("w").alias("im_w"),
                                   F.col("h").alias("im_h")), "image_id")
 
-    @F.pandas_udf(T.StructType([
+    @scalar_udf(T.StructType([
         T.StructField("xmin", T.DoubleType()), T.StructField("ymin", T.DoubleType()),
         T.StructField("xmax", T.DoubleType()), T.StructField("ymax", T.DoubleType()),
         T.StructField("area", T.DoubleType()), T.StructField("overlap", T.DoubleType()),
     ]))
-    def geom_stats(wkt: pd.Series, im_w: pd.Series, im_h: pd.Series) -> pd.DataFrame:
+    def geom_stats(wkt, im_w, im_h):
         rows = []
-        for i in range(len(wkt)):
-            rings = G.polygon_rings(wkt.iat[i])
+        for w, size in zip(wkt, np.asarray([im_w, im_h], dtype=np.float64).T):
+            rings = G.polygon_rings(w)
             allc = np.vstack(rings)
             sas = [G.ring_signed_area(r) for r in rings]
             area = abs(sum(sas))
-            rect = (0.0, 0.0, float(im_w.iat[i]), float(im_h.iat[i]))
+            rect = (0.0, 0.0, float(size[0]), float(size[1]))
             inter = G.clip_polygon_rect(rings, rect, sas)[1]
             rows.append((float(allc[:, 0].min()), float(allc[:, 1].min()),
                          float(allc[:, 0].max()), float(allc[:, 1].max()),
                          area, inter / area if area > 0 else 0.0))
-        return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax",
-                                           "area", "overlap"])
+        return rows
 
     # asNondeterministic: keeps the overlap filter from duplicating the
     # UDF across Filter and Project (same fix as vector_tiles' clip)
@@ -75,13 +73,13 @@ def coco_annotations(labels: DataFrame, category_col=None) -> DataFrame:
     """Geometry → COCO rows: segmentation = flat [x0, y0, x1, y1, ...] of
     the exterior ring; bbox = [minx, miny, width, height]."""
 
-    @F.pandas_udf(T.StructType([
+    @scalar_udf(T.StructType([
         T.StructField("segmentation", T.ArrayType(T.DoubleType())),
         T.StructField("bbox", T.ArrayType(T.DoubleType())),
         T.StructField("area", T.DoubleType()),
     ]))
-    def conv(wkt: pd.Series) -> pd.DataFrame:
-        segs, boxes, areas = [], [], []
+    def conv(wkt):
+        rows = []
         for w in wkt:
             gtype, parts = G.wkt_parse(w)
             if gtype == "MULTIPOLYGON":
@@ -89,13 +87,13 @@ def coco_annotations(labels: DataFrame, category_col=None) -> DataFrame:
                     "You have MultiPolygon types in your label df. Remove, "
                     "explode, or fix these to be Polygon geometry types.")
             ext = parts[0]
-            segs.append([float(v) for xy in ext for v in xy])
             xmin, ymin = ext.min(axis=0)
             xmax, ymax = ext.max(axis=0)
-            boxes.append([float(xmin), float(ymin),
-                          float(xmax - xmin), float(ymax - ymin)])
-            areas.append(abs(G.ring_signed_area(ext)))
-        return pd.DataFrame({"segmentation": segs, "bbox": boxes, "area": areas})
+            rows.append(([float(v) for xy in ext for v in xy],
+                         [float(xmin), float(ymin),
+                          float(xmax - xmin), float(ymax - ymin)],
+                         abs(G.ring_signed_area(ext))))
+        return rows
 
     out = labels.withColumn("coco", conv("wkt_pix"))
     cat = F.col(category_col) if category_col else F.lit(1)
@@ -166,8 +164,8 @@ def split_multi_geometries(labels: DataFrame, geom_col: str = "wkt",
     """Explode MultiPolygon/MultiLineString rows into single geometries and
     renumber per group (utils/geo.py:480-530: groupby.cumcount()+1)."""
 
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def split(wkt: pd.Series) -> pd.Series:
+    @scalar_udf(T.ArrayType(T.StringType()))
+    def split(wkt):
         out = []
         for w in wkt:
             gtype, parts = G.wkt_parse(w)
@@ -177,7 +175,7 @@ def split_multi_geometries(labels: DataFrame, geom_col: str = "wkt",
                 out.append([G.wkt_dump("LINESTRING", [ls]) for ls in parts])
             else:
                 out.append([w])
-        return pd.Series(out)
+        return out
 
     e = labels.withColumn("_parts", split(F.col(geom_col))) \
         .withColumn(geom_col, F.explode("_parts")).drop("_parts")
@@ -189,8 +187,8 @@ def round_geometry(labels: DataFrame, geom_col: str = "wkt",
                    precision: int = 2) -> DataFrame:
     """Precision rounding of every coordinate (utils/geo.py:590-594)."""
 
-    @F.pandas_udf(T.StringType())
-    def rnd(wkt: pd.Series) -> pd.Series:
+    @scalar_udf(T.StringType())
+    def rnd(wkt):
         out = []
         for w in wkt:
             gtype, parts = G.wkt_parse(w)
@@ -199,6 +197,6 @@ def round_geometry(labels: DataFrame, geom_col: str = "wkt",
             else:
                 parts = [np.round(r, precision) for r in parts]
             out.append(G.wkt_dump(gtype, parts))
-        return pd.Series(out)
+        return out
 
     return labels.withColumn(geom_col, rnd(F.col(geom_col)))

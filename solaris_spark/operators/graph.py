@@ -20,26 +20,26 @@ continent-scale road network's vertex set never funnels through one task.
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import geom as G
 from ..plans import prefix
+from .blobs import scalar_udf
 
 
 def _explode_vertices(roads: DataFrame, wkt_col: str, precision: int | None):
     """roads(road_id, wkt, …) → one row per vertex with (road_id, seq, x, y).
     MultiLineStrings explode into per-part sequences."""
 
-    @F.pandas_udf(T.ArrayType(T.StructType([
+    @scalar_udf(T.ArrayType(T.StructType([
         T.StructField("part", T.IntegerType()),
         T.StructField("seq", T.IntegerType()),
         T.StructField("x", T.DoubleType()),
         T.StructField("y", T.DoubleType()),
     ])))
-    def verts(wkt: pd.Series) -> pd.Series:
+    def verts(wkt):
         out = []
         for w in wkt:
             gtype, parts = G.wkt_parse(w)
@@ -51,7 +51,7 @@ def _explode_vertices(roads: DataFrame, wkt_col: str, precision: int | None):
                         x, y = round(float(x), precision), round(float(y), precision)
                     rows.append((pi, si, float(x), float(y)))
             out.append(rows)
-        return pd.Series(out)
+        return out
 
     return (roads.withColumn("_v", verts(F.col(wkt_col)))
             .withColumn("_v", F.explode("_v"))

@@ -10,13 +10,12 @@ Re-expresses: imread/preprocess (utils/io.py), stitch_images
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import imops, pixfmt
-from .blobs import group_blobs, map_blobs
+from .blobs import group_blobs, map_blobs, scalar_udf
 from .masks import MASK_SCHEMA
 
 # one image per row in any pixfmt format (to_uint8, resize_images, crop)
@@ -133,15 +132,15 @@ def channel_fill_values(images: DataFrame) -> DataFrame:
     """Channel-wise nanmean over each image — the fill-value computation of
     tile/raster_tile.py:479-483, as a vectorized UDF + select."""
 
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def chan_means(b: pd.Series, w: pd.Series, h: pd.Series,
-                   fmt: pd.Series) -> pd.Series:
+    @scalar_udf(T.ArrayType(T.DoubleType()))
+    def chan_means(b, w, h, fmt):
         out = []
-        for i in range(len(b)):
-            arr = pixfmt.decode(fmt.iat[i], b.iat[i], int(w.iat[i]),
-                                int(h.iat[i]))
+        # a NULL size reads as NaN, which int() refuses (ValueError)
+        for buf, (wi, hi), f in zip(b, np.asarray([w, h], dtype=np.float64).T,
+                                    fmt):
+            arr = pixfmt.decode(f, buf, int(wi), int(hi))
             out.append([float(np.nanmean(c)) for c in arr.astype(np.float64)])
-        return pd.Series(out)
+        return out
 
     return images.select("image_id",
                          chan_means("bytes", "w", "h", "fmt").alias("fill_values"))

@@ -18,10 +18,12 @@ arithmetic, no library.  All cell math is Spark-native column arithmetic
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window
+
+from .blobs import scalar_udf
 
 # ---------------------------------------------------------------------------
 # Morton / Z-order cell ids — pure column arithmetic
@@ -88,7 +90,7 @@ def bbox_candidate_join(left: DataFrame, right: DataFrame,
                         broadcast_right: bool = False) -> DataFrame:
     """Candidate pairs whose bboxes share a cell AND overlap (exact bbox
     refine is free column arithmetic).  Caller applies the exact geometry
-    predicate afterwards (pandas UDF) — filter-refine.
+    predicate afterwards (scalar Arrow UDF) — filter-refine.
 
     Dedupe: a pair sharing k cells appears k times → keep the lexicographic
     smallest shared cell (standard dedup trick: no distinct shuffle, just a
@@ -117,27 +119,28 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame,
                           cell_size: float,
                           x="x", y="y", wkt_col="wkt") -> DataFrame:
     """points(id, x, y, …) ⋈ polys(poly_id, wkt, xmin..ymax): cell equi-join
-    + exact even-odd point-in-polygon refine (pandas UDF, vectorized)."""
+    + exact even-odd point-in-polygon refine (a scalar Arrow UDF,
+    vectorized over the points of each polygon in a batch; a NULL polygon
+    matches no point)."""
     p = with_point_cell(points, x, y, cell_size).alias("p")
     g = with_bbox_cells(polys, cell_size=cell_size).alias("g")
     j = p.join(g, F.col("p.cell") == F.col("g.cell")).drop("cell")
     j = j.filter((F.col(x) >= F.col("xmin")) & (F.col(x) <= F.col("xmax"))
                  & (F.col(y) >= F.col("ymin")) & (F.col(y) <= F.col("ymax")))
 
-    @F.pandas_udf(T.BooleanType())
-    def pip(px: pd.Series, py: pd.Series, wkt: pd.Series) -> pd.Series:
-        import numpy as np
-
+    @scalar_udf(T.BooleanType())
+    def pip(px, py, wkt):
         from ..functions import geom as G
-        out = np.zeros(len(px), dtype=bool)
+        x, y = np.asarray([px, py], dtype=np.float64)
+        out = np.zeros(len(x), dtype=bool)
         # group identical polygons within the batch to vectorize over points
-        idx = pd.Series(range(len(px)))
-        for w, grp in idx.groupby(wkt):
-            rings = G.polygon_rings(w)
-            sel = grp.to_numpy()
-            out[sel] = G.points_in_polygon(px.to_numpy()[sel],
-                                           py.to_numpy()[sel], rings)
-        return pd.Series(out)
+        rows: dict = {}
+        for i, w in enumerate(wkt):
+            if w is not None:
+                rows.setdefault(w, []).append(i)
+        for w, sel in rows.items():
+            out[sel] = G.points_in_polygon(x[sel], y[sel], G.polygon_rings(w))
+        return out
 
     return j.filter(pip(F.col(x), F.col(y), F.col(wkt_col)))
 
@@ -152,10 +155,9 @@ def with_s2_cell(df: DataFrame, lat_col: str = "lat", lng_col: str = "lng",
     pruning works without recomputation."""
     from ..functions import s2cells as S2
 
-    @F.pandas_udf(T.StringType())
-    def tok(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        return pd.Series(S2.cell_token(lat.to_numpy(), lng.to_numpy(),
-                                       level))
+    @scalar_udf(T.StringType())
+    def tok(lat, lng):
+        return S2.cell_token(*np.asarray([lat, lng], dtype=np.float64), level)
 
     return df.withColumn(out_col, tok(F.col(lat_col), F.col(lng_col)))
 

@@ -42,7 +42,6 @@ its nodata-padded box) and one output batch.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
@@ -50,7 +49,8 @@ from pyspark.sql import DataFrame
 from ..functions import geom as G
 from ..functions import pixfmt
 from ..functions import raster as R
-from .blobs import map_blobs
+from ..plans.skew import planned_partitions
+from .blobs import map_blobs, scalar_udf
 
 
 TILE_SCHEMA = T.StructType([
@@ -136,7 +136,7 @@ def _grid_columns(tb: np.ndarray):
 
 def _nodata(v) -> float:
     """An image's nodata value; a null column means 0."""
-    return 0 if v is None or pd.isna(v) else v
+    return 0 if v is None or np.isnan(v) else v
 
 
 def tile_grid(images_geo: DataFrame, tile_size: tuple[int, int]) -> DataFrame:
@@ -442,19 +442,16 @@ def labels_geo(labels: DataFrame, geo: DataFrame) -> DataFrame:
     (vector_tiles candidates) skip a second full WKT parse."""
     lb = labels.join(geo, "image_id")
 
-    @F.pandas_udf(T.StructType([
+    @scalar_udf(T.StructType([
         T.StructField("wkt", T.StringType()),
         T.StructField("bbox", T.ArrayType(T.DoubleType())),
     ]))
-    def to_geo(wkt: pd.Series, a: pd.Series, b: pd.Series, c: pd.Series,
-               d: pd.Series, e: pd.Series, f: pd.Series) -> pd.DataFrame:
-        ws, bs = [], []
-        for i in range(len(wkt)):
-            t = (a.iat[i], b.iat[i], c.iat[i], d.iat[i], e.iat[i], f.iat[i])
-            w = G.transform_wkt(wkt.iat[i], t)
-            ws.append(w)
-            bs.append(list(G.geom_bounds(w)))
-        return pd.DataFrame({"wkt": ws, "bbox": bs})
+    def to_geo(wkt, *affine):
+        out = []
+        for w, t in zip(wkt, np.asarray(affine, dtype=np.float64).T):
+            w = G.transform_wkt(w, tuple(t))
+            out.append((w, list(G.geom_bounds(w))))
+        return out
 
     return (lb.withColumn("_g", to_geo("wkt_pix", "a", "b", "c", "d", "e", "f"))
             .select("image_id", "label_id",
@@ -494,16 +491,16 @@ def vector_tiles(labels_geo_df: DataFrame, grid: DataFrame,
     # sliver; coalesce down to cluster width — a no-op whenever the grid
     # is already at or below it (guide §6 small-inputs / task-overhead).
     width = grid.sparkSession.sparkContext.defaultParallelism
-    if grid.rdd.getNumPartitions() > width:
+    if planned_partitions(grid) > width:
         grid = grid.coalesce(width)
     g = grid.alias("g")
     lab = labels_geo_df.alias("l")
 
     if "bbox" not in labels_geo_df.columns:
         # labels that didn't come through labels_geo: derive bounds here
-        @F.pandas_udf(T.ArrayType(T.DoubleType()))
-        def bbox(wkt: pd.Series) -> pd.Series:
-            return pd.Series([list(G.geom_bounds(w)) for w in wkt])
+        @scalar_udf(T.ArrayType(T.DoubleType()))
+        def bbox(wkt):
+            return [list(G.geom_bounds(w)) for w in wkt]
 
         lab = lab.withColumn("bbox", bbox("wkt_geo"))
     # tile span per image comes from the grid itself (min xmin, tile size)
@@ -529,21 +526,19 @@ def vector_tiles(labels_geo_df: DataFrame, grid: DataFrame,
             .select("image_id", "label_id", "wkt_geo", "tx", "ty"))
     joined = cand.join(g, ["image_id", "tx", "ty"])
 
-    @F.pandas_udf(T.StructType([
+    @scalar_udf(T.StructType([
         T.StructField("wkt_clip", T.StringType()),
         T.StructField("wkt_pix", T.StringType()),
         T.StructField("origarea", T.DoubleType()),
         T.StructField("clip_area", T.DoubleType()),
     ]))
-    def clip(wkt: pd.Series, xmin: pd.Series, ymin: pd.Series,
-             xmax: pd.Series, ymax: pd.Series) -> pd.DataFrame:
-        wkts, pixs, oas, cas = [], [], [], []
+    def clip(wkt, *bounds):
+        out = []
         # a label spans ~3-4 candidate tiles, so its WKT recurs within the
         # batch: parse + signed areas once per distinct geometry (r6;
         # values reused verbatim, so results are unchanged)
         parsed: dict = {}
-        for i in range(len(wkt)):
-            w = wkt.iat[i]
+        for w, rect in zip(wkt, np.asarray(bounds, dtype=np.float64).T):
             ent = parsed.get(w)
             if ent is None:
                 rings = G.polygon_rings(w)
@@ -551,11 +546,8 @@ def vector_tiles(labels_geo_df: DataFrame, grid: DataFrame,
                 ent = (rings, sas, abs(sum(sas)))
                 parsed[w] = ent
             rings, sas, oa = ent
-            rect = (xmin.iat[i], ymin.iat[i], xmax.iat[i], ymax.iat[i])
-            clipped, ca = G.clip_polygon_rect(rings, rect, sas)
-            wkts.append(G.wkt_dump("POLYGON", clipped) if clipped else None)
-            oas.append(oa)
-            cas.append(ca)
+            clipped, ca = G.clip_polygon_rect(rings, tuple(rect), sas)
+            pix = None
             if tile_px is not None and clipped:
                 # inverse tile affine: geo → tile-local pixel frame
                 rx = (rect[2] - rect[0]) / tile_px[1]
@@ -563,11 +555,10 @@ def vector_tiles(labels_geo_df: DataFrame, grid: DataFrame,
                 px = [np.stack([(r[:, 0] - rect[0]) / rx,
                                 (rect[3] - r[:, 1]) / ry], axis=1)
                       for r in clipped]
-                pixs.append(G.wkt_dump("POLYGON", px))
-            else:
-                pixs.append(None)
-        return pd.DataFrame({"wkt_clip": wkts, "wkt_pix": pixs,
-                             "origarea": oas, "clip_area": cas})
+                pix = G.wkt_dump("POLYGON", px)
+            out.append((G.wkt_dump("POLYGON", clipped) if clipped else None,
+                        pix, oa, ca))
+        return out
 
     # asNondeterministic: the partialDec filter + the column projection
     # otherwise split the struct reference across Filter and Project and the

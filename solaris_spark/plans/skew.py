@@ -17,6 +17,7 @@ centers vs ocean) and (b) mega-images with 10^5 labels.  Tools:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
@@ -69,9 +70,45 @@ def ensure_parallelism(df: DataFrame,
             est = min_bytes
         if est < min_bytes:
             return df
-    if df.rdd.getNumPartitions() < target:
+    if planned_partitions(df) < target:
         return df.repartition(target)
     return df
+
+
+def planned_partitions(df: DataFrame) -> int:
+    """The number of partitions ``df`` will have, read from its physical
+    plan without running a job.  ``df.rdd.getNumPartitions()`` would run
+    every shuffle stage below ``df`` under AQE (and fill a pending cache)
+    just to count; before any stage runs, an exchange's width is the
+    planned one, which AQE may still coalesce."""
+    try:
+        return _plan_width(df._jdf.queryExecution().executedPlan())
+    except (AttributeError, ValueError, Py4JError):
+        # non-classic session (no _jdf), or a plan node this walk does not
+        # know: count through the RDD
+        return df.rdd.getNumPartitions()
+
+
+def _plan_width(plan) -> int:
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return _plan_width(plan.executedPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n:
+        return n
+    kids = plan.children()
+    if kind == "InMemoryTableScanExec":
+        return _plan_width(plan.relation().cachedPlan())
+    if kids.isEmpty():
+        # a scan's RDD knows its splits without running a job
+        return plan.execute().getNumPartitions()
+    if kind == "UnionExec":
+        return sum(_plan_width(kids.apply(i)) for i in range(kids.size()))
+    if kids.size() == 1:
+        return _plan_width(kids.head())
+    if kind == "BroadcastHashJoinExec":
+        return _plan_width(plan.streamedPlan())
+    raise ValueError(f"no planned width for {kind}")
 
 
 def repartition_by_range(df: DataFrame, n: int, *cols) -> DataFrame:

@@ -2,8 +2,9 @@
 
 Design notes for the 100 TB deployment (vs the local[32] sandbox):
 
-- Arrow is mandatory: every geometry/raster kernel runs in pandas/Arrow UDFs
-  (BASELINE.json input_hint: "no per-row Python").
+- Arrow is mandatory: every geometry/raster kernel runs in an Arrow UDF
+  (operators/blobs.py: scalar_udf for columns, map_blobs/group_blobs for
+  rows; BASELINE.json input_hint: "no per-row Python").
 - Arrow batches are bounded by bytes: 4 MB
   (``spark.sql.execution.arrow.maxBytesPerBatch``) because ``images.bytes``
   rows are MB-scale blobs — one Arrow batch must stay well under executor
@@ -27,6 +28,9 @@ Design notes for the 100 TB deployment (vs the local[32] sandbox):
   to a batch: 2.5x the batches of the cap, not the ~100x of r6's
   64-row batches.
 - AQE on for runtime re-planning + skew-join splitting (hot tile cells).
+- The worker daemon is solaris_spark.pydaemon wherever workers can import
+  it when they start; under ``spark-submit --py-files`` the zip reaches a
+  worker's path only with its first task, so the stock daemon runs.
 - On a real cluster, add the Iceberg catalog config documented in
   sources/catalog.py; the sandbox has no Iceberg runtime jar, so tables are
   partitioned parquet with an engine-side snapshot/lineage manifest.
@@ -36,22 +40,30 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _ensure_worker_pythonpath() -> None:
-    """Make the engine package importable in Python worker/daemon processes
-    regardless of the driver's cwd: the custom daemon module
-    (``spark.python.daemon.module=solaris_spark.pydaemon``) and every
-    module-referenced UDF must import ``solaris_spark`` executor-side.
-    Must run BEFORE the JVM gateway launches (the daemon inherits the
-    driver JVM's environment)."""
-    existing = os.environ.get("PYTHONPATH", "")
-    if _REPO_ROOT not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _REPO_ROOT + (os.pathsep + existing if existing else ""))
+def _workers_import_engine() -> bool:
+    """Whether the Python worker daemon can import this package when it
+    starts, which is before a task puts any ``--py-files`` zip on its
+    path.  A JVM this process launches inherits the package's root on
+    ``PYTHONPATH`` (set here first, so every module-referenced UDF imports
+    on the workers whatever the driver's cwd).  A JVM that was already
+    running (``spark-submit``, or an earlier session) hands workers its own
+    ``PYTHONPATH``, so the root must be on that."""
+    if SparkContext._gateway is None \
+            and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        existing = os.environ.get("PYTHONPATH", "")
+        if _REPO_ROOT not in existing.split(os.pathsep):
+            os.environ["PYTHONPATH"] = (
+                _REPO_ROOT + (os.pathsep + existing if existing else ""))
+        return True
+    SparkContext._ensure_initialized()
+    jvm_path = SparkContext._jvm.java.lang.System.getenv("PYTHONPATH") or ""
+    return _REPO_ROOT in jvm_path.split(os.pathsep)
 
 
 def get_spark(app_name: str = "solaris_spark",
@@ -64,7 +76,12 @@ def get_spark(app_name: str = "solaris_spark",
     master = f"local[{cores}]"
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cores in ("*",) else max(int(cores), 4)
-    _ensure_worker_pythonpath()
+    # stock pyspark.daemon pays ~300 ms/task (zipimporter re-reads in
+    # importlib.invalidate_caches + full gc.collect between tasks) — see
+    # solaris_spark/pydaemon.py for the measurements and fix; workers that
+    # cannot import it at start keep the stock daemon
+    daemon = ("solaris_spark.pydaemon" if _workers_import_engine()
+              else "pyspark.daemon")
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -84,10 +101,7 @@ def get_spark(app_name: str = "solaris_spark",
         # one or two 1000² images per batch: encoding overlaps the UDF
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str(4 * 1024 * 1024))
-        # stock pyspark.daemon pays ~300 ms/task (zipimporter re-reads in
-        # importlib.invalidate_caches + full gc.collect between tasks) —
-        # see solaris_spark/pydaemon.py for the measurements and fix
-        .config("spark.python.daemon.module", "solaris_spark.pydaemon")
+        .config("spark.python.daemon.module", daemon)
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")

@@ -55,3 +55,11 @@ def test_missing_daemon_gc_keeps_stock_behaviour(caplog):
     warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
     assert len(warnings) == 1
     assert "stub_daemon.gc" in warnings[0].getMessage()
+
+
+def test_session_keeps_engine_daemon_when_workers_import_it(spark):
+    """A session whose JVM this process launched puts the package root on
+    the workers' path, so it runs the engine's daemon."""
+    assert spark.conf.get("spark.python.daemon.module") == \
+        "solaris_spark.pydaemon"
+    assert spark.range(4).mapInArrow(lambda b: b, "id long").count() == 4

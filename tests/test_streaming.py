@@ -63,56 +63,3 @@ class TestIngest:
         assert bytes(rows["ok"]["bytes"]) == px.tobytes()
         assert rows["ok"]["phash"] == phash64(px)
 
-
-class TestStatefulSessions:
-    def test_session_state_across_microbatches(self, spark, tmp_path):
-        """applyInPandasWithState session windows: per-user state carries
-        the open session across availableNow drains; a later event beyond
-        the gap closes it and the closed row lands in the sink."""
-        import json as _json
-
-        from solaris_spark.streaming import sessions
-
-        src = tmp_path / "events"
-        src.mkdir()
-        sink = str(tmp_path / "sessions_out")
-        ckpt = str(tmp_path / "sess_ckpt")
-
-        def write_batch(name, rows):
-            with open(src / name, "w") as fh:
-                for uid, ts in rows:
-                    fh.write(_json.dumps({"user_id": uid, "ts": ts}) + "\n")
-
-        def drain():
-            ev = (spark.readStream
-                  .schema("user_id long, ts timestamp")
-                  .json(str(src)))
-            # timeout_ms=None (NoTimeout): availableNow must terminate, and
-            # any pending processing-time timeout keeps the trigger alive
-            # "cleaning up state" until it fires
-            q = (sessions.sessionize_stream(ev, gap_sec=1800,
-                                            timeout_ms=None)
-                 .writeStream.format("parquet")
-                 .option("path", sink).option("checkpointLocation", ckpt)
-                 .outputMode("append").trigger(availableNow=True).start())
-            assert q.awaitTermination(420), 'drain did not finish'
-
-        # batch 1: user 1 has two events 100 s apart (one open session);
-        # user 2 one event — nothing closes yet
-        write_batch("ev1.json", [(1, "2026-01-01 00:00:00"),
-                                 (1, "2026-01-01 00:01:40"),
-                                 (2, "2026-01-01 00:00:00")])
-        drain()
-        import glob
-        n0 = (spark.read.parquet(sink).count()
-              if glob.glob(sink + "/*.parquet") else 0)
-        assert n0 == 0  # append mode: only CLOSED sessions are emitted
-
-        # batch 2: user 1 comes back 2 h later -> closes session (2 events)
-        write_batch("ev2.json", [(1, "2026-01-01 02:00:00")])
-        drain()
-        rows = spark.read.parquet(sink).collect()
-        assert len(rows) == 1
-        r = rows[0]
-        assert r["user_id"] == 1 and r["n_events"] == 2 and r["closed"]
-        assert r["session_end"] - r["session_start"] == 100
