@@ -158,9 +158,9 @@ def ring_signed_area(ring: np.ndarray) -> float:
     # build the rotated-by-one arrays directly instead of np.roll (this is
     # the hottest scalar kernel: per-candidate clip refine + rasterizer
     # orientation; np.roll's axis normalization was ~60% of its runtime).
-    # Contents are identical to np.roll(·, -1), so np.dot — whose pairwise
-    # summation depends only on length/layout — returns bit-identical
-    # values.
+    # Contents are identical to np.roll(·, -1).  1-D np.dot is BLAS ddot,
+    # whose summation order depends on the BLAS kernel: 396 random rings
+    # gave 4 different result hashes under 4 OPENBLAS_CORETYPE values.
     yr = np.empty_like(y)
     yr[:-1] = y[1:]
     yr[-1] = y[0]
@@ -1010,8 +1010,7 @@ def webmercator_to_wgs84(x, y):
 # pyproj transformer cache: {(epsg, to_wgs84?): Transformer}.  pyproj is
 # OPTIONAL (absent in this sandbox) — the closed-form 4326/UTM/3857 fast
 # paths above never touch it; any other EPSG defers to pyproj when
-# installed (same import-gate pattern as the PIL-gated image decodes) and
-# raises the documented NotImplementedError otherwise.
+# installed and raises the documented NotImplementedError otherwise.
 _PYPROJ_CACHE: dict = {}
 
 

@@ -425,14 +425,6 @@ def warp(src: np.ndarray, src_transform, src_epsg: int,
     return out.astype(src.dtype)
 
 
-def warp_bilinear(src: np.ndarray, src_transform, src_epsg: int,
-                  dst_transform, dst_epsg: int, out_shape: tuple[int, int],
-                  nodata: float = 0.0) -> np.ndarray:
-    """Back-compat alias: `warp(..., resampling='bilinear')`."""
-    return warp(src, src_transform, src_epsg, dst_transform, dst_epsg,
-                out_shape, nodata=nodata, resampling="bilinear")
-
-
 def resize_average(src: np.ndarray, factor_y: int, factor_x: int) -> np.ndarray:
     """Area-average decimation by integer factors (GDAL `Resampling.average`
     for the axis-aligned downscale the reference's tiler uses when

@@ -10,11 +10,12 @@ Two tiers (as a 100 TB pipeline needs both):
   restricted to the query's probe cells, exact cosine refine + top-k.
   Search cost drops |targets| → |targets|·probes/n_cells.
 
-Centroids travel as a Spark BROADCAST VARIABLE consumed by scalar Arrow
-UDFs (one matrix product per batch) — NOT as unrolled SQL literal
-expressions, which blow up codegen beyond ~100 cells (VERDICT r01 #6).
-Plan size is independent of n_cells × dim; n_cells=4096 @ dim=768 is a
-25 MB broadcast, well within executor budgets.
+Centroids ride in the closure of scalar Arrow UDFs (one matrix product
+per batch), not in unrolled SQL literal expressions, which blow up
+codegen beyond ~100 cells (VERDICT r01 #6).  Plan size is independent of
+n_cells × dim.  PySpark ships a pickled UDF over 1 MiB as a broadcast
+(``spark.broadcast.UDFCompressionThreshold``) whose lifetime Spark's
+ContextCleaner manages; n_cells=4096 @ dim=768 is 25 MB of centroids.
 """
 
 from __future__ import annotations
@@ -47,24 +48,14 @@ def brute_force_knn(queries: DataFrame, targets: DataFrame, k: int = 5,
             .select(qid, tid, "rank", "cosine"))
 
 
-def _broadcast_centroids(spark, centroids: np.ndarray):
-    """One broadcast per PUBLIC call — the assign and probe UDFs share it
-    (previously each factory broadcast its own copy and nothing was ever
-    released; at n_cells=4096 × dim=768 that's 25 MB of undroppable blocks
-    per factory call accumulating in long-lived sessions)."""
-    return spark.sparkContext.broadcast(
-        np.ascontiguousarray(centroids, dtype=np.float64))
-
-
-def _cell_assign_udf(bc):
+def _cell_assign_udf(C: np.ndarray):
     """Scalar Arrow UDF: nearest-centroid cell id per vector.  One
-    (batch × dim) @ (dim × n_cells) matrix product per Arrow batch;
-    centroids ride the shared broadcast.  argmin ties break to the lowest
-    cell id."""
+    (batch × dim) @ (dim × n_cells) matrix product per Arrow batch against
+    the (n_cells, dim) float64 centroids ``C``.  argmin ties break to the
+    lowest cell id."""
 
     @scalar_udf(T.IntegerType())
     def assign(v):
-        C = bc.value
         if not v:
             return []
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
@@ -74,13 +65,12 @@ def _cell_assign_udf(bc):
     return assign
 
 
-def _probe_cells_udf(bc, n_probe: int):
+def _probe_cells_udf(C: np.ndarray, n_probe: int):
     """Scalar Arrow UDF: the n_probe nearest cell ids per query vector
     (stable argsort — ties break to the lowest cell id)."""
 
     @scalar_udf(T.ArrayType(T.IntegerType()))
     def probe(v):
-        C = bc.value
         if not v:
             return []
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
@@ -95,18 +85,16 @@ def train_centroids(vectors: DataFrame, vec_col: str, n_cells: int,
                     sample_fraction: float = 1.0) -> np.ndarray:
     """Seeded Lloyd iterations over a sample.  Returns (n_cells, dim).
     Deterministic: initial centroids are the first n_cells rows; assignment
-    runs as a broadcast-centroid Arrow UDF and the update as one Spark
-    aggregation per iteration (scales to any N; plan size independent of
-    both n_cells and dim)."""
-    spark = vectors.sparkSession
+    runs as a scalar Arrow UDF closing over them and the update as one
+    Spark aggregation per iteration (scales to any N; plan size independent
+    of both n_cells and dim)."""
     sample = vectors.select(vec_col)
     if sample_fraction < 1.0:
         sample = sample.sample(fraction=sample_fraction, seed=seed)
     first = sample.limit(n_cells).collect()
     cents = np.array([r[0] for r in first], dtype=np.float64)
     for _ in range(iters):
-        bc = _broadcast_centroids(spark, cents)
-        assign = _cell_assign_udf(bc)
+        assign = _cell_assign_udf(cents)
         # array-native update: posexplode → per-(cell, dim) avg → re-pack.
         # Plan size is independent of dim (the old per-dim F.avg(vec[i])
         # expression list built dim aggregate expressions — O(dim) codegen).
@@ -119,9 +107,6 @@ def train_centroids(vectors: DataFrame, vec_col: str, n_cells: int,
                    F.array_sort(F.collect_list(F.struct("i", "m"))),
                    lambda s: s["m"]).alias("centroid"))
                .collect())
-        # the collect above fully consumed this iteration's centroids —
-        # release the broadcast instead of leaking one per Lloyd iteration
-        bc.unpersist()
         new = cents.copy()
         for r in agg:
             new[r["cell"]] = np.array(r["centroid"])
@@ -137,17 +122,13 @@ def ivf_knn(queries: DataFrame, targets: DataFrame, k: int = 5,
     """IVF ANN: assign targets to their nearest centroid cell; queries probe
     their n_probe nearest cells; exact cosine refine within probed cells.
     Recall < 1 by design (ANN); brute_force_knn is the oracle."""
-    spark = targets.sparkSession
     if centroids is None:
         centroids = train_centroids(
             targets.select(F.col(tvec).alias("v")), "v", n_cells)
-    # ONE shared broadcast for both the assign and probe UDFs (the result
-    # is lazy, so it stays alive for the query's lifetime — callers running
-    # many ivf_knn's in one session can bc.unpersist() after consuming)
-    bc = _broadcast_centroids(spark, centroids)
-    t = targets.withColumn("cell", _cell_assign_udf(bc)(F.col(tvec)))
+    C = np.ascontiguousarray(centroids, dtype=np.float64)
+    t = targets.withColumn("cell", _cell_assign_udf(C)(F.col(tvec)))
     q = queries.withColumn(
-        "cell", F.explode(_probe_cells_udf(bc, n_probe)(F.col(qvec))))
+        "cell", F.explode(_probe_cells_udf(C, n_probe)(F.col(qvec))))
 
     j = q.join(t, "cell").filter(F.col(qid) != F.col(tid))
     j = j.withColumn("cosine", _cosine_expr(qvec, tvec))

@@ -193,25 +193,6 @@ def simhash_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
             .distinct())
 
 
-_SRP_PLANES: dict = {}  # (applicationId, seed, n_planes, dim) → broadcast
-_SRP_PLANES_MAX = 64
-
-
-def _srp_evict(current_app_id: str) -> None:
-    """Drop cached plane broadcasts from stopped SparkContexts (their
-    applicationId no longer matches) so driver-side matrices don't pin
-    for the process lifetime; cap distinct live families (ADVICE r3)."""
-    dead = [k for k in _SRP_PLANES if k[0] != current_app_id]
-    if len(_SRP_PLANES) - len(dead) >= _SRP_PLANES_MAX:
-        dead = list(_SRP_PLANES)  # cap hit: flush everything, re-broadcast
-    for k in dead:
-        bc = _SRP_PLANES.pop(k)
-        try:
-            bc.unpersist()
-        except Exception:
-            pass  # context already gone — nothing to unpersist
-
-
 def embedding_near_dup_pairs(emb: DataFrame, id_col: str = "vec_id",
                              vec_col: str = "embedding",
                              threshold: float = 0.95,
@@ -221,28 +202,17 @@ def embedding_near_dup_pairs(emb: DataFrame, id_col: str = "vec_id",
     sign-sketch each vector against n_planes seeded hyperplanes, bucket on
     the sketch, refine with exact cosine ≥ threshold.
 
-    The (n_planes × dim) plane matrix travels as a Spark BROADCAST consumed
-    by one scalar Arrow UDF (a single matrix product per batch) —
-    NOT as unrolled SQL literal arrays, whose codegen cost grows with
-    n_planes × dim (~12k literals at dim=768; same fix as the IVF
-    centroids in ann.py)."""
+    The (n_planes × dim) plane matrix rides in the closure of one scalar
+    Arrow UDF (a single matrix product per batch), not in unrolled SQL
+    literal arrays, whose codegen cost grows with n_planes × dim (~12k
+    literals at dim=768).  ann.py's docstring says how PySpark ships a
+    large closure, as it does the IVF centroids."""
     rng = np.random.default_rng(seed)
     dim_probe = len(emb.select(vec_col).first()[0])
-    planes = rng.standard_normal((n_planes, dim_probe))
-    # one broadcast per (app, seed, n_planes, dim): the result is lazy so
-    # the broadcast can't be unpersisted here; caching bounds the leak to
-    # one live broadcast per distinct plane family instead of one per call
-    sc = emb.sparkSession.sparkContext
-    key = (sc.applicationId, seed, n_planes, dim_probe)
-    bc = _SRP_PLANES.get(key)
-    if bc is None:
-        _srp_evict(sc.applicationId)
-        bc = sc.broadcast(np.ascontiguousarray(planes))
-        _SRP_PLANES[key] = bc
+    P = rng.standard_normal((n_planes, dim_probe))
 
     @scalar_udf(T.StringType())
     def srp_sketch(v):
-        P = bc.value
         if not v:
             return []
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])

@@ -1,11 +1,13 @@
-"""SAR band-math + optical color-space DataFrame operators.
+"""SAR band-math + optical color-space DataFrame operator.
 
-Wraps the vectorized kernels in functions/spectral.py over a generic
+``band_math(df, fn)`` maps any (C, Y, X) kernel — those of
+functions/spectral.py, e.g. ``band_math(df, S.intensity)`` or
+``band_math(df, lambda a: S.multilook(a, 3, "med"))`` — over a generic
 spectral-image schema (image_id, pixels binary, h, w, nchan, dtype —
 dtype is any numpy name incl. complex64/complex128 for SAR data).
-One blob map (blobs.map_blobs) per operator, output batches bounded at the
+One blob map (blobs.map_blobs), output batches bounded at the
 session's 4 MB Arrow batch size (session.py: small enough that encoding
-overlaps the UDF) even when an operator widens the dtype.
+overlaps the UDF) even when ``fn`` widens the dtype.
 Reference surface: solaris/preproc/sar.py:17-170, optical.py:9-92.
 """
 
@@ -17,7 +19,6 @@ import numpy as np
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from ..functions import spectral as S
 from .blobs import map_blobs
 
 SPECTRAL_SCHEMA = T.StructType([
@@ -54,51 +55,3 @@ def _band_rows(fn: Callable[[np.ndarray], np.ndarray]):
 
     return rows_of
 
-
-def amplitude(images: DataFrame) -> DataFrame:
-    return band_math(images, S.amplitude)
-
-
-def intensity(images: DataFrame) -> DataFrame:
-    return band_math(images, S.intensity)
-
-
-def in_phase(images: DataFrame) -> DataFrame:
-    return band_math(images, S.in_phase)
-
-
-def quadrature(images: DataFrame) -> DataFrame:
-    return band_math(images, S.quadrature)
-
-
-def phase(images: DataFrame) -> DataFrame:
-    return band_math(images, S.phase)
-
-
-def conjugate(images: DataFrame) -> DataFrame:
-    return band_math(images, S.conjugate)
-
-
-def decibels(images: DataFrame, flag="min") -> DataFrame:
-    return band_math(images, lambda a: S.decibels(a, flag))
-
-
-def multilook(images: DataFrame, kernel_size=5,
-              method: str = "avg") -> DataFrame:
-    return band_math(images, lambda a: S.multilook(a, kernel_size, method))
-
-
-def rgb_to_hsv(images: DataFrame, rgbmax: float = 255.0) -> DataFrame:
-    return band_math(images, lambda a: S.rgb_to_hsv(a, rgbmax))
-
-
-def hsv_to_rgb(images: DataFrame, rgbmax: float = 255.0) -> DataFrame:
-    return band_math(images, lambda a: S.hsv_to_rgb(a, rgbmax))
-
-
-def rgb_to_hsl(images: DataFrame, rgbmax: float = 255.0) -> DataFrame:
-    return band_math(images, lambda a: S.rgb_to_hsl(a, rgbmax))
-
-
-def hsl_to_rgb(images: DataFrame, rgbmax: float = 255.0) -> DataFrame:
-    return band_math(images, lambda a: S.hsl_to_rgb(a, rgbmax))

@@ -8,8 +8,8 @@ Design notes for the 100 TB deployment (vs the local[32] sandbox):
 - Arrow batches are bounded by bytes: 4 MB
   (``spark.sql.execution.arrow.maxBytesPerBatch``) because ``images.bytes``
   rows are MB-scale blobs — one Arrow batch must stay well under executor
-  memory (SURVEY.md §4 "Spill/memory") — with a 10k-record cap
-  (``maxRecordsPerBatch``) so thin WKT/text rows still travel in few
+  memory (SURVEY.md §4 "Spill/memory") — under Spark's default 10k-record
+  cap (``maxRecordsPerBatch``), so thin WKT/text rows still travel in few
   batches.  Spark fills a batch while it is under 4 MB, so it holds two
   1000² RGB images (3 MB each), and the JVM encodes the next batch while
   Python works on this one; at 64 MB it encoded a
@@ -27,7 +27,9 @@ Design notes for the 100 TB deployment (vs the local[32] sandbox):
   hold at most 53 rows (5.7 KB of WKT).  Rows of 1 KB would come 4,000
   to a batch: 2.5x the batches of the cap, not the ~100x of r6's
   64-row batches.
-- AQE on for runtime re-planning + skew-join splitting (hot tile cells).
+- AQE, its partition coalescing and its skew-join splitting (hot tile
+  cells) are on by Spark's defaults; tests/test_session.py pins those
+  and the Arrow batch bounds as the session reports them.
 - The worker daemon is solaris_spark.pydaemon wherever workers can import
   it when they start; under ``spark-submit --py-files`` the zip reaches a
   worker's path only with its first task, so the stock daemon runs.
@@ -86,18 +88,9 @@ def get_spark(app_name: str = "solaris_spark",
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", driver_memory)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # images are MB-scale binary blobs: bound Arrow batches by BYTES
-        # (one batch ≪ executor memory at 100 TB scale) instead of a blanket
-        # 64-row cap that shredded thin-row UDF stages into per-batch
-        # overhead (r6: WKT/text rows are ~100 B, so 64-row batches meant
-        # ~100× more Python round-trips than the 10k-row default).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # one or two 1000² images per batch: encoding overlaps the UDF
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str(4 * 1024 * 1024))

@@ -9,7 +9,8 @@ traceback.  They were recorded with the engine's
 earlier pandas UDFs, so a port that changes a value, a NULL or an error
 shows here.
 
-A last test keeps pandas out of the engine package.
+The last two tests keep pandas and SparkContext broadcasts out of the
+engine package.
 """
 
 import os
@@ -364,11 +365,11 @@ def test_plan_runs_scalar_arrow_udfs(spark, name):
         assert len(nodes) == 1, nodes
 
 
-def test_no_pandas_in_engine():
-    """No engine module crosses the Python boundary as pandas."""
+def _engine_lines_matching(pattern):
+    """``path:line`` of every engine source line that matches ``pattern``."""
     root = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "solaris_spark")
-    bad = re.compile(r"pandas_udf|applyInPandas|mapInPandas|import pandas")
+    bad = re.compile(pattern)
     hits = []
     for d, _, files in os.walk(root):
         for fn in files:
@@ -377,6 +378,21 @@ def test_no_pandas_in_engine():
                 with open(path) as fh:
                     hits += [f"{path}:{i}" for i, line in enumerate(fh, 1)
                              if bad.search(line)]
+    return hits
+
+
+def test_no_pandas_in_engine():
+    """No engine module crosses the Python boundary as pandas."""
+    hits = _engine_lines_matching(
+        r"pandas_udf|applyInPandas|mapInPandas|import pandas")
+    assert not hits, hits
+
+
+def test_no_context_broadcast_in_engine():
+    """A UDF's constants ride in its closure (PySpark broadcasts a large
+    pickled UDF itself), so no engine module calls a SparkContext's
+    ``.broadcast(``; ``F.broadcast`` join hints are allowed."""
+    hits = _engine_lines_matching(r"(?<!\bF)\.broadcast\(")
     assert not hits, hits
 
 

@@ -397,8 +397,8 @@ class TestWebMercator:
         ow = oh = 30
         dst_t = ((float(x1) - float(x0)) / ow, 0.0, float(x0),
                  0.0, (float(y0) - float(y1)) / oh, float(y1))
-        out = R.warp_bilinear(field, src_t, 4326, dst_t, 3857, (oh, ow),
-                              nodata=np.nan)
+        out = R.warp(field, src_t, 4326, dst_t, 3857, (oh, ow),
+                     nodata=np.nan, resampling="bilinear")
         dc, dr = np.meshgrid(np.arange(ow) + 0.5, np.arange(oh) + 0.5)
         gx = dst_t[0] * dc + dst_t[2]
         gy = dst_t[4] * dr + dst_t[5]
@@ -452,3 +452,36 @@ class TestWebMercatorClampAndPyprojGate:
         x, y = G.from_wgs84(lon, lat, 2263)
         lon2, lat2 = G.to_wgs84(x, y, 2263)
         assert abs(lon2 - lon) < 1e-6 and abs(lat2 - lat) < 1e-6
+
+
+class TestSimplifyDP:
+    """Douglas–Peucker (polygonize's ``simplify_tol``) on hand-worked
+    cases."""
+
+    def test_open_line(self):
+        # chord (0,0)-(4,0): (1,1) is 1 off -> kept; chord (1,1)-(4,0):
+        # (2,0) is 2/sqrt(10) ~ 0.632 off -> kept; chord (2,0)-(4,0):
+        # (3,0.05) is 0.05 off -> dropped
+        line = np.array([[0, 0], [1, 1], [2, 0], [3, 0.05], [4, 0]])
+        out = G.simplify_dp(line, 0.5)
+        assert np.array_equal(out, [[0, 0], [1, 1], [2, 0], [4, 0]])
+
+    def test_tolerance_boundary_drops(self):
+        # (1,0.5) lies exactly tol off the chord: only d > tol is kept
+        line = np.array([[0, 0], [1, 0.5], [2, 0]])
+        assert np.array_equal(G.simplify_dp(line, 0.5), [[0, 0], [2, 0]])
+        assert np.array_equal(G.simplify_dp(line, 0.25), line)
+
+    def test_closed_ring(self):
+        # the start vertex splits at the farthest vertex (10,10); the
+        # (5,0.01) bump on the bottom edge goes
+        ring = np.array([[0, 0], [5, 0.01], [10, 0], [10, 10], [0, 10],
+                         [0, 0]])
+        out = G.simplify_dp(ring, 0.1)
+        assert np.array_equal(out, [[0, 0], [10, 0], [10, 10], [0, 10],
+                                    [0, 0]])
+
+    def test_closed_ring_below_four_vertices_is_returned_as_is(self):
+        # a 10 x 0.1 sliver simplifies to (0,0),(10,0.1),(0,0)
+        ring = np.array([[0, 0], [10, 0], [10, 0.1], [0, 0.1], [0, 0]])
+        assert G.simplify_dp(ring, 1.0) is ring

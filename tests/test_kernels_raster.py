@@ -143,8 +143,8 @@ class TestWarpBilinear:
         lon0, lat0 = G.utm_to_wgs84(np.array([730400.0]),
                                     np.array([3725600.0]), 32616)
         dst_t = (2e-5, 0.0, float(lon0[0]), 0.0, -2e-5, float(lat0[0]))
-        out = R.warp_bilinear(src, src_t, 32616, dst_t, 4326, (40, 40),
-                              nodata=-1)
+        out = R.warp(src, src_t, 32616, dst_t, 4326, (40, 40), nodata=-1,
+                     resampling="bilinear")
         oc, orr = np.meshgrid(np.arange(40) + 0.5, np.arange(40) + 0.5)
         E, N = G.wgs84_to_utm((dst_t[0] * oc + dst_t[2]).ravel(),
                               (dst_t[4] * orr + dst_t[5]).ravel(), 32616)
@@ -156,8 +156,8 @@ class TestWarpBilinear:
         src = np.ones((1, 10, 10))
         src_t = (1.0, 0.0, 0.0, 0.0, -1.0, 10.0)
         dst_t = (1.0, 0.0, 100.0, 0.0, -1.0, 10.0)  # disjoint extent
-        out = R.warp_bilinear(src, src_t, 32616, dst_t, 32616, (5, 5),
-                              nodata=-9)
+        out = R.warp(src, src_t, 32616, dst_t, 32616, (5, 5), nodata=-9,
+                     resampling="bilinear")
         assert (out == -9).all()
 
 

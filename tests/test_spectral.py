@@ -104,26 +104,28 @@ class TestSpectralOperators:
     def test_sar_chain_on_spark(self, spark):
         """decibels(intensity(amplitude(z))) over complex64 bytes — the
         plumbing survives Spark binary columns and dtype round trips."""
-        from solaris_spark.operators import spectral as ops
+        from solaris_spark.operators.spectral import band_math
         rng = np.random.default_rng(2)
         z = (rng.standard_normal((1, 8, 8))
              + 1j * rng.standard_normal((1, 8, 8))).astype(np.complex64)
         df = spark.createDataFrame(
             [("s1", bytearray(z.tobytes()), 8, 8, 1, "complex64")],
             "image_id string, pixels binary, h int, w int, nchan int, dtype string")
-        out = ops.decibels(ops.intensity(df)).collect()[0]
+        out = band_math(band_math(df, S.intensity), S.decibels) \
+            .collect()[0]
         got = np.frombuffer(out["pixels"], dtype=np.dtype(out["dtype"])) \
             .reshape(1, 8, 8)
         exp = S.decibels(S.intensity(z))
         assert np.allclose(got, exp)
 
     def test_rgb_hsv_roundtrip_on_spark(self, spark):
-        from solaris_spark.operators import spectral as ops
+        from solaris_spark.operators.spectral import band_math
         rng = np.random.default_rng(4)
         rgb = rng.integers(0, 256, size=(3, 6, 7)).astype(np.float64)
         df = spark.createDataFrame(
             [("c1", bytearray(rgb.tobytes()), 6, 7, 3, "float64")],
             "image_id string, pixels binary, h int, w int, nchan int, dtype string")
-        out = ops.hsv_to_rgb(ops.rgb_to_hsv(df)).collect()[0]
+        out = band_math(band_math(df, S.rgb_to_hsv), S.hsv_to_rgb) \
+            .collect()[0]
         got = np.frombuffer(out["pixels"], dtype=np.float64).reshape(3, 6, 7)
         assert np.allclose(got, rgb, atol=1e-9)
