@@ -13,6 +13,12 @@ the libjpeg standard progression script and quantizes identically to
 sequential, so the two round-trips decode bit-identically (the parity
 anchor in tests/test_jpeg_progressive.py).
 
+One scan decoder serves both modes: every scan writes into one
+MCU-padded coefficient store per component, allocated at SOF, and one
+dequant + IDCT pass after EOI makes the planes.  A sequential scan is
+the progressive decoder's full band ``(Ss, Se, Ah, Al) = (0, 63, 0, 0)``:
+DC, then an AC-first pass over 1..63 whose EOB is a run of 0.
+
 The sandbox has no libjpeg/pillow to pin cross-decoder parity against
 (the r4 verdict suggested a pinned libjpeg array; no JPEG exists under
 /root/reference and no decoder library is installed), so correctness is
@@ -257,8 +263,7 @@ def decode_jpeg(buf: bytes,
     frame = None
     i = 2
     n = len(buf)
-    planes = None
-    prog_scans = 0
+    n_scans = 0
     while i < n:
         if i + 2 > n:
             raise ValueError("truncated JPEG stream")
@@ -311,17 +316,17 @@ def decode_jpeg(buf: bytes,
             for c in range(nf):
                 cid, hv, tqi = seg[6 + 3 * c: 9 + 3 * c]
                 comps.append(dict(id=cid, h=hv >> 4, v=hv & 15, tq=tqi))
-            frame = dict(H=H, W=W, comps=comps, prog=(m == 0xC2))
-            if m == 0xC2:
-                # persistent coefficient stores, refined scan by scan
-                # (T.81 G.2); MCU-padded so interleaved DC scans fit
-                hmax = max(c["h"] for c in comps)
-                vmax = max(c["v"] for c in comps)
-                mcux = -(-W // (8 * hmax))
-                mcuy = -(-H // (8 * vmax))
-                prog_store = {
-                    c["id"]: np.zeros((mcuy * c["v"], mcux * c["h"], 64),
-                                      dtype=np.int32) for c in comps}
+            hmax = max(c["h"] for c in comps)
+            vmax = max(c["v"] for c in comps)
+            mcux = -(-W // (8 * hmax))
+            mcuy = -(-H // (8 * vmax))
+            # one coefficient store per component (natural order), filled
+            # scan by scan; MCU-padded so interleaved scans fit
+            for c in comps:
+                c["coef"] = np.zeros((mcuy * c["v"], mcux * c["h"], 64),
+                                     dtype=np.int32)
+            frame = dict(H=H, W=W, comps=comps, prog=(m == 0xC2),
+                         hmax=hmax, vmax=vmax, mcux=mcux, mcuy=mcuy)
         elif m in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
                    0xCD, 0xCE, 0xCF):
             raise NotImplementedError(f"JPEG SOF marker 0xFF{m:02X}")
@@ -335,256 +340,160 @@ def decode_jpeg(buf: bytes,
             for c in range(ns):
                 cs, tt = seg[1 + 2 * c: 3 + 2 * c]
                 comp = next(x for x in frame["comps"] if x["id"] == cs)
+                if "q" not in comp:  # latched at its first scan (libjpeg)
+                    if comp["tq"] not in qt:
+                        raise ValueError(f"missing DQT slot {comp['tq']}")
+                    comp["q"] = qt[comp["tq"]]
                 scan.append((comp, tt >> 4, tt & 15))
-            segs, i2 = _split_scan(buf, i + 2 + ln)
-            if frame.get("prog"):
+            if frame["prog"]:
                 ss, se, ahal = seg[1 + 2 * ns: 4 + 2 * ns]
-                _decode_scan_prog(frame, scan, segs, huff, restart,
-                                  ss, se, ahal >> 4, ahal & 15, prog_store)
-                prog_scans += 1
-            else:
-                res = _decode_scan(frame, scan, segs, qt, huff, restart)
-                planes = {**(planes or {}), **res}  # multi-scan sequential
-            i = i2
+                ah, al = ahal >> 4, ahal & 15
+                if ss == 0 and se != 0:
+                    raise ValueError("progressive DC scan with se != 0")
+            else:  # sequential: the full band; the band bytes are unused
+                ss, se, ah, al = 0, 63, 0, 0
+            segs, i = _split_scan(buf, i + 2 + ln)
+            _decode_scan(frame, scan, segs, huff, restart, ss, se, ah, al)
+            n_scans += 1
             continue
         i += 2 + ln
-    if frame is not None and frame.get("prog") and prog_scans:
-        planes = {}
-        for c in frame["comps"]:
-            if c["tq"] not in qt:
-                raise ValueError(f"missing DQT slot {c['tq']}")
-            blocks = prog_store[c["id"]]
-            by, bx = blocks.shape[:2]
-            deq = blocks.reshape(-1, 8, 8) * qt[c["tq"]][None]
-            pix = _idct_blocks(deq.astype(np.float64)) + 128.0
-            pix = pix.reshape(by, bx, 8, 8).transpose(0, 2, 1, 3) \
-                .reshape(by * 8, bx * 8)
-            planes[c["id"]] = np.clip(np.round(pix), 0, 255).astype(np.uint8)
-    if planes is None:
+    if not n_scans:
         raise ValueError("no scan in JPEG")
-    return _assemble(frame, planes, color_transform)
+    return _assemble(frame, color_transform)
 
 
-def _decode_scan(frame, scan, segs, qt, huff, restart):
-    H, W = frame["H"], frame["W"]
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
+def _decode_scan(frame, scan, segs, huff, restart, ss, se, ah, al):
+    """One scan into the components' coefficient stores (T.81 G.2,
+    libjpeg jdhuff/jdphuff semantics).  Per block: the DC coefficient
+    when ``ss == 0`` (first pass: diff-coded at precision ``al``;
+    refinement, ``ah > 0``: one appended bit), then the AC band
+    ``max(ss, 1)..se`` (first pass with EOB-run coding; refinement:
+    newly-significant insertions plus correction bits for already-nonzero
+    history).  A sequential scan is ``(0, 63, 0, 0)``: its EOB is a run
+    of 0.  Interleaved scans walk MCUs; a single-component scan walks the
+    component's own block grid (T.81 A.2.2).  Restart markers reset the
+    DC predictors and the EOB run."""
+    if ss > se or se > 63:
+        raise ValueError(f"bad spectral band {ss}..{se}")
     interleaved = len(scan) > 1
     if interleaved:
-        mcux = -(-W // (8 * hmax))
-        mcuy = -(-H // (8 * vmax))
-        per_mcu = [(c, c["h"] * c["v"]) for c, _, _ in scan]
+        if ss:
+            raise ValueError("progressive AC scan must be single-component")
+        mcux, mcuy = frame["mcux"], frame["mcuy"]
     else:
         c = scan[0][0]
-        cw = -(-(W * c["h"]) // hmax)
-        ch = -(-(H * c["v"]) // vmax)
-        mcux = -(-cw // 8)
-        mcuy = -(-ch // 8)
-        per_mcu = [(c, 1)]
+        mcux = -(-(-(-(frame["W"] * c["h"]) // frame["hmax"])) // 8)
+        mcuy = -(-(-(-(frame["H"] * c["v"]) // frame["vmax"])) // 8)
+    # per component: its store, its blocks per MCU (hb × vb) with their
+    # offsets, its DC and AC tables
+    units = []
+    for c, td, ta in scan:
+        hb, vb = (c["h"], c["v"]) if interleaved else (1, 1)
+        dc, ac = huff.get((0, td)), huff.get((1, ta))
+        if (ss == 0 and ah == 0 and dc is None) or (se and ac is None):
+            raise ValueError("scan uses an undefined Huffman table")
+        units.append((c["coef"], hb, vb,
+                      [(v, h) for v in range(vb) for h in range(hb)],
+                      dc, ac))
     n_mcu = mcux * mcuy
-    # coefficient storage per component: (blocks_y, blocks_x, 8, 8)
-    store = {}
-    for c, _, _ in scan:
-        bx = mcux * (c["h"] if interleaved else 1)
-        by = mcuy * (c["v"] if interleaved else 1)
-        store[c["id"]] = np.zeros((by, bx, 8, 8), dtype=np.int32)
-
+    k0 = max(ss, 1)
+    p1 = 1 << al
+    m1 = -1 << al
+    zz = ZIGZAG.tolist()  # Python ints index the store fastest
     mcu = 0
-    for si, seg in enumerate(segs):
+    for seg in segs:
         rd = _BitReader(seg)
-        pred = {c["id"]: 0 for c, _, _ in scan}
+        pred = [0] * len(units)
+        eobrun = 0
         end = min(n_mcu, mcu + restart) if restart else n_mcu
         while mcu < end:
             my, mx = divmod(mcu, mcux)
-            for (c, td, ta) in scan:
-                hb = c["h"] if interleaved else 1
-                vb = c["v"] if interleaved else 1
-                for v in range(vb):
-                    for h in range(hb):
-                        blk = np.zeros(64, dtype=np.int32)
-                        t = rd.huff(huff[(0, td)])
-                        diff = _extend(rd.read(t), t)
-                        pred[c["id"]] += diff
-                        blk[0] = pred[c["id"]]
-                        k = 1
-                        while k < 64:
-                            rs = rd.huff(huff[(1, ta)])
+            for u, (store, hb, vb, offs, dc, ac) in enumerate(units):
+                for v, h in offs:
+                    st = store[my * vb + v, mx * hb + h]
+                    if ss == 0:
+                        if ah == 0:
+                            t = rd.huff(dc)
+                            pred[u] += _extend(rd.read(t), t)
+                            st[0] = pred[u] << al
+                        elif rd.read(1):
+                            st[0] |= p1
+                    if se == 0:
+                        continue
+                    if ah == 0:  # AC first
+                        if eobrun:
+                            eobrun -= 1
+                            continue
+                        k = k0
+                        while k <= se:
+                            rs = rd.huff(ac)
                             r, s = rs >> 4, rs & 15
                             if s == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("AC index overrun")
-                            blk[ZIGZAG[k]] = _extend(rd.read(s), s)
+                                if r != 15:
+                                    eobrun = (1 << r) - 1
+                                    if r:
+                                        eobrun += rd.read(r)
+                                    break
+                                k += 16  # ZRL
+                            else:
+                                k += r
+                                if k > se:
+                                    raise ValueError("AC band overrun")
+                                st[zz[k]] = _extend(rd.read(s), s) << al
+                                k += 1
+                        continue
+                    k = k0  # AC refinement
+                    if eobrun == 0:
+                        while k <= se:
+                            rs = rd.huff(ac)
+                            r, s = rs >> 4, rs & 15
+                            newval = 0
+                            if s:
+                                if s != 1:
+                                    raise ValueError("AC refine size != 1")
+                                newval = p1 if rd.read(1) else m1
+                            elif r != 15:
+                                eobrun = 1 << r
+                                if r:
+                                    eobrun += rd.read(r)
+                                break  # correction tail handled below
+                            # advance past r zero-history coefficients,
+                            # consuming a correction bit at each nonzero one
+                            while k <= se:
+                                c0 = int(st[zz[k]])
+                                if c0 != 0:
+                                    if rd.read(1) and not (c0 & p1):
+                                        st[zz[k]] = c0 + (p1 if c0 >= 0
+                                                          else m1)
+                                else:
+                                    if r == 0:
+                                        break
+                                    r -= 1
+                                k += 1
+                            if newval:
+                                if k > se:
+                                    raise ValueError("AC refine overrun")
+                                st[zz[k]] = newval
                             k += 1
-                        store[c["id"]][my * vb + v, mx * hb + h] = \
-                            blk.reshape(8, 8)
+                    if eobrun:
+                        while k <= se:  # correction bits under the run
+                            c0 = int(st[zz[k]])
+                            if c0 != 0 and rd.read(1) and not (c0 & p1):
+                                st[zz[k]] = c0 + (p1 if c0 >= 0 else m1)
+                            k += 1
+                        eobrun -= 1
             mcu += 1
-        if restart and si < len(segs) - 1 and mcu >= n_mcu:
-            break
     if mcu < n_mcu:
         raise ValueError(f"truncated scan: {mcu}/{n_mcu} MCUs")
 
-    planes = {}
-    for c, _, _ in scan:
-        blocks = store[c["id"]]
-        by, bx = blocks.shape[:2]
-        deq = blocks.reshape(-1, 8, 8) * qt[c["tq"]][None]
-        pix = _idct_blocks(deq.astype(np.float64)) + 128.0
-        pix = pix.reshape(by, bx, 8, 8).transpose(0, 2, 1, 3) \
-            .reshape(by * 8, bx * 8)
-        planes[c["id"]] = np.clip(np.round(pix), 0, 255).astype(np.uint8)
-    return planes
 
-
-def _decode_scan_prog(frame, scan, segs, huff, restart,
-                      ss, se, ah, al, store):
-    """One progressive scan (T.81 G.2, libjpeg jdphuff semantics): updates
-    the per-component coefficient stores in place.  Four scan kinds:
-    DC first (ss=0, ah=0: diff-coded DC at precision al), DC refinement
-    (ss=0, ah>0: one appended bit per block), AC first (band ss..se with
-    EOB-run coding), AC refinement (newly-significant insertions plus
-    correction bits for already-nonzero history).  Restart markers reset
-    both DC predictors and the EOB run."""
+def _assemble(frame, color_transform: bool | None = None) -> np.ndarray:
+    """Coefficient stores → (C, H, W) uint8: one dequant + IDCT pass per
+    component, box upsampling, then YCbCr→RGB."""
     H, W = frame["H"], frame["W"]
-    hmax = max(c["h"] for c in frame["comps"])
-    vmax = max(c["v"] for c in frame["comps"])
-    interleaved = len(scan) > 1
-    if ss == 0:
-        if se != 0:
-            raise ValueError("progressive DC scan with se != 0")
-        if interleaved:
-            mcux = -(-W // (8 * hmax))
-            mcuy = -(-H // (8 * vmax))
-        else:
-            c = scan[0][0]
-            mcux = -(-(-(-(W * c["h"]) // hmax)) // 8)
-            mcuy = -(-(-(-(H * c["v"]) // vmax)) // 8)
-        n_mcu = mcux * mcuy
-        mcu = 0
-        for si, seg in enumerate(segs):
-            rd = _BitReader(seg)
-            pred = {c["id"]: 0 for c, _, _ in scan}
-            end = min(n_mcu, mcu + restart) if restart else n_mcu
-            while mcu < end:
-                my, mx = divmod(mcu, mcux)
-                for (c, td, _ta) in scan:
-                    hb = c["h"] if interleaved else 1
-                    vb = c["v"] if interleaved else 1
-                    for v in range(vb):
-                        for h in range(hb):
-                            st = store[c["id"]][my * vb + v, mx * hb + h]
-                            if ah == 0:
-                                t = rd.huff(huff[(0, td)])
-                                pred[c["id"]] += _extend(rd.read(t), t)
-                                st[0] = pred[c["id"]] << al
-                            elif rd.read(1):
-                                st[0] |= (1 << al)
-                mcu += 1
-        if mcu < n_mcu:
-            raise ValueError(f"truncated DC scan: {mcu}/{n_mcu} MCUs")
-        return
-
-    # AC scan: always single-component, blocks in component raster order
-    if interleaved:
-        raise ValueError("progressive AC scan must be single-component")
-    if ss > se or se > 63:
-        raise ValueError(f"bad spectral band {ss}..{se}")
-    c, _td, ta = scan[0]
-    ac = huff.get((1, ta))
-    cbw = -(-(-(-(W * c["h"]) // hmax)) // 8)
-    cbh = -(-(-(-(H * c["v"]) // vmax)) // 8)
-    n_blk = cbw * cbh
-    grid = store[c["id"]]
-    p1 = 1 << al
-    m1 = -1 << al
-    blk_i = 0
-    for seg in segs:
-        rd = _BitReader(seg)
-        eobrun = 0
-        end = min(n_blk, blk_i + restart) if restart else n_blk
-        while blk_i < end:
-            by, bx = divmod(blk_i, cbw)
-            st = grid[by, bx]
-            if ah == 0:  # AC first
-                if eobrun:
-                    eobrun -= 1
-                else:
-                    k = ss
-                    while k <= se:
-                        rs = rd.huff(ac)
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r != 15:
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += rd.read(r)
-                                break
-                            k += 16  # ZRL
-                        else:
-                            k += r
-                            if k > se:
-                                raise ValueError("AC band overrun")
-                            st[ZIGZAG[k]] = _extend(rd.read(s), s) << al
-                            k += 1
-            else:  # AC refinement
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        rs = rd.huff(ac)
-                        r, s = rs >> 4, rs & 15
-                        newval = 0
-                        if s:
-                            if s != 1:
-                                raise ValueError("AC refine size != 1")
-                            newval = p1 if rd.read(1) else m1
-                        elif r != 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += rd.read(r)
-                            break  # correction tail handled below
-                        # advance past r zero-history coefficients,
-                        # consuming a correction bit at each nonzero one
-                        while k <= se:
-                            c0 = int(st[ZIGZAG[k]])
-                            if c0 != 0:
-                                if rd.read(1) and not (c0 & p1):
-                                    st[ZIGZAG[k]] = \
-                                        c0 + (p1 if c0 >= 0 else m1)
-                            else:
-                                if r == 0:
-                                    break
-                                r -= 1
-                            k += 1
-                        if newval:
-                            if k > se:
-                                raise ValueError("AC refine overrun")
-                            st[ZIGZAG[k]] = newval
-                        k += 1
-                if eobrun:
-                    while k <= se:  # correction bits under the EOB run
-                        c0 = int(st[ZIGZAG[k]])
-                        if c0 != 0 and rd.read(1) and not (c0 & p1):
-                            st[ZIGZAG[k]] = c0 + (p1 if c0 >= 0 else m1)
-                        k += 1
-                    eobrun -= 1
-            blk_i += 1
-    if blk_i < n_blk:
-        raise ValueError(f"truncated AC scan: {blk_i}/{n_blk} blocks")
-
-
-def _assemble(frame, planes,
-              color_transform: bool | None = None) -> np.ndarray:
-    H, W = frame["H"], frame["W"]
-    comps = frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
+    hmax, vmax = frame["hmax"], frame["vmax"]
     out = []
-    for c in comps:
-        p = planes[c["id"]]
+    for c in frame["comps"]:
         if vmax % c["v"] != 0 or hmax % c["h"] != 0:
             # T.81 permits sampling factors up to 4; non-dividing ratios
             # (e.g. 3:2) would misalign the integer box upsample below —
@@ -592,6 +501,14 @@ def _assemble(frame, planes,
             raise NotImplementedError(
                 f"non-integer sampling ratio {c['h']}x{c['v']} vs "
                 f"{hmax}x{vmax} is not supported")
+        blocks = c["coef"]
+        by, bx = blocks.shape[:2]
+        # a component that no scan reached keeps zero coefficients
+        deq = blocks.reshape(-1, 8, 8) * c.get("q", 0)
+        pix = _idct_blocks(deq.astype(np.float64)) + 128.0
+        pix = pix.reshape(by, bx, 8, 8).transpose(0, 2, 1, 3) \
+            .reshape(by * 8, bx * 8)
+        p = np.clip(np.round(pix), 0, 255).astype(np.uint8)
         fy, fx = vmax // c["v"], hmax // c["h"]
         if fy > 1 or fx > 1:  # box replication upsample
             p = np.repeat(np.repeat(p, fy, axis=0), fx, axis=1)

@@ -1,12 +1,17 @@
 """Pure-NumPy TIFF/BigTIFF reader/writer: strip AND tiled layouts,
 uncompressed / deflate (zlib) / LZW / baseline-JPEG (compression 7 with
-shared JPEGTables) / PackBits compression, horizontal-differencing
-predictor (2) and TechNote-3 floating-point predictor (3 — the
-DEM/elevation float-COG layout), chunky AND separate-plane (planar=2)
-sample layouts, sparse
-(offset/count 0) blocks as nodata fill, multi-IFD overview pyramids —
-the real COG file layout — plus GeoTIFF georegistration tags and
-byte-range windowed reads with a per-process parsed-IFD cache.
+shared JPEGTables) compression (plus PackBits on read, for foreign
+files), horizontal-differencing predictor (2) and TechNote-3
+floating-point predictor (3 — the DEM/elevation float-COG layout), chunky
+AND separate-plane (planar=2) sample layouts, sparse (offset/count 0)
+blocks as nodata fill, multi-IFD overview pyramids — the real COG file
+layout — plus GeoTIFF georegistration tags and byte-range windowed reads
+with a per-process parsed-IFD cache.
+
+The reader sees one block grid: a tile is ``TileLength × TileWidth``
+(stored padded at the edges) and a strip is a full-width tile of
+``min(RowsPerStrip, h)`` rows (the last one may be short), so one
+region loop serves both layouts.
 
 The reference's golden fixtures (e.g. ``solaris/data/sample_geotiff.tif``,
 ``rastertile_test_expected/*.tif``, mask goldens in ``test_mask.py``) are
@@ -155,32 +160,6 @@ def _packbits_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _packbits_encode(data: bytes) -> bytes:
-    """PackBits encoder: runs of >=3 identical bytes become repeat
-    packets (max 128), everything else literal packets (max 128)."""
-    out = bytearray()
-    i = 0
-    n = len(data)
-    while i < n:
-        run = 1
-        while i + run < n and run < 128 and data[i + run] == data[i]:
-            run += 1
-        if run >= 3:
-            out += bytes([257 - run, data[i]])
-            i += run
-            continue
-        lit = i
-        while i < n and i - lit < 128:
-            run = 1
-            while i + run < n and run < 3 and data[i + run] == data[i]:
-                run += 1
-            if run >= 3:
-                break
-            i += 1
-        out += bytes([i - lit - 1]) + data[lit:i]
-    return bytes(out)
-
-
 def _fp_diff(block: np.ndarray, spp: int) -> bytes:
     """Predictor 3 (TIFF TechNote 3 floating-point horizontal
     differencing, libtiff fpDiff semantics) over one (rows, cols, spp)
@@ -233,7 +212,9 @@ class TiffImage:
 @dataclass
 class TiffMeta:
     """Parsed IFD — everything needed to decode any block without
-    re-touching the header.  One per IFD; a COG carries a chain (full-res
+    re-touching the header.  Blocks form a ``block_h × block_w`` grid in
+    row-major order (per plane when planar=2): tiles, or strips as
+    full-width tiles.  One per IFD; a COG carries a chain (full-res
     first, then reduced-resolution overviews).  The chain is cached per
     (path, mtime, size) so windowed readers fetch header/IFDs ONCE per
     file per process (on object stores each IFD fetch is a round-trip;
@@ -247,11 +228,10 @@ class TiffMeta:
     planar: int
     dtype: np.dtype
     predictor: int
-    offsets: tuple          # strip or tile offsets
-    counts: tuple           # strip or tile byte counts
-    rows_per_strip: int | None   # strip layout iff not None
-    tile_w: int | None
-    tile_h: int | None
+    offsets: tuple          # block offsets (plane-major when planar=2)
+    counts: tuple           # block byte counts
+    block_h: int            # tile height, or min(RowsPerStrip, h)
+    block_w: int            # tile width, or w for strips
     transform: tuple | None
     epsg: int | None
     nodata: float | None
@@ -395,13 +375,11 @@ def _parse_meta(rd) -> list[TiffMeta]:
         dtype = np.dtype(bo + _DTYPES[(sampfmt[0], bps[0])])
 
         if 322 in tags:  # tiled layout
-            tile_w, tile_h = get(322)[0], get(323)[0]
+            block_w, block_h = get(322)[0], get(323)[0]
             offsets, counts = get(324), get(325)
-            rows_per_strip = None
-        else:
-            tile_w = tile_h = None
+        else:  # a strip is a full-width tile; the last one may be short
+            block_w, block_h = w, min(get(278, (h,))[0], h)
             offsets, counts = get(273), get(279)
-            rows_per_strip = get(278, (h,))[0]
 
         transform = None
         scale = get(33550)
@@ -442,8 +420,8 @@ def _parse_meta(rd) -> list[TiffMeta]:
         levels.append(TiffMeta(
             bo=bo, w=w, h=h, comp=comp, spp=spp, planar=planar,
             dtype=dtype, predictor=predictor, offsets=tuple(offsets),
-            counts=tuple(counts), rows_per_strip=rows_per_strip,
-            tile_w=tile_w, tile_h=tile_h, transform=transform, epsg=epsg,
+            counts=tuple(counts), block_h=block_h, block_w=block_w,
+            transform=transform, epsg=epsg,
             nodata=nodata, subfile_type=get(254, (0,))[0],
             photometric=photometric, jpeg_tables=jpeg_tables))
     if not levels:
@@ -575,60 +553,46 @@ def _fetch_blocks(rd, meta: TiffMeta, idxs) -> dict[int, bytes]:
 def _read_region(rd, meta: TiffMeta, r0: int, c0: int, r1: int,
                  c1: int) -> np.ndarray:
     """Pixels for rows [r0,r1) × cols [c0,c1) → (C, h, w), fetching ONLY
-    the strips/tiles overlapping the region.  Chunky (planar=1) blocks
-    carry all samples interleaved; separate-plane (planar=2, the Landsat
-    archive layout) blocks are single-sample in plane-major file order
-    (every block of band 0, then band 1, …) — the region fetch walks the
-    same window once per band with the per-plane index offset."""
+    the blocks (tiles, or strips: full-width tiles) overlapping the
+    region.  Chunky (planar=1) blocks carry all samples interleaved;
+    separate-plane (planar=2, the Landsat archive layout) blocks are
+    single-sample in plane-major file order (every block of band 0, then
+    band 1, …) — the region fetch walks the same window once per band
+    with the per-plane index offset.  Each block decodes only the rows
+    that exist: tiles are stored padded, the last strip is short."""
     spp = meta.spp
     planar2 = meta.planar != 1 and spp > 1
     bspp = 1 if planar2 else spp
     bands = range(spp) if planar2 else (0,)
+    bh, bw = meta.block_h, meta.block_w
+    nbx = (meta.w + bw - 1) // bw
+    per_plane = nbx * ((meta.h + bh - 1) // bh)
+    bys = range(r0 // bh, (r1 - 1) // bh + 1)
+    bxs = range(c0 // bw, (c1 - 1) // bw + 1)
+    idxs = [b * per_plane + by * nbx + bx
+            for b in bands for by in bys for bx in bxs]
+    raws = _fetch_blocks(rd, meta, idxs)
     out = np.empty((r1 - r0, c1 - c0, spp), dtype=meta.dtype)
-    if meta.tile_w is not None:
-        tw, th = meta.tile_w, meta.tile_h
-        ntx = (meta.w + tw - 1) // tw
-        nty = (meta.h + th - 1) // th
-        per_plane = ntx * nty
-        tys = range(r0 // th, (r1 - 1) // th + 1)
-        txs = range(c0 // tw, (c1 - 1) // tw + 1)
-        idxs = [b * per_plane + ty * ntx + tx
-                for b in bands for ty in tys for tx in txs]
-        raws = _fetch_blocks(rd, meta, idxs)
-        for b in bands:
-            for ty in tys:
-                for tx in txs:
-                    blk = _decode_block(
-                        meta, raws[b * per_plane + ty * ntx + tx],
-                        th, tw, bspp)
-                    br, bc = ty * th, tx * tw
-                    rr0, rr1 = max(r0, br), min(r1, br + th)
-                    cc0, cc1 = max(c0, bc), min(c1, bc + tw)
-                    sub = blk[rr0 - br: rr1 - br, cc0 - bc: cc1 - bc]
-                    if planar2:
-                        out[rr0 - r0: rr1 - r0,
-                            cc0 - c0: cc1 - c0, b] = sub[..., 0]
-                    else:
-                        out[rr0 - r0: rr1 - r0, cc0 - c0: cc1 - c0] = sub
-    else:
-        rps = meta.rows_per_strip
-        per_plane = (meta.h + rps - 1) // rps
-        strips = range(r0 // rps, (r1 - 1) // rps + 1)
-        idxs = [b * per_plane + s for b in bands for s in strips]
-        raws = _fetch_blocks(rd, meta, idxs)
-        for b in bands:
-            for s in strips:
-                rows = min(rps, meta.h - s * rps)
-                blk = _decode_block(meta, raws[b * per_plane + s],
-                                    rows, meta.w, bspp)
-                sr = s * rps
-                rr0, rr1 = max(r0, sr), min(r1, sr + rows)
-                sub = blk[rr0 - sr: rr1 - sr, c0:c1]
-                if planar2:
-                    out[rr0 - r0: rr1 - r0, :, b] = sub[..., 0]
-                else:
-                    out[rr0 - r0: rr1 - r0, :] = sub
+    for b in bands:
+        for by in bys:
+            y0 = by * bh
+            rows = min(bh, meta.h - y0)
+            rr0, rr1 = max(r0, y0), min(r1, y0 + rows)
+            for bx in bxs:
+                x0 = bx * bw
+                blk = _decode_block(meta, raws[b * per_plane + by * nbx + bx],
+                                    rows, bw, bspp)
+                cc0, cc1 = max(c0, x0), min(c1, x0 + bw)
+                out[rr0 - r0: rr1 - r0, cc0 - c0: cc1 - c0, b: b + bspp] = \
+                    blk[rr0 - y0: rr1 - y0, cc0 - x0: cc1 - x0]
     return np.ascontiguousarray(np.moveaxis(out, -1, 0))
+
+
+def _level_meta(levels: list[TiffMeta], level: int) -> TiffMeta:
+    if not 0 <= level < len(levels):
+        raise ValueError(
+            f"level {level} out of range (file has {len(levels)})")
+    return levels[level]
 
 
 def _level_transform(levels: list[TiffMeta], level: int):
@@ -650,7 +614,8 @@ def _level_transform(levels: list[TiffMeta], level: int):
 def read_tiff(path_or_bytes, level: int = 0) -> TiffImage:
     """Read a TIFF/BigTIFF (strip or tiled; none/deflate; predictor 1/2)
     into a (C, Y, X) numpy array with GeoTIFF transform/EPSG/nodata.
-    ``level`` selects an overview IFD (0 = full resolution);
+    ``level`` selects an overview IFD (0 = full resolution; a level
+    outside ``0 .. n_levels - 1`` raises ValueError);
     ``tags['n_levels']`` reports the pyramid depth."""
     if isinstance(path_or_bytes, (bytes, bytearray)):
         rd = _BytesReader(bytes(path_or_bytes))
@@ -658,7 +623,7 @@ def read_tiff(path_or_bytes, level: int = 0) -> TiffImage:
         with open(path_or_bytes, "rb") as f:
             rd = _BytesReader(f.read())
     levels = _parse_meta(rd)
-    meta = levels[level]
+    meta = _level_meta(levels, level)
     arr = _read_region(rd, meta, 0, 0, meta.h, meta.w)
     return TiffImage(array=arr, transform=_level_transform(levels, level),
                      epsg=meta.epsg or levels[0].epsg,
@@ -683,10 +648,7 @@ def read_tiff_window(path: str, row_off: int, col_off: int,
     rd = _RangeReader(path)
     try:
         levels, cached = _cached_meta(path, rd)
-        if not 0 <= level < len(levels):
-            raise ValueError(
-                f"level {level} out of range (file has {len(levels)})")
-        meta = levels[level]
+        meta = _level_meta(levels, level)
         r0 = max(0, int(row_off))
         c0 = max(0, int(col_off))
         r1 = min(meta.h, int(row_off) + int(height))
@@ -742,8 +704,6 @@ def _build_level(arr: np.ndarray, *, tile, comp_code: int, predictor: int,
             return zlib.compress(raw, 6)
         if comp_code == 5:
             return _lzw_encode(raw)
-        if comp_code == 32773:
-            return _packbits_encode(raw)
         return raw
 
     planes = [chunky] if planar == 1 or c == 1 \
@@ -857,8 +817,7 @@ def write_tiff(path: str, array: np.ndarray, *,
     322-325, dims must be multiples of 16 per the TIFF spec, edge tiles
     zero-padded); ``compress='deflate'`` zlib-compresses each block (tag
     259=8), ``compress='lzw'`` uses TIFF LZW with early change (tag
-    259=5), ``compress='packbits'`` uses the byte-RLE scheme (tag
-    259=32773) and ``compress='jpeg'`` writes new-style JPEG (tag 259=7,
+    259=5) and ``compress='jpeg'`` writes new-style JPEG (tag 259=7,
     TechNote 2): each block is an abbreviated baseline JPEG stream, the
     DQT/DHT tables are shared once via tag 347 (JPEGTables), photometric
     is YCbCr (6) with 4:2:0 subsampling for 3-band uint8 (tags 530/531)
@@ -886,7 +845,7 @@ def write_tiff(path: str, array: np.ndarray, *,
     if arr.dtype.byteorder == ">":
         arr = arr.astype(arr.dtype.newbyteorder("<"))
     comp_code = {None: 1, "none": 1, "deflate": 8, "zlib": 8,
-                 "lzw": 5, "jpeg": 7, "packbits": 32773}[compress]
+                 "lzw": 5, "jpeg": 7}[compress]
     if predictor not in (1, 2, 3):
         raise ValueError(f"unsupported predictor={predictor}")
     if predictor == 2 and arr.dtype.kind == "f":

@@ -26,6 +26,10 @@ No engine code imports this module:
   nodata comparison per grid cell.  The engine's ``raster.cut_windows``,
   ``raster.nodata_fractions`` and per-column ``tiling._tile_rows`` are
   checked against them in ``test_tile_cut.py``.
+- ``packbits_encode`` is a TIFF PackBits (compression 32773) encoder, the
+  inverse of the reader's ``tiffio._packbits_decode``; the engine writes
+  no PackBits, so ``test_tiff_extras.py`` builds its PackBits files with
+  it.
 """
 
 from __future__ import annotations
@@ -443,3 +447,29 @@ def windowed_cells(tile_size, level=0):
                (row.xmin, row.ymin, row.xmax, row.ymax), tile)
 
     return cells
+
+
+def packbits_encode(data: bytes) -> bytes:
+    """PackBits encoder: runs of >=3 identical bytes become repeat
+    packets (max 128), everything else literal packets (max 128)."""
+    out = bytearray()
+    i = 0
+    n = len(data)
+    while i < n:
+        run = 1
+        while i + run < n and run < 128 and data[i + run] == data[i]:
+            run += 1
+        if run >= 3:
+            out += bytes([257 - run, data[i]])
+            i += run
+            continue
+        lit = i
+        while i < n and i - lit < 128:
+            run = 1
+            while i + run < n and run < 3 and data[i + run] == data[i]:
+                run += 1
+            if run >= 3:
+                break
+            i += 1
+        out += bytes([i - lit - 1]) + data[lit:i]
+    return bytes(out)

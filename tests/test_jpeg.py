@@ -17,6 +17,7 @@ import struct
 import numpy as np
 import pytest
 
+from solaris_spark.functions import jpeg as J
 from solaris_spark.functions import pixfmt
 from solaris_spark.functions.jpeg import (ZIGZAG, _fdct_blocks,
                                           _idct_blocks, decode_jpeg,
@@ -174,6 +175,78 @@ class TestRoundTrip:
         arr = _smooth_rgb(64, 64)
         dec = decode_jpeg(encode_jpeg(arr, quality=95))
         assert psnr(arr, dec) > 40.0
+
+
+def _multiscan_sequential(arr, quality, subsample, restart):
+    """The SOF0 stream ``encode_jpeg`` writes, re-scanned with each
+    component in its own non-interleaved scan (T.81 A.2.2: blocks in the
+    component's own raster order, one block per MCU).  The header (tables,
+    DRI, SOF0) is copied from ``encode_jpeg``'s stream and the
+    coefficients are quantized the same way, so both streams must decode
+    to the same pixels."""
+    std = encode_jpeg(arr, quality=quality, subsample=subsample,
+                      restart_interval=restart)
+    i = 2
+    while std[i + 1] != 0xDA:  # walk segments up to the first SOS
+        i += 2 + struct.unpack(">H", std[i + 2: i + 4])[0]
+    out = bytearray(std[:i])
+    if arr.shape[0] == 3:
+        r, g, b = (p.astype(np.float64) for p in arr)
+        planes = [0.299 * r + 0.587 * g + 0.114 * b,
+                  128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
+                  128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b]
+        if subsample:
+            h, w = arr.shape[1:]
+            ph, pw = -(-h // 2) * 2, -(-w // 2) * 2
+            planes[1:] = [
+                np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
+                .reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
+                for p in planes[1:]]
+    else:
+        planes = [arr[0].astype(np.float64)]
+    qts = [J._scaled_qt(J.QT_LUMA, quality).reshape(8, 8),
+           J._scaled_qt(J.QT_CHROMA, quality).reshape(8, 8)]
+    for ci, plane in enumerate(planes):
+        th = min(ci, 1)
+        blocks = J._quantize(J._fdct_blocks(J._plane_blocks(plane) - 128.0),
+                             qts[th])
+        dc = J._enc_table(*(J.DC_CHROMA if th else J.DC_LUMA))
+        ac = J._enc_table(*(J.AC_CHROMA if th else J.AC_LUMA))
+        out += b"\xff\xda" + struct.pack(">HB", 8, 1) \
+            + bytes([ci + 1, th * 0x11, 0, 63, 0])
+        step = restart or len(blocks)
+        for k, s in enumerate(range(0, len(blocks), step)):
+            if k:
+                out += bytes([0xFF, 0xD0 + (k - 1) % 8])
+            wr = J._BitWriter()
+            J._encode_blocks(wr, blocks[s: s + step], dc, ac, 0)
+            wr.flush()
+            out += wr.out
+    return bytes(out + b"\xff\xd9")
+
+
+class TestMultiScanSequential:
+    """SOF0 frames whose components arrive in separate non-interleaved
+    scans (a layout ``encode_jpeg`` never writes)."""
+
+    @pytest.mark.parametrize("h,w", [(17, 23), (40, 9), (33, 50)])
+    @pytest.mark.parametrize("subsample", [True, False])
+    @pytest.mark.parametrize("restart", [0, 3])
+    def test_color_equals_interleaved(self, h, w, subsample, restart):
+        arr = _smooth_rgb(h, w)
+        multi = _multiscan_sequential(arr, 85, subsample, restart)
+        assert multi.count(b"\xff\xda") == 3
+        want = decode_jpeg(encode_jpeg(arr, quality=85, subsample=subsample,
+                                       restart_interval=restart))
+        assert np.array_equal(decode_jpeg(multi), want)
+
+    @pytest.mark.parametrize("restart", [0, 2])
+    def test_gray_equals_interleaved(self, restart):
+        arr = _smooth_rgb(19, 27)[:1]
+        multi = _multiscan_sequential(arr, 60, False, restart)
+        want = decode_jpeg(encode_jpeg(arr, quality=60,
+                                       restart_interval=restart))
+        assert np.array_equal(decode_jpeg(multi), want)
 
 
 class TestErrors:

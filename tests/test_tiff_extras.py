@@ -11,6 +11,8 @@ import pytest
 
 from solaris_spark.functions import tiffio
 from solaris_spark.functions.raster import resize_average
+from tests import oracles as O
+from tests.test_tiff_foreign import _blocked_tiff
 
 
 def _dem(h=130, w=170, dtype=np.float32, seed=5):
@@ -29,32 +31,31 @@ class TestPackBits:
         assert tiffio._packbits_decode(packed) == unpacked
         # our own packing decodes back to the same bytes
         assert tiffio._packbits_decode(
-            tiffio._packbits_encode(unpacked)) == unpacked
+            O.packbits_encode(unpacked)) == unpacked
 
     def test_roundtrip_edge_cases(self):
         for data in (b"", b"\x00", b"ab", b"a" * 1000,
                      bytes(range(256)) * 5, b"xy" * 300 + b"z" * 129):
             assert tiffio._packbits_decode(
-                tiffio._packbits_encode(data)) == data
+                O.packbits_encode(data)) == data
 
-    def test_tiff_roundtrip(self, tmp_path):
+    def test_tiff_roundtrip(self):
         rng = np.random.default_rng(7)
         # runs + noise mix so both packet kinds appear
         a = rng.integers(0, 4, (3, 96, 128)).astype(np.uint8) * 60
         for tile in (None, (64, 64)):
-            p = str(tmp_path / f"pb_{bool(tile)}.tif")
-            tiffio.write_tiff(p, a, tile=tile, compress="packbits")
-            assert np.array_equal(tiffio.read_tiff(p).array, a)
+            blob, _, _ = _blocked_tiff(a, comp=32773,
+                                       encode=O.packbits_encode, tile=tile)
+            assert np.array_equal(tiffio.read_tiff(blob).array, a)
 
-    def test_with_predictor2(self, tmp_path):
+    def test_with_predictor2(self):
         a = np.cumsum(np.ones((1, 64, 64)), axis=2).astype(np.uint8)
-        p = str(tmp_path / "pb2.tif")
-        tiffio.write_tiff(p, a, compress="packbits", predictor=2)
-        assert np.array_equal(tiffio.read_tiff(p).array, a)
+        p2, _, _ = _blocked_tiff(a, comp=32773, encode=O.packbits_encode,
+                                 predictor=2)
+        assert np.array_equal(tiffio.read_tiff(p2).array, a)
         # gradient rows become constant-diff runs: predictor must shrink it
-        p1 = str(tmp_path / "pb1.tif")
-        tiffio.write_tiff(p1, a, compress="packbits")
-        assert os.path.getsize(p) < os.path.getsize(p1)
+        p1, _, _ = _blocked_tiff(a, comp=32773, encode=O.packbits_encode)
+        assert len(p2) < len(p1)
 
 
 class TestFloatPredictor:
@@ -87,8 +88,15 @@ class TestFloatPredictor:
     def test_roundtrip(self, tmp_path, dtype, comp):
         dem = _dem(dtype=dtype)
         p = str(tmp_path / "fp.tif")
-        tiffio.write_tiff(p, dem, tile=(64, 64), compress=comp,
-                          predictor=3, nodata=-9999.0)
+        if comp == "packbits":  # the engine writes no PackBits
+            blob, _, _ = _blocked_tiff(
+                dem, comp=32773, encode=O.packbits_encode, tile=(64, 64),
+                predictor=3, extra=[(42113, 2, b"-9999\x00")])
+            with open(p, "wb") as f:
+                f.write(blob)
+        else:
+            tiffio.write_tiff(p, dem, tile=(64, 64), compress=comp,
+                              predictor=3, nodata=-9999.0)
         out = tiffio.read_tiff(p)
         assert out.array.dtype == dtype
         assert np.array_equal(out.array, dem)
@@ -163,7 +171,7 @@ class TestCodecFuzz:
         @given(st.binary(max_size=2048))
         def rt(data):
             assert tiffio._packbits_decode(
-                tiffio._packbits_encode(data)) == data
+                O.packbits_encode(data)) == data
 
         rt()
 

@@ -199,6 +199,17 @@ class TestBigTiffAndOverviews:
         assert np.array_equal(read_tiff(p, level=1).array, arr[:, ::2, ::2])
         assert read_tiff(p).epsg == 4326
 
+    @pytest.mark.parametrize("level", [2, -1])
+    def test_level_out_of_range(self, tmp_path, level):
+        """Both readers reject a level past the last overview and a
+        negative one (which Python indexing would map to the last)."""
+        p = str(tmp_path / "lv.tif")
+        write_tiff(p, np.zeros((1, 32, 32), dtype=np.uint8), overviews=[2])
+        with pytest.raises(ValueError, match="level .* out of range"):
+            read_tiff(p, level=level)
+        with pytest.raises(ValueError, match="level .* out of range"):
+            read_tiff_window(p, 0, 0, 8, 8, level=level)
+
 
 class TestIfdCache:
     def test_second_window_skips_header(self, tmp_path):
