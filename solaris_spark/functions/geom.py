@@ -147,6 +147,100 @@ def polygon_rings(wkt: str) -> list[np.ndarray]:
     return out
 
 
+# the fast grammar of pack_polygons: a POLYGON or MULTIPOLYGON whose every
+# vertex is exactly two tokens; float() judges each token, as it does in
+# polygon_rings
+_TOKEN = r"[^\s,()]+"
+_VERTEX = rf"{_TOKEN}\s+{_TOKEN}"
+_RING = rf"\(\s*{_VERTEX}(?:\s*,\s*{_VERTEX})*\s*\)"
+_POLY = rf"\(\s*{_RING}(?:\s*,\s*{_RING})*\s*\)"
+_POLYGONAL = re.compile(
+    rf"\s*(?:(?ai:POLYGON)\s*{_POLY}"
+    rf"|(?ai:MULTIPOLYGON)\s*\(\s*{_POLY}(?:\s*,\s*{_POLY})*\s*\))\s*")
+# a ring's text, opened by "(" for a polygon's first ring, "," for a hole
+_RING_TEXT = re.compile(r"([(,])\s*\(([^()]*)\)")
+
+
+def pack_polygons(wkts: list[str]) -> tuple[np.ndarray, np.ndarray,
+                                              np.ndarray]:
+    """polygon_rings of many WKTs, packed: returns ``(xy, offsets,
+    groups)`` where ring k is ``xy[offsets[k]:offsets[k + 1]]`` and comes
+    from ``wkts[groups[k]]``, rings in WKT order, each equal to the one
+    polygon_rings gives (values and orientation).
+
+    A WKT in the fast grammar (``_POLYGONAL``) costs two regex calls; the
+    coordinates of all of them come from one split of their joined ring
+    texts, each value ``float(token)`` as in polygon_rings.  Orientation
+    is one batched shoelace sum per ring about its first vertex, the terms
+    polygon_rings' ring_signed_area sums; its sign is trusted where it
+    clears the summation-order error bound offset_curves uses, and a ring
+    below it (a spike, a zero-area ring) asks ring_signed_area itself.
+    Any other WKT (EMPTY, other types, Z coordinates, odd text) goes
+    through polygon_rings, and any error is the one a loop of polygon_rings
+    raises first."""
+    try:
+        return _pack_polygons(wkts)
+    except Exception:
+        # re-raised, not handled: one WKT at a time again, so the first
+        # bad WKT raises its own error even when a later one failed first
+        # in the batch
+        for w in wkts:
+            polygon_rings(w)
+        raise
+
+
+def _pack_polygons(wkts):
+    texts, outer, groups = [], [], []
+    slow, slow_groups = [], []
+    for i, w in enumerate(wkts):
+        if isinstance(w, str) and _POLYGONAL.fullmatch(w):
+            for opener, ring in _RING_TEXT.findall(w):
+                texts.append(ring)
+                outer.append(opener == "(")
+                groups.append(i)
+        else:
+            rings = polygon_rings(w)
+            slow.extend(rings)
+            slow_groups.extend([i] * len(rings))
+    tokens = " ".join(texts).replace(",", " ").split()
+    xy = np.fromiter(map(float, tokens), dtype=np.float64,
+                     count=len(tokens)).reshape(-1, 2)
+    n = np.fromiter(map(str.count, texts, [","] * len(texts)),
+                    dtype=np.int64, count=len(texts)) + 1
+    xy = xy[_orient_src(xy, n, np.array(outer, dtype=bool))]
+    groups = np.array(groups, dtype=np.int64)
+    if slow:
+        # merge polygon_rings' rings in by WKT index, rings kept in order
+        n_slow = np.fromiter(map(len, slow), dtype=np.int64, count=len(slow))
+        xy = np.concatenate([xy, *slow])
+        n = np.concatenate([n, n_slow])
+        groups = np.concatenate([groups, slow_groups]).astype(np.int64)
+        order = np.argsort(groups, kind="stable")
+        start = np.cumsum(n) - n
+        n, groups = n[order], groups[order]
+        xy = xy[np.repeat(start[order] - (np.cumsum(n) - n), n)
+                + np.arange(len(xy))]
+    return xy, np.concatenate(([0], np.cumsum(n))), groups
+
+
+def _orient_src(xy: np.ndarray, n: np.ndarray,
+                outer: np.ndarray) -> np.ndarray:
+    """Gather index that orients rings stored back to back (``n[k]``
+    vertices each) as polygon_rings does: an ``outer`` ring CCW, a hole CW,
+    a ring of signed area 0 as it is."""
+    rid, start, nxt, _, _ = _ring_walk(xy[:, 0], xy[:, 1], n)
+    first = start[rid]
+    area2, unsure = _shoelace(xy[:, 0], xy[:, 1], rid, first, nxt, n)
+    for k in np.flatnonzero(unsure).tolist():
+        area2[k] = ring_signed_area(xy[start[k]:start[k] + n[k]])
+    flip = (area2 != 0.0) & ((area2 > 0.0) != outer)
+    src = np.arange(len(xy))
+    if flip.any():
+        back = np.repeat(flip, n)
+        src[back] = (2 * first + np.repeat(n, n) - 1 - src)[back]
+    return src
+
+
 # ---------------------------------------------------------------------------
 # Areas / lengths / bounds
 # ---------------------------------------------------------------------------
@@ -716,13 +810,25 @@ def offset_curves(rings: list[np.ndarray], radius: float,
     by a row-wise cumsum (sequential), and ``math.atan2`` / ``math.cos`` /
     ``math.sin`` (NumPy's SIMD versions round differently) mapped over
     the arc vertices only."""
+    n = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
+    xy = (np.concatenate(rings).astype(np.float64, copy=False) if rings
+          else np.empty((0, 2)))
+    return offset_curves_packed(xy, np.concatenate(([0], np.cumsum(n))),
+                                radius, quad_segs)
+
+
+def offset_curves_packed(allv: np.ndarray, offsets: np.ndarray,
+                         radius: float, quad_segs: int = 16
+                         ) -> tuple[np.ndarray, np.ndarray]:
+    """offset_curves over rings stored back to back: ring k is
+    ``allv[offsets[k]:offsets[k + 1]]`` (float64), the layout
+    pack_polygons returns."""
     quantum = math.pi / 2.0 / quad_segs
-    nr = len(rings)
+    nr = len(offsets) - 1
     if nr == 0:
         return np.empty((0, 2)), np.zeros(1, dtype=np.int64)
-    n_in = np.fromiter(map(len, rings), dtype=np.int64, count=nr)
-    allv = np.concatenate(rings).astype(np.float64, copy=False)
-    first_in = np.cumsum(n_in) - n_in
+    n_in = np.diff(offsets)
+    first_in = offsets[:-1]
     closed = (n_in > 1) & (allv[first_in] == allv[first_in + n_in - 1]).all(1)
     # a closed ring's repeated last vertex is not a vertex of the curve
     keep = np.ones(len(allv), dtype=bool)
@@ -746,21 +852,16 @@ def offset_curves(rings: list[np.ndarray], radius: float,
     # one ring_signed_area finds; near-zero rings (spikes, doubled paths)
     # ask ring_signed_area itself, on the ring the sequential recipe uses.
     x0 = st[rid]
-    xc = px - px[x0]
-    yc = py - py[x0]
-    xr, yr = xc[nxt], yc[nxt]
-    a, b = xc * yr, yc * xr
-    area2 = np.bincount(rid, weights=a - b, minlength=nr)
-    bound = np.bincount(rid, weights=np.abs(a) + np.abs(b), minlength=nr)
+    area2, unsure = _shoelace(px, py, rid, x0, nxt, n)
     s = np.where(area2 > 0.0, 1.0, -1.0)
-    unsure = ~is_point & (np.abs(area2) <= 2.0 * _EPS * (n + 2) * bound)
+    unsure &= ~is_point
     for k in np.flatnonzero(unsure).tolist():
         if dropped[k]:
             kept = np.stack([px[st[k]:st[k] + n[k]], py[st[k]:st[k] + n[k]]],
                             axis=1)
             ring = np.vstack([kept, kept[:1]])
         else:
-            ring = rings[k]
+            ring = allv[first_in[k]:first_in[k] + n_in[k]]
         s[k] = 1.0 if ring_signed_area(ring) > 0 else -1.0
 
     # outward unit normal of every edge (edge i runs from vertex i to nxt[i])
@@ -831,6 +932,23 @@ def offset_curves(rings: list[np.ndarray], radius: float,
         # the circle starts and ends at (x + radius, y) exactly
         xy[k[:, 0], 1] = xy[k[:, -1], 1] = pt_y
     return xy, offsets
+
+
+def _shoelace(x: np.ndarray, y: np.ndarray, rid: np.ndarray,
+              first: np.ndarray, nxt: np.ndarray, n: np.ndarray):
+    """Twice the signed area of each ring stored back to back (vertex i in
+    ring ``rid[i]``, whose first vertex is ``first[i]``, followed by
+    ``nxt[i]``), summed about the ring's first vertex from the terms
+    ring_signed_area sums, and which sums are too close to 0 to trust
+    their sign: within the summation-order error bound
+    ``2·eps·(n + 2)·Σ|terms|``, or not finite.  Those rings ask
+    ring_signed_area itself."""
+    xc = x - x[first]
+    yc = y - y[first]
+    a, b = xc * yc[nxt], yc * xc[nxt]
+    area2 = np.bincount(rid, weights=a - b, minlength=len(n))
+    bound = np.bincount(rid, weights=np.abs(a) + np.abs(b), minlength=len(n))
+    return area2, ~(np.abs(area2) > 2.0 * _EPS * (n + 2) * bound)
 
 
 def _ring_walk(px: np.ndarray, py: np.ndarray, n: np.ndarray):

@@ -16,12 +16,15 @@ Every polygon fill in the engine runs on one scanline algorithm: the
 batched crossing generator ``_transitions`` (edges, ``r + 0.5`` scanlines,
 the ``floor(x + 0.5)`` tie rule, one stable integer-key sort, even-odd or
 nonzero winding).  Two finishers turn its ±1 changes into pixels:
-``rasterize_count_packed`` / ``rasterize_count_groups`` cumsum them over
-the whole frame into per-pixel coverage counts (the footprint, contact and
-road masks of an image), and ``rasterize_rings`` cumsums one polygon's
-changes over their bounding window only (instance masks, AOI blanking).
-The image-level count keeps the full-frame cumsum: its window is most of
-the frame, and copying it back into a frame costs more than it saves.
+``rasterize_count_fields`` cumsums one or more layers of them over the
+whole frame into per-pixel coverage counts, each layer in its own bit
+field of one flat frame (the footprint and contact counts of an image in
+one cumsum; ``rasterize_count_packed`` / ``rasterize_count_groups`` are
+its one-layer case, e.g. road masks), and ``rasterize_rings`` cumsums one
+polygon's changes over their bounding window only (instance masks, AOI
+blanking).  The image-level count keeps the full-frame cumsum: its window
+is most of the frame, and copying it back into a frame costs more than it
+saves.
 """
 
 from __future__ import annotations
@@ -178,37 +181,66 @@ def rasterize_count_packed(xy: np.ndarray, offsets: np.ndarray,
     """rasterize_count_groups over rings stored back to back: ring k is
     ``xy[offsets[k]:offsets[k + 1]]`` and belongs to group ``groups[k]``
     (``0 <= groups[k] < n_groups``, rings in group order) — the layout
-    geom.offset_curves returns, so a whole image's buffers are counted
-    without splitting them into per-ring arrays.
+    geom.pack_polygons and geom.offset_curves return, so a whole image's
+    rings are counted without splitting them into per-ring arrays.  The
+    one-layer case of rasterize_count_fields: int32 counts (int64 past
+    2^31 groups)."""
+    return rasterize_count_fields([(xy, offsets, groups, winding)],
+                                  n_groups, shape)[0]
 
-    The full-frame finisher: every group's changes go into one flat int32
-    difference array of ``h·w + 1`` cells, whose cumsum is the counts in
-    place.  A change right of the frame (``col = w``) lands on the next
-    row's first cell and the flat cumsum still equals the row-wise one.
-    Each label covering a pixel adds exactly +1 there, as a per-label
-    loop of single-polygon fills would.  The per-group fixed cost of the
-    crossing generator is paid once for the whole batch — this is the mask
-    kernel's hot path (a SpaceNet-like image carries 100-250 footprints).
-    The counts keep this flat cumsum rather than the window finisher: an
+
+def rasterize_count_fields(layers: list[tuple], n_groups: int,
+                           shape: tuple[int, int]) -> tuple[np.ndarray, int]:
+    """The full-frame finisher: coverage counts of several layers of packed
+    rings, each ``(xy, offsets, groups, winding)`` as in
+    rasterize_count_packed, in ONE flat difference frame and ONE cumsum.
+    Returns ``(frame (H, W), bits)``: layer i's count of a pixel is bit
+    field i of its frame value, ``bits`` wide (fields are non-negative, so
+    the fields of a sum are the sums of the fields).
+
+    The frame is int32 with ``32 // len(layers)``-bit fields while the top
+    field holds ``n_groups`` (the most a pixel can count) below its sign
+    bit, int64 with twice as wide fields past that — a pixel-count limit,
+    not a label limit.  Every group's changes go into one flat difference
+    array of ``h·w + 1`` cells, whose cumsum is the counts in place.  A
+    change right of the frame (``col = w``) lands on the next row's first
+    cell and the flat cumsum still equals the row-wise one.  Each label
+    covering a pixel adds exactly +1 to its layer's field there, as a
+    per-label loop of single-polygon fills would.  The per-group fixed
+    cost of the crossing generator is paid once for the whole batch — this
+    is the mask kernel's hot path (a SpaceNet-like image carries 100-250
+    footprints, counted with their contact buffers in one frame).  The
+    counts keep this flat cumsum rather than the window finisher: an
     image's labels span most of the frame, and copying that window back
     into a frame raised the footprint count of a 1000² synth image with
     200 labels from 9.0 to 12.7 ms (median of 20 calls, 4-vCPU Xeon host).
 
-    The sort key is below ``n_groups·h·(w + 1)``.  A frame whose int32
-    counts fit in memory has far fewer than 2^40 cells, which leaves room
-    for over 2^23 groups per call before int64 wraps, orders of magnitude
-    above any image's label count; past that bound the call raises rather
-    than wrap.
+    The sort key is below ``n_groups·h·(w + 1)``.  A frame whose counts
+    fit in memory has far fewer than 2^40 cells, which leaves room for
+    over 2^23 groups per call before int64 wraps, orders of magnitude
+    above any image's label count; past that bound, or past the widest
+    field, the call raises rather than wrap.
     """
     h, w = shape
+    for dtype in (np.int32, np.int64):
+        bits = 8 * np.dtype(dtype).itemsize // len(layers)
+        if n_groups < 2 ** (bits - 1):
+            break
+    else:
+        raise ValueError(f"{n_groups} groups overflow a {bits}-bit field")
     if n_groups * h * (w + 1) >= 2 ** 63:
         raise ValueError(f"{n_groups} groups on a {h}x{w} frame "
                          "overflow the int64 crossing key")
-    diff = np.zeros(h * w + 1, dtype=np.int32)
-    rows, cols, steps = _transitions(xy, offsets, groups, shape, winding)
-    np.add.at(diff, rows * w + cols, steps)
+    # every layer's changes before the frame: the crossing generator's
+    # temporaries and the frame are never alive together
+    changes = [_transitions(xy, offsets, groups, shape, winding)
+               for xy, offsets, groups, winding in layers]
+    diff = np.zeros(h * w + 1, dtype=dtype)
+    for i, (rows, cols, steps) in enumerate(changes):
+        np.add.at(diff, rows * w + cols,
+                  steps.astype(dtype, copy=False) << (bits * i))
     np.cumsum(diff, out=diff)
-    return diff[:h * w].reshape(h, w)
+    return diff[:h * w].reshape(h, w), bits
 
 
 # ---------------------------------------------------------------------------
@@ -255,7 +287,7 @@ def _minmax_reflect(a: np.ndarray, lo: int, hi: int, axis: int, is_min: bool) ->
         if out is None:
             out = view.copy()
         else:
-            out = np.minimum(out, view) if is_min else np.maximum(out, view)
+            (np.minimum if is_min else np.maximum)(out, view, out=out)
     return out
 
 

@@ -844,8 +844,12 @@ def write_tiff(path: str, array: np.ndarray, *,
     arr = np.asarray(array)
     if arr.dtype.byteorder == ">":
         arr = arr.astype(arr.dtype.newbyteorder("<"))
-    comp_code = {None: 1, "none": 1, "deflate": 8, "zlib": 8,
-                 "lzw": 5, "jpeg": 7}[compress]
+    codes = {None: 1, "none": 1, "deflate": 8, "zlib": 8, "lzw": 5,
+             "jpeg": 7}
+    if compress not in codes:
+        raise ValueError(f"unsupported compress={compress!r} (supported: "
+                         f"{', '.join(map(repr, codes))})")
+    comp_code = codes[compress]
     if predictor not in (1, 2, 3):
         raise ValueError(f"unsupported predictor={predictor}")
     if predictor == 2 and arr.dtype.kind == "f":

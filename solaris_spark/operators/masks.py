@@ -54,50 +54,57 @@ def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
                       burn_value: int = 255,
                       transform=None) -> np.ndarray:
     """(H, W, C) multi-channel mask for one image — df_to_px_mask parity.
-    `transform` converts geo→pixel when labels are in CRS coords."""
-    inv = G.affine_invert(transform) if transform is not None else None
-    ring_sets = []
-    for w in wkts:
-        rings = G.polygon_rings(w)
-        if inv is not None:
-            rings = [G.affine_apply(r, inv) for r in rings]
-        ring_sets.append(rings)
+    `transform` converts geo→pixel when labels are in CRS coords.
 
-    out = {}
-    fp = None
-    if set(channels) & {"footprint", "boundary", "contact"}:
-        # one batched scanline pass over ALL footprints: rasterize_count_groups
-        # sorts every label's crossings by one integer (label, row, column)
-        # key and counts coverage per label; union == any coverage since
-        # every shape burns the same value
-        cnt_fp = R.rasterize_count_groups(ring_sets, shape)
-        fp = np.where(cnt_fp > 0, np.uint8(burn_value), np.uint8(0))
-    if "footprint" in channels:
-        out["footprint"] = fp
-    if "boundary" in channels:
-        if boundary_type == "outer":
-            b = R.dilation_square(fp, boundary_width) ^ fp
-        else:
-            b = R.erosion_square(fp, boundary_width) ^ fp
-        out["boundary"] = (b > 0).astype(np.uint8) * burn_value
+    One geom.pack_polygons parse of every label, one affine over the
+    packed vertices, and one raster.rasterize_count_fields frame: the
+    footprint layer (even-odd, grouped by label) counts in the low bit
+    field; the contact layer (every ring's GEOS-parity offset curves of
+    at least 4 vertices — a collapsed label buffers to a disc — filled
+    nonzero-winding, grouped by label, each covering label adding exactly
+    +1 per pixel) in the high one.  The footprint is the union (low field
+    > 0, since every shape burns the same value), the contact is where at
+    least two buffers meet off every footprint; each channel is written
+    straight into the output, which reuses the spent frame's memory."""
+    if not channels:
+        raise ValueError("build_mask_arrays needs at least one channel")
+    h, w = shape
+    xy, offsets, groups = G.pack_polygons(wkts)
+    if transform is not None:
+        xy = G.affine_apply(xy, G.affine_invert(transform))
+    layers = [(xy, offsets, groups, False)]
     if "contact" in channels:
-        # every label's GEOS-parity offset curves (a collapsed label buffers
-        # to a disc) in one geom.offset_curves pass, counted in one
-        # nonzero-winding pass grouped by label: each covering label adds
-        # exactly +1 per pixel
-        rings, groups = [], []
-        for gi, label in enumerate(ring_sets):
-            for r in label:
-                if len(r) >= 4:
-                    rings.append(r)
-                    groups.append(gi)
-        xy, offsets = G.offset_curves(rings, contact_spacing / 2.0)
-        cnt = R.rasterize_count_packed(xy, offsets,
-                                       np.asarray(groups, dtype=np.int64),
-                                       len(ring_sets), shape, winding=True)
-        c = (cnt >= 2) & (fp == 0)
-        out["contact"] = c.astype(np.uint8) * burn_value
-    return np.stack([out[c] for c in channels], axis=-1)
+        n = np.diff(offsets)
+        keep = n >= 4
+        if not keep.all():
+            xy = xy[np.repeat(keep, n)]
+            offsets = np.concatenate(([0], np.cumsum(n[keep])))
+        cxy, coffsets = G.offset_curves_packed(xy, offsets,
+                                               contact_spacing / 2.0)
+        layers.append((cxy, coffsets, groups[keep], True))
+    frame, bits = R.rasterize_count_fields(layers, len(wkts), shape)
+    made = {}
+    if "contact" in channels:
+        made["contact"] = frame >= (2 << bits)
+        # contact read: from here the frame keeps its low field only
+        np.bitwise_and(frame, (1 << bits) - 1, out=frame)
+    made["footprint"] = fp = frame != 0
+    if "contact" in channels:
+        np.greater(made["contact"], fp, out=made["contact"])
+    if "boundary" in channels:
+        morph = (R.dilation_square if boundary_type == "outer"
+                 else R.erosion_square)
+        made["boundary"] = morph(fp, boundary_width) ^ fp
+    # the spent frame, already resident, holds the output when it fits
+    # (4 or 8 bytes a pixel): a fresh array would cost a page fault per
+    # 4 KB of output
+    buf = frame.view(np.uint8).reshape(-1)
+    size = h * w * len(channels)
+    out = (buf[:size] if size <= buf.size
+           else np.empty(size, dtype=np.uint8)).reshape(h, w, len(channels))
+    for k, name in enumerate(channels):
+        out[..., k] = made[name].view(np.uint8)
+    return np.multiply(out, np.uint8(burn_value), out=out)
 
 
 def image_masks(labels: DataFrame, images_geo: DataFrame,

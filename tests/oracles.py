@@ -12,6 +12,10 @@ No engine code imports this module:
   ``rasterize_geos_buffer`` (buffer(polygon, r) filled with nonzero
   winding) build the reference's masks one label at a time; the golden
   tests in ``test_kernels_raster.py`` pin them to GDAL's output.
+- ``build_mask_arrays`` is the mask kernel one channel at a time (a
+  polygon_rings parse per label, one count frame per channel), the byte
+  reference of the engine's one-parse, one-frame ``masks.build_mask_arrays``
+  in ``test_mask_parity.py``.
 - ``clip_polygon_rect_area``, ``polygon_intersection_area`` and
   ``iou_wkt`` are single-pair area and IoU kernels beside the engine's
   prepared ``geom.polygon_sets`` / ``geom.overlap``.
@@ -201,7 +205,7 @@ def rasterize_geos_buffer(rings: list[np.ndarray], radius: float,
     scanline-fill them with NONZERO winding and the GDAL boundary tie
     rules.  Boundary lines coincide with the GEOS buffer polygon's, so ties
     resolve identically.  masks.build_mask_arrays counts every label's
-    curves of an image in one rasterize_count_packed call instead.
+    curves of an image in one rasterize_count_fields frame instead.
 
     With ``accumulate=True`` (and an integer ``out``), adds +1 to the
     buffered-union pixels in place — overlap counting with O(bbox) traffic
@@ -213,6 +217,53 @@ def rasterize_geos_buffer(rings: list[np.ndarray], radius: float,
                                winding=True, accumulate=True)
     m = rasterize_rings(curves, shape, winding=True)
     return m > 0
+
+
+def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
+                      channels: list[str],
+                      boundary_width: int = 3, boundary_type: str = "inner",
+                      contact_spacing: float = 10.0,
+                      burn_value: int = 255,
+                      transform=None) -> np.ndarray:
+    """The mask kernel one channel at a time: polygon_rings per label, one
+    rasterize_count_groups footprint count, one rasterize_count_packed
+    count of every label's offset curves, np.where / np.stack — the byte
+    reference of ``masks.build_mask_arrays``."""
+    inv = G.affine_invert(transform) if transform is not None else None
+    ring_sets = []
+    for w in wkts:
+        rings = G.polygon_rings(w)
+        if inv is not None:
+            rings = [G.affine_apply(r, inv) for r in rings]
+        ring_sets.append(rings)
+
+    out = {}
+    fp = None
+    if set(channels) & {"footprint", "boundary", "contact"}:
+        cnt_fp = R.rasterize_count_groups(ring_sets, shape)
+        fp = np.where(cnt_fp > 0, np.uint8(burn_value), np.uint8(0))
+    if "footprint" in channels:
+        out["footprint"] = fp
+    if "boundary" in channels:
+        if boundary_type == "outer":
+            b = R.dilation_square(fp, boundary_width) ^ fp
+        else:
+            b = R.erosion_square(fp, boundary_width) ^ fp
+        out["boundary"] = (b > 0).astype(np.uint8) * burn_value
+    if "contact" in channels:
+        rings, groups = [], []
+        for gi, label in enumerate(ring_sets):
+            for r in label:
+                if len(r) >= 4:
+                    rings.append(r)
+                    groups.append(gi)
+        xy, offsets = G.offset_curves(rings, contact_spacing / 2.0)
+        cnt = R.rasterize_count_packed(xy, offsets,
+                                       np.asarray(groups, dtype=np.int64),
+                                       len(ring_sets), shape, winding=True)
+        c = (cnt >= 2) & (fp == 0)
+        out["contact"] = c.astype(np.uint8) * burn_value
+    return np.stack([out[c] for c in channels], axis=-1)
 
 
 # ---------------------------------------------------------------------------

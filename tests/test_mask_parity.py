@@ -1,13 +1,15 @@
 """Fixture-free parity of the batched mask path.
 
-``masks.build_mask_arrays`` (one batched scanline pass per channel) must be
-byte-equal to the same masks built label by label from the single-polygon
-kernels in ``tests/oracles.py`` — the recipe of
+``masks.build_mask_arrays`` (one packed parse, one count frame for every
+channel) must be byte-equal to the same masks built label by label from
+the single-polygon kernels in ``tests/oracles.py`` — the recipe of
 ``tests/test_kernels_raster.py::contact_mask``, which checks those kernels
-against the reference goldens.  Labels come from
-``synth.synth_labels_for``, so these tests need no reference fixtures.
+against the reference goldens — and to ``oracles.build_mask_arrays``, the
+kernel one channel at a time.  Labels come from ``synth.synth_labels_for``,
+so these tests need no reference fixtures.
 """
 
+import itertools
 import math
 
 import numpy as np
@@ -102,3 +104,89 @@ class TestCollapsedLabel:
         assert (np.hypot(cols + 0.5 - 12, rows + 0.5 - 10)
                 <= spacing / 2).all()
 
+
+
+# every subset in every order, and five channels: more output bytes a
+# pixel than the int32 count frame the output otherwise reuses
+SUBSETS = [list(p) for r in (1, 2, 3)
+           for p in itertools.permutations(CHANNELS, r)] + \
+    [["contact", "footprint", "boundary", "footprint", "contact"]]
+
+
+def assert_same_as_oracle(wkts, shape, channels, **kw):
+    got = masks.build_mask_arrays(wkts, shape, channels, **kw)
+    want = O.build_mask_arrays(wkts, shape, channels, **kw)
+    assert got.dtype == want.dtype and got.shape == want.shape
+    assert got.tobytes() == want.tobytes()
+    return got
+
+
+@pytest.mark.parametrize("boundary_type", ["inner", "outer"])
+@pytest.mark.parametrize("seed", [3, 7, 101])
+def test_matches_channel_at_a_time_oracle(seed, boundary_type):
+    wkts = synth.synth_labels_for(seed, f"img_{seed:04d}", 400, 300, 60, 120)
+    got = assert_same_as_oracle(wkts, (300, 400), CHANNELS,
+                                boundary_type=boundary_type,
+                                boundary_width=2 + seed % 3)
+    assert all(got[..., k].any() for k in range(3))
+
+
+@pytest.mark.parametrize("channels", SUBSETS, ids="-".join)
+def test_every_channel_subset_and_order(channels):
+    wkts = synth.synth_labels_for(5, "img_0005", 160, 120, 20, 40)
+    assert_same_as_oracle(wkts, (120, 160), channels,
+                          boundary_type="outer", burn_value=200)
+
+
+def test_rotated_affine_transform():
+    """Labels in CRS coordinates under a rotated (b, d != 0) affine."""
+    t = (0.31, 0.05, 552000.25, 0.04, -0.29, 4182000.75)
+    wkts = [G.transform_wkt(w, t) for w in
+            synth.synth_labels_for(9, "img_0009", 240, 200, 30, 50)]
+    got = assert_same_as_oracle(wkts, (200, 240), CHANNELS, transform=t)
+    assert got[..., 0].any() and got[..., 2].any()
+
+
+def test_no_labels():
+    got = assert_same_as_oracle([], (7, 9), ["contact", "footprint"])
+    assert got.shape == (7, 9, 2) and not got.any()
+
+
+def test_mixed_wkt_kinds():
+    """EMPTY, Z, a hole and a label too small to buffer in one image."""
+    wkts = ["POLYGON EMPTY",
+            "POLYGON Z ((2 2 5, 12 2 5, 12 12 5, 2 12 5, 2 2 5))",
+            "multipolygon (((14 3, 24 3, 24 13, 14 13, 14 3), "
+            "(16 5, 16 9, 20 9, 20 5, 16 5)))",
+            "POLYGON ((3 15, 9 15, 6 19, 3 15))",
+            "POLYGON ((30 30, 30 30, 30 30))"]
+    assert_same_as_oracle(wkts, (24, 32), CHANNELS)
+
+
+def test_more_labels_than_a_16_bit_field():
+    """Past 2^15 labels the two counts need 32-bit fields: 2^16 + 1
+    overlapping squares count past 16 bits in both."""
+    n = 2 ** 16 + 1
+    wkts = [f"POLYGON (({1 + (i % 3) / 4} 1, 4 1, 4 4, 1 4, "
+            f"{1 + (i % 3) / 4} 1))" for i in range(n)]
+    got = assert_same_as_oracle(wkts, (6, 7), CHANNELS)
+    assert got[..., 0].any() and got[..., 2].any()
+
+
+@pytest.mark.parametrize("n", [1, 2 ** 15 - 1, 2 ** 15, 2 ** 16 + 1])
+def test_count_fields_width(n):
+    """rasterize_count_fields keeps int32 16-bit fields while n groups fit
+    below the top field's sign bit, int64 32-bit fields past that."""
+    xy, offsets, groups = G.pack_polygons(["POLYGON ((1 1, 3 1, 3 3, 1 1))"])
+    xy = np.tile(xy, (n, 1))
+    offsets = np.arange(n + 1) * 4
+    groups = np.arange(n)
+    frame, bits = R.rasterize_count_fields(
+        [(xy, offsets, groups, False), (xy, offsets, groups, True)], n,
+        (4, 4))
+    wide = n >= 2 ** 15
+    assert frame.dtype == (np.int64 if wide else np.int32)
+    assert bits == (32 if wide else 16)
+    counts = R.rasterize_count_packed(xy, offsets, groups, n, (4, 4))
+    assert counts.dtype == np.int32 and counts.max() == n
+    assert np.array_equal(frame, counts.astype(frame.dtype) * (1 + (1 << bits)))

@@ -57,6 +57,18 @@ class TestPackBits:
         p1, _, _ = _blocked_tiff(a, comp=32773, encode=O.packbits_encode)
         assert len(p2) < len(p1)
 
+    @pytest.mark.parametrize("compress", ["packbits", "zstd", "LZW"])
+    def test_writer_rejects_unknown_compress(self, tmp_path, compress):
+        """The writer has no PackBits (or other unknown) encoder: a
+        ValueError naming the supported values, and no file."""
+        p = tmp_path / "x.tif"
+        with pytest.raises(ValueError, match=rf"compress='{compress}'.*"
+                           r"supported: None, 'none', 'deflate', 'zlib', "
+                           r"'lzw', 'jpeg'"):
+            tiffio.write_tiff(str(p), np.zeros((1, 16, 16), dtype=np.uint8),
+                              compress=compress)
+        assert not p.exists()
+
 
 class TestFloatPredictor:
     def test_byte_layout_hand_vector(self):
