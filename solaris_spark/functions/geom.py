@@ -526,47 +526,35 @@ def clip_polygon_rect(rings: list[np.ndarray], rect,
 # (solaris/eval/iou.py:33-38: iou = inter / (a1 + a2 − inter)).
 # ---------------------------------------------------------------------------
 
-def fan_decompose(rings: list[np.ndarray], origin) -> list:
+def fan_decompose(rings: list[np.ndarray], origin
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Precompute the signed fan-triangle decomposition of a polygon in a
     caller-chosen local frame — reuse across many intersection-area calls
     (the greedy/SCOT joins evaluate each polygon against many partners).
-    Returns [(sign, xs(3,), ys(3,), bbox(4,)), ...] for the triangles
-    (origin, v_k, v_k+1) of non-zero area."""
+    Returns the triangles (origin, v_k, v_k+1) of non-zero area, ring by
+    ring, as arrays: vertices V (T, 3, 2) with V[:, 0] the origin, signs
+    S (T,) of ±1 and bboxes B (T, 4) [xmin, ymin, xmax, ymax]."""
     shift = np.asarray(origin, dtype=np.float64)
-    out = []
-    for ring in rings:
-        r = ring - shift
-        x0, y0, x1, y1 = r[:-1, 0], r[:-1, 1], r[1:, 0], r[1:, 1]
-        a2 = x0 * y1 - y0 * x1
-        for k in np.flatnonzero(a2 != 0.0):
-            xs = np.array([0.0, x0[k], x1[k]])
-            ys = np.array([0.0, y0[k], y1[k]])
-            out.append((1.0 if a2[k] > 0 else -1.0, xs, ys,
-                        (xs.min(), ys.min(), xs.max(), ys.max())))
-    return out
+    p = np.concatenate([np.empty((0, 2))] + [r[:-1] - shift for r in rings])
+    q = np.concatenate([np.empty((0, 2))] + [r[1:] - shift for r in rings])
+    a2 = p[:, 0] * q[:, 1] - p[:, 1] * q[:, 0]
+    keep = a2 != 0.0
+    p, q = p[keep], q[keep]
+    V = np.zeros((len(p), 3, 2))
+    V[:, 1], V[:, 2] = p, q
+    lo = np.minimum(np.minimum(p, q), 0.0)
+    hi = np.maximum(np.maximum(p, q), 0.0)
+    return V, np.where(a2[keep] > 0, 1.0, -1.0), np.hstack([lo, hi])
 
 
-def _pack_tris(tris):
-    n = len(tris)
-    V = np.empty((n, 3, 2))
-    S = np.empty(n)
-    B = np.empty((n, 4))
-    for i, (s, xs, ys, bb) in enumerate(tris):
-        V[i, :, 0] = xs
-        V[i, :, 1] = ys
-        S[i] = s
-        B[i] = bb
-    return V, S, B
-
-
-def tri_intersection_area(tris_a: list, tris_b: list) -> float:
+def tri_intersection_area(tris_a: tuple, tris_b: tuple) -> float:
     """area(A∩B) from two fan_decompose results sharing the SAME origin —
     the engine's one polygon intersection-area algorithm: every
     bbox-overlapping triangle pair Sutherland–Hodgman-clipped at once."""
-    if not tris_a or not tris_b:
+    VA, SA, BA = tris_a
+    VB, SB, BB = tris_b
+    if not len(SA) or not len(SB):
         return 0.0
-    VA, SA, BA = _pack_tris(tris_a)
-    VB, SB, BB = _pack_tris(tris_b)
     # bbox-overlapping pairs only
     ov = ~((BB[None, :, 0] > BA[:, None, 2]) | (BB[None, :, 2] < BA[:, None, 0])
            | (BB[None, :, 1] > BA[:, None, 3]) | (BB[None, :, 3] < BA[:, None, 1]))
@@ -636,20 +624,48 @@ def tri_intersection_area(tris_a: list, tris_b: list) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Prepared polygon sets + the one IoU rule (solaris/eval/iou.py:33-38) behind
-# every matching join: parse, area, bbox and fan triangles once per polygon,
-# then any number of (A, B) pairs through tri_intersection_area.
+# Prepared polygons: one pack_polygons parse per batch, then per polygon
+# its rings, signed ring areas, area and bbox.  Every matching join adds
+# fan triangles once per polygon (polygon_sets), then any number of (A, B)
+# pairs go through tri_intersection_area and the one IoU rule
+# (solaris/eval/iou.py:33-38).
 # ---------------------------------------------------------------------------
 
+def ring_groups(xy: np.ndarray, offsets: np.ndarray, groups: np.ndarray,
+                n: int) -> list[list[np.ndarray]]:
+    """Per group 0..n-1 of packed rings (pack_polygons' layout), its rings
+    as views into ``xy``."""
+    out = [[] for _ in range(n)]
+    for k, g in enumerate(groups.tolist()):
+        out[g].append(xy[offsets[k]:offsets[k + 1]])
+    return out
+
+
 class PolygonSet(NamedTuple):
-    rings: list        # per polygon: polygon_rings (orientation-normalized)
-    area: np.ndarray   # (n,) unsigned areas
+    rings: list        # per polygon: polygon_rings, views into one array
+    signed: list       # per polygon: each ring's ring_signed_area
+    area: np.ndarray   # (n,) unsigned areas |Σ signed|
     bbox: np.ndarray   # (n, 4) closed [xmin, ymin, xmax, ymax]
-    tris: list         # per polygon: fan_decompose in the shared frame
+    tris: list | None = None   # polygon_sets' fan_decompose per polygon
 
 
-def _rings_area(rings: list[np.ndarray]) -> float:
-    return abs(sum(ring_signed_area(r) for r in rings))
+def prepare_polygons(wkts: list[str]) -> PolygonSet:
+    """Polygons of many WKTs from one pack_polygons call, errors as it
+    raises them.  An EMPTY WKT has no rings, area 0 and an inverted bbox
+    that overlaps nothing."""
+    xy, offsets, groups = pack_polygons(wkts)
+    n = len(wkts)
+    rings = ring_groups(xy, offsets, groups, n)
+    signed = [[ring_signed_area(r) for r in rr] for rr in rings]
+    bbox = np.tile([np.inf, np.inf, -np.inf, -np.inf], (n, 1))
+    if len(groups):
+        # a polygon's rings are contiguous in xy, in WKT order
+        has, first = np.unique(groups, return_index=True)
+        bbox[has, :2] = np.minimum.reduceat(xy, offsets[first], axis=0)
+        bbox[has, 2:] = np.maximum.reduceat(xy, offsets[first], axis=0)
+    return PolygonSet(rings, signed,
+                      np.array([abs(sum(s)) for s in signed],
+                               dtype=np.float64), bbox)
 
 
 def polygon_sets(*wkt_lists) -> list[PolygonSet]:
@@ -657,24 +673,16 @@ def polygon_sets(*wkt_lists) -> list[PolygonSet]:
     every vertex) so fan triangles are decomposed once per polygon and
     reused across every partner.  A None / empty / EMPTY WKT has no rings,
     area 0 and an inverted bbox that overlaps nothing."""
-    rings = [[polygon_rings(w) if w else [] for w in wl] for wl in wkt_lists]
-    allr = [r for rs in rings for rr in rs for r in rr]
+    polys = [prepare_polygons([w or "POLYGON EMPTY" for w in wl])
+             for wl in wkt_lists]
+    allr = [r for p in polys for rr in p.rings for r in rr]
     if allr:
         allc = np.vstack(allr)
         origin = (float(allc[:, 0].mean()), float(allc[:, 1].mean()))
     else:
         origin = (0.0, 0.0)
-    out = []
-    for rs in rings:
-        bbox = np.tile([np.inf, np.inf, -np.inf, -np.inf], (len(rs), 1))
-        for k, rr in enumerate(rs):
-            if rr:
-                c = np.vstack(rr)
-                bbox[k] = [*c.min(axis=0), *c.max(axis=0)]
-        out.append(PolygonSet(
-            rs, np.array([_rings_area(rr) for rr in rs], dtype=np.float64),
-            bbox, [fan_decompose(rr, origin) for rr in rs]))
-    return out
+    return [p._replace(tris=[fan_decompose(rr, origin) for rr in p.rings])
+            for p in polys]
 
 
 def bbox_hits(bboxes: np.ndarray, box) -> np.ndarray:
@@ -784,11 +792,13 @@ def simplify_dp(coords: np.ndarray, tol: float) -> np.ndarray:
 _EPS = float(np.finfo(np.float64).eps)
 
 
-def offset_curves(rings: list[np.ndarray], radius: float,
-                  quad_segs: int = 16) -> tuple[np.ndarray, np.ndarray]:
+def offset_curves(xy: np.ndarray, offsets: np.ndarray, radius: float
+                  ) -> tuple[np.ndarray, np.ndarray]:
     """Raw GEOS/JTS-style offset curves of many rings in one NumPy pass,
-    radius > 0, round joins.  Returns ``(xy, offsets)``: the closed curve of
-    ``rings[k]`` is ``xy[offsets[k]:offsets[k + 1]]``.
+    radius > 0, round joins, quad_segs = 16.  The rings are stored back to
+    back, ring k at ``xy[offsets[k]:offsets[k + 1]]`` (float64: the layout
+    pack_polygons and doubled_paths return); returns ``(xy, offsets)`` of
+    the closed curves in the same layout, curve k from ring k.
 
     Replicates OffsetSegmentGenerator vertex placement: each edge offset
     outward by `radius`; convex vertices filled with arc points spaced
@@ -810,30 +820,17 @@ def offset_curves(rings: list[np.ndarray], radius: float,
     by a row-wise cumsum (sequential), and ``math.atan2`` / ``math.cos`` /
     ``math.sin`` (NumPy's SIMD versions round differently) mapped over
     the arc vertices only."""
-    n = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
-    xy = (np.concatenate(rings).astype(np.float64, copy=False) if rings
-          else np.empty((0, 2)))
-    return offset_curves_packed(xy, np.concatenate(([0], np.cumsum(n))),
-                                radius, quad_segs)
-
-
-def offset_curves_packed(allv: np.ndarray, offsets: np.ndarray,
-                         radius: float, quad_segs: int = 16
-                         ) -> tuple[np.ndarray, np.ndarray]:
-    """offset_curves over rings stored back to back: ring k is
-    ``allv[offsets[k]:offsets[k + 1]]`` (float64), the layout
-    pack_polygons returns."""
-    quantum = math.pi / 2.0 / quad_segs
+    quantum = math.pi / 2.0 / 16
     nr = len(offsets) - 1
     if nr == 0:
         return np.empty((0, 2)), np.zeros(1, dtype=np.int64)
     n_in = np.diff(offsets)
     first_in = offsets[:-1]
-    closed = (n_in > 1) & (allv[first_in] == allv[first_in + n_in - 1]).all(1)
+    closed = (n_in > 1) & (xy[first_in] == xy[first_in + n_in - 1]).all(1)
     # a closed ring's repeated last vertex is not a vertex of the curve
-    keep = np.ones(len(allv), dtype=bool)
+    keep = np.ones(len(xy), dtype=bool)
     keep[(first_in + n_in - 1)[closed]] = False
-    px, py = allv[keep, 0], allv[keep, 1]
+    px, py = xy[keep, 0], xy[keep, 1]
     n = n_in - closed
     rid, st, nxt, dx, dy = _ring_walk(px, py, n)
     moved = (dx != 0.0) | (dy != 0.0)
@@ -861,7 +858,7 @@ def offset_curves_packed(allv: np.ndarray, offsets: np.ndarray,
                             axis=1)
             ring = np.vstack([kept, kept[:1]])
         else:
-            ring = allv[first_in[k]:first_in[k] + n_in[k]]
+            ring = xy[first_in[k]:first_in[k] + n_in[k]]
         s[k] = 1.0 if ring_signed_area(ring) > 0 else -1.0
 
     # outward unit normal of every edge (edge i runs from vertex i to nxt[i])
@@ -972,29 +969,28 @@ def _unit_circle(quantum: float) -> tuple[np.ndarray, np.ndarray]:
     return np.array(cx), np.array(cy)
 
 
-def offset_curve(ring: np.ndarray, radius: float,
-                 quad_segs: int = 16) -> np.ndarray:
-    """offset_curves of one ring: its closed (m, 2) curve."""
-    return offset_curves([ring], radius, quad_segs)[0]
-
-
-def line_offset_curve(coords: np.ndarray, radius: float,
-                      quad_segs: int = 16) -> np.ndarray:
-    """GEOS-style buffer outline of an open LINESTRING with round caps:
-    the doubled path p0..pn-1..p1 closed is a degenerate ring whose offset
-    curve IS the line buffer outline (direction reversals at both ends turn
-    into the π cap arcs of offset_curves)."""
-    pts = np.asarray(coords, dtype=np.float64)
-    if len(pts) >= 2 and np.array_equal(pts[0], pts[-1]):
-        # closed linestring: buffer = ring offset both sides; approximate by
-        # treating as the doubled open path of its vertices
-        pts = pts[:-1]
-    doubled = np.vstack([pts, pts[-2:0:-1], pts[:1]])
-    # a doubled path has zero signed area, so its orientation is whichever
-    # sign the shoelace rounding gives; both sides of the path get the
-    # same capsule under nonzero winding (sides swap, arcs sweep the other
-    # way)
-    return offset_curve(doubled, radius, quad_segs)
+def doubled_paths(xy: np.ndarray, offsets: np.ndarray
+                  ) -> tuple[np.ndarray, np.ndarray]:
+    """Open lines stored back to back (line k is ``xy[offsets[k]:
+    offsets[k + 1]]``, at least one vertex) as the closed doubled paths
+    p0..pn-1..p1, p0, packed the same way: offset_curves of a doubled path
+    IS the GEOS buffer outline of its line with round caps (the direction
+    reversals at both ends turn into π cap arcs).  A closed line (first
+    vertex = last) is doubled without its closing vertex.  A doubled path
+    has zero signed area, so its orientation is whichever sign the
+    shoelace rounding gives; both sides of the path get the same capsule
+    under nonzero winding (sides swap, arcs sweep the other way)."""
+    n = np.diff(offsets)
+    start = offsets[:-1]
+    m = n - ((n >= 2) & (xy[start] == xy[start + n - 1]).all(axis=1))
+    size = m + np.maximum(m - 2, 0) + 1
+    ends = np.cumsum(size)
+    j = np.arange(size.sum()) - np.repeat(ends - size, size)
+    mk = np.repeat(m, size)
+    # out along the line, back to its second vertex, then the first again
+    j = np.where(j < mk, j, 2 * (mk - 1) - j)
+    j[ends - 1] = 0
+    return xy[np.repeat(start, size) + j], np.concatenate(([0], ends))
 
 
 # ---------------------------------------------------------------------------

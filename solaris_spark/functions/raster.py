@@ -16,15 +16,15 @@ Every polygon fill in the engine runs on one scanline algorithm: the
 batched crossing generator ``_transitions`` (edges, ``r + 0.5`` scanlines,
 the ``floor(x + 0.5)`` tie rule, one stable integer-key sort, even-odd or
 nonzero winding).  Two finishers turn its ±1 changes into pixels:
-``rasterize_count_fields`` cumsums one or more layers of them over the
+``rasterize_count_fields`` cumsums one or more layers of packed rings
+(the ``(xy, offsets, groups)`` layout of geom.pack_polygons) over the
 whole frame into per-pixel coverage counts, each layer in its own bit
 field of one flat frame (the footprint and contact counts of an image in
-one cumsum; ``rasterize_count_packed`` / ``rasterize_count_groups`` are
-its one-layer case, e.g. road masks), and ``rasterize_rings`` cumsums one
-polygon's changes over their bounding window only (instance masks, AOI
-blanking).  The image-level count keeps the full-frame cumsum: its window
-is most of the frame, and copying it back into a frame costs more than it
-saves.
+one cumsum; the road buffers of an image as one layer), and
+``rasterize_rings`` cumsums one polygon's changes over their bounding
+window only (instance masks, AOI blanking).  The image-level count keeps
+the full-frame cumsum: its window is most of the frame, and copying it
+back into a frame costs more than it saves.
 """
 
 from __future__ import annotations
@@ -120,14 +120,6 @@ def _transitions(xy: np.ndarray, offsets: np.ndarray, groups: np.ndarray,
     return rows[sel], col[sel], trans[nz].astype(np.int32)
 
 
-def _pack(rings: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
-    """(xy, offsets): the rings back to back, ring k at
-    ``xy[offsets[k]:offsets[k + 1]]``."""
-    n = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
-    xy = np.concatenate(rings) if rings else np.empty((0, 2))
-    return xy, np.concatenate(([0], np.cumsum(n)))
-
-
 def rasterize_rings(rings: list[np.ndarray], shape: tuple[int, int],
                     value: int = 1) -> np.ndarray:
     """Fill one polygon (exterior + hole rings, even-odd) into a new uint8
@@ -143,9 +135,11 @@ def rasterize_rings(rings: list[np.ndarray], shape: tuple[int, int],
     first cell, where the row's changes have already summed to zero, so
     the window needs no extra column."""
     out = np.zeros(shape, dtype=np.uint8)
-    rows, cols, steps = _transitions(*_pack(rings),
-                                     np.zeros(len(rings), dtype=np.int64),
-                                     shape, False)
+    n = np.fromiter(map(len, rings), dtype=np.int64, count=len(rings))
+    rows, cols, steps = _transitions(
+        np.concatenate(rings) if rings else np.empty((0, 2)),
+        np.concatenate(([0], np.cumsum(n))), np.zeros(len(rings), np.int64),
+        shape, False)
     if len(rows) == 0:
         return out
     rlo, rhi = int(rows.min()), int(rows.max())
@@ -158,45 +152,19 @@ def rasterize_rings(rings: list[np.ndarray], shape: tuple[int, int],
     return out
 
 
-def rasterize_count_groups(ring_groups: list[list[np.ndarray]],
-                           shape: tuple[int, int],
-                           winding: bool = False) -> np.ndarray:
-    """Coverage COUNTS over many polygons in ONE vectorized pass: returns an
-    int32 (H, W) array where each pixel holds the number of `ring_groups`
-    entries covering it (each group = one polygon's rings, filled even-odd,
-    or nonzero-winding when ``winding``)."""
-    rings, groups = [], []
-    for gi, group in enumerate(ring_groups):
-        rings.extend(group)
-        groups.extend([gi] * len(group))
-    return rasterize_count_packed(*_pack(rings),
-                                  np.asarray(groups, dtype=np.int64),
-                                  len(ring_groups), shape, winding)
-
-
-def rasterize_count_packed(xy: np.ndarray, offsets: np.ndarray,
-                           groups: np.ndarray, n_groups: int,
-                           shape: tuple[int, int],
-                           winding: bool = False) -> np.ndarray:
-    """rasterize_count_groups over rings stored back to back: ring k is
-    ``xy[offsets[k]:offsets[k + 1]]`` and belongs to group ``groups[k]``
-    (``0 <= groups[k] < n_groups``, rings in group order) — the layout
-    geom.pack_polygons and geom.offset_curves return, so a whole image's
-    rings are counted without splitting them into per-ring arrays.  The
-    one-layer case of rasterize_count_fields: int32 counts (int64 past
-    2^31 groups)."""
-    return rasterize_count_fields([(xy, offsets, groups, winding)],
-                                  n_groups, shape)[0]
-
-
 def rasterize_count_fields(layers: list[tuple], n_groups: int,
                            shape: tuple[int, int]) -> tuple[np.ndarray, int]:
-    """The full-frame finisher: coverage counts of several layers of packed
-    rings, each ``(xy, offsets, groups, winding)`` as in
-    rasterize_count_packed, in ONE flat difference frame and ONE cumsum.
-    Returns ``(frame (H, W), bits)``: layer i's count of a pixel is bit
-    field i of its frame value, ``bits`` wide (fields are non-negative, so
-    the fields of a sum are the sums of the fields).
+    """The full-frame finisher: coverage counts of one or more layers of
+    packed rings in ONE flat difference frame and ONE cumsum.  A layer is
+    ``(xy, offsets, groups, winding)``: ring k is ``xy[offsets[k]:
+    offsets[k + 1]]`` and belongs to group ``groups[k]`` (``0 <= groups[k]
+    < n_groups``, rings in group order) — the layout geom.pack_polygons
+    and geom.offset_curves return — filled even-odd per group, or
+    nonzero-winding when ``winding``; a pixel's count is the number of
+    groups covering it.  Returns ``(frame (H, W), bits)``: layer i's count
+    of a pixel is bit field i of its frame value, ``bits`` wide (fields
+    are non-negative, so the fields of a sum are the sums of the fields;
+    one layer is the plain counts).
 
     The frame is int32 with ``32 // len(layers)``-bit fields while the top
     field holds ``n_groups`` (the most a pixel can count) below its sign

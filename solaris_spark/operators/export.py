@@ -40,17 +40,15 @@ def yolo_labels(labels: DataFrame, images: DataFrame,
         T.StructField("area", T.DoubleType()), T.StructField("overlap", T.DoubleType()),
     ]))
     def geom_stats(wkt, im_w, im_h):
+        polys = G.prepare_polygons(wkt)
         rows = []
-        for w, size in zip(wkt, np.asarray([im_w, im_h], dtype=np.float64).T):
-            rings = G.polygon_rings(w)
-            allc = np.vstack(rings)
-            sas = [G.ring_signed_area(r) for r in rings]
-            area = abs(sum(sas))
+        for rings, sas, area, bbox, size in zip(
+                polys.rings, polys.signed, polys.area.tolist(),
+                polys.bbox.tolist(),
+                np.asarray([im_w, im_h], dtype=np.float64).T):
             rect = (0.0, 0.0, float(size[0]), float(size[1]))
             inter = G.clip_polygon_rect(rings, rect, sas)[1]
-            rows.append((float(allc[:, 0].min()), float(allc[:, 1].min()),
-                         float(allc[:, 0].max()), float(allc[:, 1].max()),
-                         area, inter / area if area > 0 else 0.0))
+            rows.append((*bbox, area, inter / area if area > 0 else 0.0))
         return rows
 
     # asNondeterministic: keeps the overlap filter from duplicating the

@@ -79,8 +79,7 @@ def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
         if not keep.all():
             xy = xy[np.repeat(keep, n)]
             offsets = np.concatenate(([0], np.cumsum(n[keep])))
-        cxy, coffsets = G.offset_curves_packed(xy, offsets,
-                                               contact_spacing / 2.0)
+        cxy, coffsets = G.offset_curves(xy, offsets, contact_spacing / 2.0)
         layers.append((cxy, coffsets, groups[keep], True))
     frame, bits = R.rasterize_count_fields(layers, len(wkts), shape)
     made = {}
@@ -159,35 +158,32 @@ def road_masks(roads: DataFrame, images_geo: DataFrame,
         inv = G.affine_invert(_affine(r0))
         lines = []
         for r in rows:
-            if r.wkt is None:
-                continue
-            gtype, parts = G.wkt_parse(r.wkt)
-            if gtype == "LINESTRING":
-                lines.append(parts[0])
-            elif gtype == "MULTILINESTRING":
-                lines.extend(parts)
-        zone = None
+            if r.wkt is not None:
+                gtype, parts = G.wkt_parse(r.wkt)
+                if gtype in ("LINESTRING", "MULTILINESTRING"):
+                    lines.extend(parts)   # an EMPTY line has no parts
+        xy = np.concatenate(lines) if lines else np.empty((0, 2))
+        offsets = np.concatenate(([0], np.cumsum([len(ln) for ln in lines],
+                                                 dtype=np.int64)))
+        radius = width / 2.0
         if lines and meters and r0.epsg == 4326:
-            allc = np.vstack(lines)
-            zone = G.utm_zone_epsg(float(allc[:, 0].mean()),
-                                   float(allc[:, 1].mean()))
-        curves = []
-        for ln in lines:
-            if zone is not None:
-                # buffer in metres, then lon/lat → pixels
-                E, N = G.wgs84_to_utm(ln[:, 0], ln[:, 1], zone)
-                curve = G.line_offset_curve(np.stack([E, N], axis=1),
-                                            width / 2.0)
-                lon, lat = G.utm_to_wgs84(curve[:, 0], curve[:, 1], zone)
-                curve = G.affine_apply(np.stack([lon, lat], axis=1), inv)
-            else:
-                # CRS → pixels (no CRS: already pixels), then buffer
-                curve = G.line_offset_curve(
-                    G.affine_apply(ln, inv) if r0.epsg else ln, width / 2.0)
-            curves.append([curve])
+            # buffer in metres in the UTM zone of all vertices' mean, then
+            # lon/lat → pixels
+            zone = G.utm_zone_epsg(float(xy[:, 0].mean()),
+                                   float(xy[:, 1].mean()))
+            E, N = G.wgs84_to_utm(xy[:, 0], xy[:, 1], zone)
+            cxy, coffsets = G.offset_curves(
+                *G.doubled_paths(np.stack([E, N], axis=1), offsets), radius)
+            lon, lat = G.utm_to_wgs84(cxy[:, 0], cxy[:, 1], zone)
+            cxy = G.affine_apply(np.stack([lon, lat], axis=1), inv)
+        else:
+            # CRS → pixels (no CRS: already pixels), then buffer
+            cxy, coffsets = G.offset_curves(*G.doubled_paths(
+                G.affine_apply(xy, inv) if r0.epsg else xy, offsets), radius)
         # one nonzero-winding count over every curve, one group each: the
         # union of same-value burns is any coverage
-        cnt = R.rasterize_count_groups(curves, shape, winding=True)
+        cnt, _ = R.rasterize_count_fields(
+            [(cxy, coffsets, np.arange(len(lines)), True)], len(lines), shape)
         mask = np.where(cnt > 0, np.uint8(burn_value), np.uint8(0))
         yield (r0.image_id, mask, shape[0], shape[1], 1, "road")
 
@@ -277,11 +273,15 @@ def _instance_rows(do_transform: bool, burn_value: int, has_img: bool):
         if has_img and r0.nodata is not None and not math.isnan(r0.nodata):
             arr = pixfmt.decode(r0.fmt, r0.bytes, r0.w, r0.h)
             bad = (arr == r0.nodata).any(axis=0)
-        for r in rows:
-            rings = G.polygon_rings(r.wkt) if r.wkt is not None else []
-            if inv is not None:
-                rings = [G.affine_apply(ring, inv) for ring in rings]
-            m = R.rasterize_rings(rings, shape, value=burn_value)
+        # one parse and one affine over the image's labels; a NULL
+        # geometry is an EMPTY one
+        xy, offsets, groups = G.pack_polygons(
+            ["POLYGON EMPTY" if r.wkt is None else r.wkt for r in rows])
+        if inv is not None:
+            xy = G.affine_apply(xy, inv)
+        for r, label in zip(rows, G.ring_groups(xy, offsets, groups,
+                                                len(rows))):
+            m = R.rasterize_rings(label, shape, value=burn_value)
             if bad is not None:
                 m = np.where(bad, 0, m)
             yield (r.image_id, r.label_id, m, shape[0], shape[1])

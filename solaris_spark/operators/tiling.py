@@ -99,6 +99,8 @@ def _grid_for_image(a, e, c, f, w, h, tile_yx, aoi_rings=None):
     xmax = c + w * a
     ymin = f + h * e  # e < 0
     if aoi_rings is not None:
+        if not aoi_rings:   # an EMPTY AOI meets no cell
+            return np.empty((0, 4))
         allc = np.vstack(aoi_rings)
         xmin = max(xmin, float(allc[:, 0].min()))
         xmax = min(xmax, float(allc[:, 0].max()))
@@ -535,18 +537,14 @@ def vector_tiles(labels_geo_df: DataFrame, grid: DataFrame,
     def clip(wkt, *bounds):
         out = []
         # a label spans ~3-4 candidate tiles, so its WKT recurs within the
-        # batch: parse + signed areas once per distinct geometry (r6;
-        # values reused verbatim, so results are unchanged)
-        parsed: dict = {}
+        # batch: one prepare_polygons call over the distinct geometries
+        index = {w: k for k, w in enumerate(dict.fromkeys(wkt))}
+        polys = G.prepare_polygons(list(index))
+        areas = polys.area.tolist()
         for w, rect in zip(wkt, np.asarray(bounds, dtype=np.float64).T):
-            ent = parsed.get(w)
-            if ent is None:
-                rings = G.polygon_rings(w)
-                sas = [G.ring_signed_area(r) for r in rings]
-                ent = (rings, sas, abs(sum(sas)))
-                parsed[w] = ent
-            rings, sas, oa = ent
-            clipped, ca = G.clip_polygon_rect(rings, tuple(rect), sas)
+            k = index[w]
+            clipped, ca = G.clip_polygon_rect(polys.rings[k], tuple(rect),
+                                              polys.signed[k])
             pix = None
             if tile_px is not None and clipped:
                 # inverse tile affine: geo → tile-local pixel frame
@@ -557,7 +555,7 @@ def vector_tiles(labels_geo_df: DataFrame, grid: DataFrame,
                       for r in clipped]
                 pix = G.wkt_dump("POLYGON", px)
             out.append((G.wkt_dump("POLYGON", clipped) if clipped else None,
-                        pix, oa, ca))
+                        pix, areas[k], ca))
         return out
 
     # asNondeterministic: the partialDec filter + the column projection

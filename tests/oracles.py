@@ -1,7 +1,8 @@
 """Independent reference kernels the tests compare the engine against.
 
 These are the per-polygon forms the engine's batched kernels replaced.
-No engine code imports this module:
+No engine code imports this module (``test_arrow_udfs.py`` greps the
+engine for such an import):
 
 - ``rasterize_rings`` is the lexsort scanline fill (crossings sorted by
   (row, x) and paired, even-odd or nonzero winding, REPLACE or ADD into a
@@ -12,10 +13,19 @@ No engine code imports this module:
   ``rasterize_geos_buffer`` (buffer(polygon, r) filled with nonzero
   winding) build the reference's masks one label at a time; the golden
   tests in ``test_kernels_raster.py`` pin them to GDAL's output.
+- ``oracle_ring_curve`` (with ``oracle_point_curve`` and
+  ``oracle_line_curve``) is the sequential per-vertex GEOS offset-curve
+  recipe that the engine's batched ``geom.offset_curves`` must equal bit
+  for bit (``test_offset_curves.py``); the per-line road oracle in
+  ``test_spark_masks.py`` buffers with it.
 - ``build_mask_arrays`` is the mask kernel one channel at a time (a
   polygon_rings parse per label, one count frame per channel), the byte
   reference of the engine's one-parse, one-frame ``masks.build_mask_arrays``
   in ``test_mask_parity.py``.
+- ``pack`` lays lists of rings out in the engine's packed
+  ``(xy, offsets, groups)`` form (this module packs its own rings), and
+  ``count`` feeds them to the engine's one-layer
+  ``raster.rasterize_count_fields``.
 - ``clip_polygon_rect_area``, ``polygon_intersection_area`` and
   ``iou_wkt`` are single-pair area and IoU kernels beside the engine's
   prepared ``geom.polygon_sets`` / ``geom.overlap``.
@@ -37,6 +47,8 @@ No engine code imports this module:
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
@@ -195,6 +207,28 @@ def rasterize_shapes(shapes, shape: tuple[int, int],
     return out
 
 
+def pack(ring_groups: list[list[np.ndarray]]):
+    """``(xy, offsets, groups)``: lists of rings packed back to back in the
+    layout of geom.pack_polygons, ring k at ``xy[offsets[k]:offsets[k +
+    1]]`` in group ``groups[k]`` (its list's index)."""
+    rings = [r for group in ring_groups for r in group]
+    n = [len(r) for r in rings]
+    xy = (np.concatenate(rings).astype(np.float64, copy=False) if rings
+          else np.empty((0, 2)))
+    return (xy, np.concatenate(([0], np.cumsum(n, dtype=np.int64))),
+            np.repeat(np.arange(len(ring_groups)),
+                      [len(group) for group in ring_groups]))
+
+
+def count(ring_groups: list[list[np.ndarray]], shape: tuple[int, int],
+          winding: bool = False) -> np.ndarray:
+    """Per-pixel coverage counts of polygons (one list of rings each) from
+    the engine's one-layer rasterize_count_fields over their packed
+    rings."""
+    return R.rasterize_count_fields([(*pack(ring_groups), winding)],
+                                    len(ring_groups), shape)[0]
+
+
 def rasterize_geos_buffer(rings: list[np.ndarray], radius: float,
                           shape: tuple[int, int],
                           out: np.ndarray | None = None,
@@ -210,13 +244,105 @@ def rasterize_geos_buffer(rings: list[np.ndarray], radius: float,
     With ``accumulate=True`` (and an integer ``out``), adds +1 to the
     buffered-union pixels in place — overlap counting with O(bbox) traffic
     per call instead of a full-frame bool + astype + add."""
-    xy, offsets = G.offset_curves([r for r in rings if len(r) >= 4], radius)
+    xy, offsets, _ = pack([[r for r in rings if len(r) >= 4]])
+    xy, offsets = G.offset_curves(xy, offsets, radius)
     curves = np.split(xy, offsets[1:-1])
     if accumulate:
         return rasterize_rings(curves, shape, out=out, value=1,
                                winding=True, accumulate=True)
     m = rasterize_rings(curves, shape, winding=True)
     return m > 0
+
+
+def oracle_ring_curve(ring: np.ndarray, radius: float,
+                      quad_segs: int = 16) -> np.ndarray:
+    """GEOS/JTS OffsetSegmentGenerator placement, one vertex at a time:
+    each edge offset outward by ``radius``; a convex vertex gets fillet arc
+    points spaced totalAngle / round(totalAngle / quantum); an exact
+    direction reversal gets a π cap; repeated vertices are dropped first
+    and a ring collapsed to one point is createCircle's polygon."""
+    pts = ring[:-1] if np.array_equal(ring[0], ring[-1]) else ring
+    n = len(pts)
+    s = 1.0 if G.ring_signed_area(ring) > 0 else -1.0
+    quantum = math.pi / 2.0 / quad_segs
+    px_ = pts[:, 0]
+    py_ = pts[:, 1]
+    nx_ = np.concatenate((px_[1:], px_[:1]))
+    ny_ = np.concatenate((py_[1:], py_[:1]))
+    dxs_a = nx_ - px_
+    dys_a = ny_ - py_
+    moved = (dxs_a != 0.0) | (dys_a != 0.0)
+    if not moved.all():
+        if not moved.any():
+            return oracle_point_curve(float(px_[0]), float(py_[0]), radius,
+                                      quantum)
+        kept = pts[moved]
+        return oracle_ring_curve(np.vstack([kept, kept[:1]]), radius,
+                                 quad_segs)
+    lens_a = np.sqrt(dxs_a ** 2 + dys_a ** 2)
+    xs = px_.tolist()
+    ys = py_.tolist()
+    dxs = dxs_a.tolist()
+    dys = dys_a.tolist()
+    lens = lens_a.tolist()
+    out = []
+    for i in range(n):
+        j = (i - 1) % n
+        if s > 0:
+            n1 = (dys[j] / lens[j], -dxs[j] / lens[j])
+            n2 = (dys[i] / lens[i], -dxs[i] / lens[i])
+        else:
+            n1 = (-dys[j] / lens[j], dxs[j] / lens[j])
+            n2 = (-dys[i] / lens[i], dxs[i] / lens[i])
+        vx, vy = xs[i], ys[i]
+        p1 = (vx + radius * n1[0], vy + radius * n1[1])
+        p2 = (vx + radius * n2[0], vy + radius * n2[1])
+        cross = dxs[j] * dys[i] - dys[j] * dxs[i]
+        dot = dxs[j] * dxs[i] + dys[j] * dys[i]
+        out.append(p1)
+        is_cap = cross == 0.0 and dot < 0.0
+        if s * cross > 0.0 or is_cap:
+            th1 = math.atan2(n1[1], n1[0])
+            th2 = math.atan2(n2[1], n2[0])
+            total = math.pi if is_cap else (s * (th2 - th1)) % (2 * math.pi)
+            if 0.0 < total <= math.pi:
+                nsegs = int(total / quantum + 0.5)
+                if nsegs >= 1:
+                    delta = total / nsegs
+                    ang = delta
+                    while ang < total - 1e-12:
+                        th = th1 + s * ang
+                        out.append((vx + radius * math.cos(th),
+                                    vy + radius * math.sin(th)))
+                        ang += delta
+        out.append(p2)
+    out.append(out[0])
+    return np.asarray(out, dtype=np.float64)
+
+
+def oracle_point_curve(x: float, y: float, radius: float,
+                       quantum: float) -> np.ndarray:
+    """OffsetSegmentGenerator.createCircle: the closed clockwise circle
+    starting at (x + radius, y), one vertex per fillet quantum."""
+    nsegs = int(2.0 * math.pi / quantum + 0.5)
+    inc = 2.0 * math.pi / nsegs
+    out = [(x + radius, y)]
+    for i in range(1, nsegs):
+        th = -i * inc
+        out.append((x + radius * math.cos(th), y + radius * math.sin(th)))
+    out.append(out[0])
+    return np.asarray(out, dtype=np.float64)
+
+
+def oracle_line_curve(coords: np.ndarray, radius: float) -> np.ndarray:
+    """The GEOS buffer outline of an open line with round caps: the
+    offset curve of its doubled path p0..pn-1..p1, p0 (a closed line
+    without its closing vertex)."""
+    pts = np.asarray(coords, dtype=np.float64)
+    if len(pts) >= 2 and np.array_equal(pts[0], pts[-1]):
+        pts = pts[:-1]
+    return oracle_ring_curve(np.vstack([pts, pts[-2:0:-1], pts[:1]]),
+                             radius)
 
 
 def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
@@ -226,9 +352,9 @@ def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
                       burn_value: int = 255,
                       transform=None) -> np.ndarray:
     """The mask kernel one channel at a time: polygon_rings per label, one
-    rasterize_count_groups footprint count, one rasterize_count_packed
-    count of every label's offset curves, np.where / np.stack — the byte
-    reference of ``masks.build_mask_arrays``."""
+    one-layer rasterize_count_fields footprint count, one of every label's
+    offset curves, np.where / np.stack — the byte reference of
+    ``masks.build_mask_arrays``."""
     inv = G.affine_invert(transform) if transform is not None else None
     ring_sets = []
     for w in wkts:
@@ -240,7 +366,7 @@ def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
     out = {}
     fp = None
     if set(channels) & {"footprint", "boundary", "contact"}:
-        cnt_fp = R.rasterize_count_groups(ring_sets, shape)
+        cnt_fp = count(ring_sets, shape)
         fp = np.where(cnt_fp > 0, np.uint8(burn_value), np.uint8(0))
     if "footprint" in channels:
         out["footprint"] = fp
@@ -251,16 +377,11 @@ def build_mask_arrays(wkts: list[str], shape: tuple[int, int],
             b = R.erosion_square(fp, boundary_width) ^ fp
         out["boundary"] = (b > 0).astype(np.uint8) * burn_value
     if "contact" in channels:
-        rings, groups = [], []
-        for gi, label in enumerate(ring_sets):
-            for r in label:
-                if len(r) >= 4:
-                    rings.append(r)
-                    groups.append(gi)
-        xy, offsets = G.offset_curves(rings, contact_spacing / 2.0)
-        cnt = R.rasterize_count_packed(xy, offsets,
-                                       np.asarray(groups, dtype=np.int64),
-                                       len(ring_sets), shape, winding=True)
+        xy, offsets, groups = pack([[r for r in label if len(r) >= 4]
+                                    for label in ring_sets])
+        xy, offsets = G.offset_curves(xy, offsets, contact_spacing / 2.0)
+        cnt = R.rasterize_count_fields([(xy, offsets, groups, True)],
+                                       len(ring_sets), shape)[0]
         c = (cnt >= 2) & (fp == 0)
         out["contact"] = c.astype(np.uint8) * burn_value
     return np.stack([out[c] for c in channels], axis=-1)
@@ -299,7 +420,8 @@ def iou_wkt(wkt_a: str, wkt_b: str) -> float:
     pair's own bbox-overlap frame (polygon_intersection_area)."""
     ra, rb = G.polygon_rings(wkt_a), G.polygon_rings(wkt_b)
     return G._iou(polygon_intersection_area(ra, rb),
-                  G._rings_area(ra), G._rings_area(rb))[1]
+                  abs(sum(G.ring_signed_area(r) for r in ra)),
+                  abs(sum(G.ring_signed_area(r) for r in rb)))[1]
 
 
 # ---------------------------------------------------------------------------

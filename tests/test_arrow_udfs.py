@@ -388,6 +388,16 @@ def test_no_pandas_in_engine():
     assert not hits, hits
 
 
+def test_no_oracle_imports_in_engine():
+    """tests/oracles.py holds the independent kernels the engine is
+    checked against, so no engine module imports ``tests`` or
+    ``oracles``."""
+    hits = _engine_lines_matching(
+        r"^\s*(?:import|from)\s+[\w.]*\b(?:tests|oracles)\b"
+        r"|^\s*from\s+\S+\s+import\b.*\b(?:tests|oracles)\b")
+    assert not hits, hits
+
+
 def test_no_context_broadcast_in_engine():
     """A UDF's constants ride in its closure (PySpark broadcasts a large
     pickled UDF itself), so no engine module calls a SparkContext's

@@ -66,7 +66,8 @@ class TestCollapsedLabel:
     def test_point_ring_offset_curve_is_geos_circle(self):
         """A ring whose vertices all coincide buffers like GEOS/JTS
         createCircle: clockwise from (x + r, y), 4·quad_segs vertices."""
-        curve = G.offset_curve(np.full((4, 2), 5.0), 3.0)
+        curve, _ = G.offset_curves(np.full((4, 2), 5.0), np.array([0, 4]),
+                                   3.0)
         assert curve.shape == (65, 2)
         assert tuple(curve[0]) == (8.0, 5.0) and tuple(curve[-1]) == (8.0, 5.0)
         assert np.allclose(np.hypot(curve[:, 0] - 5, curve[:, 1] - 5), 3.0)
@@ -77,7 +78,7 @@ class TestCollapsedLabel:
         that doubles back over two distinct points buffers to a capsule."""
         ring = np.array([[5.0, 5.0], [5.0, 5.0], [9.0, 5.0], [9.0, 5.0],
                          [5.0, 5.0]])
-        curve = G.offset_curve(ring, 2.0)
+        curve, _ = G.offset_curves(ring, np.array([0, len(ring)]), 2.0)
         d = np.array([_dist_to_segment(p, (5.0, 5.0), (9.0, 5.0))
                       for p in curve])
         assert np.allclose(d, 2.0)
@@ -187,6 +188,8 @@ def test_count_fields_width(n):
     wide = n >= 2 ** 15
     assert frame.dtype == (np.int64 if wide else np.int32)
     assert bits == (32 if wide else 16)
-    counts = R.rasterize_count_packed(xy, offsets, groups, n, (4, 4))
-    assert counts.dtype == np.int32 and counts.max() == n
+    counts, one_bits = R.rasterize_count_fields(
+        [(xy, offsets, groups, False)], n, (4, 4))
+    assert counts.dtype == np.int32 and one_bits == 32
+    assert counts.max() == n
     assert np.array_equal(frame, counts.astype(frame.dtype) * (1 + (1 << bits)))

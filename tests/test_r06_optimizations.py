@@ -1,9 +1,10 @@
 """Focused tests for the r6 optimization internals:
 
-- rasterize_count_groups (one batched scanline pass over many polygons)
-  must be bit-equivalent to a loop of the per-polygon lexsort rasterizer
-  in tests/oracles.py — even-odd fills, holes, and winding offset curves
-  alike, on fixed and on seeded random shapes — and the engine's
+- rasterize_count_fields over packed rings (one batched scanline pass
+  over many polygons, via oracles.count) must be bit-equivalent to a
+  loop of the per-polygon lexsort rasterizer in tests/oracles.py —
+  even-odd fills, holes, and winding offset curves alike, on fixed and
+  on seeded random shapes — and the engine's
   rasterize_rings (the same crossings, summed over their bounding window)
   equal to the oracle's single-polygon fill;
 - the custom worker daemon's setup_spark_files cache must re-invalidate
@@ -33,6 +34,17 @@ def _rand_poly(rng, cx, cy, rad, k):
     return np.vstack([ring, ring[:1]])
 
 
+def _curves(ring_groups, radius):
+    """Per polygon, the engine's offset curves of its rings of at least 4
+    vertices, as the contact channel buffers them."""
+    out = []
+    for rings in ring_groups:
+        xy, offsets, _ = O.pack([[r for r in rings if len(r) >= 4]])
+        xy, offsets = G.offset_curves(xy, offsets, radius)
+        out.append(np.split(xy, offsets[1:-1]) if len(offsets) > 1 else [])
+    return out
+
+
 class TestRasterizeCountGroups:
     def test_matches_per_polygon_loop_even_odd(self):
         rng = np.random.default_rng(7)
@@ -50,7 +62,7 @@ class TestRasterizeCountGroups:
         for rings in groups:
             O.rasterize_rings(rings, shape, out=loop, value=1,
                               accumulate=True)
-        batched = R.rasterize_count_groups(groups, shape)
+        batched = O.count(groups, shape)
         assert np.array_equal(loop, batched)
 
     def test_matches_per_polygon_loop_winding_curves(self):
@@ -66,9 +78,7 @@ class TestRasterizeCountGroups:
         for rings in ring_sets:
             O.rasterize_geos_buffer(rings, 5.0, shape, out=loop,
                                     accumulate=True)
-        curves = [[G.offset_curve(r, 5.0) for r in rings if len(r) >= 4]
-                  for rings in ring_sets]
-        batched = R.rasterize_count_groups(curves, shape, winding=True)
+        batched = O.count(_curves(ring_sets, 5.0), shape, winding=True)
         assert np.array_equal(loop, batched)
 
     @pytest.mark.parametrize("seed", range(40))
@@ -128,16 +138,14 @@ class TestRasterizeCountGroups:
                 O.rasterize_rings(rings, shape, out=loop, value=1,
                                   winding=winding, accumulate=True)
             assert np.array_equal(
-                R.rasterize_count_groups(groups, shape, winding=winding),
+                O.count(groups, shape, winding=winding),
                 loop), f"seed {seed} winding={winding}"
         loop = np.zeros(shape, dtype=np.int32)
         for rings in groups:
             O.rasterize_geos_buffer(rings, 2.5, shape, out=loop,
                                     accumulate=True)
-        curves = [[G.offset_curve(r, 2.5) for r in rings if len(r) >= 4]
-                  for rings in groups]
         assert np.array_equal(
-            R.rasterize_count_groups(curves, shape, winding=True), loop)
+            O.count(_curves(groups, 2.5), shape, winding=True), loop)
 
     def test_unclosed_rings_close_at_each_rows_last_crossing(self):
         """An open ring leaves an odd winding sum on some rows; coverage
@@ -156,16 +164,16 @@ class TestRasterizeCountGroups:
             O.rasterize_rings(rings, shape, out=loop, value=1,
                               winding=True, accumulate=True)
         assert np.array_equal(
-            R.rasterize_count_groups(groups, shape, winding=True), loop)
+            O.count(groups, shape, winding=True), loop)
 
     def test_empty_and_degenerate_groups(self):
         shape = (16, 16)
-        assert R.rasterize_count_groups([], shape).sum() == 0
-        assert R.rasterize_count_groups([[]], shape).sum() == 0
+        assert O.count([], shape).sum() == 0
+        assert O.count([[]], shape).sum() == 0
         # off-frame polygon contributes nothing
         far = [np.array([[100.0, 100.0], [110.0, 100.0], [110.0, 110.0],
                          [100.0, 100.0]])]
-        assert R.rasterize_count_groups([far], shape).sum() == 0
+        assert O.count([far], shape).sum() == 0
 
 
 class TestPydaemonInternals:

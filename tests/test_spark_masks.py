@@ -71,9 +71,9 @@ class TestImageMasks:
 
 
 def _road_oracle(wkts, t, epsg, shape, width):
-    """road_masks rebuilt one line at a time: each line's
-    line_offset_curve (in metres in the UTM zone of all vertices' mean for
-    EPSG 4326, else in pixels after the affine) burnt on its own by
+    """road_masks rebuilt one line at a time: each line's sequential
+    oracle_line_curve (in metres in the UTM zone of all vertices' mean
+    for EPSG 4326, else in pixels after the affine) burnt on its own by
     the oracle's rasterize_rings(winding=True), the masks OR-ed."""
     lines = []
     for w in wkts:
@@ -86,11 +86,12 @@ def _road_oracle(wkts, t, epsg, shape, width):
     for ln in lines:
         if epsg == 4326:
             E, N = G.wgs84_to_utm(ln[:, 0], ln[:, 1], zone)
-            c = G.line_offset_curve(np.stack([E, N], axis=1), width / 2.0)
+            c = O.oracle_line_curve(np.stack([E, N], axis=1), width / 2.0)
             lon, lat = G.utm_to_wgs84(c[:, 0], c[:, 1], zone)
             curve = G.affine_apply(np.stack([lon, lat], axis=1), inv)
         else:
-            curve = G.line_offset_curve(G.affine_apply(ln, inv), width / 2.0)
+            curve = O.oracle_line_curve(G.affine_apply(ln, inv),
+                                        width / 2.0)
         one = O.rasterize_rings([curve], shape, value=255, winding=True)
         np.maximum(mask, one, out=mask)
     return mask
@@ -122,9 +123,9 @@ class TestRoadMasks:
         (32616, (0.5, 0.0, 733600.0, 0.0, -0.5, 3726000.0))],
         ids=["lonlat_meters", "projected"])
     def test_synthetic_roads_match_per_line_oracle(self, spark, epsg, t):
-        """Seeded LINESTRING / MULTILINESTRING roads (and a NULL) in lon/lat
-        with meters=True, and in a projected CRS: byte-equal to the per-line
-        oracle."""
+        """Seeded LINESTRING / MULTILINESTRING roads (and a NULL and EMPTY
+        lines, which draw nothing) in lon/lat with meters=True, and in a
+        projected CRS: byte-equal to the per-line oracle."""
         rng = np.random.default_rng(epsg)
         shape, width = (240, 320), 4.0
 
@@ -135,6 +136,7 @@ class TestRoadMasks:
 
         wkts = [G.wkt_dump("LINESTRING", [line()]) for _ in range(4)]
         wkts.append(G.wkt_dump("MULTILINESTRING", [line(), line()]))
+        wkts += ["LINESTRING EMPTY", "MULTILINESTRING EMPTY"]
         roads = spark.createDataFrame(
             [("rd", w) for w in wkts] + [("rd", None)],
             "image_id string, wkt string")

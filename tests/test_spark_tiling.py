@@ -152,6 +152,22 @@ class TestAoiAndFill:
                 row0 = int((3725139 - r["ymax"]) / 0.5)
                 assert np.array_equal(t[0], src[0, row0:row0+90, col0:col0+90])
 
+    def test_empty_aoi_gives_no_tiles(self, spark):
+        """An AOI with no rings meets no grid cell: zero tiles, and no
+        task fails."""
+        px = np.full((1, 40, 40), 7, dtype=np.uint8)
+        images = spark.createDataFrame(
+            [("e", bytearray(px.tobytes()), 40, 40, "raw-u8-c1")],
+            "image_id string, bytes binary, w int, h int, fmt string")
+        geo = spark.createDataFrame(
+            [("e", 0.5, 0.0, 0.0, 0.0, -0.5, 20.0, 32616, 0.0)],
+            "image_id string, a double, b double, c double, d double, "
+            "e double, f double, epsg int, nodata double")
+        ig = tiling.with_geo(images, geo)
+        assert len(tiling.raster_tiles(ig, (20, 20)).collect()) == 4
+        assert tiling.raster_tiles(ig, (20, 20),
+                                   aoi_wkt="POLYGON EMPTY").collect() == []
+
     def test_fill_nodata(self, spark):
         """nodata pixels replaced by the image's channel means."""
         from solaris_spark.operators import imageops
