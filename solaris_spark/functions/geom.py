@@ -526,14 +526,21 @@ def clip_polygon_rect(rings: list[np.ndarray], rect,
 # (solaris/eval/iou.py:33-38: iou = inter / (a1 + a2 − inter)).
 # ---------------------------------------------------------------------------
 
+# triangle pairs per Sutherland–Hodgman pass: a row peaks near 1 KB of
+# temporaries (67 MB traced over 2^16-row passes), so a pass stays near
+# 64 MB however large the group (a larger pair goes alone)
+_CLIP_ROWS = 1 << 16
+
+
 def fan_decompose(rings: list[np.ndarray], origin
-                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+                  ) -> tuple[np.ndarray, np.ndarray]:
     """Precompute the signed fan-triangle decomposition of a polygon in a
     caller-chosen local frame — reuse across many intersection-area calls
     (the greedy/SCOT joins evaluate each polygon against many partners).
     Returns the triangles (origin, v_k, v_k+1) of non-zero area, ring by
-    ring, as arrays: vertices V (T, 3, 2) with V[:, 0] the origin, signs
-    S (T,) of ±1 and bboxes B (T, 4) [xmin, ymin, xmax, ymax]."""
+    ring, as arrays: vertices V (T, 3, 2) with V[:, 0] the origin, and
+    signs S (T,) of ±1.  Every triangle holds the origin, so no two
+    triangles' bboxes are disjoint and every pair is clipped."""
     shift = np.asarray(origin, dtype=np.float64)
     p = np.concatenate([np.empty((0, 2))] + [r[:-1] - shift for r in rings])
     q = np.concatenate([np.empty((0, 2))] + [r[1:] - shift for r in rings])
@@ -542,34 +549,57 @@ def fan_decompose(rings: list[np.ndarray], origin
     p, q = p[keep], q[keep]
     V = np.zeros((len(p), 3, 2))
     V[:, 1], V[:, 2] = p, q
-    lo = np.minimum(np.minimum(p, q), 0.0)
-    hi = np.maximum(np.maximum(p, q), 0.0)
-    return V, np.where(a2[keep] > 0, 1.0, -1.0), np.hstack([lo, hi])
+    return V, np.where(a2[keep] > 0, 1.0, -1.0)
 
 
 def tri_intersection_area(tris_a: tuple, tris_b: tuple) -> float:
     """area(A∩B) from two fan_decompose results sharing the SAME origin —
-    the engine's one polygon intersection-area algorithm: every
-    bbox-overlapping triangle pair Sutherland–Hodgman-clipped at once."""
-    VA, SA, BA = tris_a
-    VB, SB, BB = tris_b
-    if not len(SA) or not len(SB):
-        return 0.0
-    # bbox-overlapping pairs only
-    ov = ~((BB[None, :, 0] > BA[:, None, 2]) | (BB[None, :, 2] < BA[:, None, 0])
-           | (BB[None, :, 1] > BA[:, None, 3]) | (BB[None, :, 3] < BA[:, None, 1]))
-    ai, bi = np.nonzero(ov)
-    if len(ai) == 0:
-        return 0.0
-    # CCW-orient the clip triangles (A); subject = B
-    a = VA[ai]  # (K, 3, 2)
+    the one-pair call of intersection_areas."""
+    return float(intersection_areas([tris_a], [tris_b])[0])
+
+
+def intersection_areas(tris_a: list, tris_b: list) -> np.ndarray:
+    """area(A_k ∩ B_k) for every pair k of fan_decompose results sharing
+    one origin — the engine's one polygon intersection-area algorithm.
+    Every triangle pair of every polygon pair, A-major, is clipped in
+    passes of at most _CLIP_ROWS rows cut at pair boundaries; each pair
+    sums its own slice of signed areas, so its bits do not depend on its
+    partners."""
+    na = np.array([len(t[1]) for t in tris_a], dtype=np.int64)
+    nb = np.array([len(t[1]) for t in tris_b], dtype=np.int64)
+    n = na * nb
+    stop = np.cumsum(n)
+    start = stop - n
+    VA = np.concatenate([np.empty((0, 3, 2))] + [t[0] for t in tris_a])
+    VB = np.concatenate([np.empty((0, 3, 2))] + [t[0] for t in tris_b])
+    SA = np.concatenate([np.empty(0)] + [t[1] for t in tris_a])
+    SB = np.concatenate([np.empty(0)] + [t[1] for t in tris_b])
+    out = np.zeros(len(n))
+    k0 = 0
+    while k0 < len(n):
+        k1 = max(int(np.searchsorted(stop, start[k0] + _CLIP_ROWS, "right")),
+                 k0 + 1)
+        pair = np.repeat(np.arange(k0, k1), n[k0:k1])
+        local = np.arange(start[k0], stop[k1 - 1]) - start[pair]
+        ai = (np.cumsum(na) - na)[pair] + local // nb[pair]
+        bi = (np.cumsum(nb) - nb)[pair] + local % nb[pair]
+        signed = SA[ai] * SB[bi] * _clip_areas(VA[ai], VB[bi])
+        for k in range(k0, k1):
+            s = start[k] - start[k0]
+            out[k] = abs(signed[s:s + n[k]].sum())
+        k0 = k1
+    return out
+
+
+def _clip_areas(a: np.ndarray, P: np.ndarray) -> np.ndarray:
+    """area(a_k ∩ P_k) of K triangle pairs (K, 3, 2): each subject
+    triangle P_k Sutherland–Hodgman-clipped by the half-planes of a_k
+    (reoriented counter-clockwise in place)."""
     cw = ((a[:, 1, 0] - a[:, 0, 0]) * (a[:, 2, 1] - a[:, 0, 1])
           - (a[:, 1, 1] - a[:, 0, 1]) * (a[:, 2, 0] - a[:, 0, 0])) < 0
     a[cw] = a[cw, ::-1]
-    subj = VB[bi]  # (K, 3, 2)
-    K = len(ai)
+    K = len(a)
     M = 3
-    P = subj
     cnt = np.full(K, 3, dtype=np.int64)
     for e in range(3):
         p1 = a[:, e]
@@ -580,55 +610,39 @@ def tri_intersection_area(tris_a: tuple, tris_b: tuple) -> float:
         idx = np.arange(M)
         valid = idx[None, :] < cnt[:, None]
         prev_idx = (idx[None, :] - 1) % np.maximum(cnt[:, None], 1)
-        rowix = np.arange(K)[:, None]
-        dp = d[rowix, prev_idx]
-        Pprev = P[rowix, prev_idx]
-        cur_in = d >= 0
-        prev_in = dp >= 0
-        # emit slots: slot 2k = intersection (when sign change), 2k+1 = cur
-        emit_i = valid & (cur_in != prev_in)
-        emit_c = valid & cur_in
+        dp = np.take_along_axis(d, prev_idx, 1)
+        Pprev = np.take_along_axis(P, prev_idx[:, :, None], 1)
         denom = np.where(dp - d == 0.0, 1.0, dp - d)
-        t = dp / denom
-        Ix = Pprev[:, :, 0] + t * (P[:, :, 0] - Pprev[:, :, 0])
-        Iy = Pprev[:, :, 1] + t * (P[:, :, 1] - Pprev[:, :, 1])
-        outx = np.empty((K, 2 * M))
-        outy = np.empty((K, 2 * M))
-        outx[:, 0::2] = Ix
-        outy[:, 0::2] = Iy
-        outx[:, 1::2] = P[:, :, 0]
-        outy[:, 1::2] = P[:, :, 1]
-        emit = np.empty((K, 2 * M), dtype=bool)
-        emit[:, 0::2] = emit_i
-        emit[:, 1::2] = emit_c
-        newcnt = emit.sum(axis=1)
-        Mn = min(int(newcnt.max()) if K else 0, 2 * M)
-        # stable compaction: order valid-emits first
-        order = np.argsort(~emit, axis=1, kind="stable")[:, :Mn]
-        P = np.stack([np.take_along_axis(outx, order, 1),
-                      np.take_along_axis(outy, order, 1)], axis=2)
-        cnt = newcnt
-        M = Mn
+        t = (dp / denom)[:, :, None]
+        # slot 2k = the intersection (emitted on a sign change), 2k+1 = cur
+        pts = np.stack([Pprev + t * (P - Pprev), P],
+                       axis=2).reshape(K, 2 * M, 2)
+        emit = np.stack([valid & ((d >= 0) != (dp >= 0)), valid & (d >= 0)],
+                        axis=2).reshape(K, 2 * M)
+        cnt = emit.sum(axis=1)
+        M = min(int(cnt.max(initial=0)), 2 * M)
         if M < 3:
-            return 0.0
-    # fan areas from vertex 0 over valid vertices
+            return np.zeros(K)
+        # stable compaction: each row's emitted slots first, in order
+        order = np.argsort(~emit, axis=1, kind="stable")[:, :M]
+        P = np.take_along_axis(pts, order[:, :, None], 1)
+    # fan areas from vertex 0 over each row's valid vertices; a row holds
+    # at most 6, so a row sum never reaches NumPy's pairwise block of 8
+    # and padding adds exact zeros
     v0 = P[:, 0:1, :]
     e1 = P[:, 1:M - 1, :] - v0
     e2 = P[:, 2:M, :] - v0
     cross = e1[:, :, 0] * e2[:, :, 1] - e1[:, :, 1] * e2[:, :, 0]
-    kmax = np.maximum(cnt - 2, 0)  # valid fan triangles per row
-    mask = (np.arange(M - 2)[None, :] < kmax[:, None])
-    areas = np.abs(0.5 * (cross * mask).sum(axis=1))
-    areas[cnt < 3] = 0.0
-    return float(np.abs((SA[ai] * SB[bi] * areas).sum()))
+    mask = np.arange(M - 2)[None, :] < (cnt - 2)[:, None]
+    return np.abs(0.5 * np.where(mask, cross, 0.0).sum(axis=1))
 
 
 # ---------------------------------------------------------------------------
 # Prepared polygons: one pack_polygons parse per batch, then per polygon
 # its rings, signed ring areas, area and bbox.  Every matching join adds
-# fan triangles once per polygon (polygon_sets), then any number of (A, B)
-# pairs go through tri_intersection_area and the one IoU rule
-# (solaris/eval/iou.py:33-38).
+# fan triangles once per polygon (polygon_sets), then scores all of a
+# pass's bbox-touching (A, B) pairs in one overlaps call: one
+# intersection_areas pass and the one IoU rule (solaris/eval/iou.py:33-38).
 # ---------------------------------------------------------------------------
 
 def ring_groups(xy: np.ndarray, offsets: np.ndarray, groups: np.ndarray,
@@ -685,27 +699,25 @@ def polygon_sets(*wkt_lists) -> list[PolygonSet]:
             for p in polys]
 
 
-def bbox_hits(bboxes: np.ndarray, box) -> np.ndarray:
-    """Mask of the (n, 4) closed boxes that touch the closed `box` — the
-    candidate filter ahead of the exact area refine."""
-    return ((bboxes[:, 0] <= box[2]) & (bboxes[:, 2] >= box[0])
-            & (bboxes[:, 1] <= box[3]) & (bboxes[:, 3] >= box[1]))
-
-
-def _iou(inter: float, area_a: float, area_b: float) -> tuple[float, float]:
+def overlaps(a: PolygonSet, b: PolygonSet) -> tuple[np.ndarray, np.ndarray,
+                                                  np.ndarray, np.ndarray]:
+    """Every pair (i, j) of polygon i of `a` and polygon j of `b` (sets from
+    one polygon_sets call) whose closed bboxes touch, i-major, with
+    area(A∩B) and IoU = inter / (area_a + area_b − inter), 0 when the
+    union is empty.  A∩B is clipped with A's triangles, so (a, b) and
+    (b, a) may differ in the last bits."""
+    A, B = a.bbox[:, None, :], b.bbox[None, :, :]
+    i, j = np.nonzero((A[..., 0] <= B[..., 2]) & (A[..., 2] >= B[..., 0])
+                      & (A[..., 1] <= B[..., 3]) & (A[..., 3] >= B[..., 1]))
+    inter = intersection_areas([a.tris[k] for k in i.tolist()],
+                               [b.tris[k] for k in j.tolist()])
+    area_a, area_b = a.area[i], b.area[j]
     # the fan-triangle intersection can overshoot the shoelace area by a few
     # ulps; A∩B ≤ min(area A, area B) holds exactly
-    inter = min(inter, area_a, area_b)
+    inter = np.minimum(inter, np.minimum(area_a, area_b))
     union = area_a + area_b - inter
-    return inter, (inter / union if union > 0 else 0.0)
-
-
-def overlap(a: PolygonSet, i: int, b: PolygonSet, j: int) -> tuple[float, float]:
-    """(area(A∩B), IoU) of polygon i of `a` and polygon j of `b` (sets from
-    one polygon_sets call): iou = inter / (area_a + area_b − inter), 0 when
-    the union is empty."""
-    return _iou(tri_intersection_area(a.tris[i], b.tris[j]),
-                a.area[i], b.area[j])
+    iou = np.divide(inter, union, out=np.zeros_like(inter), where=union > 0)
+    return i, j, inter, iou
 
 
 # ---------------------------------------------------------------------------

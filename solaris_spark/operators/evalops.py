@@ -16,7 +16,10 @@ The sequential claim semantics exist only WITHIN an image group —
 images are the parallel axis (10^12 of them at scale), so the engine runs
 the greedy match as one blobs.group_blobs group per image_id after a
 cell-key candidate join; its rows leave Python as bounded Arrow batches.
-Salting hot images is the caller's knob (plans/skew.py).
+Salting hot images is the caller's knob (plans/skew.py).  A pair's IoU
+does not depend on the claim order, so each match pass scores every
+bbox-touching pair in one geom.overlaps call and its claim loop reads
+them from a (query × pool) array.
 """
 
 from __future__ import annotations
@@ -37,6 +40,15 @@ MATCH_SCHEMA = T.StructType([
     T.StructField("matched_gt", T.LongType(), True),
     T.StructField("area", T.DoubleType(), True),
 ])
+
+
+def _first_max(ious: np.ndarray, alive: np.ndarray) -> tuple[int, float]:
+    """(j, IoU) of the first maximum over the alive candidates of one row
+    of IoUs (-1 marks a non-candidate) — pandas idxmax's tie-break;
+    (-1, -1.0) when no alive candidate is left."""
+    cand = np.where(alive, ious, -1.0)
+    j = int(np.argmax(cand)) if len(cand) else -1
+    return (j, cand[j]) if j >= 0 and cand[j] >= 0 else (-1, -1.0)
 
 
 def _greedy_match_group(rows: list, miniou: float, min_area: float) -> list:
@@ -62,21 +74,20 @@ def _greedy_match_group(rows: list, miniou: float, min_area: float) -> list:
     pk = np.flatnonzero(ps.area > min_area)
     gt_ids = np.array([r.row_id for r in gt], dtype=np.int64)[gk]
     pred_ids = np.array([r.row_id for r in pred], dtype=np.int64)[pk]
-    gt_bbox = gs.bbox[gk]
+
+    # IoU of every (proposal, GT) pair, -1 where the bboxes do not touch
+    ious = np.full((len(pred), len(gt)), -1.0)
+    i, j, _, iou = G.overlaps(ps, gs)
+    ious[i, j] = iou
+    ious = ious[np.ix_(pk, gk)]
 
     alive = np.ones(len(gk), dtype=bool)
     gt_best = np.zeros(len(gk))
     out_pred_iou = np.zeros(len(pk))
     out_pred_match = np.full(len(pk), -1, dtype=np.int64)
 
-    for i, p in enumerate(pk):
-        if ps.area[p] <= 0:
-            continue
-        best_iou, best_j = -1.0, -1
-        for j in np.flatnonzero(alive & G.bbox_hits(gt_bbox, ps.bbox[p])):
-            iou = G.overlap(ps, p, gs, gk[j])[1]
-            if iou > best_iou:  # strict > keeps FIRST max (idxmax semantics)
-                best_iou, best_j = iou, j
+    for i in np.flatnonzero(ps.area[pk] > 0):
+        best_j, best_iou = _first_max(ious[i], alive)
         if best_j < 0:
             continue
         if best_iou > gt_best[best_j]:
@@ -213,56 +224,34 @@ def class_matched_ious(gt: DataFrame, pred: DataFrame,
 
         gs, ps = G.polygon_sets([r.wkt for r in gt_rows],
                                 [r.wkt for r in pr_rows])
-        g_edges = [G.polygon_edges(r) for r in gs.rings]
-        p_edges = [G.polygon_edges(r) for r in ps.rings]
         out = []
 
-        def one_pass(side, query_idx_by_class, q, q_edges, pool, pool_edges,
-                     pool_cls, confs):
+        def one_pass(side, q, q_cls, pool, pool_cls, confs):
+            # intersects-candidates: bbox-touching pairs that share area or
+            # touch along an edge; IoU -1 for the rest
+            i, j, inter, iou = G.overlaps(q, pool)
+            hit = inter > 0
+            for k in np.flatnonzero(~hit):
+                hit[k] = G.any_segments_intersect(
+                    G.polygon_edges(q.rings[i[k]]),
+                    G.polygon_edges(pool.rings[j[k]]))
+            ious = np.full((len(q.area), len(pool_cls)), -1.0)
+            ious[i[hit], j[hit]] = iou[hit]
             alive = np.ones(len(pool_cls), dtype=bool)
-            counter = {c: 0 for c in classes}
             for obj in classes:
-                for qi in query_idx_by_class.get(obj, []):
-                    conf = confs[qi] if confs is not None else None
-                    # intersects-candidates: keep those actually touching
-                    pairs = []
-                    for j in np.flatnonzero(alive & G.bbox_hits(pool.bbox,
-                                                                q.bbox[qi])):
-                        inter, iou = G.overlap(q, qi, pool, j)
-                        if inter > 0 or G.any_segments_intersect(
-                                q_edges[qi], pool_edges[j]):
-                            pairs.append((j, iou))
-                    if not pairs:
-                        iou_val = 0.0
-                    else:
-                        best_j, best_iou = max(
-                            pairs, key=lambda t: (t[1], -t[0]))
-                        # first-max tie-break: pandas idxmax keeps lowest idx
-                        for j, v in pairs:
-                            if v == best_iou:
-                                best_j = j
-                                break
-                        if pool_cls[best_j] == obj:
-                            iou_val = best_iou
-                            alive[best_j] = False
-                        else:
-                            iou_val = 0.0
-                    out.append((image_id, side, obj, counter[obj],
-                                iou_val, conf))
-                    counter[obj] += 1
+                of_obj = (k for k, c in enumerate(q_cls) if c == obj)
+                for n, qi in enumerate(of_obj):
+                    best_j, best_iou = _first_max(ious[qi], alive)
+                    iou_val = 0.0
+                    if best_j >= 0 and pool_cls[best_j] == obj:
+                        iou_val = best_iou
+                        alive[best_j] = False
+                    out.append((image_id, side, obj, n, iou_val, confs[qi]))
 
         g_cls = [r.cls for r in gt_rows]
         p_cls = [r.cls for r in pr_rows]
-        p_by_class = {}
-        for i, c in enumerate(p_cls):
-            p_by_class.setdefault(c, []).append(i)
-        g_by_class = {}
-        for i, c in enumerate(g_cls):
-            g_by_class.setdefault(c, []).append(i)
-
-        one_pass("precision", p_by_class, ps, p_edges, gs, g_edges, g_cls,
-                 [r.conf for r in pr_rows])
-        one_pass("recall", g_by_class, gs, g_edges, ps, p_edges, p_cls, None)
+        one_pass("precision", ps, p_cls, gs, g_cls, [r.conf for r in pr_rows])
+        one_pass("recall", gs, g_cls, ps, p_cls, [None] * len(g_cls))
         return out
 
     return group_blobs(both, "image_id", CLASS_IOU_SCHEMA, rows_of)
@@ -329,12 +318,12 @@ def mean_average_precision(class_ious: DataFrame,
 
 
 def average_precision(pairs: DataFrame, conf_col: str = "conf",
-                      tp_col: str = "is_tp",
-                      n_gt: int | None = None) -> DataFrame:
+                      tp_col: str = "is_tp", *, n_gt: int) -> DataFrame:
     """Interpolated mAP (eval/vector.py:469-513): sort by conf desc →
-    cumulative TP/FP → precision @ recall curve → max precision at 101
-    recall thresholds → mean.  Pure window + crossJoin(thresholds) —
-    no UDF, whole-stage codegen all the way.
+    cumulative TP/FP → precision @ recall curve (recall = cumulative TP /
+    ``n_gt``, the ground-truth count) → max precision at 101 recall
+    thresholds → mean.  Pure window + crossJoin(thresholds) — no UDF,
+    whole-stage codegen all the way.
 
     Scale note: the confidence ranking is GLOBAL by contract (the
     reference's single conf-desc ordering), but the running sums are
@@ -348,9 +337,8 @@ def average_precision(pairs: DataFrame, conf_col: str = "conf",
         pairs, conf_col,
         {"cum_tp": F.col(tp_col).cast("int"), "cum_n": F.lit(1)},
         ascending=False)
-    total_gt = F.lit(n_gt) if n_gt is not None else F.lit(None)
     cum = cum.withColumn("precision", F.col("cum_tp") / F.col("cum_n")) \
-             .withColumn("recall", F.col("cum_tp") / total_gt)
+             .withColumn("recall", F.col("cum_tp") / F.lit(n_gt))
     spark = pairs.sparkSession
     thresholds = spark.range(101).select((F.col("id") / 100.0).alias("rt"))
     ap = (cum.crossJoin(F.broadcast(thresholds))

@@ -6,7 +6,8 @@ Re-expresses solaris/eval/scot.py (match_footprints :5-71, scot_one_aoi
 (one blobs.group_blobs group per AOI); within an AOI the timestep loop is
 inherently sequential (cumulative change/track sets) and runs in numpy
 with the engine's polygon-intersection and assignment kernels
-(scipy-free).
+(scipy-free): one geom.overlaps call scores a timestep's bbox-touching
+pairs.
 """
 
 from __future__ import annotations
@@ -54,14 +55,11 @@ def match_footprints_np(grnd: list, prop: list, threshold: float = 0.25,
     gs, ps = G.polygon_sets([r.wkt for r in grnd], [r.wkt for r in prop])
     reward = np.zeros((len(g_ids), len(p_ids)))
     iou_arr = np.zeros_like(reward)
-    for i in range(ng):
-        for j in np.flatnonzero(G.bbox_hits(ps.bbox, gs.bbox[i])):
-            inter, iou = G.overlap(gs, i, ps, j)
-            if inter <= 0:
-                continue
-            gi, pj = g_idx[g_row_ids[i]], p_idx[p_row_ids[j]]
-            iou_arr[gi, pj] = iou
-            reward[gi, pj] = (iou > threshold) * (base_reward + iou)
+    i, j, inter, iou = G.overlaps(gs, ps)
+    for k in np.flatnonzero(inter > 0):   # a repeated id keeps its last pair
+        gi, pj = g_idx[g_row_ids[i[k]]], p_idx[p_row_ids[j[k]]]
+        iou_arr[gi, pj] = iou[k]
+        reward[gi, pj] = (iou[k] > threshold) * (base_reward + iou[k])
 
     r, c = linear_sum_assignment(reward, maximize=True)
     iou_match = iou_arr[r, c]

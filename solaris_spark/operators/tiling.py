@@ -567,7 +567,8 @@ def vector_tiles(labels_geo_df: DataFrame, grid: DataFrame,
     out = (joined
            .withColumn("origarea", F.col("cl.origarea"))
            .withColumn("clip_area", F.col("cl.clip_area"))
-           .withColumn("partialDec", F.col("clip_area") / F.col("origarea"))
+           # 0/0 (a zero-area label) is NULL, dropped as the reference's NaN
+           .withColumn("partialDec", F.try_divide("clip_area", "origarea"))
            .withColumn("truncated", (F.col("partialDec") != 1.0).cast("int"))
            .filter(F.col("cl.wkt_clip").isNotNull()
                    & (F.col("partialDec") > F.lit(min_partial_perc)))

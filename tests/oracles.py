@@ -28,7 +28,10 @@ engine for such an import):
   ``raster.rasterize_count_fields``.
 - ``clip_polygon_rect_area``, ``polygon_intersection_area`` and
   ``iou_wkt`` are single-pair area and IoU kernels beside the engine's
-  prepared ``geom.polygon_sets`` / ``geom.overlap``.
+  prepared ``geom.polygon_sets`` / ``geom.overlaps``; ``overlap`` is
+  the per-pair form of ``geom.overlaps`` (one ``tri_intersection_area``
+  call and the scalar IoU rule per pair), which ``test_kernels_geom.py``
+  and ``test_geom_bits.py`` compare it with bit for bit.
 - ``segments_intersect`` is the scalar form of the closed-set segment
   predicate that ``geom.any_segments_intersect`` evaluates for all edge
   pairs at once, and ``rect_intersects_polygon`` the per-edge-pair loop
@@ -414,14 +417,32 @@ def polygon_intersection_area(rings_a: list[np.ndarray], rings_b: list[np.ndarra
                                    G.fan_decompose(rings_b, origin))
 
 
+def iou_rule(inter: float, area_a: float, area_b: float
+             ) -> tuple[float, float]:
+    """(inter, IoU) with inter clamped to the smaller area (the fan sum can
+    overshoot a shoelace area by a few ulps) and IoU 0 when the union is
+    not positive — the rule ``geom.overlaps`` applies to arrays."""
+    inter = min(inter, area_a, area_b)
+    union = area_a + area_b - inter
+    return inter, (inter / union if union > 0 else 0.0)
+
+
+def overlap(a: G.PolygonSet, i: int, b: G.PolygonSet, j: int
+            ) -> tuple[float, float]:
+    """(area(A∩B), IoU) of polygon i of `a` and polygon j of `b` (sets from
+    one polygon_sets call), one pair at a time."""
+    return iou_rule(G.tri_intersection_area(a.tris[i], b.tris[j]),
+                    a.area[i], b.area[j])
+
+
 def iou_wkt(wkt_a: str, wkt_b: str) -> float:
-    """IoU of two polygonal WKTs under the same rule as `geom.overlap`; a
+    """IoU of two polygonal WKTs under the same rule as `geom.overlaps`; a
     single pair needs no shared frame, so the intersection is taken in the
     pair's own bbox-overlap frame (polygon_intersection_area)."""
     ra, rb = G.polygon_rings(wkt_a), G.polygon_rings(wkt_b)
-    return G._iou(polygon_intersection_area(ra, rb),
-                  abs(sum(G.ring_signed_area(r) for r in ra)),
-                  abs(sum(G.ring_signed_area(r) for r in rb)))[1]
+    return iou_rule(polygon_intersection_area(ra, rb),
+                    abs(sum(G.ring_signed_area(r) for r in ra)),
+                    abs(sum(G.ring_signed_area(r) for r in rb)))[1]
 
 
 # ---------------------------------------------------------------------------

@@ -5,28 +5,45 @@ the polygon kernels opens a reference fixture.  These hashes, recorded
 before the polygon batches were packed, pin the same values on seeded
 synthetic inputs:
 
-- ``polygon_sets`` (areas, bboxes) and ``overlap`` ``(inter, iou)`` of
-  every GT × proposal pair over three label_eval-shaped groups: synth
-  labels, jittered proposals and false positives, with holes,
-  multipolygons, clockwise exteriors, None / ``""`` / EMPTY rows, and
-  one group at UTM-sized coordinates;
+- ``polygon_sets`` (areas, bboxes) and the per-pair oracle's
+  ``(inter, iou)`` (``oracles.overlap``, the engine's one
+  intersection-area kernel one pair at a time) of every GT × proposal
+  pair, bbox-disjoint ones included, over three label_eval-shaped groups:
+  synth labels, jittered proposals and false positives, with holes,
+  multipolygons, clockwise exteriors, None / ``""`` / EMPTY rows, and one
+  group at UTM-sized coordinates;
 - ``vector_tiles``' clip outputs (``wkt_geo``, ``origarea``,
-  ``clip_area``) over a seeded synth image's labels in UTM coordinates.
+  ``clip_area``) over a seeded synth image's labels in UTM coordinates;
+- the rows of the three matching joins over the same kind of groups:
+  ``evalops._greedy_match_group`` at two ``miniou``/``min_area``
+  settings, ``scot.match_footprints_np`` and ``scot.scot_one_aoi_np`` over
+  two timesteps, and ``evalops.class_matched_ious`` through Spark.  These
+  hashes were recorded before the joins shared one batched pair kernel,
+  so a changed claim order, tie-break or candidate rule shows here.
 """
 
 import hashlib
+from collections import namedtuple
 
 import numpy as np
 import pytest
 
 from solaris_spark.functions import geom as G
+from solaris_spark.operators import evalops, scot
 from solaris_spark.sources import synth
+from tests import oracles as O
 
 OVERLAP_SHA256 = {
     0: "c7b2bc991067359bf621989a8524427893cbe98410bf19695ae6c1f889889b28",
     1: "010bb64ca65fb59509e3eecb8231bec2ab3646f38ca742efc53e750bacfe636f",
     2: "66d21619af149e843f78183be245c63358750cac96274dc4864dd7f77f5d8818",
 }
+GREEDY_SHA256 = \
+    "574dc81dda965a9aac4bfa67807135d0028698327d63aa385b311b712ea2514c"
+SCOT_SHA256 = \
+    "7778df54d6db109d881e51e904e69955a8deabc6743ccbf3c667d4211a68dff8"
+CLASS_SHA256 = \
+    "72598179ad069fe38954150f5664d959530caf8b6b19c415bceeb325ec956c4e"
 CLIP_SHA256 = \
     "2e2e6ec186ebce70c18e0d2806f46fd757535b8570816340afe2d16944431b6b"
 
@@ -101,7 +118,7 @@ def _sha(*arrays) -> str:
 def test_polygon_sets_overlap_bits(seed):
     gt, pred = _eval_group(seed)
     gs, ps = G.polygon_sets(gt, pred)
-    pairs = np.array([G.overlap(gs, i, ps, j)
+    pairs = np.array([O.overlap(gs, i, ps, j)
                       for i in range(len(gt)) for j in range(len(pred))])
     assert (pairs[:, 1] > 0.5).sum() >= 10   # real matches are in the mix
     assert _sha(gs.area, gs.bbox, ps.area, ps.bbox, pairs) == \
@@ -133,3 +150,106 @@ def test_vector_tiles_clip_bits(spark):
         digest.update(f"{r.tile_id}|{r.label_id}|{r.wkt_geo}|"
                       f"{r.origarea.hex()}|{r.clip_area.hex()}\n".encode())
     assert digest.hexdigest() == CLIP_SHA256
+
+
+GreedyRow = namedtuple("GreedyRow", "image_id row_id wkt order kind")
+ScotRow = namedtuple("ScotRow", "aoi timestep id wkt kind")
+
+
+def _row_digest(rows) -> str:
+    """sha256 of rows of ints, strings, None and floats (as ``hex()``)."""
+    h = hashlib.sha256()
+    for r in rows:
+        h.update("|".join(v.hex() if isinstance(v, float) else repr(v)
+                          for v in r).encode() + b"\n")
+    return h.hexdigest()
+
+
+def _match_group(seed):
+    """An eval group plus the cases the claim loops must order: a GT
+    duplicated (an IoU tie between two GTs), a duplicated proposal (a tie
+    for the second copy's GT) and an EMPTY proposal."""
+    gt, pred = _eval_group(seed)
+    gt = gt + [gt[4]]
+    pred = pred + [pred[5], "POLYGON EMPTY"]
+    return gt, pred
+
+
+def test_greedy_match_rows_bits():
+    rows = []
+    for seed in (0, 1, 2):
+        gt, pred = _match_group(seed)
+        order = np.random.default_rng(seed + 100).permutation(len(pred))
+        group = ([GreedyRow(f"g{seed}", 3 * k + 1, w, 0, "gt")
+                  for k, w in enumerate(gt)]
+                 + [GreedyRow(f"g{seed}", 1000 + k, w, int(order[k]), "pred")
+                    for k, w in enumerate(pred)])
+        for miniou, min_area in ((0.5, 0.0), (0.25, 40.0)):
+            out = evalops._greedy_match_group(group, miniou, min_area)
+            assert sum(r[4] is not None for r in out if r[1] == "pred") >= 10
+            rows += out
+    assert _row_digest(rows) == GREEDY_SHA256
+
+
+def test_scot_rows_bits():
+    """Two timesteps of one AOI: the second re-uses the first's GT ids for
+    the GTs it keeps and adds new ones; proposal ids partly follow their
+    GT.  Each timestep's last GT repeats GT 7's id on a copy of it moved
+    by 0.6 of its width, so which of the id's pairs is written last
+    decides whether GT 7's match clears the threshold."""
+    gt0, pred0 = _eval_group(0)
+    gt1, pred1 = _eval_group(1)
+    rows = []
+    for ts, (gt, pred) in enumerate(((gt0, pred0), (gt1, pred1))):
+        gt = [w for w in gt if w]
+        rows += [ScotRow("a", ts, k if k % 4 else 100 * ts + k, w, "gt")
+                 for k, w in enumerate(gt)]
+        x0, _, x1, _ = G.geom_bounds(gt[7])
+        rows.append(ScotRow("a", ts, 7, G.transform_wkt(
+            gt[7], (1.0, 0.0, 0.6 * (x1 - x0), 0.0, 1.0, 0.0)), "gt"))
+        rows += [ScotRow("a", ts, k if k % 3 else 50 + 100 * ts + k, w,
+                         "prop") for k, w in enumerate(pred)]
+    out = []
+    for ts in (0, 1):
+        g_match, p_match, *counts, g_set, p_set = scot.match_footprints_np(
+            [r for r in rows if r.kind == "gt" and r.timestep == ts],
+            [r for r in rows if r.kind == "prop" and r.timestep == ts])
+        assert len(g_match) >= 10
+        out += [tuple(g_match), tuple(p_match), tuple(counts),
+                tuple(sorted(g_set)), tuple(sorted(p_set))]
+    score = scot.scot_one_aoi_np(rows)
+    out.append(tuple(score[k] for k in scot.SCOT_SCHEMA.names))
+    assert _row_digest(out) == SCOT_SHA256
+
+
+def test_class_matched_ious_rows_bits(spark):
+    """Two classes over two eval groups, plus an image whose first GT
+    touches its proposal only along an edge (zero intersection area, a
+    candidate through the segment test) and whose second GT overlaps it:
+    in the recall pass the touching GT takes the proposal first."""
+    gt_rows, pred_rows = [], []
+    for seed in (0, 2):
+        gt, pred = _match_group(seed)
+        rng = np.random.default_rng(seed + 200)
+        gt_rows += [(f"c{seed}", k, w, "ab"[int(rng.integers(2))])
+                    for k, w in enumerate(gt)]
+        pred_rows += [(f"c{seed}", k, w, "ab"[int(rng.integers(2))],
+                       float(rng.uniform()))
+                      for k, w in enumerate(pred)]
+    gt_rows += [("t", 0, "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))", "a"),
+                ("t", 1, "POLYGON ((10 1, 14 1, 14 5, 10 5, 10 1))", "a")]
+    pred_rows.append(("t", 0, "POLYGON ((10 2, 16 2, 16 8, 10 8, 10 2))",
+                      "a", 0.5))
+    gt_df = spark.createDataFrame(
+        gt_rows, "image_id string, row_id long, wkt string, class string")
+    pred_df = spark.createDataFrame(
+        pred_rows, "image_id string, row_id long, wkt string, "
+        "class string, conf double")
+    got = sorted(tuple(r) for r in
+                 evalops.class_matched_ious(gt_df, pred_df).collect())
+    touching = sorted(r[1:5] for r in got if r[0] == "t")
+    assert touching[1:] == [("recall", "a", 0, 0.0), ("recall", "a", 1, 0.0)]
+    assert touching[0][:3] == ("precision", "a", 0)
+    assert abs(touching[0][3] - 0.3) < 1e-12
+    assert sum(r[4] > 0.5 for r in got) >= 10
+    assert _row_digest(got) == CLASS_SHA256

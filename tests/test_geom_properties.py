@@ -57,6 +57,16 @@ def test_iou_bounded_symmetric_self(wa, wb):
     inter = O.polygon_intersection_area(ra, rb)
     assert inter <= G.polygon_area(wa) + 1e-6
     assert inter <= G.polygon_area(wb) + 1e-6
+    # the batched kernel in one shared frame: the same bounds, symmetry
+    # and self-IoU, its clamp holding inter to the smaller area exactly
+    a, b = G.polygon_sets([wa, wb], [wa, wb])
+    i, j, inter, iou = G.overlaps(a, b)
+    m = np.zeros((2, 2))
+    m[i, j] = iou
+    assert np.all(iou >= 0.0) and np.all(iou <= 1.0)
+    assert np.all(inter <= np.minimum(a.area[i], b.area[j]))
+    assert abs(m[0, 1] - m[1, 0]) < 1e-9 and abs(m[0, 1] - iou_ab) < 1e-9
+    assert np.all(np.abs(np.diag(m) - 1.0) < 1e-9)
 
 
 @settings(max_examples=100, deadline=None)

@@ -93,7 +93,7 @@ class TestIoU:
         assert abs(iou - 0.073499798744833519) < 1e-9
         a, b = G.polygon_sets([G.wkt_dump("POLYGON", [pred])],
                               [G.wkt_dump("POLYGON", [ring])])
-        assert abs(G.overlap(a, 0, b, 0)[1] - 0.073499798744833519) < 1e-9
+        assert abs(G.overlaps(a, b)[3][0] - 0.073499798744833519) < 1e-9
 
     @pytest.mark.needs_reference("gt.geojson")
     def test_self_intersection_identity(self):
@@ -120,13 +120,12 @@ class TestIoU:
         a, b = G.polygon_sets([sq, None, "", "POLYGON EMPTY"], [half, around])
         assert a.rings[1:] == [[], [], []]
         assert list(a.area) == [100.0, 0.0, 0.0, 0.0]
-        for box in b.bbox:
-            assert list(G.bbox_hits(a.bbox, box)) == [True, False,
-                                                      False, False]
-        assert list(G.bbox_hits(b.bbox, a.bbox[3])) == [False, False]
-        inter, iou = G.overlap(a, 0, b, 0)
-        assert abs(inter - 50.0) < 1e-12 and abs(iou - 50.0 / 150.0) < 1e-12
-        assert G.overlap(a, 1, b, 0) == (0.0, 0.0)
+        i, j, inter, iou = G.overlaps(a, b)
+        assert list(zip(i, j)) == [(0, 0), (0, 1)]
+        assert [list(k) for k in G.overlaps(b, a)[:2]] == [[0, 1], [0, 0]]
+        assert abs(inter[0] - 50.0) < 1e-12
+        assert abs(iou[0] - 50.0 / 150.0) < 1e-12
+        assert O.overlap(a, 1, b, 0) == (0.0, 0.0)
 
     def test_overlap_clamps_to_the_smaller_area(self):
         """The fan-triangle intersection of this pentagon with itself
@@ -140,8 +139,91 @@ class TestIoU:
              "7.733293563541908 2.325109555738393))")
         a, b = G.polygon_sets([w], [w])
         assert G.tri_intersection_area(a.tris[0], b.tris[0]) > a.area[0]
-        assert G.overlap(a, 0, b, 0) == (a.area[0], 1.0)
+        _, _, inter, iou = G.overlaps(a, b)
+        assert (inter[0], iou[0]) == (a.area[0], 1.0)
         assert O.iou_wkt(w, w) == 1.0
+
+
+def _ngon(cx, cy, r, n, cw=False):
+    ang = np.linspace(0.0, 2 * np.pi, n, endpoint=False) + 0.1
+    ring = np.c_[cx + r * np.cos(ang), cy + r * np.sin(ang)]
+    ring = ring[::-1] if cw else ring
+    return np.vstack([ring, ring[:1]])
+
+
+def _overlap_shapes():
+    """Holes (either winding), a multipolygon, EMPTY rows, zero-area
+    rings, edge- and corner-touching squares and identical polygons."""
+    sq = np.array([(0.0, 0), (10, 0), (10, 10), (0, 10), (0, 0)])
+    a = [G.wkt_dump("POLYGON", [sq]),
+         G.wkt_dump("POLYGON", [_ngon(5, 5, 6, 9),
+                                _ngon(5, 5, 2, 5, cw=True)]),
+         G.wkt_dump("POLYGON", [_ngon(8, 3, 4, 7, cw=True),
+                                _ngon(8, 3, 1, 4)]),
+         G.wkt_dump("MULTIPOLYGON", [[_ngon(2, 2, 3, 6)],
+                                     [sq + 12, _ngon(17, 17, 1.5, 5)]]),
+         None, "", "POLYGON EMPTY",
+         "POLYGON ((1 1, 2 2, 3 3, 1 1))",
+         "POLYGON ((4 4, 9 4, 4 4, 4 9, 4 4))",
+         G.wkt_dump("POLYGON", [_ngon(13.1, 7.7, 3.3, 11)])]
+    b = [G.wkt_dump("POLYGON", [sq + (10, 2)]),        # shares an edge
+         G.wkt_dump("POLYGON", [sq + (10, 10)]),       # shares a corner
+         G.wkt_dump("POLYGON", [sq]),                  # identical to a[0]
+         a[9], a[1],                                   # identical, holed
+         G.wkt_dump("POLYGON", [_ngon(6, 6, 5, 13)]),
+         "MULTIPOLYGON EMPTY", "POLYGON ((0 0, 5 5, 0 0))",
+         G.wkt_dump("POLYGON", [sq + 40])]             # touches nothing
+    return a, b
+
+
+def _assert_overlaps_are_the_oracle(a_wkts, b_wkts):
+    """geom.overlaps == oracles.overlap on every closed-bbox-touching pair,
+    i-major, bit for bit, and no other pair; both operand orders."""
+    for x, y in ((a_wkts, b_wkts), (b_wkts, a_wkts)):
+        a, b = G.polygon_sets(x, y)
+        i, j, inter, iou = G.overlaps(a, b)
+        bx, by = a.bbox, b.bbox
+        want = [(p, q) for p in range(len(x)) for q in range(len(y))
+                if bx[p, 0] <= by[q, 2] and by[q, 0] <= bx[p, 2]
+                and bx[p, 1] <= by[q, 3] and by[q, 1] <= bx[p, 3]]
+        assert list(zip(i.tolist(), j.tolist())) == want
+        ref = np.array([O.overlap(a, p, b, q) for p, q in want],
+                       dtype=np.float64).reshape(-1, 2)
+        assert np.c_[inter, iou].tobytes() == ref.tobytes()
+
+
+class TestOverlaps:
+    @pytest.mark.parametrize("rows", [None, 7])
+    @pytest.mark.parametrize("shift", [0.0, 7.3e5])
+    def test_matches_the_per_pair_oracle(self, monkeypatch, rows, shift):
+        """Every case of _overlap_shapes, also at UTM-sized coordinates and
+        with passes cut every 7 triangle pairs (pairs larger than a pass
+        go alone)."""
+        if rows is not None:
+            monkeypatch.setattr(G, "_CLIP_ROWS", rows)
+        a, b = _overlap_shapes()
+        t = (1.0, 0.0, shift, 0.0, 1.0, 3.7 * shift)
+        a = [G.transform_wkt(w, t) if w else w for w in a]
+        b = [G.transform_wkt(w, t) for w in b]
+        _assert_overlaps_are_the_oracle(a, b)
+        *_, inter, iou = G.overlaps(*G.polygon_sets(a, b))
+        assert 1.0 in iou.tolist()                 # an identical pair
+        assert 0.0 in inter.tolist()               # touching-only pairs
+
+    def test_group_across_the_pass_bound(self):
+        """A group of 64-gons whose triangle pairs fill several passes, and
+        a 300-gon pair larger than one pass."""
+        a = [G.wkt_dump("POLYGON", [_ngon(3 * k, k % 4, 5, 64)])
+             for k in range(10)] + [G.wkt_dump("POLYGON",
+                                               [_ngon(14, 2, 6, 300)])]
+        b = [G.wkt_dump("POLYGON", [_ngon(3 * k + 1, 2, 4, 64, cw=k % 2)])
+             for k in range(8)] + [G.wkt_dump("POLYGON",
+                                              [_ngon(15, 1, 7, 300)])]
+        ga, gb = G.polygon_sets(a, b)
+        i, j, _, _ = G.overlaps(ga, gb)
+        n = [len(ga.tris[p][1]) * len(gb.tris[q][1]) for p, q in zip(i, j)]
+        assert sum(n) > 4 * G._CLIP_ROWS and max(n) > G._CLIP_ROWS
+        _assert_overlaps_are_the_oracle(a, b)
 
 
 class TestGrid:
@@ -196,6 +278,8 @@ class TestHoleOrientation:
         assert abs(G.polygon_area(w_bad) - 84.0) < 1e-9
         assert abs(O.iou_wkt(w_bad, w_bad) - 1.0) < 1e-12
         assert abs(O.iou_wkt(w_bad, w_ok) - 1.0) < 1e-12
+        a, b = G.polygon_sets([w_bad, w_ok], [w_bad, w_ok])
+        assert np.all(np.abs(G.overlaps(a, b)[3] - 1.0) < 1e-12)
         # intersection with a probe overlapping the hole region: the hole
         # contributes nothing regardless of winding
         probe = "POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))"

@@ -294,3 +294,28 @@ class TestTileGridSynth:
                        .select(*cols).collect())
         assert len({r[1] for r in grid}) == 3 and len(grid) > 3
         assert grid == tiles
+
+
+class TestVectorTilesSynth:
+    def test_zero_area_label_is_dropped(self, spark):
+        """A zero-area label (partialDec 0/0) is dropped like the
+        reference's NaN row; it does not fail the query, and the other
+        label's rows are the rows it gets alone."""
+        geo = spark.createDataFrame(
+            [("z", 40, 40, 0.5, 0.0, 733600.0, 0.0, -0.5, 3726000.0,
+              32616, 0.0)],
+            "image_id string, w int, h int, a double, b double, c double, "
+            "d double, e double, f double, epsg int, nodata double")
+        grid = tiling.tile_grid(geo, (20, 20))
+
+        def rows(wkts):
+            labels = spark.createDataFrame(
+                list(enumerate(wkts)), "label_id int, wkt_pix string") \
+                .selectExpr("'z' AS image_id", "label_id", "wkt_pix")
+            return sorted(tuple(r) for r in tiling.vector_tiles(
+                tiling.labels_geo(labels, geo), grid).collect())
+
+        square = "POLYGON ((12 12, 28 12, 28 28, 12 28, 12 12))"
+        got = rows([square, "POLYGON ((1 1, 2 2, 3 3, 1 1))"])
+        assert len(got) == 4 and {r[2] for r in got} == {0}
+        assert got == rows([square])
