@@ -105,6 +105,98 @@ class TestSkew:
         assert {tuple(r) for r in plain.collect()} == \
                {tuple(r) for r in salted.collect()}
 
+    @pytest.mark.parametrize("salt_by", [None, "v"])
+    @pytest.mark.parametrize("how", ["inner", "left", "left_semi",
+                                     "left_anti"])
+    def test_salted_join_rows_equal_plain(self, spark, how, salt_by):
+        """Whole rows as multisets: key 2 has no small row and key 3 no
+        big row, so a salt copy that leaks or a big row that is lost or
+        doubled changes the counts."""
+        from collections import Counter
+        big = spark.createDataFrame(
+            [(1, "a"), (1, "b"), (1, "b"), (2, "c"), (0, "d")],
+            "k int, v string")
+        small = spark.createDataFrame([(1, "x"), (0, "w"), (3, "y")],
+                                      "k int, name string")
+        plain = Counter(map(tuple, big.join(small, "k", how).collect()))
+        salted = Counter(map(tuple, skew.salted_join(
+            big, small, "k", n_salts=4, how=how, salt_by=salt_by).collect()))
+        assert salted == plain
+
+    @pytest.mark.parametrize("how", ["right", "rightouter", "right_outer",
+                                     "full", "fullouter", "full_outer",
+                                     "outer", "RIGHT", "Full_Outer"])
+    def test_salted_join_rejects_right_keeping(self, spark, how):
+        big = spark.createDataFrame([(1, "a")], "k int, v string")
+        small = spark.createDataFrame([(3, "y")], "k int, name string")
+        with pytest.raises(ValueError, match="unmatched right rows"):
+            skew.salted_join(big, small, "k", n_salts=4, how=how)
+
+    @pytest.mark.parametrize("n_salts", [0, -1])
+    def test_salted_join_rejects_few_salts(self, spark, n_salts):
+        big = spark.createDataFrame([(1, "a")], "k int, v string")
+        small = spark.createDataFrame([(1, "x")], "k int, name string")
+        with pytest.raises(ValueError, match="n_salts"):
+            skew.salted_join(big, small, "k", n_salts=n_salts, salt_by="v")
+
+    @staticmethod
+    def _final_plan(df) -> str:
+        """Run `df` itself (a count would plan another query) and return
+        the adaptive plan it ran."""
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, plan
+        return plan
+
+    def test_salted_join_plans_shuffled_hash(self, spark):
+        """The salted small side is the build side of a shuffled hash
+        join: no sort on either side, no merge."""
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            big = spark.range(0, 2000).select(
+                (F.col("id") % 7).alias("k"), "id")
+            small = spark.range(7).select(
+                F.col("id").alias("k"), (F.col("id") * 2).alias("w"))
+            out = skew.salted_join(big, small, "k", n_salts=4, salt_by="id")
+            plan = self._final_plan(out)
+        finally:
+            spark.conf.set(key, old)
+        assert "ShuffledHashJoin" in plan and "BuildRight" in plan, plan
+        assert "SortMergeJoin" not in plan, plan
+        assert "Sort [" not in plan, plan
+
+    def test_salted_join_keeps_aqe_skew_split(self, spark):
+        """AQE's runtime skew split is still the backstop: with its
+        thresholds lowered, a 50 %-hot key's join is split."""
+        confs = {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
+                "1k",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        }
+        old = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            big = spark.range(0, 20000, 1, 4).select(
+                F.when(F.col("id") % 2 == 0, F.lit(0))
+                .otherwise(F.col("id") % 97).alias("k"), "id")
+            small = spark.range(97).select(
+                F.col("id").alias("k"), (F.col("id") + 1).alias("w"))
+            out = skew.salted_join(big, small, "k", n_salts=2, salt_by="id")
+            plan = self._final_plan(out)
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        assert "ShuffledHashJoin" in plan and "skew=true" in plan, plan
+
 
 class TestLineage:
     def test_resume_skips_committed(self, spark, tmp_path):
