@@ -119,7 +119,8 @@ def wkt_dump(gtype: str, parts) -> str:
 
 def polygon_rings(wkt: str) -> list[np.ndarray]:
     """All rings of a POLYGON/MULTIPOLYGON as a flat list with orientation
-    NORMALIZED: exterior rings CCW (signed area > 0), hole rings CW.
+    NORMALIZED: exterior rings CCW (signed area > 0), hole rings CW — the
+    one-WKT call of pack_polygons, rings as views into one array.
 
     GEOS/shapely area and overlay are ring-orientation-insensitive; the
     signed fan-triangle decomposition (fan_decompose) and the
@@ -127,29 +128,12 @@ def polygon_rings(wkt: str) -> list[np.ndarray]:
     would double-count instead of subtracting. Normalizing here makes every
     downstream consumer (IoU kernels, rasterizer winding, area sums) agree
     with GEOS regardless of input winding."""
-    gtype, parts = wkt_parse(wkt)
-    if gtype == "POLYGON":
-        polys = [parts]
-    elif gtype == "MULTIPOLYGON":
-        polys = parts
-    elif not parts:
-        return []
-    else:
-        raise ValueError(f"expected polygonal WKT, got {gtype}")
-    out = []
-    for rings in polys:
-        for k, r in enumerate(rings):
-            sa = ring_signed_area(r)
-            want_ccw = k == 0
-            if sa != 0.0 and (sa > 0) != want_ccw:
-                r = r[::-1]
-            out.append(r)
-    return out
+    return ring_groups(*pack_polygons([wkt]), 1)[0]
 
 
 # the fast grammar of pack_polygons: a POLYGON or MULTIPOLYGON whose every
 # vertex is exactly two tokens; float() judges each token, as it does in
-# polygon_rings
+# wkt_parse
 _TOKEN = r"[^\s,()]+"
 _VERTEX = rf"{_TOKEN}\s+{_TOKEN}"
 _RING = rf"\(\s*{_VERTEX}(?:\s*,\s*{_VERTEX})*\s*\)"
@@ -163,21 +147,18 @@ _RING_TEXT = re.compile(r"([(,])\s*\(([^()]*)\)")
 
 def pack_polygons(wkts: list[str]) -> tuple[np.ndarray, np.ndarray,
                                               np.ndarray]:
-    """polygon_rings of many WKTs, packed: returns ``(xy, offsets,
-    groups)`` where ring k is ``xy[offsets[k]:offsets[k + 1]]`` and comes
-    from ``wkts[groups[k]]``, rings in WKT order, each equal to the one
-    polygon_rings gives (values and orientation).
+    """Every ring of many POLYGON/MULTIPOLYGON WKTs, packed: returns
+    ``(xy, offsets, groups)`` where ring k is ``xy[offsets[k]:offsets[k +
+    1]]`` and comes from ``wkts[groups[k]]``, rings in WKT order, an
+    exterior ring counter-clockwise and a hole clockwise.  None, ``""``
+    and an EMPTY geometry have no rings.
 
     A WKT in the fast grammar (``_POLYGONAL``) costs two regex calls; the
     coordinates of all of them come from one split of their joined ring
-    texts, each value ``float(token)`` as in polygon_rings.  Orientation
-    is one batched shoelace sum per ring about its first vertex, the terms
-    polygon_rings' ring_signed_area sums; its sign is trusted where it
-    clears the summation-order error bound offset_curves uses, and a ring
-    below it (a spike, a zero-area ring) asks ring_signed_area itself.
-    Any other WKT (EMPTY, other types, Z coordinates, odd text) goes
-    through polygon_rings, and any error is the one a loop of polygon_rings
-    raises first."""
+    texts, each value ``float(token)`` as in wkt_parse.  Any other WKT
+    (other types, Z coordinates, odd text) goes through wkt_parse.  Every
+    ring is then oriented in one _orient_src pass over the batch, and any
+    error is the one a loop of polygon_rings raises first."""
     try:
         return _pack_polygons(wkts)
     except Exception:
@@ -185,54 +166,59 @@ def pack_polygons(wkts: list[str]) -> tuple[np.ndarray, np.ndarray,
         # bad WKT raises its own error even when a later one failed first
         # in the batch
         for w in wkts:
-            polygon_rings(w)
+            _pack_polygons([w])
         raise
 
 
 def _pack_polygons(wkts):
     texts, outer, groups = [], [], []
-    slow, slow_groups = [], []
+    slow, slow_outer, slow_groups = [], [], []
     for i, w in enumerate(wkts):
+        if w is None or w == "":
+            continue
         if isinstance(w, str) and _POLYGONAL.fullmatch(w):
             for opener, ring in _RING_TEXT.findall(w):
                 texts.append(ring)
                 outer.append(opener == "(")
                 groups.append(i)
-        else:
-            rings = polygon_rings(w)
+            continue
+        gtype, parts = wkt_parse(w)
+        if parts and gtype not in ("POLYGON", "MULTIPOLYGON"):
+            raise ValueError(f"expected polygonal WKT, got {gtype}")
+        for rings in parts if gtype == "MULTIPOLYGON" else [parts]:
             slow.extend(rings)
+            slow_outer.extend(k == 0 for k in range(len(rings)))
             slow_groups.extend([i] * len(rings))
     tokens = " ".join(texts).replace(",", " ").split()
     xy = np.fromiter(map(float, tokens), dtype=np.float64,
                      count=len(tokens)).reshape(-1, 2)
     n = np.fromiter(map(str.count, texts, [","] * len(texts)),
                     dtype=np.int64, count=len(texts)) + 1
-    xy = xy[_orient_src(xy, n, np.array(outer, dtype=bool))]
-    groups = np.array(groups, dtype=np.int64)
+    outer = np.array(outer + slow_outer, dtype=bool)
+    groups = np.array(groups + slow_groups, dtype=np.int64)
     if slow:
-        # merge polygon_rings' rings in by WKT index, rings kept in order
+        # merge wkt_parse's rings in by WKT index, rings kept in order
         n_slow = np.fromiter(map(len, slow), dtype=np.int64, count=len(slow))
         xy = np.concatenate([xy, *slow])
         n = np.concatenate([n, n_slow])
-        groups = np.concatenate([groups, slow_groups]).astype(np.int64)
         order = np.argsort(groups, kind="stable")
         start = np.cumsum(n) - n
-        n, groups = n[order], groups[order]
+        n, groups, outer = n[order], groups[order], outer[order]
         xy = xy[np.repeat(start[order] - (np.cumsum(n) - n), n)
                 + np.arange(len(xy))]
+    xy = xy[_orient_src(xy, n, outer)]
     return xy, np.concatenate(([0], np.cumsum(n))), groups
 
 
 def _orient_src(xy: np.ndarray, n: np.ndarray,
                 outer: np.ndarray) -> np.ndarray:
     """Gather index that orients rings stored back to back (``n[k]``
-    vertices each) as polygon_rings does: an ``outer`` ring CCW, a hole CW,
-    a ring of signed area 0 as it is."""
+    vertices each) by the sign of their _shoelace sums: an ``outer`` ring
+    counter-clockwise, a hole clockwise, a ring of signed area 0 as it
+    is."""
     rid, start, nxt, _, _ = _ring_walk(xy[:, 0], xy[:, 1], n)
     first = start[rid]
-    area2, unsure = _shoelace(xy[:, 0], xy[:, 1], rid, first, nxt, n)
-    for k in np.flatnonzero(unsure).tolist():
-        area2[k] = ring_signed_area(xy[start[k]:start[k] + n[k]])
+    area2 = _shoelace(xy[:, 0], xy[:, 1], rid, first, nxt, n)
     flip = (area2 != 0.0) & ((area2 > 0.0) != outer)
     src = np.arange(len(xy))
     if flip.any():
@@ -246,22 +232,21 @@ def _orient_src(xy: np.ndarray, n: np.ndarray,
 # ---------------------------------------------------------------------------
 
 def ring_signed_area(ring: np.ndarray) -> float:
-    # center first: raw geo coords (~1e6) lose ~10 digits to cancellation
+    """Signed area of one ring, positive counter-clockwise: half its
+    _shoelace sum, the same terms ``x[i]·y[i+1] − y[i]·x[i+1]`` about
+    vertex 0 added in vertex order, so every host and the batched kernels
+    get the same bits.
+    Centered first: raw geo coords (~1e6) lose ~10 digits to
+    cancellation."""
     x = ring[:, 0] - ring[0, 0]
     y = ring[:, 1] - ring[0, 1]
-    # build the rotated-by-one arrays directly instead of np.roll (this is
-    # the hottest scalar kernel: per-candidate clip refine + rasterizer
-    # orientation; np.roll's axis normalization was ~60% of its runtime).
-    # Contents are identical to np.roll(·, -1).  1-D np.dot is BLAS ddot,
-    # whose summation order depends on the BLAS kernel: 396 random rings
-    # gave 4 different result hashes under 4 OPENBLAS_CORETYPE values.
-    yr = np.empty_like(y)
-    yr[:-1] = y[1:]
-    yr[-1] = y[0]
-    xr = np.empty_like(x)
-    xr[:-1] = x[1:]
-    xr[-1] = x[0]
-    return 0.5 * float(np.dot(x, yr) - np.dot(y, xr))
+    # term i pairs vertex i with the next one, the last with vertex 0
+    t = np.empty_like(x)
+    np.multiply(x[:-1], y[1:], out=t[:-1])
+    t[:-1] -= y[:-1] * x[1:]
+    t[-1] = x[-1] * y[0] - y[-1] * x[0]
+    # cumsum adds in order; + 0.0 as _shoelace's bincount starts from 0.0
+    return 0.5 * (float(t.cumsum()[-1]) + 0.0)
 
 
 def polygon_area(wkt_or_rings) -> float:
@@ -657,7 +642,7 @@ def ring_groups(xy: np.ndarray, offsets: np.ndarray, groups: np.ndarray,
 
 class PolygonSet(NamedTuple):
     rings: list        # per polygon: polygon_rings, views into one array
-    signed: list       # per polygon: each ring's ring_signed_area
+    signed: list       # per polygon: each ring's signed area
     area: np.ndarray   # (n,) unsigned areas |Σ signed|
     bbox: np.ndarray   # (n, 4) closed [xmin, ymin, xmax, ymax]
     tris: list | None = None   # polygon_sets' fan_decompose per polygon
@@ -665,21 +650,28 @@ class PolygonSet(NamedTuple):
 
 def prepare_polygons(wkts: list[str]) -> PolygonSet:
     """Polygons of many WKTs from one pack_polygons call, errors as it
-    raises them.  An EMPTY WKT has no rings, area 0 and an inverted bbox
-    that overlaps nothing."""
+    raises them.  Every ring's signed area comes from one _shoelace pass
+    over the batch (ring_signed_area's bits), every polygon's area
+    |Σ signed| from one bincount over the groups.  A None, ``""`` or EMPTY
+    WKT has no rings, area 0 and an inverted bbox that overlaps nothing."""
     xy, offsets, groups = pack_polygons(wkts)
     n = len(wkts)
-    rings = ring_groups(xy, offsets, groups, n)
-    signed = [[ring_signed_area(r) for r in rr] for rr in rings]
+    nv = np.diff(offsets)
+    rid, start, nxt, _, _ = _ring_walk(xy[:, 0], xy[:, 1], nv)
+    ring_area = 0.5 * _shoelace(xy[:, 0], xy[:, 1], rid, start[rid], nxt, nv)
+    signed = [[] for _ in range(n)]
+    for g, a in zip(groups.tolist(), ring_area.tolist()):
+        signed[g].append(a)
     bbox = np.tile([np.inf, np.inf, -np.inf, -np.inf], (n, 1))
     if len(groups):
         # a polygon's rings are contiguous in xy, in WKT order
         has, first = np.unique(groups, return_index=True)
         bbox[has, :2] = np.minimum.reduceat(xy, offsets[first], axis=0)
         bbox[has, 2:] = np.maximum.reduceat(xy, offsets[first], axis=0)
-    return PolygonSet(rings, signed,
-                      np.array([abs(sum(s)) for s in signed],
-                               dtype=np.float64), bbox)
+    return PolygonSet(ring_groups(xy, offsets, groups, n), signed,
+                      np.abs(np.bincount(groups, weights=ring_area,
+                                         minlength=n)),
+                      bbox)
 
 
 def polygon_sets(*wkt_lists) -> list[PolygonSet]:
@@ -687,8 +679,7 @@ def polygon_sets(*wkt_lists) -> list[PolygonSet]:
     every vertex) so fan triangles are decomposed once per polygon and
     reused across every partner.  A None / empty / EMPTY WKT has no rings,
     area 0 and an inverted bbox that overlaps nothing."""
-    polys = [prepare_polygons([w or "POLYGON EMPTY" for w in wl])
-             for wl in wkt_lists]
+    polys = [prepare_polygons(wl) for wl in wkt_lists]
     allr = [r for p in polys for rr in p.rings for r in rr]
     if allr:
         allc = np.vstack(allr)
@@ -801,9 +792,6 @@ def simplify_dp(coords: np.ndarray, tol: float) -> np.ndarray:
 # instead of being noded into a valid polygon.
 # ---------------------------------------------------------------------------
 
-_EPS = float(np.finfo(np.float64).eps)
-
-
 def offset_curves(xy: np.ndarray, offsets: np.ndarray, radius: float
                   ) -> tuple[np.ndarray, np.ndarray]:
     """Raw GEOS/JTS-style offset curves of many rings in one NumPy pass,
@@ -828,10 +816,11 @@ def offset_curves(xy: np.ndarray, offsets: np.ndarray, radius: float
     OffsetSegmentGenerator.createCircle: clockwise from (x + radius, y).
 
     Every vertex is bit-identical to the sequential per-vertex recipe:
-    elementwise IEEE arithmetic, arc angles accumulated ``ang += delta``
-    by a row-wise cumsum (sequential), and ``math.atan2`` / ``math.cos`` /
-    ``math.sin`` (NumPy's SIMD versions round differently) mapped over
-    the arc vertices only."""
+    each ring's outward side from the sign of one _shoelace sum (the sign
+    ring_signed_area gives), elementwise IEEE arithmetic, arc angles
+    accumulated ``ang += delta`` by a row-wise cumsum (sequential), and
+    ``math.atan2`` / ``math.cos`` / ``math.sin`` (NumPy's SIMD versions
+    round differently) mapped over the arc vertices only."""
     quantum = math.pi / 2.0 / 16
     nr = len(offsets) - 1
     if nr == 0:
@@ -848,30 +837,15 @@ def offset_curves(xy: np.ndarray, offsets: np.ndarray, radius: float
     moved = (dx != 0.0) | (dy != 0.0)
     is_point = np.bincount(rid, weights=moved, minlength=nr) == 0
     pt_x, pt_y = px[st[is_point]], py[st[is_point]]
-    dropped = np.zeros(nr, dtype=bool)
     if not moved.all():
-        dropped[rid[~moved]] = True
-        dropped &= ~is_point
         px, py = px[moved], py[moved]
         n = np.bincount(rid[moved], minlength=nr)
         rid, st, nxt, dx, dy = _ring_walk(px, py, n)
 
-    # orientation: sign of the shoelace sum about the ring's first vertex.
-    # Where the sum clears a summation-order error bound its sign is the
-    # one ring_signed_area finds; near-zero rings (spikes, doubled paths)
-    # ask ring_signed_area itself, on the ring the sequential recipe uses.
+    # orientation: the sign of the ring's shoelace sum (ring_signed_area's
+    # sign: a closing vertex adds only zero terms)
     x0 = st[rid]
-    area2, unsure = _shoelace(px, py, rid, x0, nxt, n)
-    s = np.where(area2 > 0.0, 1.0, -1.0)
-    unsure &= ~is_point
-    for k in np.flatnonzero(unsure).tolist():
-        if dropped[k]:
-            kept = np.stack([px[st[k]:st[k] + n[k]], py[st[k]:st[k] + n[k]]],
-                            axis=1)
-            ring = np.vstack([kept, kept[:1]])
-        else:
-            ring = xy[first_in[k]:first_in[k] + n_in[k]]
-        s[k] = 1.0 if ring_signed_area(ring) > 0 else -1.0
+    s = np.where(_shoelace(px, py, rid, x0, nxt, n) > 0.0, 1.0, -1.0)
 
     # outward unit normal of every edge (edge i runs from vertex i to nxt[i])
     sv = s[rid]
@@ -947,17 +921,14 @@ def _shoelace(x: np.ndarray, y: np.ndarray, rid: np.ndarray,
               first: np.ndarray, nxt: np.ndarray, n: np.ndarray):
     """Twice the signed area of each ring stored back to back (vertex i in
     ring ``rid[i]``, whose first vertex is ``first[i]``, followed by
-    ``nxt[i]``), summed about the ring's first vertex from the terms
-    ring_signed_area sums, and which sums are too close to 0 to trust
-    their sign: within the summation-order error bound
-    ``2·eps·(n + 2)·Σ|terms|``, or not finite.  Those rings ask
-    ring_signed_area itself."""
+    ``nxt[i]``): the terms ``x[i]·y[nxt[i]] − y[i]·x[nxt[i]]`` about the
+    ring's first vertex, added in vertex order by one bincount — the
+    engine's one ring-area sum, which ring_signed_area takes for one
+    ring."""
     xc = x - x[first]
     yc = y - y[first]
-    a, b = xc * yc[nxt], yc * xc[nxt]
-    area2 = np.bincount(rid, weights=a - b, minlength=len(n))
-    bound = np.bincount(rid, weights=np.abs(a) + np.abs(b), minlength=len(n))
-    return area2, ~(np.abs(area2) > 2.0 * _EPS * (n + 2) * bound)
+    return np.bincount(rid, weights=xc * yc[nxt] - yc * xc[nxt],
+                       minlength=len(n))
 
 
 def _ring_walk(px: np.ndarray, py: np.ndarray, n: np.ndarray):

@@ -133,13 +133,14 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame,
         from ..functions import geom as G
         x, y = np.asarray([px, py], dtype=np.float64)
         out = np.zeros(len(x), dtype=bool)
-        # group identical polygons within the batch to vectorize over points
+        # group identical polygons within the batch to vectorize over
+        # points, and pack the distinct ones in one call
         rows: dict = {}
         for i, w in enumerate(wkt):
-            if w is not None:
-                rows.setdefault(w, []).append(i)
-        for w, sel in rows.items():
-            out[sel] = G.points_in_polygon(x[sel], y[sel], G.polygon_rings(w))
+            rows.setdefault(w, []).append(i)
+        polys = G.prepare_polygons(list(rows))
+        for rings, sel in zip(polys.rings, rows.values()):
+            out[sel] = G.points_in_polygon(x[sel], y[sel], rings)
         return out
 
     return j.filter(pip(F.col(x), F.col(y), F.col(wkt_col)))

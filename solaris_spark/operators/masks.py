@@ -128,7 +128,7 @@ def image_masks(labels: DataFrame, images_geo: DataFrame,
 
     def rows_of(rows):
         r0 = rows[0]
-        arr = build_mask_arrays([r.wkt for r in rows if r.wkt is not None],
+        arr = build_mask_arrays([r.wkt for r in rows],
                                 (r0.h, r0.w), channels,
                                 boundary_width=boundary_width,
                                 boundary_type=boundary_type,
@@ -262,8 +262,9 @@ def instance_masks(labels: DataFrame, images_geo: DataFrame,
 
 def _instance_rows(do_transform: bool, burn_value: int, has_img: bool):
     """INSTANCE_SCHEMA rows of one image's label rows: one rasterize_rings
-    mask per label (all zero for a NULL geometry, as for an EMPTY one),
-    zeroed where the joined image (``has_img``) equals its nodata value."""
+    mask per label (all zero for a NULL or ``""`` geometry, as for an
+    EMPTY one), zeroed where the joined image (``has_img``) equals its
+    nodata value."""
 
     def rows_of(rows):
         r0 = rows[0]
@@ -273,10 +274,8 @@ def _instance_rows(do_transform: bool, burn_value: int, has_img: bool):
         if has_img and r0.nodata is not None and not math.isnan(r0.nodata):
             arr = pixfmt.decode(r0.fmt, r0.bytes, r0.w, r0.h)
             bad = (arr == r0.nodata).any(axis=0)
-        # one parse and one affine over the image's labels; a NULL
-        # geometry is an EMPTY one
-        xy, offsets, groups = G.pack_polygons(
-            ["POLYGON EMPTY" if r.wkt is None else r.wkt for r in rows])
+        # one parse and one affine over the image's labels
+        xy, offsets, groups = G.pack_polygons([r.wkt for r in rows])
         if inv is not None:
             xy = G.affine_apply(xy, inv)
         for r, label in zip(rows, G.ring_groups(xy, offsets, groups,

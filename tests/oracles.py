@@ -4,6 +4,10 @@ These are the per-polygon forms the engine's batched kernels replaced.
 No engine code imports this module (``test_arrow_udfs.py`` greps the
 engine for such an import):
 
+- ``polygon_rings`` parses one WKT and orients its rings one at a time
+  (each by the sign of its ``ring_signed_area``), the reference that
+  ``test_pack_polygons.py`` holds the engine's one-pass
+  ``geom.pack_polygons`` to ring by ring.
 - ``rasterize_rings`` is the lexsort scanline fill (crossings sorted by
   (row, x) and paired, even-odd or nonzero winding, REPLACE or ADD into a
   caller's frame).  The engine's one scanline algorithm
@@ -207,6 +211,30 @@ def rasterize_shapes(shapes, shape: tuple[int, int],
         # identical to the former out[m > 0] = val, without materializing
         # a full-frame indicator + masked write per shape)
         rasterize_rings(rings, (h, w), out=out, value=val)
+    return out
+
+
+def polygon_rings(wkt: str) -> list[np.ndarray]:
+    """The rings of one POLYGON/MULTIPOLYGON WKT as a flat list, each
+    reversed where the sign of its ring_signed_area disagrees with its
+    role (exterior counter-clockwise, hole clockwise); a ring of signed
+    area 0 stays as written."""
+    gtype, parts = G.wkt_parse(wkt)
+    if gtype == "POLYGON":
+        polys = [parts]
+    elif gtype == "MULTIPOLYGON":
+        polys = parts
+    elif not parts:
+        return []
+    else:
+        raise ValueError(f"expected polygonal WKT, got {gtype}")
+    out = []
+    for rings in polys:
+        for k, r in enumerate(rings):
+            sa = G.ring_signed_area(r)
+            if sa != 0.0 and (sa > 0) != (k == 0):
+                r = r[::-1]
+            out.append(r)
     return out
 
 

@@ -2,12 +2,16 @@
 
 Each case runs an operator on a small inline input (no fixture files)
 whose rows sit in one partition next to an empty one, once with clean
-rows and once with a NULL in each argument of the operator's UDF.  The
+rows and once with a NULL in each argument of the operator's UDF (and
+once with ``""`` in the WKT argument of ``clip`` and ``geom_stats``).  The
 expected outcome is the sorted ``repr`` of every output row, or, when the
 query fails, the Python exception named at the end of the worker's
 traceback.  They were recorded with the engine's
 earlier pandas UDFs, so a port that changes a value, a NULL or an error
-shows here.
+shows here.  The NULL and ``""`` WKT entries of ``clip`` and
+``geom_stats`` were recorded when ``geom.pack_polygons`` began to read
+both as no geometry (before, a NULL failed the query with
+AttributeError and a ``""`` with ValueError).
 
 The last two tests keep pandas and SparkContext broadcasts out of the
 engine package.
@@ -55,11 +59,12 @@ MULTI = ("MULTIPOLYGON (((0 0, 4 0, 4 4, 0 4, 0 0)), "
 MLINE = "MULTILINESTRING ((0 0, 1 1, 2 1), (5 5, 6 7))"
 
 
-def _nulled(rows, col, names):
-    """rows with column ``col`` of the last row set to NULL."""
+def _nulled(rows, col, names, value=None):
+    """rows with column ``col`` of the last row set to NULL (or
+    ``value``)."""
     k = names.index(col)
     last = list(rows[-1])
-    last[k] = None
+    last[k] = value
     return rows[:-1] + [tuple(last)]
 
 
@@ -123,6 +128,10 @@ case("clip-tile_px")(lambda spark: _vector_tiles(spark, bbox=True,
 case("clip-null-wkt_geo")(lambda spark: _vector_tiles(
     spark, bbox=True, labels=_nulled(VT_LABELS, "wkt_geo",
                                      ["image_id", "label_id", "wkt_geo"])))
+case("clip-empty-wkt_geo")(lambda spark: _vector_tiles(
+    spark, bbox=True, labels=_nulled(VT_LABELS, "wkt_geo",
+                                     ["image_id", "label_id", "wkt_geo"],
+                                     "")))
 for _c in ("xmin", "ymin", "xmax", "ymax"):
     case(f"clip-null-{_c}")(lambda spark, _c=_c: _vector_tiles(
         spark, bbox=True, grid=_nulled(VT_GRID, _c, VT_GRID_COLS)))
@@ -145,6 +154,9 @@ case("geom_stats-base")(lambda spark: _yolo(spark))
 case("geom_stats-null-wkt_pix")(lambda spark: _yolo(
     spark, labels=_nulled(YO_LABELS, "wkt_pix",
                           ["image_id", "label_id", "wkt_pix"])))
+case("geom_stats-empty-wkt_pix")(lambda spark: _yolo(
+    spark, labels=_nulled(YO_LABELS, "wkt_pix",
+                          ["image_id", "label_id", "wkt_pix"], "")))
 case("geom_stats-null-im_w")(lambda spark: _yolo(
     spark, images=_nulled(YO_IMAGES, "w", ["image_id", "w", "h"])))
 case("geom_stats-null-im_h")(lambda spark: _yolo(
@@ -473,7 +485,38 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                "('t11', 'i0', 3, 'POLYGON ((16.0 16.0, 19.714285714285715 "
                "16.0, 16.0 20.333333333333332, 16.0 16.0))', None, 321.0, "
                '8.047619047619047, 0.02507046432280077, 1)'],
- 'clip-null-wkt_geo': ('error', 'AttributeError'),
+ 'clip-empty-wkt_geo': ["('t00', 'i0', 1, 'POLYGON ((0.0 0.0, 10.0 0.0, 10.0 "
+                        "10.0, 0.0 10.0, 0.0 0.0))', None, 100.0, 100.0, "
+                        '1.0, 0)',
+                        "('t00', 'i0', 2, 'POLYGON ((0.0 16.0, 0.0 0.0, 16.0 "
+                        '0.0, 16.0 16.0, 0.0 16.0), (5.0 5.0, 5.0 15.0, 15.0 '
+                        "15.0, 15.0 5.0, 5.0 5.0))', None, 300.0, 156.0, "
+                        '0.52, 1)',
+                        "('t01', 'i0', 2, 'POLYGON ((0.0 16.0, 16.0 16.0, "
+                        "16.0 20.0, 0.0 20.0, 0.0 16.0))', None, 300.0, "
+                        '64.0, 0.21333333333333335, 1)',
+                        "('t10', 'i0', 2, 'POLYGON ((16.0 16.0, 16.0 0.0, "
+                        "20.0 0.0, 20.0 16.0, 16.0 16.0))', None, 300.0, "
+                        '64.0, 0.21333333333333335, 1)',
+                        "('t11', 'i0', 2, 'POLYGON ((16.0 16.0, 20.0 16.0, "
+                        "20.0 20.0, 16.0 20.0, 16.0 16.0))', None, 300.0, "
+                        '16.0, 0.05333333333333334, 1)'],
+ 'clip-null-wkt_geo': ["('t00', 'i0', 1, 'POLYGON ((0.0 0.0, 10.0 0.0, 10.0 "
+                       "10.0, 0.0 10.0, 0.0 0.0))', None, 100.0, 100.0, 1.0, "
+                       '0)',
+                       "('t00', 'i0', 2, 'POLYGON ((0.0 16.0, 0.0 0.0, 16.0 "
+                       '0.0, 16.0 16.0, 0.0 16.0), (5.0 5.0, 5.0 15.0, 15.0 '
+                       "15.0, 15.0 5.0, 5.0 5.0))', None, 300.0, 156.0, "
+                       '0.52, 1)',
+                       "('t01', 'i0', 2, 'POLYGON ((0.0 16.0, 16.0 16.0, "
+                       "16.0 20.0, 0.0 20.0, 0.0 16.0))', None, 300.0, 64.0, "
+                       '0.21333333333333335, 1)',
+                       "('t10', 'i0', 2, 'POLYGON ((16.0 16.0, 16.0 0.0, "
+                       "20.0 0.0, 20.0 16.0, 16.0 16.0))', None, 300.0, "
+                       '64.0, 0.21333333333333335, 1)',
+                       "('t11', 'i0', 2, 'POLYGON ((16.0 16.0, 20.0 16.0, "
+                       "20.0 20.0, 16.0 20.0, 16.0 16.0))', None, 300.0, "
+                       '16.0, 0.05333333333333334, 1)'],
  'clip-null-xmax': ["('t00', 'i0', 1, 'POLYGON ((0.0 0.0, 10.0 0.0, 10.0 "
                     "10.0, 0.0 10.0, 0.0 0.0))', None, 100.0, 100.0, 1.0, 0)",
                     "('t00', 'i0', 2, 'POLYGON ((0.0 16.0, 0.0 0.0, 16.0 "
@@ -608,11 +651,14 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
  'geom_stats-base': ["('i0', 1, 0.3125, 0.3125, 0.625, 0.625)",
                      "('i0', 2, 0.625, 0.625, 1.25, 1.25)",
                      "('i1', 3, 0.4, 0.65, 0.7, 1.2)"],
+ 'geom_stats-empty-wkt_pix': ["('i0', 1, 0.3125, 0.3125, 0.625, 0.625)",
+                              "('i0', 2, 0.625, 0.625, 1.25, 1.25)"],
  'geom_stats-null-im_h': ["('i0', 1, 0.3125, 0.3125, 0.625, 0.625)",
                           "('i0', 2, 0.625, 0.625, 1.25, 1.25)"],
  'geom_stats-null-im_w': ["('i0', 1, 0.3125, 0.3125, 0.625, 0.625)",
                           "('i0', 2, 0.625, 0.625, 1.25, 1.25)"],
- 'geom_stats-null-wkt_pix': ('error', 'AttributeError'),
+ 'geom_stats-null-wkt_pix': ["('i0', 1, 0.3125, 0.3125, 0.625, 0.625)",
+                             "('i0', 2, 0.625, 0.625, 1.25, 1.25)"],
  'pip-base': ["(1, 1.0, 1.0, 100, 'POLYGON ((0 0, 20 0, 20 20, 0 20, 0 0), "
               "(5 5, 5 15, 15 15, 15 5, 5 5))', 0.0, 0.0, 20.0, 20.0)",
               "(1, 1.0, 1.0, 101, 'POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))', "

@@ -20,6 +20,12 @@ synthetic inputs:
   two timesteps, and ``evalops.class_matched_ious`` through Spark.  These
   hashes were recorded before the joins shared one batched pair kernel,
   so a changed claim order, tie-break or candidate rule shows here.
+
+The area, IoU and clip-area hashes were re-recorded once, when every ring
+area became the one sequential shoelace sum: the earlier ones held the
+BLAS ``ddot`` sum of the host they were recorded on, and failed under
+another OpenBLAS kernel.  Now they hold on every host
+(``test_host_independence.py`` hashes the same areas under four kernels).
 """
 
 import hashlib
@@ -34,18 +40,18 @@ from solaris_spark.sources import synth
 from tests import oracles as O
 
 OVERLAP_SHA256 = {
-    0: "c7b2bc991067359bf621989a8524427893cbe98410bf19695ae6c1f889889b28",
-    1: "010bb64ca65fb59509e3eecb8231bec2ab3646f38ca742efc53e750bacfe636f",
-    2: "66d21619af149e843f78183be245c63358750cac96274dc4864dd7f77f5d8818",
+    0: "052b0643997cfe528053cfdec003c9138e336540889a48283b0fdbacc8541c55",
+    1: "5e00bc12dfdc79fadd0cade8887bce7196bad4a9be20db7f5c8b19423e7d830e",
+    2: "9c6aa472d7dfb633567fca2bc96c887863cbe9d358676a4bd7ecef835af6908a",
 }
 GREEDY_SHA256 = \
-    "574dc81dda965a9aac4bfa67807135d0028698327d63aa385b311b712ea2514c"
+    "e47f0580bdf74538e36a803e8d9275ccbd5b5228b4fa237ab084f5fd05322e34"
 SCOT_SHA256 = \
     "7778df54d6db109d881e51e904e69955a8deabc6743ccbf3c667d4211a68dff8"
 CLASS_SHA256 = \
-    "72598179ad069fe38954150f5664d959530caf8b6b19c415bceeb325ec956c4e"
+    "9bd1c5d46cda9c8217b6398e99f0b8c5092e0210f08aa1b0fbc8bda1e4234a7d"
 CLIP_SHA256 = \
-    "2e2e6ec186ebce70c18e0d2806f46fd757535b8570816340afe2d16944431b6b"
+    "a704faedca71eb33b1355b1e0b7a307bb8ebd80ae86d03557af543b6723ea759"
 
 
 def _odd_shapes(rng, w, h, n):

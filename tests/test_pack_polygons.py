@@ -1,6 +1,7 @@
-"""geom.pack_polygons (one packed parse of many WKTs) against polygon_rings,
-one WKT at a time: the same rings in the same order, each ring's bytes
-equal (values and orientation), the same error for bad input."""
+"""geom.pack_polygons (one packed parse of many WKTs) against
+oracles.polygon_rings, one WKT and one ring at a time: the same rings in
+the same order, each ring's bytes equal (values and orientation), the
+same error for bad input."""
 
 import numpy as np
 import pytest
@@ -9,12 +10,14 @@ from hypothesis import strategies as st
 
 from solaris_spark.functions import geom as G
 from solaris_spark.sources import synth
+from tests import oracles as O
 
-# doubled paths walked from their second vertex: zero exact area, so
-# the batched shoelace sum is rounding noise, and here of the other
-# sign than ring_signed_area's (+1.2e-10 against -4.7e-10, and
-# -1.2e-10 against +4.7e-10, on the host these were found on); only
-# ring_signed_area may decide their orientation
+# doubled paths walked from their second vertex: zero exact area, so a
+# shoelace sum is rounding noise whose sign depends on the summation
+# order: the sequential sum gives +5.8e-11 (-5.8e-11 for SPIKE_B), a
+# pairwise .sum() 0.0 and BLAS ddot -4.7e-10 (+4.7e-10) on the host
+# these were found on.  The batched orientation must follow the one
+# sequential sum the oracle's ring_signed_area takes per ring
 SPIKE_A = ("(516505.76587029273 26364.50684372308, "
            "515434.26525744074 25595.315339400513, "
            "515787.5103708052 26379.48115611845, "
@@ -77,10 +80,11 @@ BAD = {
 
 
 def reference(wkts):
-    """polygon_rings one WKT at a time: (rings, WKT index per ring)."""
+    """oracles.polygon_rings one WKT at a time: (rings, WKT index per
+    ring)."""
     rings, groups = [], []
     for i, w in enumerate(wkts):
-        for r in G.polygon_rings(w):
+        for r in O.polygon_rings(w):
             rings.append(r)
             groups.append(i)
     return rings, groups
@@ -186,5 +190,15 @@ def test_first_bad_wkt_raises_first():
     err = _error(lambda: G.pack_polygons(wkts))
     assert err == _error(lambda: reference(wkts))
     assert err[1] == "could not convert string to float: 'x'"
-    assert _error(lambda: G.pack_polygons([None])) == \
-        _error(lambda: G.polygon_rings(None))
+
+
+def test_none_and_empty_string_are_empty():
+    """None and "" have no rings, like an EMPTY geometry, wherever they
+    sit in the batch."""
+    good = EXPLICIT["spike_multi"]
+    xy, offsets, groups = G.pack_polygons([None, "", good, None, ""])
+    want = G.pack_polygons([good])
+    assert xy.tobytes() == want[0].tobytes()
+    assert offsets.tolist() == want[1].tolist()
+    assert groups.tolist() == [2] * len(want[2])
+    assert G.polygon_rings(None) == G.polygon_rings("") == []

@@ -194,6 +194,23 @@ class TestInstanceMasks:
         assert (got[0] == 255).sum() == 7 * 5
         assert not got[1].any() and not got[2].any()
 
+    def test_empty_string_geometry_gives_an_all_zero_mask(self, spark):
+        """A "" label geometry is no geometry, as NULL and EMPTY are: an
+        all-zero mask row, not a failed query."""
+        box = "POLYGON ((2 2, 9 2, 9 7.5, 2 7.5, 2 2))"
+        lab = spark.createDataFrame(
+            [("img", 0, ""), ("img", 1, box)],
+            "image_id string, label_id int, wkt_pix string")
+        geo = spark.createDataFrame(
+            [("img", 12, 10, 1.0, 0.0, 0.0, 0.0, 1.0, 0.0, None)],
+            "image_id string, w int, h int, a double, b double, c double, "
+            "d double, e double, f double, nodata double")
+        rows = sorted(masks.instance_masks(lab, geo).collect(),
+                      key=lambda r: r["label_id"])
+        got = [np.frombuffer(r["mask"], dtype=np.uint8).reshape(10, 12)
+               for r in rows]
+        assert not got[0].any() and (got[1] == 255).sum() == 7 * 5
+
 
 class TestMasksToPolygonsSynth:
     @pytest.mark.parametrize("do_transform", [False, True])
