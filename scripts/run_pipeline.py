@@ -5,9 +5,14 @@ Cluster usage (north rule: "run via spark-submit --py-files"):
 
     cd /root/repo && zip -qr /tmp/solaris_spark.zip solaris_spark
     spark-submit --master <cluster> \
+        --conf spark.python.unix.domain.socket.enabled=true \
         --py-files /tmp/solaris_spark.zip \
         scripts/run_pipeline.py \
         --images 64 --out /tmp/pipeline_out --resume-run run1
+
+The ``--conf`` puts the Python workers on Unix domain sockets (see
+solaris_spark/session.py) also when the script reuses a session made
+before it, whose SparkContext ``get_spark``'s configs cannot reach.
 
 Local sandbox: plain `python scripts/run_pipeline.py` (master local[N]
 from SPARK_GRAFT_CPUS).  The job is checkpoint-resumable: partition
@@ -42,7 +47,8 @@ def main():
     from solaris_spark.plans import lineage
     from solaris_spark.sources import synth
 
-    # under spark-submit a session already exists; standalone builds one
+    # a session made before this script (a shell, a notebook) is reused;
+    # otherwise get_spark builds one, under spark-submit too
     try:
         spark = SparkSession.getActiveSession()
     except Exception:

@@ -809,12 +809,10 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
               "(3, 0.0, 0.0, 'f0_512_512@10')"],
  'tok-null-lat': ["(1, 37.7749, -122.4194, 'f4_31_151@10')",
                   "(2, -33.8688, 151.2093, 'f3_929_190@10')",
-                  '(3, None, 0.0, '
-                  "'f5_-9223372036854775808_-9223372036854775808@10')"],
+                  '(3, None, 0.0, None)'],
  'tok-null-lng': ["(1, 37.7749, -122.4194, 'f4_31_151@10')",
                   "(2, -33.8688, 151.2093, 'f3_929_190@10')",
-                  '(3, 0.0, None, '
-                  "'f2_-9223372036854775808_-9223372036854775808@10')"],
+                  '(3, 0.0, None, None)'],
  'verts-base': ['(1, 0.0, 0.0)',
                 '(1, 1, 5, 5.0)',
                 '(1, 5, 8, 5.0)',

@@ -295,6 +295,25 @@ class TestS2Cells:
         assert cells[0] == cells[1] != cells[2]
         assert cells[0].endswith("@10")
 
+    def test_null_coordinates_pair_with_nothing(self, spark):
+        """A NULL lat or lng gets a NULL cell, so a self-join on the cell
+        pairs only the rows with both coordinates."""
+        from solaris_spark.operators import joins
+        rows = [(0, 37.7749, -122.4194), (1, 37.7750, -122.4195),
+                (2, None, -122.4194), (3, 37.7749, None), (4, None, None),
+                (5, None, 0.0), (6, 0.0, None)]
+        df = joins.with_s2_cell(
+            spark.createDataFrame(rows, "pid int, lat double, lng double"),
+            level=10)
+        cells = {r["pid"]: r["s2_cell"] for r in df.collect()}
+        assert cells[0] == cells[1] is not None
+        assert all(cells[p] is None for p in range(2, 7))
+        a, b = df.alias("a"), df.alias("b")
+        pairs = {(r[0], r[1]) for r in a.join(
+            b, F.col("a.s2_cell") == F.col("b.s2_cell")).select(
+                "a.pid", "b.pid").collect()}
+        assert pairs == {(0, 0), (0, 1), (1, 0), (1, 1)}
+
 
 class TestLineageChunked:
     def test_commit_every_bounds_restart(self, spark, tmp_path):
