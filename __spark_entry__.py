@@ -347,8 +347,8 @@ FROM lineitem GROUP BY 1 ORDER BY bucket
 
 
 def q_event_windows(spark, sf_dir):
-    """Tumbling event-time windows (batch equivalent of the streaming
-    windowed agg; Structured Streaming path in streaming/ingest.py)."""
+    """Tumbling event-time windows (batch equivalent of a streaming
+    windowed agg)."""
     e = _load(spark, sf_dir, "events")
     out = (e.groupBy(F.date_trunc("day", F.col("ts")).alias("day"), "event_type")
            .agg(F.count(F.lit(1)).alias("n"),

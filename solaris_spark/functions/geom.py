@@ -27,9 +27,6 @@ import numpy as np
 # WKT
 # ---------------------------------------------------------------------------
 
-_NUM = r"[-+]?[0-9]*\.?[0-9]+(?:[eE][-+]?[0-9]+)?"
-
-
 def _parse_ring(txt: str) -> np.ndarray:
     pts = []
     for pair in txt.split(","):
@@ -249,27 +246,10 @@ def ring_signed_area(ring: np.ndarray) -> float:
     return 0.5 * (float(t.cumsum()[-1]) + 0.0)
 
 
-def polygon_area(wkt_or_rings) -> float:
-    """Unsigned area matching shapely .area (exterior minus holes).
-
-    Implemented as |sum of signed ring areas| per polygon with hole rings
-    opposing the exterior — matches GEOS for valid polygons.
-    """
-    gtype, parts = (wkt_parse(wkt_or_rings) if isinstance(wkt_or_rings, str)
-                    else ("POLYGON", wkt_or_rings))
-    if not parts:
-        return 0.0
-    polys = parts if gtype == "MULTIPOLYGON" else [parts]
-    total = 0.0
-    for rings in polys:
-        ext = abs(ring_signed_area(rings[0]))
-        holes = sum(abs(ring_signed_area(r)) for r in rings[1:])
-        total += ext - holes
-    return total
-
-
 def geom_bounds(wkt: str) -> tuple[float, float, float, float]:
-    gtype, parts = wkt_parse(wkt)
+    """(xmin, ymin, xmax, ymax) of every vertex; NaN for ``""`` and an
+    EMPTY geometry, which have none (as in pack_polygons)."""
+    gtype, parts = wkt_parse(wkt) if wkt != "" else (None, [])
     if not parts:
         return (math.nan,) * 4
     if gtype == "MULTIPOLYGON":
@@ -313,10 +293,11 @@ def gdal_to_affine(g):
 
 
 def transform_wkt(wkt: str, t, inverse: bool = False) -> str:
-    """convert_poly_coords equivalent: affine-transform every coordinate."""
+    """convert_poly_coords equivalent: affine-transform every coordinate.
+    ``""`` and an EMPTY geometry come back as they are."""
     if inverse:
         t = affine_invert(t)
-    gtype, parts = wkt_parse(wkt)
+    gtype, parts = wkt_parse(wkt) if wkt != "" else (None, [])
     if not parts:
         return wkt
     if gtype == "MULTIPOLYGON":

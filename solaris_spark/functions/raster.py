@@ -511,27 +511,33 @@ def _dct_matrix(n: int) -> np.ndarray:
 _DCT32 = _dct_matrix(32)
 
 
+def area_mean(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
+    """Area-mean resize of the last two axes of ``img`` to (out_h, out_w),
+    float64: output cell (i, j) is the mean of the source block
+    ``[ys[i], ys[i+1]) × [xs[j], xs[j+1])``, ``ys = ⌊i·H/out_h⌋`` (at least
+    one row and column wide when upsampling), summed from one 2-D cumsum
+    per plane and gathered for every cell at once."""
+    h, w = img.shape[-2:]
+    ys = (np.arange(out_h + 1) * h / out_h).astype(np.int64)
+    xs = (np.arange(out_w + 1) * w / out_w).astype(np.int64)
+    csum = np.zeros(img.shape[:-2] + (h + 1, w + 1), dtype=np.float64)
+    csum[..., 1:, 1:] = img.astype(np.float64).cumsum(-2).cumsum(-1)
+    y0 = ys[:-1, None]
+    y1 = np.maximum(ys[1:, None], y0 + 1)
+    x0 = xs[:-1]
+    x1 = np.maximum(xs[1:], x0 + 1)
+    s = (csum[..., y1, x1] - csum[..., y0, x1]
+         - csum[..., y1, x0] + csum[..., y0, x0])
+    return s / ((y1 - y0) * (x1 - x0))
+
+
 def phash64(img: np.ndarray) -> int:
     """64-bit perceptual hash: resize to 32×32 (area mean), 2D DCT-II, take
     the top-left 8×8 (skipping DC), threshold at the median. Deterministic;
     matches the classic pHash construction (public algorithm)."""
     if img.ndim == 3:  # (C, Y, X) → luminance-ish mean
         img = img.mean(axis=0)
-    h, w = img.shape
-    # area-mean resize to 32x32 via block averaging on a resampled grid
-    ys = (np.arange(32 + 1) * h / 32).astype(np.int64)
-    xs = (np.arange(32 + 1) * w / 32).astype(np.int64)
-    ys[-1], xs[-1] = h, w
-    csum = np.zeros((h + 1, w + 1), dtype=np.float64)
-    csum[1:, 1:] = img.astype(np.float64).cumsum(0).cumsum(1)
-    y0 = ys[:-1]
-    y1 = np.maximum(ys[1:], y0 + 1)
-    x0 = xs[:-1]
-    x1 = np.maximum(xs[1:], x0 + 1)
-    s = (csum[np.ix_(y1, x1)] - csum[np.ix_(y0, x1)]
-         - csum[np.ix_(y1, x0)] + csum[np.ix_(y0, x0)])
-    small = s / np.outer(y1 - y0, x1 - x0)
-    dct = _DCT32 @ small @ _DCT32.T
+    dct = _DCT32 @ area_mean(img, 32, 32) @ _DCT32.T
     block = dct[:8, :8].copy()
     vals = block.flatten()[1:]  # skip DC
     med = np.median(vals)

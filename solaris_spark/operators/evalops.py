@@ -14,12 +14,13 @@ Re-expresses (Spark-first):
 
 The sequential claim semantics exist only WITHIN an image group —
 images are the parallel axis (10^12 of them at scale), so the engine runs
-the greedy match as one blobs.group_blobs group per image_id after a
-cell-key candidate join; its rows leave Python as bounded Arrow batches.
-Salting hot images is the caller's knob (plans/skew.py).  A pair's IoU
-does not depend on the claim order, so each match pass scores every
-bbox-touching pair in one geom.overlaps call and its claim loop reads
-them from a (query × pool) array.
+the greedy match as one blobs.group_blobs group per image_id (a shuffle
+on image_id, no spatial candidate join); its rows leave Python as bounded
+Arrow batches.  Salting hot images is the caller's knob (plans/skew.py).
+A pair's IoU does not depend on the claim order, so each match pass
+scores every pair of the group in one geom.overlaps call, which keeps
+only the pairs whose bboxes touch, and its claim loop reads them from a
+(query × pool) array.
 """
 
 from __future__ import annotations

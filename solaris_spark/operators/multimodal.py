@@ -16,7 +16,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from ..functions import pixfmt
-from ..functions.raster import phash64
+from ..functions.raster import area_mean, phash64
 from .blobs import map_blobs
 from .imageops import IMAGE_SCHEMA
 
@@ -77,24 +77,12 @@ def image_features(images: DataFrame) -> DataFrame:
 
 
 def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Area-mean resize (exact block average via 2-D cumsum — the same
-    kernel phash uses; bilinear is a drop-in swap)."""
+    """Area-mean resize (raster.area_mean, the block average phash64
+    shrinks with), cast back to each image's dtype."""
 
     def rows_of(r):
         arr = pixfmt.decode(r.fmt, r.bytes, r.w, r.h)
-        C, H, W = arr.shape
-        ys = np.minimum((np.arange(out_h + 1) * H / out_h).astype(int), H)
-        xs = np.minimum((np.arange(out_w + 1) * W / out_w).astype(int), W)
-        res = np.empty((C, out_h, out_w), dtype=arr.dtype)
-        for c in range(C):
-            cs = np.zeros((H + 1, W + 1))
-            cs[1:, 1:] = arr[c].astype(np.float64).cumsum(0).cumsum(1)
-            for i in range(out_h):
-                y0, y1 = ys[i], max(ys[i + 1], ys[i] + 1)
-                for j in range(out_w):
-                    x0, x1 = xs[j], max(xs[j + 1], xs[j] + 1)
-                    s = cs[y1, x1] - cs[y0, x1] - cs[y1, x0] + cs[y0, x0]
-                    res[c, i, j] = s / ((y1 - y0) * (x1 - x0))
+        res = area_mean(arr, out_h, out_w).astype(arr.dtype)
         payload, fmt = pixfmt.encode(res, r.fmt)
         yield (r.image_id, payload, out_w, out_h, fmt)
 

@@ -24,10 +24,10 @@ fill_nodata and the pixel-free tile_grid) is a mapInArrow over
 blobs.blob_batches, which reads input blobs in place and returns its rows
 in Arrow batches cut at the same bound: each batch's pixels sit in one
 contiguous buffer behind the binary column, no pandas in between.  The
-package's other row-returning operators (masks, stitching, image and
-spectral maps, synthetic tables, evaluation, streaming ingest) leave
-Python the same way, through blobs.map_blobs or its grouped twin
-blobs.group_blobs.
+package's other row-returning operators (masks, stitching, image maps,
+synthetic tables, evaluation and tracking, pixel metrics, label export
+and the CLI's batch jobs) leave Python the same way, through
+blobs.map_blobs or its grouped twin blobs.group_blobs.
 
 An image is cut one grid column at a time (split_geom's outer loop, so
 rows keep its order): one raster.cut_windows gather gives the column's
@@ -441,7 +441,10 @@ def labels_geo(labels: DataFrame, geo: DataFrame) -> DataFrame:
 
     Emits `bbox` [xmin, ymin, xmax, ymax] computed in the SAME UDF pass —
     the geometry is already parsed here, so downstream spatial joins
-    (vector_tiles candidates) skip a second full WKT parse."""
+    (vector_tiles candidates) skip a second full WKT parse.  A ``""``
+    label stays ``""`` with a bbox of NULLs, and a label of an image whose
+    affine has a NULL or NaN coefficient gets a NULL wkt_geo and bbox;
+    vector_tiles clips neither into a tile row."""
     lb = labels.join(geo, "image_id")
 
     @scalar_udf(T.StructType([
@@ -451,6 +454,11 @@ def labels_geo(labels: DataFrame, geo: DataFrame) -> DataFrame:
     def to_geo(wkt, *affine):
         out = []
         for w, t in zip(wkt, np.asarray(affine, dtype=np.float64).T):
+            if np.isnan(t).any():
+                # a NULL (or NaN) coefficient places nothing: NULL, not
+                # coordinates of NaN
+                out.append((None, None))
+                continue
             w = G.transform_wkt(w, tuple(t))
             out.append((w, list(G.geom_bounds(w))))
         return out

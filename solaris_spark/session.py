@@ -107,10 +107,11 @@ def get_spark(app_name: str = "solaris_spark",
     master = f"local[{cores}]"
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cores in ("*",) else max(int(cores), 4)
-    # stock pyspark.daemon pays ~300 ms/task (zipimporter re-reads in
-    # importlib.invalidate_caches + full gc.collect between tasks) — see
-    # solaris_spark/pydaemon.py for the measurements and fix; workers that
-    # cannot import it at start keep the stock daemon
+    # stock pyspark.daemon pays ~36 ms/task for zipimporter re-reads in
+    # importlib.invalidate_caches, plus a full gc.collect between tasks
+    # (~9 ms with the engine imported) — see solaris_spark/pydaemon.py for
+    # the measurements and fix; workers that cannot import it at start
+    # keep the stock daemon
     daemon = ("solaris_spark.pydaemon" if _workers_import_engine()
               else "pyspark.daemon")
     b = (

@@ -47,6 +47,10 @@ engine for such an import):
   nodata comparison per grid cell.  The engine's ``raster.cut_windows``,
   ``raster.nodata_fractions`` and per-column ``tiling._tile_rows`` are
   checked against them in ``test_tile_cut.py``.
+- ``resize_area_mean`` is the per-output-pixel area-mean loop that
+  ``multimodal.resize_images`` ran before ``raster.area_mean`` gathered
+  every block sum at once; ``test_kernels_raster.py`` holds the two
+  byte-equal.
 - ``packbits_encode`` is a TIFF PackBits (compression 32773) encoder, the
   inverse of the reader's ``tiffio._packbits_decode``; the engine writes
   no PackBits, so ``test_tiff_extras.py`` builds its PackBits files with
@@ -669,6 +673,31 @@ def windowed_cells(tile_size, level=0):
                (row.xmin, row.ymin, row.xmax, row.ymax), tile)
 
     return cells
+
+
+# ---------------------------------------------------------------------------
+# Area-mean resize, one output pixel at a time
+# ---------------------------------------------------------------------------
+
+
+def resize_area_mean(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
+    """(C, H, W) ``arr`` resized to (C, out_h, out_w) in its own dtype: per
+    channel one 2-D cumsum, then each output pixel's block sum and mean in
+    its own Python step, written into an array of ``arr``'s dtype."""
+    C, H, W = arr.shape
+    ys = np.minimum((np.arange(out_h + 1) * H / out_h).astype(int), H)
+    xs = np.minimum((np.arange(out_w + 1) * W / out_w).astype(int), W)
+    res = np.empty((C, out_h, out_w), dtype=arr.dtype)
+    for c in range(C):
+        cs = np.zeros((H + 1, W + 1))
+        cs[1:, 1:] = arr[c].astype(np.float64).cumsum(0).cumsum(1)
+        for i in range(out_h):
+            y0, y1 = ys[i], max(ys[i + 1], ys[i] + 1)
+            for j in range(out_w):
+                x0, x1 = xs[j], max(xs[j + 1], xs[j] + 1)
+                s = cs[y1, x1] - cs[y0, x1] - cs[y1, x0] + cs[y0, x0]
+                res[c, i, j] = s / ((y1 - y0) * (x1 - x0))
+    return res
 
 
 def packbits_encode(data: bytes) -> bytes:

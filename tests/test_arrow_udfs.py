@@ -3,15 +3,20 @@
 Each case runs an operator on a small inline input (no fixture files)
 whose rows sit in one partition next to an empty one, once with clean
 rows and once with a NULL in each argument of the operator's UDF (and
-once with ``""`` in the WKT argument of ``clip`` and ``geom_stats``).  The
-expected outcome is the sorted ``repr`` of every output row, or, when the
-query fails, the Python exception named at the end of the worker's
-traceback.  They were recorded with the engine's
+once with ``""`` in the WKT argument of ``to_geo``, ``bbox``, ``clip``
+and ``geom_stats``).  The expected outcome is the sorted ``repr`` of
+every output row, or, when the query fails, the Python exception named at
+the end of the worker's traceback.  They were recorded with the engine's
 earlier pandas UDFs, so a port that changes a value, a NULL or an error
 shows here.  The NULL and ``""`` WKT entries of ``clip`` and
 ``geom_stats`` were recorded when ``geom.pack_polygons`` began to read
 both as no geometry (before, a NULL failed the query with
-AttributeError and a ``""`` with ValueError).
+AttributeError and a ``""`` with ValueError); the ``""`` entries of
+``to_geo`` and ``bbox`` when ``geom.transform_wkt`` and ``geom_bounds``
+began to read ``""`` as no geometry (before, ValueError), and the
+NULL-coefficient entries of ``to_geo`` when ``labels_geo`` began to give
+them a NULL geometry and bbox (before, ``POLYGON ((nan …))`` with NULL
+bbox corners).
 
 The last two tests keep pandas and SparkContext broadcasts out of the
 engine package.
@@ -88,6 +93,9 @@ case("to_geo-base")(lambda spark: _labels_geo(spark))
 case("to_geo-null-wkt_pix")(lambda spark: _labels_geo(
     spark, labels=_nulled(LG_LABELS, "wkt_pix",
                           ["image_id", "label_id", "wkt_pix"])))
+case("to_geo-empty-wkt_pix")(lambda spark: _labels_geo(
+    spark, labels=_nulled(LG_LABELS, "wkt_pix",
+                          ["image_id", "label_id", "wkt_pix"], "")))
 for _c in "abcdef":
     case(f"to_geo-null-{_c}")(lambda spark, _c=_c: _labels_geo(
         spark, geo=_nulled(LG_GEO, _c, LG_GEO_COLS)))
@@ -122,6 +130,9 @@ case("bbox-base")(lambda spark: _vector_tiles(spark))
 case("bbox-null-wkt_geo")(lambda spark: _vector_tiles(
     spark, labels=_nulled(VT_LABELS, "wkt_geo",
                           ["image_id", "label_id", "wkt_geo"])))
+case("bbox-empty-wkt_geo")(lambda spark: _vector_tiles(
+    spark, labels=_nulled(VT_LABELS, "wkt_geo",
+                          ["image_id", "label_id", "wkt_geo"], "")))
 case("clip-base")(lambda spark: _vector_tiles(spark, bbox=True))
 case("clip-tile_px")(lambda spark: _vector_tiles(spark, bbox=True,
                                                  tile_px=(8, 8)))
@@ -453,6 +464,22 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                "('t11', 'i0', 3, 'POLYGON ((16.0 16.0, 19.714285714285715 "
                "16.0, 16.0 20.333333333333332, 16.0 16.0))', None, 321.0, "
                '8.047619047619047, 0.02507046432280077, 1)'],
+ 'bbox-empty-wkt_geo': ["('t00', 'i0', 1, 'POLYGON ((0.0 0.0, 10.0 0.0, 10.0 "
+                        "10.0, 0.0 10.0, 0.0 0.0))', None, 100.0, 100.0, 1.0, "
+                        '0)',
+                        "('t00', 'i0', 2, 'POLYGON ((0.0 16.0, 0.0 0.0, 16.0 "
+                        '0.0, 16.0 16.0, 0.0 16.0), (5.0 5.0, 5.0 15.0, 15.0 '
+                        "15.0, 15.0 5.0, 5.0 5.0))', None, 300.0, 156.0, "
+                        '0.52, 1)',
+                        "('t01', 'i0', 2, 'POLYGON ((0.0 16.0, 16.0 16.0, "
+                        "16.0 20.0, 0.0 20.0, 0.0 16.0))', None, 300.0, 64.0, "
+                        '0.21333333333333335, 1)',
+                        "('t10', 'i0', 2, 'POLYGON ((16.0 16.0, 16.0 0.0, "
+                        "20.0 0.0, 20.0 16.0, 16.0 16.0))', None, 300.0, "
+                        '64.0, 0.21333333333333335, 1)',
+                        "('t11', 'i0', 2, 'POLYGON ((16.0 16.0, 20.0 16.0, "
+                        "20.0 20.0, 16.0 20.0, 16.0 16.0))', None, 300.0, "
+                        '16.0, 0.05333333333333334, 1)'],
  'bbox-null-wkt_geo': ('error', 'AttributeError'),
  'chan_means-base': ["('i0', [5.5, 17.5])", "('i1', [0.6])"],
  'chan_means-null-bytes': ('error', 'TypeError'),
@@ -728,6 +755,17 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                  "('i1', 3, 'POLYGON ((1000.95 2000.55, 1009.65 2001.05, "
                  "1006.35 1993.85, 1000.95 2000.55))', [1000.95, 1993.85, "
                  '1009.65, 2001.05])'],
+ 'to_geo-empty-wkt_pix': ["('i0', 1, 'POLYGON ((500000.0 4000000.0, 500005.0 "
+                          '4000000.0, 500005.0 3999995.0, 500000.0 3999995.0, '
+                          "500000.0 4000000.0))', [500000.0, 3999995.0, "
+                          '500005.0, 4000000.0])',
+                          "('i0', 2, 'POLYGON ((500000.0 4000000.0, 500010.0 "
+                          '4000000.0, 500010.0 3999990.0, 500000.0 3999990.0, '
+                          '500000.0 4000000.0), (500002.5 3999997.5, 500002.5 '
+                          '3999992.5, 500007.5 3999992.5, 500007.5 3999997.5, '
+                          "500002.5 3999997.5))', [500000.0, 3999990.0, "
+                          '500010.0, 4000000.0])',
+                          "('i1', 3, '', [None, None, None, None])"],
  'to_geo-null-a': ["('i0', 1, 'POLYGON ((500000.0 4000000.0, 500005.0 "
                    '4000000.0, 500005.0 3999995.0, 500000.0 3999995.0, '
                    "500000.0 4000000.0))', [500000.0, 3999995.0, 500005.0, "
@@ -738,9 +776,7 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                    '3999992.5, 500007.5 3999992.5, 500007.5 3999997.5, '
                    "500002.5 3999997.5))', [500000.0, 3999990.0, 500010.0, "
                    '4000000.0])',
-                   "('i1', 3, 'POLYGON ((nan 2000.55, nan 2001.05, nan "
-                   "1993.85, nan 2000.55))', [None, 1993.85, None, "
-                   '2001.05])'],
+                   "('i1', 3, None, None)"],
  'to_geo-null-b': ["('i0', 1, 'POLYGON ((500000.0 4000000.0, 500005.0 "
                    '4000000.0, 500005.0 3999995.0, 500000.0 3999995.0, '
                    "500000.0 4000000.0))', [500000.0, 3999995.0, 500005.0, "
@@ -751,9 +787,7 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                    '3999992.5, 500007.5 3999992.5, 500007.5 3999997.5, '
                    "500002.5 3999997.5))', [500000.0, 3999990.0, 500010.0, "
                    '4000000.0])',
-                   "('i1', 3, 'POLYGON ((nan 2000.55, nan 2001.05, nan "
-                   "1993.85, nan 2000.55))', [None, 1993.85, None, "
-                   '2001.05])'],
+                   "('i1', 3, None, None)"],
  'to_geo-null-c': ["('i0', 1, 'POLYGON ((500000.0 4000000.0, 500005.0 "
                    '4000000.0, 500005.0 3999995.0, 500000.0 3999995.0, '
                    "500000.0 4000000.0))', [500000.0, 3999995.0, 500005.0, "
@@ -764,9 +798,7 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                    '3999992.5, 500007.5 3999992.5, 500007.5 3999997.5, '
                    "500002.5 3999997.5))', [500000.0, 3999990.0, 500010.0, "
                    '4000000.0])',
-                   "('i1', 3, 'POLYGON ((nan 2000.55, nan 2001.05, nan "
-                   "1993.85, nan 2000.55))', [None, 1993.85, None, "
-                   '2001.05])'],
+                   "('i1', 3, None, None)"],
  'to_geo-null-d': ["('i0', 1, 'POLYGON ((500000.0 4000000.0, 500005.0 "
                    '4000000.0, 500005.0 3999995.0, 500000.0 3999995.0, '
                    "500000.0 4000000.0))', [500000.0, 3999995.0, 500005.0, "
@@ -777,8 +809,7 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                    '3999992.5, 500007.5 3999992.5, 500007.5 3999997.5, '
                    "500002.5 3999997.5))', [500000.0, 3999990.0, 500010.0, "
                    '4000000.0])',
-                   "('i1', 3, 'POLYGON ((1000.95 nan, 1009.65 nan, 1006.35 "
-                   "nan, 1000.95 nan))', [1000.95, None, 1009.65, None])"],
+                   "('i1', 3, None, None)"],
  'to_geo-null-e': ["('i0', 1, 'POLYGON ((500000.0 4000000.0, 500005.0 "
                    '4000000.0, 500005.0 3999995.0, 500000.0 3999995.0, '
                    "500000.0 4000000.0))', [500000.0, 3999995.0, 500005.0, "
@@ -789,8 +820,7 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                    '3999992.5, 500007.5 3999992.5, 500007.5 3999997.5, '
                    "500002.5 3999997.5))', [500000.0, 3999990.0, 500010.0, "
                    '4000000.0])',
-                   "('i1', 3, 'POLYGON ((1000.95 nan, 1009.65 nan, 1006.35 "
-                   "nan, 1000.95 nan))', [1000.95, None, 1009.65, None])"],
+                   "('i1', 3, None, None)"],
  'to_geo-null-f': ["('i0', 1, 'POLYGON ((500000.0 4000000.0, 500005.0 "
                    '4000000.0, 500005.0 3999995.0, 500000.0 3999995.0, '
                    "500000.0 4000000.0))', [500000.0, 3999995.0, 500005.0, "
@@ -801,8 +831,7 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                    '3999992.5, 500007.5 3999992.5, 500007.5 3999997.5, '
                    "500002.5 3999997.5))', [500000.0, 3999990.0, 500010.0, "
                    '4000000.0])',
-                   "('i1', 3, 'POLYGON ((1000.95 nan, 1009.65 nan, 1006.35 "
-                   "nan, 1000.95 nan))', [1000.95, None, 1009.65, None])"],
+                   "('i1', 3, None, None)"],
  'to_geo-null-wkt_pix': ('error', 'AttributeError'),
  'tok-base': ["(1, 37.7749, -122.4194, 'f4_31_151@10')",
               "(2, -33.8688, 151.2093, 'f3_929_190@10')",

@@ -126,10 +126,10 @@ class TestMaskToPolygons:
         # total polygon area ~ set-pixel count of the source mask
         mask = read_tiff(os.path.join(DATA, "sample_fp_mask.tif")).array[0]
         from solaris_spark.functions import geom as G
-        area = sum(G.polygon_area(G.wkt_dump(
+        area = G.prepare_polygons([G.wkt_dump(
             "POLYGON", [np.asarray(r, dtype=np.float64)
-                        for r in f["geometry"]["coordinates"]]))
-            for f in gj["features"])
+                        for r in f["geometry"]["coordinates"]])
+            for f in gj["features"]]).area.sum()
         set_px = int((mask > 0).sum())
         assert abs(area - set_px) / set_px < 0.05
 

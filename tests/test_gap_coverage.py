@@ -1,7 +1,8 @@
 """Direct tests for operators previously exercised only indirectly:
 bbox_candidate_join (brute-force parity + report-once dedup), the
 catalog layout writers (bucketed images, spatially-prefixed tiles,
-view registration), and the generic band_math operator."""
+view registration), `with_prf`'s zero conventions, the networkx round trip
+and `rescale_arr`."""
 
 import numpy as np
 import pytest
@@ -93,32 +94,6 @@ class TestCatalogLayout:
         # spatial-prefix partition column exists in the files for pruning
         cols = spark.read.parquet(str(tmp_path / "tiles")).columns
         assert "cell_prefix" in cols
-
-
-class TestBandMath:
-    def test_ndvi_like_and_2d_promotion(self, spark):
-        from solaris_spark.operators.spectral import band_math
-        rng = np.random.default_rng(17)
-        arrs = {f"im{i}": rng.uniform(1, 255, (2, 5, 6)).astype(np.float64)
-                for i in range(3)}
-        df = spark.createDataFrame(
-            [(k, v.tobytes(), 5, 6, 2, "float64") for k, v in arrs.items()],
-            "image_id string, pixels binary, h int, w int, nchan int, "
-            "dtype string")
-
-        def ndvi(a):
-            return (a[1] - a[0]) / (a[1] + a[0])  # 2-D out
-
-        out = {r["image_id"]: r for r in band_math(df, ndvi).collect()}
-        assert set(out) == set(arrs)
-        for k, a in arrs.items():
-            r = out[k]
-            assert r["nchan"] == 1  # 2-D result promoted to (1, H, W)
-            got = np.frombuffer(r["pixels"],
-                                dtype=np.dtype(r["dtype"])) \
-                .reshape(1, r["h"], r["w"])
-            want = (a[1] - a[0]) / (a[1] + a[0])
-            assert np.allclose(got[0], want, atol=1e-12)
 
 
 class TestEvalHelpers:

@@ -55,8 +55,8 @@ def test_iou_bounded_symmetric_self(wa, wb):
     assert abs(O.iou_wkt(wa, wa) - 1.0) < 1e-9
     ra, rb = G.polygon_rings(wa), G.polygon_rings(wb)
     inter = O.polygon_intersection_area(ra, rb)
-    assert inter <= G.polygon_area(wa) + 1e-6
-    assert inter <= G.polygon_area(wb) + 1e-6
+    assert inter <= G.prepare_polygons([wa]).area[0] + 1e-6
+    assert inter <= G.prepare_polygons([wb]).area[0] + 1e-6
     # the batched kernel in one shared frame: the same bounds, symmetry
     # and self-IoU, its clamp holding inter to the smaller area exactly
     a, b = G.polygon_sets([wa, wb], [wa, wb])
@@ -75,14 +75,14 @@ def test_clip_and_affine_invariants(w):
     rings = G.polygon_rings(w)
     rect = (20.0, 20.0, 70.0, 60.0)
     ca = O.clip_polygon_rect_area(rings, rect)
-    assert -1e-9 <= ca <= G.polygon_area(w) + 1e-6
+    assert -1e-9 <= ca <= G.prepare_polygons([w]).area[0] + 1e-6
     assert ca <= (70 - 20) * (60 - 20) + 1e-6
     t = (0.5, 0.0, 733601.0, 0.0, -0.5, 3725139.0)
     back = G.transform_wkt(G.transform_wkt(w, t), G.affine_invert(t))
     a = np.vstack(G.polygon_rings(w))
     b = np.vstack(G.polygon_rings(back))
     assert np.allclose(a, b, atol=1e-6)
-    assert abs(G.polygon_area(w)
+    assert abs(G.prepare_polygons([w]).area[0]
                - abs(G.ring_signed_area(rings[0]))) < 1e-9
 
 

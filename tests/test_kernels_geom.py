@@ -55,14 +55,16 @@ class TestReproject:
         got = G.reproject_wkt(UTM_POLY, 32616, 4326)
         _, pg = G.wkt_parse(got)
         _, pe = G.wkt_parse(LL_POLY)
-        sim = O.polygon_intersection_area(pg, pe) / G.polygon_area(LL_POLY)
+        sim = (O.polygon_intersection_area(pg, pe)
+               / G.prepare_polygons([LL_POLY]).area[0])
         assert sim > 0.99999
 
     def test_wgs84_to_utm(self):
         got = G.reproject_wkt(LL_POLY, 4326, 32616)
         _, pg = G.wkt_parse(got)
         _, pe = G.wkt_parse(UTM_POLY)
-        sim = O.polygon_intersection_area(pg, pe) / G.polygon_area(UTM_POLY)
+        sim = (O.polygon_intersection_area(pg, pe)
+               / G.prepare_polygons([UTM_POLY]).area[0])
         assert sim > 0.99999
 
     def test_roundtrip_micron(self):
@@ -245,13 +247,13 @@ class TestWkt:
         w = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))"
         t, parts = G.wkt_parse(w)
         assert t == "POLYGON" and len(parts) == 2
-        assert G.polygon_area(w) == 15.0
+        assert G.prepare_polygons([w]).area[0] == 15.0
 
     def test_multipolygon(self):
         w = "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((5 5, 6 5, 6 6, 5 6, 5 5)))"
         t, parts = G.wkt_parse(w)
         assert t == "MULTIPOLYGON" and len(parts) == 2
-        assert G.polygon_area(w) == 2.0
+        assert G.prepare_polygons([w]).area[0] == 2.0
 
     def test_empty(self):
         t, parts = G.wkt_parse("POLYGON EMPTY")
@@ -275,7 +277,7 @@ class TestHoleOrientation:
         hole_opp = "2 2, 2 6, 6 6, 6 2, 2 2"         # CW (valid winding)
         w_bad = f"POLYGON (({ext}), ({hole_same}))"
         w_ok = f"POLYGON (({ext}), ({hole_opp}))"
-        assert abs(G.polygon_area(w_bad) - 84.0) < 1e-9
+        assert abs(G.prepare_polygons([w_bad]).area[0] - 84.0) < 1e-9
         assert abs(O.iou_wkt(w_bad, w_bad) - 1.0) < 1e-12
         assert abs(O.iou_wkt(w_bad, w_ok) - 1.0) < 1e-12
         a, b = G.polygon_sets([w_bad, w_ok], [w_bad, w_ok])
@@ -436,12 +438,12 @@ class TestReprojectFullFileGolden:
             got = G.reproject_wkt(wu, 32616, 4326)
             _, pg = G.wkt_parse(got)
             _, pe = G.wkt_parse(wl)
-            a = G.polygon_area(wl)
+            a = G.prepare_polygons([wl]).area[0]
             assert O.polygon_intersection_area(pg, pe) / a > 0.99999
             back = G.reproject_wkt(wl, 4326, 32616)
             _, pb = G.wkt_parse(back)
             _, pu = G.wkt_parse(wu)
-            au = G.polygon_area(wu)
+            au = G.prepare_polygons([wu]).area[0]
             assert O.polygon_intersection_area(pb, pu) / au > 0.99999
 
 

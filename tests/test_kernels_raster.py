@@ -129,6 +129,28 @@ class TestPsnrPhash:
         assert R.hamming64(ha1, R.phash64(noisy)) <= 10
 
 
+class TestAreaMean:
+    @pytest.mark.parametrize("dtype,shape,out_hw", [
+        ("uint8", (3, 100, 90), (32, 32)),
+        ("uint16", (1, 64, 48), (17, 13)),
+        ("float32", (2, 50, 70), (25, 35)),
+        ("uint8", (3, 4, 5), (8, 8)),      # 5×4 → 8×8 upsample
+        ("uint16", (1, 4, 5), (8, 8)),
+        ("float32", (3, 4, 5), (8, 8)),
+    ])
+    def test_equals_per_pixel_loop(self, dtype, shape, out_hw):
+        """resize_images' kernel, area_mean cast back to the input dtype,
+        is byte-equal to the per-output-pixel loop it replaced."""
+        rng = np.random.default_rng(sum(shape) + sum(out_hw))
+        hi = 65535 if dtype == "uint16" else 255
+        arr = (rng.uniform(0, hi, shape) if dtype == "float32"
+               else rng.integers(0, hi + 1, shape)).astype(dtype)
+        out_h, out_w = out_hw
+        got = R.area_mean(arr, out_h, out_w).astype(arr.dtype)
+        assert got.tobytes() == \
+            O.resize_area_mean(arr, out_w, out_h).tobytes()
+
+
 class TestWarpBilinear:
     def test_linear_field_preserved(self):
         """Bilinear warp reproduces a linear intensity field to ~1e-12

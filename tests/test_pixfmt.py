@@ -10,9 +10,8 @@ import numpy as np
 
 from solaris_spark.functions import pixfmt
 from solaris_spark.functions.png import encode_png
-from solaris_spark.operators import imageops, masks, tiling
+from solaris_spark.operators import imageops, masks, multimodal, tiling
 from solaris_spark.sources import synth
-from solaris_spark.streaming import ingest
 
 GEO_COLS = ("a double, b double, c double, d double, e double, f double, "
             "nodata double")
@@ -97,8 +96,8 @@ class TestTileRoundTrips:
 
         for op in (lambda im: tiling.inference_tiles(im, (32, 32)),
                    imageops.channel_fill_values, imageops.to_uint8,
-                   lambda im: ingest.with_phash(im).select("image_id",
-                                                           "phash")):
+                   lambda im: multimodal.image_features(im).select(
+                       "image_id", "phash")):
             assert rows(op(png)) == rows(op(raw))
         labels = synth.labels_table(spark, raw)
         ig = tiling.with_geo(raw, geo)

@@ -319,3 +319,32 @@ class TestVectorTilesSynth:
         got = rows([square, "POLYGON ((1 1, 2 2, 3 3, 1 1))"])
         assert len(got) == 4 and {r[2] for r in got} == {0}
         assert got == rows([square])
+
+    def test_empty_label_and_null_affine_give_no_rows(self, spark):
+        """A ``""`` label, and a label of an image whose affine has a NULL
+        ``c``, go through labels_geo (``""`` with a bbox of NULLs; NULL
+        geometry and bbox) and give vector_tiles no tile rows, without an
+        error; the square's rows are the rows it gets alone."""
+        cols = ("image_id string, w int, h int, a double, b double, "
+                "c double, d double, e double, f double, epsg int, "
+                "nodata double")
+        z = ("z", 40, 40, 0.5, 0.0, 733600.0, 0.0, -0.5, 3726000.0,
+             32616, 0.0)
+        n = ("n",) + z[1:]
+        grid = tiling.tile_grid(spark.createDataFrame([z, n], cols),
+                                (20, 20))
+        geo = spark.createDataFrame([z, n[:5] + (None,) + n[6:]], cols)
+        square = "POLYGON ((12 12, 28 12, 28 28, 12 28, 12 12))"
+
+        def run(labels):
+            lg = tiling.labels_geo(spark.createDataFrame(
+                labels, "image_id string, label_id int, wkt_pix string"), geo)
+            return ({r["label_id"]: r for r in lg.collect()},
+                    sorted(tuple(r) for r in tiling.vector_tiles(lg, grid)
+                           .collect()))
+
+        lg, got = run([("z", 0, square), ("z", 1, ""), ("n", 2, square)])
+        assert (lg[1]["wkt_geo"], lg[1]["bbox"]) == ("", [None] * 4)
+        assert (lg[2]["wkt_geo"], lg[2]["bbox"]) == (None, None)
+        assert len(got) == 4 and {r[2] for r in got} == {0}
+        assert got == run([("z", 0, square)])[1]

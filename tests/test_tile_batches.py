@@ -1,10 +1,11 @@
 """The Arrow row emitter (blobs.blob_batches and its grouped twin
 blobs.group_blob_batches) driven directly, without Spark, over real
 operator rows: tiling's tile rows, instance_masks' per-label masks and
-band_math's widened pixels, plus rows of a schema with no binary column.
-Output batches stay within the byte bound, keep every row and its bytes,
-carry nulls, and an input with no output rows still yields one batch of
-the right schema."""
+pixels widened from u8 to float64, plus rows of a schema with no binary
+column.  Output batches stay within the byte bound, keep every row and its
+bytes, carry nulls, and an input with no output rows still yields one
+batch of the right schema.  One map_blobs query through Spark passes a
+NULL input blob through to a NULL output blob."""
 
 import tracemalloc
 
@@ -17,7 +18,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from solaris_spark.functions import geom as G
 from solaris_spark.functions import pixfmt
 from solaris_spark.functions import raster as R
-from solaris_spark.operators import blobs, masks, spectral, tiling
+from solaris_spark.operators import blobs, masks, tiling
 from solaris_spark.sources import synth
 from tests import oracles as O
 
@@ -211,30 +212,59 @@ def test_empty_group_yields_one_empty_batch():
         assert out[0].schema == to_arrow_schema(masks.INSTANCE_SCHEMA)
 
 
-def test_widening_band_math_stays_within_the_bound():
+WIDE_SCHEMA = T.StructType([
+    T.StructField("image_id", T.StringType(), False),
+    T.StructField("pixels", T.BinaryType(), False),
+])
+
+
+def test_widening_map_stays_within_the_bound():
     """u8 → float64 grows 4 images of 1500² (9 MB in) to 72 MB out: the
-    map cuts it into batches ≤ 64 MB, pixels as the kernel returned them."""
-    px = np.random.default_rng(1).integers(0, 256, (4, 1, 1500, 1500),
+    map cuts it into batches ≤ 64 MB, pixels as rows_of returned them."""
+    px = np.random.default_rng(1).integers(0, 256, (4, 1500, 1500),
                                            dtype=np.uint8)
     batch = pa.RecordBatch.from_pydict({
         "image_id": pa.array([f"s{k}" for k in range(4)]),
-        "pixels": pa.array([p.tobytes() for p in px], pa.binary()),
-        "h": pa.array([1500] * 4, pa.int32()),
-        "w": pa.array([1500] * 4, pa.int32()),
-        "nchan": pa.array([1] * 4, pa.int32()),
-        "dtype": pa.array(["uint8"] * 4)})
-    rows_of = spectral._band_rows(lambda a: a.astype(np.float64))
+        "pixels": pa.array([p.tobytes() for p in px], pa.binary())})
+
+    def rows_of(r):
+        arr = np.frombuffer(r.pixels, dtype=np.uint8)
+        yield (r.image_id, arr.astype(np.float64))
+
     k, sizes = 0, []
-    for out in blobs.blob_batches(iter([batch]), spectral.SPECTRAL_SCHEMA,
-                                  BOUND, rows_of):
+    for out in blobs.blob_batches(iter([batch]), WIDE_SCHEMA, BOUND,
+                                  rows_of):
         sizes.append(out.get_total_buffer_size())
-        for pixels, dtype in zip(out.column("pixels"),
-                                 out.column("dtype").to_pylist()):
-            assert dtype == "float64"
+        for pixels in out.column("pixels"):
             assert pixels.as_py() == px[k].astype("<f8").tobytes()
             k += 1
     assert k == 4
     assert sum(sizes) > BOUND and len(sizes) >= 2 and max(sizes) <= BOUND
+
+
+def test_map_blobs_keeps_null_blob_row(spark):
+    """Through Spark, a row with NULL bytes leaves map_blobs with bytes
+    NULL (and the NULL phash its rows_of gives it); a decodable row keeps
+    its bytes and gets its phash."""
+    px = np.arange(3 * 6 * 8, dtype=np.uint8).reshape(3, 6, 8)
+    df = spark.createDataFrame(
+        [("ok", bytearray(px.tobytes()), 8, 6, "raw-u8-c3", None, None),
+         ("null", None, 8, 6, "raw-u8-c3", "no bytes", None)],
+        synth.IMAGES_SCHEMA)
+
+    def rows_of(r):
+        ph = None if r.bytes is None else R.phash64(
+            pixfmt.decode(r.fmt, r.bytes, r.w, r.h))
+        yield (r.image_id, r.bytes, r.w, r.h, r.fmt, r.caption, ph)
+
+    rows = {r["image_id"]: r for r in blobs.map_blobs(
+        df, synth.IMAGES_SCHEMA, rows_of).collect()}
+    assert set(rows) == {"ok", "null"}
+    assert rows["null"]["bytes"] is None
+    assert rows["null"]["phash"] is None
+    assert rows["null"]["caption"] == "no bytes"
+    assert bytes(rows["ok"]["bytes"]) == px.tobytes()
+    assert rows["ok"]["phash"] == R.phash64(px)
 
 
 # A schema with no binary column: a string, a nullable long and a
