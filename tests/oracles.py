@@ -26,6 +26,10 @@ engine for such an import):
   polygon_rings parse per label, one count frame per channel), the byte
   reference of the engine's one-parse, one-frame ``masks.build_mask_arrays``
   in ``test_mask_parity.py``.
+- ``polygon_area`` is the per-polygon area rule, |exterior| − Σ|hole|
+  over one ``wkt_parse``, that ``test_kernels_geom.py`` holds the
+  engine's one rule, |Σ signed ring area| from ``geom.prepare_polygons``,
+  to.
 - ``pack`` lays lists of rings out in the engine's packed
   ``(xy, offsets, groups)`` form (this module packs its own rings), and
   ``count`` feeds them to the engine's one-layer
@@ -240,6 +244,17 @@ def polygon_rings(wkt: str) -> list[np.ndarray]:
                 r = r[::-1]
             out.append(r)
     return out
+
+
+def polygon_area(wkt: str) -> float:
+    """Area of one POLYGON/MULTIPOLYGON WKT as each polygon's |exterior|
+    less the sum of its |holes|, every ring's area by its own
+    ring_signed_area, whatever the ring's winding."""
+    gtype, parts = G.wkt_parse(wkt)
+    polys = parts if gtype == "MULTIPOLYGON" else [parts] if parts else []
+    return sum(abs(G.ring_signed_area(rings[0]))
+               - sum(abs(G.ring_signed_area(r)) for r in rings[1:])
+               for rings in polys)
 
 
 def pack(ring_groups: list[list[np.ndarray]]):

@@ -150,6 +150,32 @@ class TestAreaMean:
         assert got.tobytes() == \
             O.resize_area_mean(arr, out_w, out_h).tobytes()
 
+    def test_same_size_is_the_input_in_float64(self):
+        """Every output cell is one source pixel: the float64 input."""
+        arr = np.random.default_rng(3).integers(0, 65536, (2, 7, 11),
+                                                dtype=np.uint16)
+        got = R.area_mean(arr, 7, 11)
+        assert got.dtype == np.float64
+        assert np.array_equal(got, arr.astype(np.float64))
+
+    def test_whole_blocks_are_block_means(self):
+        """When the output divides the input, cell (i, j) is the mean of
+        the k × m block it covers."""
+        arr = np.random.default_rng(4).uniform(-5, 5, (3, 24, 30))
+        want = arr.reshape(3, 8, 3, 6, 5).mean(axis=(2, 4))
+        np.testing.assert_allclose(R.area_mean(arr, 8, 6), want,
+                                   rtol=0, atol=1e-12)
+
+    def test_planes_resize_independently(self):
+        """A 2-D image (phash64's luminance plane) resizes as the same
+        plane does inside a (C, H, W) stack."""
+        arr = np.random.default_rng(5).integers(0, 256, (3, 45, 61),
+                                                dtype=np.uint8)
+        stack = R.area_mean(arr, 32, 32)
+        for c in range(3):
+            assert R.area_mean(arr[c], 32, 32).tobytes() == \
+                stack[c].tobytes()
+
 
 class TestWarpBilinear:
     def test_linear_field_preserved(self):

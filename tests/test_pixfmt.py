@@ -1,7 +1,7 @@
 """The pixel format (functions/pixfmt.py) and the tilers that emit through
-it: codec round trips, raster_tiles → stitch_tiles over every raw format,
-big-endian TIFFs through the windowed tiler, and PNG inputs tiling to the
-same pixels as their raw originals.  Fixture-free."""
+it: codec round trips, raster_tiles → stitch_tiles and resize_images over
+every raw format, big-endian TIFFs through the windowed tiler, and PNG
+inputs tiling to the same pixels as their raw originals.  Fixture-free."""
 
 import struct
 import zlib
@@ -12,6 +12,7 @@ from solaris_spark.functions import pixfmt
 from solaris_spark.functions.png import encode_png
 from solaris_spark.operators import imageops, masks, multimodal, tiling
 from solaris_spark.sources import synth
+from tests import oracles as O
 
 GEO_COLS = ("a double, b double, c double, d double, e double, f double, "
             "nodata double")
@@ -63,6 +64,23 @@ class TestTileRoundTrips:
         assert out["dtype"] == str(px.dtype)
         got = pixfmt.decode(raw_fmt, out["pixels"], out["w"], out["h"])
         assert np.array_equal(got, px)
+
+    def test_resize_images_formats(self, spark, raw_fmt, raw_image):
+        """resize_images keeps each raw format, and its pixels are the
+        per-output-pixel area-mean loop's, downsampling (37×45 → 20×16)
+        and upsampling (4×5 → 8×8) in one query."""
+        big, small = raw_image(37, 45), raw_image(4, 5, seed=1)
+        ig = _blob_images(spark, [("big", big, big.tobytes(), raw_fmt),
+                                  ("small", small, small.tobytes(), raw_fmt)])
+        out = {r["image_id"]: r for r in
+               multimodal.resize_images(ig, 20, 16).collect()}
+        assert {r["fmt"] for r in out.values()} == {raw_fmt}
+        got = pixfmt.decode(raw_fmt, out["big"]["bytes"], 20, 16)
+        assert got.tobytes() == O.resize_area_mean(big, 20, 16).tobytes()
+        out = multimodal.resize_images(ig.where("image_id = 'small'"),
+                                       8, 8).collect()[0]
+        got = pixfmt.decode(raw_fmt, out["bytes"], out["w"], out["h"])
+        assert got.tobytes() == O.resize_area_mean(small, 8, 8).tobytes()
 
     def test_png_twin_tiles_to_same_pixels(self, spark):
         """A PNG copy of a synth image tiles to the same pixel CRCs as the

@@ -348,3 +348,26 @@ class TestVectorTilesSynth:
         assert (lg[2]["wkt_geo"], lg[2]["bbox"]) == (None, None)
         assert len(got) == 4 and {r[2] for r in got} == {0}
         assert got == run([("z", 0, square)])[1]
+
+    def test_nan_affine_coefficient_gives_null_geometry(self, spark):
+        """A NaN in any one of an image's six affine coefficients gives its
+        label a NULL wkt_geo and bbox, as a NULL does; the clean image's
+        label is transformed."""
+        clean = (0.5, 0.0, 733600.0, 0.0, -0.5, 3726000.0)
+        geo = [("ok",) + clean] + [
+            (f"nan-{c}",) + clean[:k] + (float("nan"),) + clean[k + 1:]
+            for k, c in enumerate("abcdef")]
+        square = "POLYGON ((12 12, 28 12, 28 28, 12 28, 12 12))"
+        lg = tiling.labels_geo(
+            spark.createDataFrame([(g[0], k, square)
+                                   for k, g in enumerate(geo)],
+                                  "image_id string, label_id int, "
+                                  "wkt_pix string"),
+            spark.createDataFrame(geo, "image_id string, a double, "
+                                  "b double, c double, d double, "
+                                  "e double, f double"))
+        got = {r["image_id"]: (r["wkt_geo"], r["bbox"]) for r in lg.collect()}
+        assert got.pop("ok") == (
+            G.transform_wkt(square, clean),
+            [733606.0, 3725986.0, 733614.0, 3725994.0])
+        assert got == {f"nan-{c}": (None, None) for c in "abcdef"}
