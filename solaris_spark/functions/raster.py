@@ -437,7 +437,6 @@ def resize_average(src: np.ndarray, factor_y: int, factor_x: int) -> np.ndarray:
     C, H, W = src.shape
     oh = -(-H // factor_y)
     ow = -(-W // factor_x)
-    out = np.empty((C, oh, ow), dtype=np.float64)
     padded = np.full((C, oh * factor_y, ow * factor_x), np.nan)
     padded[:, :H, :W] = src
     blocks = padded.reshape(C, oh, factor_y, ow, factor_x)

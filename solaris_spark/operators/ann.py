@@ -56,8 +56,6 @@ def _cell_assign_udf(C: np.ndarray):
 
     @scalar_udf(T.IntegerType())
     def assign(v):
-        if not v:
-            return []
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
         d = -2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
         return np.argmin(d, axis=1).astype("int32")
@@ -71,8 +69,6 @@ def _probe_cells_udf(C: np.ndarray, n_probe: int):
 
     @scalar_udf(T.ArrayType(T.IntegerType()))
     def probe(v):
-        if not v:
-            return []
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
         d = -2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
         return np.argsort(d, axis=1, kind="stable")[:, :n_probe].tolist()

@@ -3,7 +3,8 @@ values, and returning a scalar UDF's column, or a row-returning UDF's rows
 as Arrow batches bounded by bytes.  No pandas conversion either way.
 
 Every column UDF is a scalar_udf: its body reads arrow_values and its
-result leaves as one Arrow array of the declared type.  Spark bounds the
+result leaves as one Arrow array of the declared type; scalar_udf alone
+applies SQL's NULL rule, so no body tests for None or NaN.  Spark bounds the
 batches it sends to Python by
 ``spark.sql.execution.arrow.maxBytesPerBatch`` (4 MB in
 session.get_spark: one or two MB-scale images per batch, so Spark encodes
@@ -26,6 +27,7 @@ from itertools import chain
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
@@ -71,17 +73,28 @@ def scalar_udf(return_type: T.DataType):
     """Decorator: ``body`` as a scalar Arrow UDF (an ArrowEvalPython plan
     node).  The body gets each argument column as a list of arrow_values
     and returns the result column's values, which leave as one Arrow
-    array of ``return_type``.  NaN leaves as NULL, at any depth
-    (pyarrow's ``from_pandas`` rule, as Spark's pandas UDFs did); a body
-    that does float math reads NULL as NaN, as they did, through
-    ``np.asarray(values, dtype=np.float64)``."""
+    array of ``return_type``, NaN as NULL at any depth (pyarrow's
+    ``from_pandas`` rule).  SQL's NULL rule holds here, once: a row with a
+    NULL argument, or NaN in a float argument, gives NULL unseen by the
+    body.  A batch without such a row passes as it came; else the body
+    gets the other rows, put back in place by a ``take`` over indices
+    NULL at the masked rows (no other row: NULLs, and no call)."""
     arrow_type = to_arrow_type(return_type)
 
     def wrap(body):
         @wraps(body)
         def udf(*cols):
-            return pa.array(body(*map(arrow_values, cols)), type=arrow_type,
-                            from_pandas=True)
+            masked = np.any([pc.is_null(c, nan_is_null=True) for c in cols],
+                            axis=0)
+            if masked.all():
+                return pa.nulls(len(masked), arrow_type)
+            if masked.any():
+                cols = [pc.filter(c, ~masked) for c in cols]
+            out = pa.array(body(*map(arrow_values, cols)), type=arrow_type,
+                           from_pandas=True)
+            if masked.any():
+                out = out.take(pa.array(np.cumsum(~masked) - 1, mask=masked))
+            return out
 
         return F.arrow_udf(udf, return_type)
 

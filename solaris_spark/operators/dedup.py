@@ -213,8 +213,6 @@ def embedding_near_dup_pairs(emb: DataFrame, id_col: str = "vec_id",
 
     @scalar_udf(T.StringType())
     def srp_sketch(v):
-        if not v:
-            return []
         X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
         bits = (X @ P.T) >= 0.0
         return ["".join("1" if b else "0" for b in row) for row in bits]

@@ -42,11 +42,10 @@ def yolo_labels(labels: DataFrame, images: DataFrame,
     def geom_stats(wkt, im_w, im_h):
         polys = G.prepare_polygons(wkt)
         rows = []
-        for rings, sas, area, bbox, size in zip(
+        for rings, sas, area, bbox, w, h in zip(
                 polys.rings, polys.signed, polys.area.tolist(),
-                polys.bbox.tolist(),
-                np.asarray([im_w, im_h], dtype=np.float64).T):
-            rect = (0.0, 0.0, float(size[0]), float(size[1]))
+                polys.bbox.tolist(), im_w, im_h):
+            rect = (0.0, 0.0, float(w), float(h))
             inter = G.clip_polygon_rect(rings, rect, sas)[1]
             rows.append((*bbox, area, inter / area if area > 0 else 0.0))
         return rows

@@ -135,10 +135,8 @@ def channel_fill_values(images: DataFrame) -> DataFrame:
     @scalar_udf(T.ArrayType(T.DoubleType()))
     def chan_means(b, w, h, fmt):
         out = []
-        # a NULL size reads as NaN, which int() refuses (ValueError)
-        for buf, (wi, hi), f in zip(b, np.asarray([w, h], dtype=np.float64).T,
-                                    fmt):
-            arr = pixfmt.decode(f, buf, int(wi), int(hi))
+        for buf, wi, hi, f in zip(b, w, h, fmt):
+            arr = pixfmt.decode(f, buf, wi, hi)
             out.append([float(np.nanmean(c)) for c in arr.astype(np.float64)])
         return out
 

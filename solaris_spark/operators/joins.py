@@ -154,16 +154,13 @@ def with_s2_cell(df: DataFrame, lat_col: str = "lat", lng_col: str = "lng",
     pruning on lat/lng data (BASELINE north_rule: H3/S2 cell encoding).
     Parent cells are derivable by halving (i, j), so multi-resolution
     pruning works without recomputation.  A NULL (or NaN) ``lat`` or
-    ``lng`` gets a NULL cell, which an equi-join pairs with nothing."""
+    ``lng`` gets a NULL cell (scalar_udf's NULL rule), which an equi-join
+    pairs with nothing."""
     from ..functions import s2cells as S2
 
     @scalar_udf(T.StringType())
     def tok(lat, lng):
-        lat, lng = np.asarray([lat, lng], dtype=np.float64)
-        ok = ~(np.isnan(lat) | np.isnan(lng))
-        out = np.full(len(ok), None, dtype=object)
-        out[ok] = S2.cell_token(lat[ok], lng[ok], level)
-        return out
+        return S2.cell_token(lat, lng, level)
 
     return df.withColumn(out_col, tok(F.col(lat_col), F.col(lng_col)))
 

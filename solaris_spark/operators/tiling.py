@@ -442,9 +442,10 @@ def labels_geo(labels: DataFrame, geo: DataFrame) -> DataFrame:
     Emits `bbox` [xmin, ymin, xmax, ymax] computed in the SAME UDF pass —
     the geometry is already parsed here, so downstream spatial joins
     (vector_tiles candidates) skip a second full WKT parse.  A ``""``
-    label stays ``""`` with a bbox of NULLs, and a label of an image whose
-    affine has a NULL or NaN coefficient gets a NULL wkt_geo and bbox;
-    vector_tiles clips neither into a tile row."""
+    label stays ``""`` with a bbox of NULLs, and a NULL label, or a label
+    of an image whose affine has a NULL or NaN coefficient, gets a NULL
+    wkt_geo and bbox (scalar_udf's NULL rule); vector_tiles clips none of
+    them into a tile row."""
     lb = labels.join(geo, "image_id")
 
     @scalar_udf(T.StructType([
@@ -454,11 +455,6 @@ def labels_geo(labels: DataFrame, geo: DataFrame) -> DataFrame:
     def to_geo(wkt, *affine):
         out = []
         for w, t in zip(wkt, np.asarray(affine, dtype=np.float64).T):
-            if np.isnan(t).any():
-                # a NULL (or NaN) coefficient places nothing: NULL, not
-                # coordinates of NaN
-                out.append((None, None))
-                continue
             w = G.transform_wkt(w, tuple(t))
             out.append((w, list(G.geom_bounds(w))))
         return out

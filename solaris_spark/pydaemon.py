@@ -47,13 +47,17 @@ local[2]).  On a Unix stream socket the sender's buffer bounds all the
 bytes in flight (there is no receive window behind it), and at the
 kernel's default (``net.core.wmem_default``, 208 KiB here) a worker
 writing a 4 MB output batch waits for the JVM to drain it about twenty
-times; the socket switch without the larger buffer lost about 1.5 % of
-tile_mask's items/s (median of 7 interleaved pairs).  So:
+times.  So:
 
 3. ``daemon.worker`` (the per-task body of the child loop, called once per
    task with the accepted socket) is wrapped to set ``SO_SNDBUF`` to
    4 MiB, one output batch at the session's ``maxBytesPerBatch``, before
    the stock body runs.  The kernel caps it at ``net.core.wmem_max``.
+
+Fixes 2 and 3 pay on perfbench's tile_mask (same host, ``--seconds 30
+--trace 0``, 6 interleaved rounds over seeds 1-6, loadavg 2.6-3.9): median
+items/s (IQR) all on 4677 (317); without ``SO_SNDBUF`` 4239 (964), all-on
+ahead in 5 of 6 rounds; without the gc shim 4011 (974), ahead in 6 of 6.
 
 Activated by ``session.get_spark`` via
 ``spark.python.daemon.module=solaris_spark.pydaemon`` — a documented Spark
@@ -142,14 +146,13 @@ def _with_sndbuf(stock_worker):
 def install(worker=_worker, daemon=_daemon) -> bool:
     """Patch the three costs into the worker and daemon modules.  The
     patches rebind private PySpark names (``worker.setup_spark_files``,
-    ``worker.main``, ``daemon.gc``, ``daemon.worker_main``,
-    ``daemon.worker``); if any of them
-    is missing, the PySpark release is not the one these patches were
-    written for, so nothing is patched, stock behaviour stays, and one
-    warning names what is missing."""
+    ``daemon.gc``, ``daemon.worker``); if any of them is missing, the
+    PySpark release is not the one these patches were written for, so
+    nothing is patched, stock behaviour stays, and one warning names what
+    is missing."""
     missing = [f"{mod.__name__}.{name}"
-               for mod, names in ((worker, ("setup_spark_files", "main")),
-                                  (daemon, ("gc", "worker_main", "worker")))
+               for mod, names in ((worker, ("setup_spark_files",)),
+                                  (daemon, ("gc", "worker")))
                for name in names if not hasattr(mod, name)]
     if missing:
         logging.getLogger(__name__).warning(
@@ -157,7 +160,6 @@ def install(worker=_worker, daemon=_daemon) -> bool:
             "pyspark.daemon loop unpatched", ", ".join(missing))
         return False
     worker.setup_spark_files = _setup_spark_files
-    daemon.worker_main = worker.main  # rebind in case daemon captured it early
     daemon.gc = _GcShim()
     daemon.worker = _with_sndbuf(daemon.worker)
     return True

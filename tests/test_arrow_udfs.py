@@ -16,21 +16,28 @@ AttributeError and a ``""`` with ValueError); the ``""`` entries of
 began to read ``""`` as no geometry (before, ValueError), and the
 NULL-coefficient entries of ``to_geo`` when ``labels_geo`` began to give
 them a NULL geometry and bbox (before, ``POLYGON ((nan …))`` with NULL
-bbox corners).
+bbox corners).  The NULL entries of ``to_geo`` (wkt_pix), ``bbox``,
+``conv``, ``split``, ``rnd``, ``chan_means``, ``assign`` (tv),
+``probe`` and ``srp_sketch`` were recorded when ``blobs.scalar_udf``
+began to apply SQL's NULL rule for every body (a NULL argument, or NaN
+in a float argument, gives a NULL result); before, each of them failed
+the query.  The Spark-free tests after the cases check that rule on the
+wrapper itself.
 
-The last two tests keep pandas and SparkContext broadcasts out of the
-engine package.
+The last tests keep pandas, test oracles and SparkContext broadcasts out
+of the engine package.
 """
 
 import os
 import re
 
 import numpy as np
+import pyarrow as pa
 import pyspark.sql.types as T
 import pytest
 
-from solaris_spark.operators import (ann, dedup, export, graph, imageops,
-                                     joins, tiling)
+from solaris_spark.operators import (ann, blobs, dedup, export, graph,
+                                     imageops, joins, tiling)
 
 CASES = {}
 
@@ -388,6 +395,64 @@ def test_plan_runs_scalar_arrow_udfs(spark, name):
         assert len(nodes) == 1, nodes
 
 
+# -- blobs.scalar_udf's NULL rule, without Spark -----------------------------
+
+def _recorded(return_type, result):
+    """A scalar_udf's Python function (``.func``) whose body records the
+    argument values it gets and returns ``result`` of them."""
+    calls = []
+
+    @blobs.scalar_udf(return_type)
+    def body(*vals):
+        calls.append(vals)
+        return result(*vals)
+
+    return body.func, calls
+
+
+def test_null_and_nan_rows_never_reach_the_body():
+    """A NULL in any argument, or NaN in a float argument, makes the row
+    NULL without the body seeing it; NaN inside a list stays a value."""
+    x = pa.array([1.0, float("nan"), 3.0, None, 5.0])
+    s = pa.array(["a", "b", None, "d", "e"])
+    v = pa.array([[1.0], [2.0], [3.0], None, [float("nan")]])
+    f, calls = _recorded(S, lambda x, s, v: [f"{a}{b}{len(c)}" for a, b, c
+                                             in zip(x, s, v)])
+    assert f(x, s, v).to_pylist() == ["1.0a1", None, None, None, "5.0e1"]
+    [(xs, ss, vs)] = calls
+    assert xs == [1.0, 5.0] and ss == ["a", "e"]
+    assert vs[0] == [1.0] and np.isnan(vs[1][0])
+
+    st = T.StructType([T.StructField("s", S), T.StructField("n", D)])
+    f, calls = _recorded(st, lambda x, s, v: [(b, a) for a, b in zip(x, s)])
+    out = f(x, s, v)
+    assert out.type == pa.struct([("s", pa.string()), ("n", pa.float64())])
+    assert out.is_null().to_pylist() == [False, True, True, True, False]
+    assert out.to_pylist()[4] == {"s": "e", "n": 5.0}
+
+
+@pytest.mark.parametrize("x", [pa.array([None, float("nan")]),
+                               pa.array([], pa.float64())])
+def test_all_masked_or_empty_batch_gives_typed_nulls(x):
+    f, calls = _recorded(VEC, lambda x: [[a] for a in x])
+    out = f(x, pa.array(["a", "b"][:len(x)]))
+    assert out.equals(pa.nulls(len(x), pa.list_(pa.float64())))
+    assert calls == []
+
+
+def test_unmasked_batch_reaches_the_body_as_it_came(monkeypatch):
+    cols = [pa.array([1.5, 2.5]), pa.array([b"ab", b"cd"]),
+            pa.array([[1.0, float("nan")], []])]
+    seen = []
+    real = blobs.arrow_values
+    monkeypatch.setattr(blobs, "arrow_values",
+                        lambda c: seen.append(c) or real(c))
+    f, calls = _recorded(T.BooleanType(), lambda *vals: [True, False])
+    assert f(*cols).to_pylist() == [True, False]
+    assert len(seen) == 3 and all(a is b for a, b in zip(seen, cols))
+    assert len(calls) == 1
+
+
 def _engine_lines_matching(pattern):
     """``path:line`` of every engine source line that matches ``pattern``."""
     root = os.path.join(os.path.dirname(os.path.dirname(
@@ -433,7 +498,10 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                  '(1, 13, 2, 0.8734422932544689)',
                  '(2, 12, 1, 0.9875414397573881)',
                  '(2, 14, 2, 0.9827435232305015)'],
- 'assign-null-tv': ('error', 'ValueError'),
+ 'assign-null-tv': ['(1, 10, 1, 0.9914852360407972)',
+                    '(1, 13, 2, 0.8734422932544689)',
+                    '(2, 11, 2, 0.4346928823909822)',
+                    '(2, 12, 1, 0.9875414397573881)'],
  'assign-train': ['((0.8, 0.35, 0.05), (0.10000000000000002, '
                   '0.4000000000000001, 0.6))'],
  'assign-train-null-v': ['((0.8, 0.35, 0.05), (0.10000000000000002, '
@@ -480,12 +548,27 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                         "('t11', 'i0', 2, 'POLYGON ((16.0 16.0, 20.0 16.0, "
                         "20.0 20.0, 16.0 20.0, 16.0 16.0))', None, 300.0, "
                         '16.0, 0.05333333333333334, 1)'],
- 'bbox-null-wkt_geo': ('error', 'AttributeError'),
+ 'bbox-null-wkt_geo': ["('t00', 'i0', 1, 'POLYGON ((0.0 0.0, 10.0 0.0, 10.0 "
+                       "10.0, 0.0 10.0, 0.0 0.0))', None, 100.0, 100.0, 1.0, "
+                       '0)',
+                       "('t00', 'i0', 2, 'POLYGON ((0.0 16.0, 0.0 0.0, 16.0 "
+                       '0.0, 16.0 16.0, 0.0 16.0), (5.0 5.0, 5.0 15.0, 15.0 '
+                       "15.0, 15.0 5.0, 5.0 5.0))', None, 300.0, 156.0, 0.52, "
+                       '1)',
+                       "('t01', 'i0', 2, 'POLYGON ((0.0 16.0, 16.0 16.0, 16.0 "
+                       "20.0, 0.0 20.0, 0.0 16.0))', None, 300.0, 64.0, "
+                       '0.21333333333333335, 1)',
+                       "('t10', 'i0', 2, 'POLYGON ((16.0 16.0, 16.0 0.0, 20.0 "
+                       "0.0, 20.0 16.0, 16.0 16.0))', None, 300.0, 64.0, "
+                       '0.21333333333333335, 1)',
+                       "('t11', 'i0', 2, 'POLYGON ((16.0 16.0, 20.0 16.0, "
+                       "20.0 20.0, 16.0 20.0, 16.0 16.0))', None, 300.0, "
+                       '16.0, 0.05333333333333334, 1)'],
  'chan_means-base': ["('i0', [5.5, 17.5])", "('i1', [0.6])"],
- 'chan_means-null-bytes': ('error', 'TypeError'),
- 'chan_means-null-fmt': ('error', 'AttributeError'),
- 'chan_means-null-h': ('error', 'ValueError'),
- 'chan_means-null-w': ('error', 'ValueError'),
+ 'chan_means-null-bytes': ["('i0', [5.5, 17.5])", "('i1', None)"],
+ 'chan_means-null-fmt': ["('i0', [5.5, 17.5])", "('i1', None)"],
+ 'chan_means-null-h': ["('i0', [5.5, 17.5])", "('i1', None)"],
+ 'chan_means-null-w': ["('i0', [5.5, 17.5])", "('i1', None)"],
  'clip-base': ["('t00', 'i0', 1, 'POLYGON ((0.0 0.0, 10.0 0.0, 10.0 10.0, "
                "0.0 10.0, 0.0 0.0))', None, 100.0, 100.0, 1.0, 0)",
                "('t00', 'i0', 2, 'POLYGON ((0.0 16.0, 0.0 0.0, 16.0 0.0, "
@@ -674,7 +757,9 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                "('i0', 2, 1, [2.0, 1.0, 30.0, 4.0, 12.0, 25.0, 2.0, 1.0], "
                '[2.0, 1.0, 28.0, 24.0], 321.0)'],
  'conv-multipolygon': ('error', 'ValueError'),
- 'conv-null-wkt_pix': ('error', 'AttributeError'),
+ 'conv-null-wkt_pix': ["('i0', 0, 1, [0.0, 0.0, 10.0, 0.0, 10.0, 10.0, 0.0, "
+                       '10.0, 0.0, 0.0], [0.0, 0.0, 10.0, 10.0], 100.0)',
+                       "('i0', 1, 1, None, None, None)"],
  'geom_stats-base': ["('i0', 1, 0.3125, 0.3125, 0.625, 0.625)",
                      "('i0', 2, 0.625, 0.625, 1.25, 1.25)",
                      "('i1', 3, 0.4, 0.65, 0.7, 1.2)"],
@@ -727,11 +812,13 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                 "0), (5 5, 5 15, 15 15, 15 5, 5 5))', 0.0, 0.0, 20.0, 20.0)",
                 "(4, 9.5, 9.5, 101, 'POLYGON ((0 0, 10 0, 10 10, 0 10, 0 "
                 "0))', 0.0, 0.0, 10.0, 10.0)"],
- 'probe-null-qv': ('error', 'ValueError'),
+ 'probe-null-qv': ['(1, 10, 1, 0.9914852360407972)',
+                   '(1, 13, 2, 0.8734422932544689)'],
  'rnd-base': ["(0, 'POLYGON ((0.1 0.5, 10.6 0.0, 10.0 11.0, 0.1 0.5))')",
               "(1, 'MULTIPOLYGON (((0.1 0.0, 4.4 0.0, 4.0 4.0, 0.1 0.0)))')",
               "(2, 'LINESTRING (1.2 2.3, 3.5 4.6)')"],
- 'rnd-null-wkt': ('error', 'AttributeError'),
+ 'rnd-null-wkt': ["(0, 'POLYGON ((0.1 0.5, 10.6 0.0, 10.0 11.0, 0.1 0.5))')",
+                  '(1, None)'],
  'split-base': ["('i0', 'LINESTRING (0.0 0.0, 1.0 1.0, 2.0 1.0)', 1)",
                 "('i0', 'LINESTRING (5.0 5.0, 6.0 7.0)', 2)",
                 "('i0', 'POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))', 3)",
@@ -739,9 +826,12 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                 "0.0))', 4)",
                 "('i0', 'POLYGON ((10.0 10.0, 14.0 10.0, 14.0 14.0, 10.0 "
                 "10.0))', 5)"],
- 'split-null-wkt': ('error', 'AttributeError'),
+ 'split-null-wkt': ["('i0', 'POLYGON ((0.0 0.0, 4.0 0.0, 4.0 4.0, 0.0 4.0, "
+                    "0.0 0.0))', 1)",
+                    "('i0', 'POLYGON ((10.0 10.0, 14.0 10.0, 14.0 14.0, 10.0 "
+                    "10.0))', 2)"],
  'srp_sketch-base': ['(1, 2, 0.9999523843534716)'],
- 'srp_sketch-null-embedding': ('error', 'ValueError'),
+ 'srp_sketch-null-embedding': ['(1, 2, 0.9999523843534716)'],
  'to_geo-base': ["('i0', 1, 'POLYGON ((500000.0 4000000.0, 500005.0 "
                  '4000000.0, 500005.0 3999995.0, 500000.0 3999995.0, '
                  "500000.0 4000000.0))', [500000.0, 3999995.0, 500005.0, "
@@ -832,7 +922,17 @@ EXPECTED = {'assign-base': ['(1, 10, 1, 0.9914852360407972)',
                    "500002.5 3999997.5))', [500000.0, 3999990.0, 500010.0, "
                    '4000000.0])',
                    "('i1', 3, None, None)"],
- 'to_geo-null-wkt_pix': ('error', 'AttributeError'),
+ 'to_geo-null-wkt_pix': ["('i0', 1, 'POLYGON ((500000.0 4000000.0, 500005.0 "
+                         '4000000.0, 500005.0 3999995.0, 500000.0 3999995.0, '
+                         "500000.0 4000000.0))', [500000.0, 3999995.0, "
+                         '500005.0, 4000000.0])',
+                         "('i0', 2, 'POLYGON ((500000.0 4000000.0, 500010.0 "
+                         '4000000.0, 500010.0 3999990.0, 500000.0 3999990.0, '
+                         '500000.0 4000000.0), (500002.5 3999997.5, 500002.5 '
+                         '3999992.5, 500007.5 3999992.5, 500007.5 3999997.5, '
+                         "500002.5 3999997.5))', [500000.0, 3999990.0, "
+                         '500010.0, 4000000.0])',
+                         "('i1', 3, None, None)"],
  'tok-base': ["(1, 37.7749, -122.4194, 'f4_31_151@10')",
               "(2, -33.8688, 151.2093, 'f3_929_190@10')",
               "(3, 0.0, 0.0, 'f0_512_512@10')"],

@@ -10,14 +10,10 @@ from solaris_spark import pydaemon
 
 
 def _stubs():
-    def main(infile, outfile):
-        return None
-
     def setup_spark_files(infile):
         return None
 
     worker = types.ModuleType("stub_worker")
-    worker.main = main
     worker.setup_spark_files = setup_spark_files
 
     def daemon_worker(sock, authenticated):
@@ -25,7 +21,6 @@ def _stubs():
 
     daemon = types.ModuleType("stub_daemon")
     daemon.gc = gc
-    daemon.worker_main = None
     daemon.worker = daemon_worker
     return worker, daemon
 
@@ -35,7 +30,6 @@ def test_install_patches_matching_modules():
     stock_worker = daemon.worker
     assert pydaemon.install(worker, daemon)
     assert worker.setup_spark_files is pydaemon._setup_spark_files
-    assert daemon.worker_main is worker.main
     assert isinstance(daemon.gc, pydaemon._GcShim)
     assert daemon.worker.__wrapped__ is stock_worker
 
@@ -63,7 +57,7 @@ def test_missing_setup_spark_files_keeps_stock_behaviour(caplog):
     with caplog.at_level(logging.WARNING, logger=pydaemon.__name__):
         assert not pydaemon.install(worker, daemon)
     assert not hasattr(worker, "setup_spark_files")
-    assert daemon.gc is gc and daemon.worker_main is None
+    assert daemon.gc is gc
     assert not hasattr(daemon.worker, "__wrapped__")
     warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
     assert len(warnings) == 1
@@ -77,7 +71,6 @@ def test_missing_daemon_gc_keeps_stock_behaviour(caplog):
     with caplog.at_level(logging.WARNING, logger=pydaemon.__name__):
         assert not pydaemon.install(worker, daemon)
     assert worker.setup_spark_files is stock_setup
-    assert daemon.worker_main is None
     warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
     assert len(warnings) == 1
     assert "stub_daemon.gc" in warnings[0].getMessage()
@@ -90,7 +83,7 @@ def test_missing_daemon_worker_keeps_stock_behaviour(caplog):
     with caplog.at_level(logging.WARNING, logger=pydaemon.__name__):
         assert not pydaemon.install(worker, daemon)
     assert worker.setup_spark_files is stock_setup
-    assert daemon.gc is gc and daemon.worker_main is None
+    assert daemon.gc is gc
     warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
     assert len(warnings) == 1
     assert "stub_daemon.worker not found" in warnings[0].getMessage()

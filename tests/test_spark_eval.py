@@ -102,6 +102,22 @@ class TestGreedyMatch:
         assert s["TruePos"] == 1 and s["FalsePos"] == 0
         assert s["FalseNeg"] == 0
 
+    def test_null_and_empty_string_wkt_rows(self, spark):
+        """pack_polygons reads a NULL and a ``""`` WKT as EMPTY: each GT
+        keeps a zero-area unmatched row, and each proposal (kept only if
+        its area > min_area) has none; the square pair still matches."""
+        sq = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
+        gt = spark.createDataFrame(
+            [("i", 0, sq), ("i", 1, None), ("i", 2, "")],
+            "image_id string, row_id long, wkt string")
+        pred = spark.createDataFrame(
+            [("i", 0, sq, 0.9), ("i", 1, None, 0.8), ("i", 2, "", 0.7)],
+            "image_id string, row_id long, wkt string, conf double")
+        rows = evalops.greedy_iou_match(gt, pred, miniou=0.5).collect()
+        assert sorted(tuple(r) for r in rows) == [
+            ("i", "gt", 0, 1.0, 0, 100.0), ("i", "gt", 1, 0.0, None, 0.0),
+            ("i", "gt", 2, 0.0, None, 0.0), ("i", "pred", 0, 1.0, 0, 100.0)]
+
     def test_identical_pair_iou_is_exactly_one(self, spark):
         """A proposal identical to its GT scores exactly 1.0 on both rows:
         the fan-triangle intersection may overshoot the shoelace area by an
@@ -198,6 +214,27 @@ class TestGreedyMatch:
 
 
 class TestClassMatchedIous:
+    def test_null_and_empty_string_wkt_rows(self, spark):
+        """A NULL and a ``""`` WKT read as EMPTY on both sides: those
+        proposals score 0 and consume no GT, those GT recall 0."""
+        sq = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
+        gt = spark.createDataFrame(
+            [("i", 0, sq, "a"), ("i", 1, None, "a"), ("i", 2, "", "a")],
+            "image_id string, row_id long, wkt string, class string")
+        pred = spark.createDataFrame(
+            [("i", 0, None, "a", 0.9), ("i", 1, "", "a", 0.8),
+             ("i", 2, sq, "a", 0.7)],
+            "image_id string, row_id long, wkt string, class string, "
+            "conf double")
+        rows = evalops.class_matched_ious(gt, pred).collect()
+        assert sorted(tuple(r) for r in rows) == [
+            ("i", "precision", "a", 0, 0.0, 0.9),
+            ("i", "precision", "a", 1, 0.0, 0.8),
+            ("i", "precision", "a", 2, 1.0, 0.7),
+            ("i", "recall", "a", 0, 1.0, None),
+            ("i", "recall", "a", 1, 0.0, None),
+            ("i", "recall", "a", 2, 0.0, None)]
+
     @pytest.mark.parametrize("empty", ["POLYGON EMPTY", None])
     def test_empty_proposal_scores_zero_and_consumes_no_gt(self, spark, empty):
         """An empty proposal has no intersects-candidates: its precision

@@ -132,6 +132,16 @@ class TestScot:
         assert out["track_fp"] == 0
         assert out["track_score"] == 1.0
 
+    def test_null_and_empty_string_wkt_rows(self, spark):
+        """A NULL and a ``""`` WKT read as EMPTY: each such GT is a false
+        negative and each such proposal a false positive, no crash."""
+        sq = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
+        gt = [("a", "t1", 1, sq), ("a", "t1", 2, None), ("a", "t1", 3, "")]
+        pr = [("a", "t1", 1, sq), ("a", "t1", 5, None), ("a", "t1", 6, "")]
+        out = scot.scot_scores(self._df(spark, gt), self._df(spark, pr)).collect()
+        assert [tuple(r) for r in out] == [
+            ("a", 0, 1, 2, 2, 1 / 3, 0, 0, 0, 0.0, 0.0)]
+
     def test_empty_gt_counts_as_fn(self, spark):
         """A POLYGON EMPTY footprint intersects nothing, so it is one
         unmatched GT (a false negative), not a crash."""
